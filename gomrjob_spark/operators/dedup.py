@@ -1174,6 +1174,31 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _driver_min_labels(src, dst):
+    """Component minimum of every endpoint of an undirected edge list,
+    computed on the driver: min-label hooking plus pointer jumping over
+    dense ``np.unique`` indices. The indices sort like the ids, so the
+    minimum index of a component is its minimum id. Every parent points
+    at a smaller-or-equal index, so the parent links form a forest, and
+    each pass hooks every root that has a smaller root across an edge,
+    so the loop ends once no edge spans two trees. Returns (ids, labels)
+    as parallel arrays."""
+    import numpy as np  # noqa: PLC0415
+
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = np.split(inv, 2)
+    parent = np.arange(ids.size)
+    while True:
+        ra, rb = parent[a], parent[b]
+        if (ra == rb).all():
+            return ids, ids[parent]
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while not ((jumped := parent[parent]) == parent).all():
+            parent = jumped
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -1199,15 +1224,31 @@ def connected_components(
     component's minimum id.
 
     Distribution: each round is two grouped aggregates + two joins, all
-    shuffling on node id; the driver only coordinates the loop and reads
-    one per-round count (the changed-edge check). ``localCheckpoint``
-    truncates lineage so round N's plan doesn't replay rounds 1..N-1.
-    Pass ``stats={}`` to receive ``{"rounds": r}`` back (used by the
-    convergence-rate test)."""
+    shuffling on node id; the driver coordinates the loop and reads one
+    per-round (count, hash-sum) fingerprint, the changed-edge check.
+    Under AQE a round still submits about 16 Spark jobs (one per
+    adaptive query stage), so rounds over a small edge set are almost
+    all scheduling. ``localCheckpoint`` truncates lineage so round N's
+    plan doesn't replay rounds 1..N-1.
+
+    Driver finish: whenever the edge count ``n`` read by a fingerprint
+    (the one before the first round included) satisfies ``n * 16`` bytes
+    (two 8-byte ids) <= ``spark.sql.autoBroadcastJoinThreshold``, the
+    loop stops, the checkpointed edges are collected, and the driver
+    labels every endpoint with its component minimum
+    (``_driver_min_labels``); the labels are joined to ``nodes`` just
+    like the fixpoint's star map. Larger edge sets run distributed
+    rounds until they shrink below that bound or reach the fixpoint. A
+    threshold <= 0 (broadcasts disabled) keeps the whole job
+    distributed. Running out of ``max_iter`` rounds above the bound
+    raises ``RuntimeError`` rather than returning labels short of the
+    component minimum. Pass ``stats={}`` to receive ``{"rounds": r}``
+    back: the number of distributed rounds run, 0 when the driver
+    finishes at once."""
     def _materialize(
         df: DataFrame, n_hint: int | None = None
     ) -> tuple[DataFrame, tuple[int, int]]:
-        """One job per round: the lazy localCheckpoint materializes under
+        """One action per round: the lazy localCheckpoint materializes under
         the same action that computes the edge-set fingerprint
         (count, wrapping sum of xxhash64(src,dst)). Two consecutive
         DISTINCT edge sets with equal fingerprints are equal up to a
@@ -1252,17 +1293,37 @@ def connected_components(
     e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).filter(
         F.col("src") != F.col("dst")
     )
+    # Spark's own parse of the conf ('10MB', '-1', ...); an edge costs 16
+    # bytes (two 8-byte ids), and <= 0 disables the driver finish
+    bound = e0.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     e, sig = _materialize(e0 if edges_distinct else e0.distinct())
     rounds = 0
-    for _ in range(max_iter):
+    while bound <= 0 or sig[0] * 16 > bound:
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components: no fixpoint after {rounds} rounds and "
+                f"{sig[0]} edges ({sig[0] * 16} bytes) remain above the driver-"
+                f"finish bound spark.sql.autoBroadcastJoinThreshold={bound}; "
+                "raise max_iter"
+            )
         rounds += 1
         e, new_sig = _materialize(_small_star(_large_star(e)), n_hint=sig[0])
         if new_sig == sig:
+            star_map = e.groupBy("src").agg(F.min("dst").alias("_component"))
             break
         sig = new_sig
+    else:
+        import pandas as pd  # noqa: PLC0415
+
+        pdf = e.toPandas()
+        ids, labels = _driver_min_labels(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
+        id_type = e.schema["src"].dataType.simpleString()
+        star_map = e.sparkSession.createDataFrame(
+            pd.DataFrame({"src": ids, "_component": labels}),
+            f"src {id_type}, _component {id_type}",
+        )
     if stats is not None:
         stats["rounds"] = rounds
-    star_map = e.groupBy("src").agg(F.min("dst").alias("_component"))
     out = (
         nodes.select(F.col(id_col).alias("node"))
         .join(star_map, F.col("node") == F.col("src"), "left")

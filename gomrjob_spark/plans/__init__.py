@@ -38,6 +38,13 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # exactly the priority rule the ledger prescribes: a query whose plan
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
+    # changed: connected_components labels an edge set that fits the
+    # broadcast threshold on the driver (every connected-components
+    # consumer)
+    "dedup_cluster_survivors",
+    "split_cluster_aware",
+    "entity_resolution_pipeline",
+    "dedup_best_quality_survivors",
     # r14-optimizer-touched, no driver row since the change (verdict #1)
     "text_kn_perplexity",
     "text_langid_gate",
@@ -63,10 +70,6 @@ _VERIFY_FIRST = [
     # r15: capped shingle pair stage (grouped candidates + sizes persist)
     "dedup_ngram_jaccard",
     "dedup_ngram_containment",
-    "dedup_cluster_survivors",
-    "split_cluster_aware",
-    "entity_resolution_pipeline",
-    "dedup_best_quality_survivors",
     # r15: Lloyd broadcast-rows device + local_df model frames
     "dedup_semantic_diversity",
     "streaming_semdedup_gate",

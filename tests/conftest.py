@@ -23,3 +23,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMOKE)
+
+
+@pytest.fixture
+def broadcast_threshold(spark):
+    """Setter for ``spark.sql.autoBroadcastJoinThreshold`` (``None``
+    selects the session's own value); the session's value is restored
+    when the test ends."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    yield lambda value=None: spark.conf.set(key, prev if value is None else value)
+    spark.conf.set(key, prev)

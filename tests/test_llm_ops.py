@@ -388,17 +388,51 @@ def test_knn_axis_lsh_high_recall_on_fixture(emb):
     assert len(got & want) / len(want) >= 0.95
 
 
-def test_connected_components_shapes(spark):
-    """Chain, triangle, singleton: labels converge to the component min."""
+def _cc_both_paths(set_threshold, edges, nodes, **kwargs):
+    """{path: (labels, stats["rounds"])} for the driver finish (the
+    session's broadcast threshold) and the fully distributed loop
+    (threshold -1, broadcasts off)."""
+    out = {}
+    for path, threshold in (("driver", None), ("distributed", "-1")):
+        set_threshold(threshold)
+        stats = {}
+        comp = dedup.connected_components(edges, nodes, stats=stats, **kwargs)
+        out[path] = ({r.doc_id: r.component for r in comp.collect()}, stats["rounds"])
+    return out
+
+
+def _shapes_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (5, 7)], "id_a bigint, id_b bigint"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id bigint")
-    got = {
-        r.doc_id: r.component
-        for r in dedup.connected_components(edges, nodes).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 8}
+    return edges, nodes
+
+
+def test_connected_components_shapes(spark, broadcast_threshold):
+    """Chain, triangle, singleton: labels converge to the component min,
+    identically on the driver finish and on the distributed loop."""
+    got = _cc_both_paths(broadcast_threshold, *_shapes_graph(spark))
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 8}
+    assert got["driver"] == (want, 0)
+    assert got["distributed"][0] == want
+    assert 1 <= got["distributed"][1] <= 10
+
+
+def test_connected_components_job_budget(spark):
+    """Spark-job budget of one small-graph call (its edges fit the
+    broadcast threshold, so the driver labels them after one
+    fingerprint): 7 jobs measured; the star-contraction loop it
+    replaces ran 38."""
+    sc = spark.sparkContext
+    group = "test_connected_components_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        dedup.connected_components(*_shapes_graph(spark)).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 7, f"{n_jobs} Spark jobs"
 
 
 def test_winnow_shared_passage_guarantee(spark):
@@ -734,23 +768,46 @@ def test_extract_audio_sample_stats_distributed(spark):
     assert r.s_possum == sum(k * v for k, v in enumerate(sm))
 
 
-def test_connected_components_chain_converges_logarithmically(spark):
-    """A 64-node path graph is the worst case for label propagation
-    (diameter 63). Star contraction must (a) get it RIGHT — everything
-    labeled 0 — and (b) converge in <= log2(n)+4 rounds, the property
-    that makes the fixpoint loop viable on 100 TB pair graphs."""
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
-    )
+def _chain(spark, n=64, both_directions=False):
+    pairs = [(i, i + 1) for i in range(n - 1)]
+    if both_directions:
+        pairs += [(b, a) for a, b in pairs]
+    edges = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
+    return edges, nodes
+
+
+def test_connected_components_chain_converges_logarithmically(spark, broadcast_threshold):
+    """A 64-node path graph is the worst case for label propagation
+    (diameter 63). Both finishes must get it RIGHT — everything labeled
+    0 — and star contraction must converge in <= log2(n)+4 rounds, the
+    property that makes the fixpoint loop viable on 100 TB pair graphs."""
+    got = _cc_both_paths(broadcast_threshold, *_chain(spark))
+    assert got["driver"] == ({i: 0 for i in range(64)}, 0)
+    labels, rounds = got["distributed"]
+    assert labels == got["driver"][0]
+    assert 1 <= rounds <= 10, f"expected O(log n) rounds, took {rounds}"
+
+
+def test_connected_components_driver_handoff_mid_loop(spark, broadcast_threshold):
+    """The 64-chain given in both directions is 126 edges (2016 bytes),
+    above a 1008-byte threshold; one star round leaves the 63 tree
+    edges, which fit, so the driver labels them. ``max_iter=1`` pins
+    that an exhausted round budget still finishes on the driver when the
+    edges fit."""
+    broadcast_threshold(str(63 * 16))
     stats = {}
-    got = {
-        r.doc_id: r.component
-        for r in dedup.connected_components(edges, nodes, stats=stats).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 10, f"expected O(log n) rounds, took {stats['rounds']}"
+    comp = dedup.connected_components(*_chain(spark, both_directions=True), max_iter=1, stats=stats)
+    assert {r.doc_id: r.component for r in comp.collect()} == {i: 0 for i in range(64)}
+    assert stats["rounds"] == 1
+
+
+def test_connected_components_max_iter_exhausted_raises(spark, broadcast_threshold):
+    """Out of rounds above the driver-finish bound: a clear error, not
+    rows labelled by a neighbor short of the component minimum."""
+    broadcast_threshold("-1")
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds and 63 edges"):
+        dedup.connected_components(*_chain(spark), max_iter=1).collect()
 
 
 def test_stratified_sample_nested_and_validated(docs):

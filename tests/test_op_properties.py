@@ -8,6 +8,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from gomrjob_spark.operators.dedup import _driver_min_labels
 from gomrjob_spark.operators.multimodal import resize_dims
 
 
@@ -197,3 +198,37 @@ def test_heavy_hitters_exact_under_spill_pressure(spark):
                 for r in heavy_hitters(df.repartition(parts), "v", k=k).collect()
             }
             assert got == want, (k, parts, len(got), len(want))
+
+
+def _union_find_min_labels(edges):
+    """Reference: sequential union-find keeping each set's minimum id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(-50, 50), st.integers(-50, 50)).filter(lambda e: e[0] != e[1]),
+        max_size=80,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_driver_min_labels_match_union_find(edges):
+    """The numpy hooking + pointer-jumping finish labels every endpoint
+    with its component minimum, exactly as a sequential union-find."""
+    import numpy as np
+
+    src = np.array([a for a, _ in edges], dtype=np.int64)
+    dst = np.array([b for _, b in edges], dtype=np.int64)
+    ids, labels = _driver_min_labels(src, dst)
+    assert dict(zip(ids.tolist(), labels.tolist())) == _union_find_min_labels(edges)
