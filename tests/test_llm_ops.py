@@ -419,6 +419,16 @@ def test_connected_components_shapes(spark, broadcast_threshold):
     assert 1 <= got["distributed"][1] <= 10
 
 
+def test_connected_components_no_edges(spark, broadcast_threshold):
+    """A corpus without near-dups: every node labels itself on both
+    paths."""
+    edges = spark.createDataFrame([], "id_a bigint, id_b bigint")
+    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id bigint")
+    got = _cc_both_paths(broadcast_threshold, edges, nodes)
+    want = {i: i for i in range(1, 5)}
+    assert got == {"driver": (want, 0), "distributed": (want, 1)}
+
+
 def test_connected_components_job_budget(spark):
     """Spark-job budget of one small-graph call (its edges fit the
     broadcast threshold, so the driver labels them after one
@@ -789,17 +799,20 @@ def test_connected_components_chain_converges_logarithmically(spark, broadcast_t
     assert 1 <= rounds <= 10, f"expected O(log n) rounds, took {rounds}"
 
 
-def test_connected_components_driver_handoff_mid_loop(spark, broadcast_threshold):
-    """The 64-chain given in both directions is 126 edges (2016 bytes),
-    above a 1008-byte threshold; one star round leaves the 63 tree
-    edges, which fit, so the driver labels them. ``max_iter=1`` pins
-    that an exhausted round budget still finishes on the driver when the
-    edges fit."""
-    broadcast_threshold(str(63 * 16))
-    stats = {}
-    comp = dedup.connected_components(*_chain(spark, both_directions=True), max_iter=1, stats=stats)
-    assert {r.doc_id: r.component for r in comp.collect()} == {i: 0 for i in range(64)}
-    assert stats["rounds"] == 1
+def test_connected_components_driver_handoff_mid_loop(spark, broadcast_threshold, monkeypatch):
+    """The 64-chain given in both directions is 126 edges, above a
+    63-edge driver-finish bound set either by a 1008-byte threshold or
+    by the edge cap; one star round leaves the 63 tree edges, which fit,
+    so the driver labels them. ``max_iter=1`` pins that an exhausted
+    round budget still finishes on the driver when the edges fit."""
+    for threshold, cap in ((str(63 * 16), None), (None, 63)):
+        broadcast_threshold(threshold)
+        if cap is not None:
+            monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", cap)
+        stats = {}
+        comp = dedup.connected_components(*_chain(spark, both_directions=True), max_iter=1, stats=stats)
+        assert {r.doc_id: r.component for r in comp.collect()} == {i: 0 for i in range(64)}
+        assert stats["rounds"] == 1
 
 
 def test_connected_components_max_iter_exhausted_raises(spark, broadcast_threshold):
