@@ -18,4 +18,12 @@ re-expresses those *capabilities* Spark-first:
 
 __version__ = "0.1.0"
 
-from gomrjob_spark.session import get_session  # noqa: F401
+
+def __getattr__(name: str):
+    # lazy: Python workers import this package for their daemon
+    # (gomrjob_spark.worker_daemon), which must not pull in pyspark.sql
+    if name == "get_session":
+        from gomrjob_spark.session import get_session
+
+        return get_session
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -19,12 +19,14 @@ identity mapper           ``mapper=None`` (runner.go:281-287 ``io.Copy``)
 ``Combiner``              builtin reducers: ignored — Spark's partial
                           aggregation already pre-reduces map-side
                           (runner.go:188-190 opt-in, automatic here).
-                          Python reducers: honored — a per-batch
-                          ``mapInPandas`` pre-reduce runs the combiner
-                          over each Arrow batch's key groups BEFORE the
-                          shuffle (map_reduce_step.go:15-17 contract,
-                          dispatch runner.go:290-295), so a hot key
-                          ships one partial per batch, not every row
+                          Python reducers: honored — a ``mapInPandas``
+                          pre-reduce buffers each map task's Arrow
+                          batches (up to ``_COMBINE_BUFFER_ROWS``, the
+                          spill buffer) and runs the combiner once per
+                          key per buffer BEFORE the shuffle
+                          (map_reduce_step.go:15-17 contract, dispatch
+                          runner.go:290-295), so a hot key ships one
+                          partial per map task, not every row
 ``StepReducerTasksCount`` ``Step.reducer_tasks`` -> ``repartition(n, key)``
                           (AQE coalescing usually makes this unnecessary)
 multi-step chain          DataFrame composition — ONE logical plan, no
@@ -61,6 +63,12 @@ COUNT = "count"
 
 _BUILTIN_REDUCERS = {SUM, COUNT}
 
+# Rows of one map task the combiner sees at once: the analog of Hadoop's
+# map-side spill buffer (io.sort.mb, 100 MB), whose every spill the
+# reference's combiner runs over (runner.go:188-190). Bounds the
+# combine stage's memory, not its result.
+_COMBINE_BUFFER_ROWS = 1_000_000
+
 MapperFn = Callable[[pd.DataFrame], pd.DataFrame]
 ReducerFn = Callable[[Any, pd.DataFrame], pd.DataFrame]
 
@@ -77,11 +85,12 @@ class Step:
         reference (``Step = Reducer``, map_reduce_step.go:23-25).
     combiner: optional per-group fn ``(key, pd.DataFrame) -> pd.DataFrame``
         run map-side before the shuffle when the reducer is a Python fn
-        (ignored for builtins — partial agg subsumes it). Its output must
-        have the same schema as its input (the reference's combiner
-        rewrites the map-output stream in place, runner.go:188-195) and
-        the operation must be associative for the result to match the
-        combiner-free plan.
+        (ignored for builtins — partial agg subsumes it), once per key per
+        map task (per ``_COMBINE_BUFFER_ROWS`` rows of a larger task). Its
+        output must have the same schema as its input (the reference's
+        combiner rewrites the map-output stream in place,
+        runner.go:188-195) and the operation must be associative for the
+        result to match the combiner-free plan.
     reducer_tasks: optional shuffle-partition override for this step
         (map_reduce_step.go:19-21 analog).
     map_schema / reduce_schema: Spark DDL schema of the mapper / reducer
@@ -205,29 +214,44 @@ def _run_step(df: DataFrame, s: Step, streaming: bool = False) -> DataFrame:
             df = spread(df).mapInPandas(map_batches, schema=s.map_schema)
 
     # map-side combining for Python reducers (map_reduce_step.go:15-17,
-    # wiring runner.go:188-195): pre-reduce each Arrow batch's key groups
-    # BEFORE the shuffle so a hot key ships one partial row per batch
+    # wiring runner.go:188-195): pre-reduce each map task's key groups
+    # BEFORE the shuffle so a hot key ships one partial row per task
     # instead of its full row stream — the exact case the reference's
-    # Combiner existed for. Builtins skip this: Catalyst's partial
+    # Combiner existed for. The task's Arrow batches are buffered up to
+    # _COMBINE_BUFFER_ROWS so the combiner runs once per key per buffer,
+    # not once per key per batch. Builtins skip this: Catalyst's partial
     # aggregation already pre-reduces map-side.
     if s.combiner is not None and not isinstance(s.reducer, str):
         combiner = s.combiner
         comb_sorted = s.sorted_values
         comb_schema = s.map_schema if s.mapper is not None else df.schema
+        bound = _COMBINE_BUFFER_ROWS
+
+        def combine(buffer: list[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            pdf = pd.concat(buffer, ignore_index=True)
+            outs = []
+            for k, g in pdf.groupby("key", sort=False):
+                if comb_sorted and "value" in g.columns:
+                    g = g.sort_values("value", kind="mergesort")
+                out = combiner(k, g)
+                if out is not None and len(out):
+                    outs.append(out)
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
 
         def combine_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            buffer: list[pd.DataFrame] = []
+            n = 0
             for pdf in batches:
-                if not len(pdf):
-                    continue
-                outs = []
-                for k, g in pdf.groupby("key", sort=False):
-                    if comb_sorted and "value" in g.columns:
-                        g = g.sort_values("value", kind="mergesort")
-                    out = combiner(k, g)
-                    if out is not None and len(out):
-                        outs.append(out)
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                while len(pdf):
+                    head, pdf = pdf.iloc[: bound - n], pdf.iloc[bound - n :]
+                    buffer.append(head)
+                    n += len(head)
+                    if n == bound:
+                        yield from combine(buffer)
+                        buffer, n = [], 0
+            if n:
+                yield from combine(buffer)
 
         df = df.mapInPandas(combine_batches, schema=comb_schema)
 

@@ -167,7 +167,7 @@ def mr_python_reducer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _max_combiner(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Map-side partial: per-key max within one Arrow batch. Same schema
+    """Map-side partial: per-key max within one map task. Same schema
     in as out (the reference's combiner rewrites the map-output stream,
     runner.go:188-195)."""
     return pd.DataFrame({"key": [key], "value": [int(pdf["value"].max())]})
@@ -190,8 +190,8 @@ def _max_reducer(key, pdf: pd.DataFrame) -> pd.DataFrame:
 def mr_combiner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python reducer WITH a map-side combiner (map_reduce_step.go:15-17,
     dispatch runner.go:290-295): per-event-type max cents. The combiner
-    pre-reduces each Arrow batch before the shuffle, so each map task
-    ships one partial per (key, batch) instead of every row — the hot-key
+    pre-reduces each map task's rows before the shuffle, so each map task
+    ships one partial per key instead of every row — the hot-key
     protection the reference's Combiner contract exists for. Shuffle-row
     reduction is asserted in tests/test_pipeline.py."""
     events = load_table(spark, sf_dir, "events")

@@ -17,6 +17,14 @@ Defaults are tuned for the local[32] test harness but chosen to be the
 - Broadcast threshold raised to 32 MB (default is 10 MB) so every
   dimension table (region, nation, supplier, part, customer at bench SFs)
   broadcasts; fact-fact joins still shuffle.
+- Python workers fork from the engine's own daemon,
+  ``gomrjob_spark.worker_daemon`` (Spark's ``spark.python.daemon.module``).
+  Before CPython 3.13 every Python task re-read the whole ``pyspark.zip``
+  directory once per zip importer, about 0.2 CPU-s a task; the daemon
+  re-reads only an archive that changed. From CPython 3.13 the re-read
+  is lazy anyway and the daemon is plain ``pyspark.daemon``. The engine's
+  root directory goes on the workers' ``PYTHONPATH`` so they can import
+  the daemon from any working directory.
 """
 
 from __future__ import annotations
@@ -26,6 +34,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "gomrjob_spark"
+
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def _env_cpus() -> int:
@@ -61,6 +72,8 @@ def get_session(
     """
     cpus = cpus or _env_cpus()
     shuffle_partitions = shuffle_partitions or cpus
+    extra_conf = dict(extra_conf or {})
+    worker_path = [p for p in (extra_conf.pop(_WORKER_PYTHONPATH, None), _ENGINE_ROOT) if p]
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -78,8 +91,10 @@ def get_session(
         # local-only: let spread() widen single-split test files without
         # inspecting .rdd at plan time (no-op on real clusters — unset)
         .config("spark.gomrjob.spread.partitions", str(cpus))
+        .config("spark.python.daemon.module", "gomrjob_spark.worker_daemon")
+        .config(_WORKER_PYTHONPATH, os.pathsep.join(worker_path))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -160,7 +160,7 @@ def test_combiner_shrinks_shuffle_rows_on_hot_key(spark):
     """The point of the combiner (map_reduce_step.go:15-17): a hot key
     must NOT ship every row through the shuffle. The reducer observes how
     many rows actually arrived — with a combiner that is at most one
-    partial per (key, map batch); without it, every input row."""
+    partial per (key, map task); without it, every input row."""
     import pandas as pd
 
     n_rows, n_parts = 2000, 8
@@ -187,10 +187,97 @@ def test_combiner_shrinks_shuffle_rows_on_hot_key(spark):
         ]
     ).run(kv).collect()
     assert without[0].value == n_rows  # every row crossed the shuffle
-    # one partial per (key, Arrow batch): bounded by the partition count,
+    # one partial per (key, map task): bounded by the partition count,
     # orders of magnitude below the row count
     assert with_comb[0].value <= n_parts
     assert with_comb[0].value < n_rows // 100
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Arrow batches of 50 rows, so one map task spans many batches; the
+    session's batch size is restored when the test ends."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    yield 50
+    spark.conf.set(key, prev)
+
+
+def _keyed_range(spark, n_rows: int, n_tasks: int, n_keys: int):
+    """``n_rows`` rows in ``n_tasks`` contiguous map tasks; every task holds
+    every one of ``n_keys`` keys."""
+    return spark.range(n_rows, numPartitions=n_tasks).selectExpr(
+        f"concat('k', id % {n_keys}) AS key", "CAST(id * 7919 % 1000 AS STRING) AS value"
+    )
+
+
+def _counted_sum_fns(calls):
+    """A partial-sum combiner that counts its calls on ``calls`` and the
+    total-sum reducer. Built per test: Python workers cannot import this
+    module, so its functions must travel by value."""
+
+    def combiner(key, pdf):
+        calls.add(1)
+        return pd.DataFrame({"key": [key], "value": [str(pdf["value"].astype("int64").sum())]})
+
+    def reducer(key, pdf):
+        return pd.DataFrame({"key": [key], "value": [int(pdf["value"].astype("int64").sum())]})
+
+    return combiner, reducer
+
+
+def test_combiner_runs_once_per_key_per_map_task(spark, small_arrow_batches):
+    """4 tasks of 1000 rows arrive as 20 Arrow batches each: the combiner
+    still runs once per (key, map task), 4 x 25 calls, not once per
+    (key, batch), and the answer is the combiner-free plan's."""
+    n_tasks, n_keys = 4, 25
+    kv = _keyed_range(spark, 4000, n_tasks, n_keys)
+    calls = spark.sparkContext.accumulator(0)
+    combiner, reducer = _counted_sum_fns(calls)
+
+    step = dict(reducer=reducer, reduce_schema="key string, value bigint")
+    combined = Pipeline(steps=[Step(combiner=combiner, **step)]).run(kv).collect()
+    plain = Pipeline(steps=[Step(**step)]).run(kv).collect()
+    assert calls.value == n_tasks * n_keys
+    assert sorted(combined) == sorted(plain)
+
+
+def test_combiner_honours_sorted_values(spark, small_arrow_batches):
+    """An order-dependent (first in byte order) but associative combiner
+    sees each buffered key group sorted: the answer equals the
+    combiner-free ``sorted_values`` plan, i.e. each key's least value."""
+
+    def first_value(key, pdf):
+        return pd.DataFrame({"key": [key], "value": [pdf["value"].iloc[0]]})
+
+    kv = _keyed_range(spark, 4000, 4, 25)
+    step = dict(reducer=first_value, reduce_schema="key string, value string", sorted_values=True)
+    combined = Pipeline(steps=[Step(combiner=first_value, **step)]).run(kv).collect()
+    plain = Pipeline(steps=[Step(**step)]).run(kv).collect()
+    least = kv.groupBy("key").agg({"value": "min"}).collect()
+    assert sorted(combined) == sorted(plain) == sorted(tuple(r) for r in least)
+
+
+def test_combiner_flushes_at_the_row_bound(spark, small_arrow_batches, monkeypatch):
+    """A map task larger than the buffer is combined once per
+    ``_COMBINE_BUFFER_ROWS`` rows: 1000 rows of one key under a bound of 64
+    (not a multiple of the 50-row batch) make ceil(1000 / 64) calls."""
+    import math
+
+    from gomrjob_spark import pipeline
+
+    n_rows, bound = 1000, 64
+    monkeypatch.setattr(pipeline, "_COMBINE_BUFFER_ROWS", bound)
+    kv = _keyed_range(spark, n_rows, 1, 1)
+    calls = spark.sparkContext.accumulator(0)
+    combiner, reducer = _counted_sum_fns(calls)
+
+    got = Pipeline(
+        steps=[Step(reducer=reducer, combiner=combiner, reduce_schema="key string, value bigint")]
+    ).run(kv).collect()
+    assert calls.value == math.ceil(n_rows / bound)
+    assert [(r.key, r.value) for r in got] == [("k0", sum(i * 7919 % 1000 for i in range(n_rows)))]
 
 
 def test_combiner_ignored_for_builtin_reducer(spark):
