@@ -77,6 +77,18 @@ def sql_davg(expr: str, carrier: str = "DECIMAL(18,2)") -> str:
     return f"(CAST(sum(CAST({expr} AS {carrier})) AS DOUBLE) / count({expr}))"
 
 
+def sql_lit(s: str) -> str:
+    """A Python string as a Spark SQL string literal (backslashes and
+    quotes escaped; control characters pass through as raw bytes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted Spark SQL identifier (the
+    ``quoteIfNeeded`` escaping), for builders that take column names."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def epoch_us(col: Column | str) -> Column:
     """Microseconds since the epoch for TIMESTAMP *and* TIMESTAMP_NTZ.
 

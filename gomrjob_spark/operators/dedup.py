@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gomrjob_spark.cache import scoped_persist
+from gomrjob_spark.functions import sql_ident
 from gomrjob_spark.operators.text import fingerprint, normalized, spread, tokens
 
 # Mersenne prime 2^31-1: affine MinHash permutations stay in 62-bit range
@@ -690,7 +691,7 @@ def _axis_bucket_entries(
     # across its two call sites at 8x8. IF(cond, a, b) ≡
     # when(cond, a).otherwise(b) (null condition takes the else branch
     # in both), so the evaluated expression is unchanged.
-    vc = "`" + vec_col.replace("`", "``") + "`"  # quoteIfNeeded escaping
+    vc = sql_ident(vec_col)
     entries = []
     for t in range(n_tables):
         bits = " + ".join(

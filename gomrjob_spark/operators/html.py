@@ -15,14 +15,18 @@ navigation chrome, ads, scripts, or footers. The family here:
   tag-stripper that does not remove script/comment content wholesale, or
   a tokenizer that reads ``title="rev>0"`` as a tag boundary, emits
   phantom blocks and cannot match.
-- :func:`clean_invisible` — remove ``<script>``/``<style>`` elements
-  (with their content) and comments; these are never visible text.
-- :func:`block_structs` — segment the page into BLOCK-level elements
+- :func:`block_structs` — remove ``<script>``/``<style>`` elements
+  (with their content) and comments, which are never visible text,
+  then segment the page into BLOCK-level elements
   (``p``/``div``/``nav``/``footer``) and compute per-block metrics:
   visible text (tags stripped, whitespace collapsed, entities decoded —
   in that order: entity-encoded angle brackets are NOT tags), link-text
   chars, link density, word/stopword counts, and the jusText-style
   content verdict.
+- :func:`extract_metadata` — title, lang attribute, meta description
+  and rel=canonical from the cleaned page head.
+- :func:`extract_links` — anchors of the cleaned page, resolved against
+  the page URL and normalized through the urls family.
 - :func:`doc_content_summary` — per-document rollup (main text, content
   vs boilerplate chars) computed with array higher-order functions over
   the block array: ZERO shuffles, the langid-gate property, which is
@@ -46,7 +50,12 @@ a block is CONTENT iff
 Every operator is a row-local column program (regex + array HOFs, all
 JVM codegen, no UDF); the only shuffle any registered query adds is the
 per-block explode's none at all — ``posexplode`` is a Generate in the
-same stage as the scan.
+same stage as the scan. Each builder is written once, as SQL text: a
+``_x_sql`` composer over expression texts (so composites and lambda
+variables compose by text — extract_links runs the urls-family
+composers over its own ``transform`` variable) and a public ``x`` that
+takes column NAMES and parses the whole expression server-side in one
+round trip.
 
 Reference parity note: jehiah/gomrjob has no HTML layer (it is a job
 framework); this family is part of the LLM-training-data surface the
@@ -59,6 +68,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from gomrjob_spark.functions import sql_ident, sql_lit
 
 
 def _idiv(a: Column, b) -> Column:
@@ -110,29 +121,16 @@ MAX_LINK_DENSITY_PM = 300
 CHUNK = 200
 
 
-def _sql_lit(s: str) -> str:
-    """A Python string as a SQL string literal (backslashes and quotes
-    escaped — the robots-family helper)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _idiv_sql(a: str, b: int) -> str:
     return f"(CAST({a} AS BIGINT) DIV {b})"
 
 
 def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
-    """:func:`synth_html` as ONE SQL string over expression texts (the
-    r14 SQL-string device, r14 verdict item #5): the whole page formula
-    parses server-side in one round trip. IF ≡ when/otherwise,
-    substring ≡ Column.substr, DIV ≡ call_function('div');
-    differential-pinned in tests/test_html.py."""
+    """:func:`synth_html` as ONE SQL string over expression texts: the
+    whole page formula parses server-side in one round trip."""
     d = f"CAST({doc_id} AS BIGINT)"
     t = f"coalesce({text}, '')"
-    la = f"coalesce({lang if lang is not None else _sql_lit('und')}, 'und')"
+    la = f"coalesce({lang if lang is not None else sql_lit('und')}, 'und')"
     g2 = _idiv_sql(d, 6)
     canonical = (
         f"IF({d} % 9 = 8, '', concat("
@@ -152,6 +150,9 @@ def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
         "'\">more</a>'), ''), '</p>')"
     ).format(d=d, t=t, c=CHUNK)
     paras = f"array_join(transform({idxs}, i -> {para}), '')"
+    # the '<pre>' decoy: a boundary-free block pattern matches its 'p'
+    # and fabricates a block; correctly it is inline markup whose text
+    # joins the promo fragment
     return (
         "concat('<html lang=\"', {la}, '\"><head><title>Doc ', "
         "CAST({d} AS STRING), "
@@ -178,25 +179,10 @@ def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
     ).format(la=la, d=d, canonical=canonical, paras=paras)
 
 
-def synth_html(
-    doc_id: Column | str, text: Column | str = None, lang=None
-) -> Column:
-    if isinstance(doc_id, str):
-        return F.expr(
-            _synth_html_sql(
-                _sql_ident(doc_id),
-                _sql_ident(text),
-                _sql_ident(lang) if lang is not None else None,
-            )
-        )
-    return _synth_html_dsl(doc_id, text, lang)
-
-
-def _synth_html_dsl(
-    doc_id: Column, text: Column, lang: Column | None = None
-) -> Column:
-    """Deterministic HTML page per document — mirrored byte-for-byte by
-    the oracle CTEs in plans/html.py (``_HTML_PAGE_SQL``). Content =
+def synth_html(doc_id: str, text: str, lang: str | None = None) -> Column:
+    """Deterministic HTML page per document from the ``doc_id``,
+    ``text`` and (optional) ``lang`` columns — mirrored byte-for-byte
+    by the oracle CTEs in plans/html.py (``_HTML_PAGE_SQL``). Content =
     the document text in CHUNK-char ``<p>`` blocks (every 4th gets an
     inline anchor); boilerplate = nav bar, promo div (entity-encoded
     anchor text), script + comment decoys each embedding a fake
@@ -208,161 +194,69 @@ def _synth_html_dsl(
     ``doc_id DIV 6``, so canonical-dedup groups merge TWO url-dedup
     triples (distinct URLs declaring one canonical, the case that
     makes canonical dedup a different operator from URL dedup)."""
-    d = doc_id.cast("bigint")
-    t = F.coalesce(text, F.lit(""))
-    lang_attr = F.coalesce(
-        lang if lang is not None else F.lit("und"), F.lit("und")
-    )
-    g2 = _idiv(d, 6)
-    canonical = F.when(
-        d % 9 == 8, F.lit("")
-    ).otherwise(
-        F.concat(
-            F.lit('<link rel="canonical" href="https://canon.site'),
-            (g2 % 11).cast("string"),
-            F.lit(".com/c"),
-            g2.cast("string"),
-            F.lit('">'),
+    return F.expr(
+        _synth_html_sql(
+            sql_ident(doc_id),
+            sql_ident(text),
+            sql_ident(lang) if lang is not None else None,
         )
     )
-    n = F.length(t)
-    idxs = F.when(
-        n > 0,
-        F.sequence(
-            F.lit(0).cast("bigint"), _idiv(n + F.lit(CHUNK - 1), CHUNK) - 1
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    paras = F.array_join(
-        F.transform(
-            idxs,
-            lambda i: F.concat(
-                F.lit('<p class="c'),
-                (d % 3).cast("string"),
-                F.lit('">'),
-                t.substr((i * CHUNK + F.lit(1)).cast("int"), F.lit(CHUNK)),
-                F.when(
-                    (d + i) % 4 == 0,
-                    F.concat(
-                        F.lit(' <a href="/r'), i.cast("string"), F.lit('">more</a>')
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit("</p>"),
-            ),
-        ),
-        "",
-    )
-    return F.concat(
-        F.lit('<html lang="'),
-        lang_attr,
-        F.lit('"><head><title>Doc '),
-        d.cast("string"),
-        F.lit('</title><meta name="description" content="Summary '),
-        (d % 50).cast("string"),
-        F.lit(' &amp; notes">'),
-        canonical,
-        F.lit("<style>p{font:12px}</style></head><body>"),
-        F.lit('<nav><a href="/">Home</a> | <a href="/about">About</a> | <a href="/c'),
-        (d % 5).cast("string"),
-        F.lit('">Contact</a></nav>'),
-        paras,
-        F.lit('<div class="promo"><a href="/buy?x='),
-        d.cast("string"),
-        F.lit('">Buy now &amp; save &lt;deals&gt;</a></div>'),
-        F.lit('<script>var p = "<p>fake '),
-        d.cast("string"),
-        F.lit('</p><a href="http://evil'),
-        (d % 4).cast("string"),
-        F.lit('.example/x">c</a>";</script>'),
-        F.lit("<!-- build "),
-        (d % 97).cast("string"),
-        F.lit(" <p>also fake</p> -->"),
-        # '<pre>' decoy: a buggy boundary-free block pattern matches
-        # its 'p' and fabricates a block; correctly it is inline
-        # markup whose text joins the promo fragment
-        F.lit("<pre>v"),
-        (d % 5).cast("string"),
-        F.lit("</pre>"),
-        F.lit('<div class="meta" title="rev>0">updated '),
-        (d % 28).cast("string"),
-        F.lit("</div>"),
-        F.lit('<footer>Copyright &amp; Terms <abbr>TM</abbr> <a href="/t">Terms</a> <a href="/p">Privacy</a> <a href="http://partner'),
-        (d % 7).cast("string"),
-        F.lit('.example/p'),
-        (d % 3).cast("string"),
-        F.lit('">Partner</a></footer>'),
-        F.lit("</body></html>"),
-    )
-
-
-def clean_invisible(html: Column) -> Column:
-    """Remove script/style elements with their content, then comments —
-    BEFORE block segmentation, so markup inside script strings or
-    comments can never fabricate blocks."""
-    out = html
-    for pat in INVISIBLE_PATTERNS:
-        out = F.regexp_replace(out, pat, "")
-    return out
-
-
-def decode_entities(col: Column) -> Column:
-    """Minimal entity decode (module table, ``&amp;`` last)."""
-    out = col
-    for ent, ch in ENTITIES:
-        out = F.replace(out, F.lit(ent), F.lit(ch))
-    return out
-
-
-def visible_text(frag: Column) -> Column:
-    """Fragment -> visible text: strip tags (quote-aware), collapse
-    whitespace, trim, THEN decode entities (encoded angle brackets are
-    text, not markup)."""
-    stripped = F.regexp_replace(frag, TAG_ANY, "")
-    return decode_entities(F.trim(F.regexp_replace(stripped, "\\s+", " ")))
-
-
-def _stop_hits(txt: Column) -> Column:
-    return F.size(F.filter(F.split(txt, " "), lambda w: w.isin(*STOPWORDS)))
 
 
 def _clean_invisible_sql(h: str) -> str:
+    """Remove script/style elements with their content, then comments,
+    from the html expression ``h`` — BEFORE block segmentation, so
+    markup inside script strings or comments can never fabricate
+    blocks."""
     out = h
     for pat in INVISIBLE_PATTERNS:
-        out = f"regexp_replace({out}, {_sql_lit(pat)}, '')"
+        out = f"regexp_replace({out}, {sql_lit(pat)}, '')"
     return out
 
 
 def _decode_entities_sql(x: str) -> str:
     out = x
     for ent, ch in ENTITIES:
-        out = f"replace({out}, {_sql_lit(ent)}, {_sql_lit(ch)})"
+        out = f"replace({out}, {sql_lit(ent)}, {sql_lit(ch)})"
     return out
 
 
+def decode_entities(col: str) -> Column:
+    """Minimal entity decode of the ``col`` column (module table,
+    ``&amp;`` last)."""
+    return F.expr(_decode_entities_sql(sql_ident(col)))
+
+
+#: whitespace runs collapse to one space in visible text
+_WS_RUN = sql_lit("\\s+")
+
+
 def _visible_text_sql(frag: str) -> str:
-    stripped = f"regexp_replace({frag}, {_sql_lit(TAG_ANY)}, '')"
+    """Fragment -> visible text: strip tags (quote-aware), collapse
+    whitespace, trim, THEN decode entities (encoded angle brackets are
+    text, not markup)."""
+    stripped = f"regexp_replace({frag}, {sql_lit(TAG_ANY)}, '')"
     return _decode_entities_sql(
-        f"trim(regexp_replace({stripped}, {_sql_lit(chr(92) + 's+')}, ' '))"
+        f"trim(regexp_replace({stripped}, {_WS_RUN}, ' '))"
     )
 
 
 def _stop_hits_sql(txt: str) -> str:
-    stops = ", ".join(_sql_lit(w) for w in STOPWORDS)
+    stops = ", ".join(sql_lit(w) for w in STOPWORDS)
     return f"size(filter(split({txt}, ' '), w -> w IN ({stops})))"
 
 
 def _block_structs_sql(h: str) -> str:
     """:func:`block_structs` as one SQL string over the html expression
-    text ``h`` — the same quote-aware segmentation, per-block metrics
-    and content verdict, parsed server-side in one round trip
-    (differential-pinned in tests/test_html.py)."""
+    text ``h``, parsed server-side in one round trip."""
     ch = _clean_invisible_sql(h)
-    frags = f"split({ch}, {_sql_lit(BLOCK_OPEN)})"
-    opens = f"regexp_extract_all({ch}, {_sql_lit(BLOCK_OPEN_TAG)}, 1)"
+    frags = f"split({ch}, {sql_lit(BLOCK_OPEN)})"
+    opens = f"regexp_extract_all({ch}, {sql_lit(BLOCK_OPEN_TAG)}, 1)"
     frag = f"element_at({frags}, CAST(i + 2 AS INT))"
     txt = _visible_text_sql(frag)
     n_chars = f"CAST(length({txt}) AS BIGINT)"
     link_chars = (
-        f"aggregate(regexp_extract_all({frag}, {_sql_lit(LINK_TEXT)}, 1), "
+        f"aggregate(regexp_extract_all({frag}, {sql_lit(LINK_TEXT)}, 1), "
         f"CAST(0 AS BIGINT), (acc, l) -> acc + length({_decode_entities_sql('l')}))"
     )
     ld_pm = (
@@ -384,58 +278,18 @@ def _block_structs_sql(h: str) -> str:
     return f"transform({opens}, (tag, i) -> {build})"
 
 
-def block_structs(html: Column | str) -> Column:
-    if isinstance(html, str):
-        return F.expr(_block_structs_sql(_sql_ident(html)))
-    return _block_structs_dsl(html)
-
-
-def _block_structs_dsl(html: Column) -> Column:
-    """Array of per-block metric structs in document order. The page is
-    segmented by splitting on block-level OPENING tags (quote-aware
-    pattern — the ``title="rev>0"`` decoy cannot truncate a tag) after
-    :func:`clean_invisible`; fragment i then ends with its own closing
-    tag, which the tag strip removes. Fields: tag, block_text, n_chars,
-    link_chars, link_density_pm, n_words, n_stop, is_content (module
-    contract). All metrics are integers (fixed-point permille density:
-    the repo's no-floats-in-gates convention); blocks with no text get
-    density 1000 (pure markup is chrome by definition)."""
-    ch = clean_invisible(html)
-    frags = F.split(ch, BLOCK_OPEN)
-    opens = F.regexp_extract_all(ch, F.lit(BLOCK_OPEN_TAG), 1)
-
-    def build(tag: Column, i: Column) -> Column:
-        frag = F.element_at(frags, (i + F.lit(2)).cast("int"))
-        txt = visible_text(frag)
-        n_chars = F.length(txt).cast("bigint")
-        link_chars = F.aggregate(
-            F.regexp_extract_all(frag, F.lit(LINK_TEXT), 1),
-            F.lit(0).cast("bigint"),
-            lambda acc, l: acc + F.length(decode_entities(l)),
-        )
-        ld_pm = F.when(
-            n_chars > 0, _idiv(F.lit(1000) * link_chars, n_chars)
-        ).otherwise(F.lit(1000).cast("bigint"))
-        n_words = F.when(txt == "", F.lit(0)).otherwise(
-            F.size(F.split(txt, " "))
-        ).cast("bigint")
-        n_stop = _stop_hits(txt).cast("bigint")
-        return F.struct(
-            tag.alias("tag"),
-            txt.alias("block_text"),
-            n_chars.alias("n_chars"),
-            link_chars.alias("link_chars"),
-            ld_pm.alias("link_density_pm"),
-            n_words.alias("n_words"),
-            n_stop.alias("n_stop"),
-            (
-                (n_chars >= MIN_CONTENT_CHARS)
-                & (ld_pm <= MAX_LINK_DENSITY_PM)
-                & (n_stop >= 1)
-            ).alias("is_content"),
-        )
-
-    return F.transform(opens, build)
+def block_structs(html: str) -> Column:
+    """Array of per-block metric structs of the ``html`` column, in
+    document order. The page is segmented by splitting on block-level
+    OPENING tags (quote-aware pattern — the ``title="rev>0"`` decoy
+    cannot truncate a tag) after the invisible elements are removed;
+    fragment i then ends with its own closing tag, which the tag strip
+    removes. Fields: tag, block_text, n_chars, link_chars,
+    link_density_pm, n_words, n_stop, is_content (module contract). All
+    metrics are integers (fixed-point permille density: the repo's
+    no-floats-in-gates convention); blocks with no text get density
+    1000 (pure markup is chrome by definition)."""
+    return F.expr(_block_structs_sql(sql_ident(html)))
 
 
 #: anchor hrefs, in document order; the synthesis contract puts href
@@ -444,29 +298,26 @@ HREF_PAT = '<a href="([^"]*)"'
 
 
 def _extract_metadata_sql(h: str) -> str:
-    """:func:`extract_metadata` as one SQL string (same clean-first,
-    decode-after contract)."""
+    """:func:`extract_metadata` as one SQL string over the html
+    expression text ``h``."""
     ch = _clean_invisible_sql(h)
     title = _decode_entities_sql(
-        "trim(regexp_replace(regexp_extract("
-        + ch
-        + ", '(?s)<title>(.*?)</title>', 1), "
-        + _sql_lit(chr(92) + "s+")
-        + ", ' '))"
+        f"trim(regexp_replace(regexp_extract({ch}, "
+        f"'(?s)<title>(.*?)</title>', 1), {_WS_RUN}, ' '))"
     )
     lang_attr = (
         f"regexp_extract({ch}, "
-        + _sql_lit('<html(?:[^>"]|"[^"]*")*?lang="([^"]*)"')
+        + sql_lit('<html(?:[^>"]|"[^"]*")*?lang="([^"]*)"')
         + ", 1)"
     )
     description = _decode_entities_sql(
         f"regexp_extract({ch}, "
-        + _sql_lit('<meta name="description" content="([^"]*)"')
+        + sql_lit('<meta name="description" content="([^"]*)"')
         + ", 1)"
     )
     canonical = (
         f"regexp_extract({ch}, "
-        + _sql_lit('<link rel="canonical" href="([^"]*)"')
+        + sql_lit('<link rel="canonical" href="([^"]*)"')
         + ", 1)"
     )
     return (
@@ -476,90 +327,65 @@ def _extract_metadata_sql(h: str) -> str:
     )
 
 
-def extract_metadata(html: Column | str) -> Column:
-    if isinstance(html, str):
-        return F.expr(_extract_metadata_sql(_sql_ident(html)))
-    return _extract_metadata_dsl(html)
-
-
-def _extract_metadata_dsl(html: Column) -> Column:
+def extract_metadata(html: str) -> Column:
     """Struct (title, lang_attr, description, canonical_href,
-    has_canonical) from the page head — the metadata surface every
-    crawl extractor reads before touching the body: the title and
-    description feed snippet/quality signals, the lang attribute is
-    the langid prior, and rel=canonical is the publisher's OWN dedup
-    hint (grouping by it merges distinct URLs that declare one
-    canonical — see dedup_canonical). Invisible elements are removed
-    FIRST (a script string could embed a fake ``<title>``); entity
-    decode applies to the human-readable fields. Row-local codegen,
-    zero shuffles."""
-    ch = clean_invisible(html)
-    title = decode_entities(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_extract(ch, "(?s)<title>(.*?)</title>", 1),
-                "\\s+",
-                " ",
-            )
-        )
-    )
-    lang_attr = F.regexp_extract(
-        ch, '<html(?:[^>"]|"[^"]*")*?lang="([^"]*)"', 1
-    )
-    description = decode_entities(
-        F.regexp_extract(ch, '<meta name="description" content="([^"]*)"', 1)
-    )
-    canonical = F.regexp_extract(
-        ch, '<link rel="canonical" href="([^"]*)"', 1
-    )
-    return F.struct(
-        title.alias("title"),
-        lang_attr.alias("lang_attr"),
-        description.alias("description"),
-        canonical.alias("canonical_href"),
-        (canonical != "").alias("has_canonical"),
-    )
-
-
-def extract_links(html: Column, base_url: Column) -> Column:
-    """Array of per-link structs (href, resolved_url, link_domain,
-    is_internal) in document order — the link-graph half of WET
-    derivation (the other half is the text; both come from the same
-    cleaned page). Invisible elements are removed FIRST: the synthesis
-    plants an anchor inside a script string (``http://evil<k>``), so an
-    extractor that scans raw bytes emits phantom edges and cannot
-    hash-match. Resolution covers the two shapes crawl links take:
-    absolute (``scheme://...``, kept) and root-relative (``/path``,
-    joined to the base URL's scheme://host[:port]); the result is
-    re-normalized through the urls-family contract, and is_internal
-    compares registered domains (the crawl frontier's same-site test).
+    has_canonical) from the page head of the ``html`` column — the
+    metadata surface every crawl extractor reads before touching the
+    body: the title and description feed snippet/quality signals, the
+    lang attribute is the langid prior, and rel=canonical is the
+    publisher's OWN dedup hint (grouping by it merges distinct URLs
+    that declare one canonical — see dedup_canonical). Invisible
+    elements are removed FIRST (a script string could embed a fake
+    ``<title>``); entity decode applies to the human-readable fields.
     Row-local codegen, zero shuffles."""
-    from gomrjob_spark.operators.urls import registered_domain, url_normalize
+    return F.expr(_extract_metadata_sql(sql_ident(html)))
 
-    base_prefix = F.regexp_extract(base_url, "^([a-z]+://[^/?#]+)", 1)
-    base_domain = registered_domain(
-        F.regexp_extract(base_url, "^[a-z]+://([^/:?#]+)", 1)
+
+def _extract_links_sql(h: str, base: str) -> str:
+    """:func:`extract_links` as one SQL string over the html and
+    base-URL expression texts: one ``transform`` whose lambda variable
+    (the href) feeds the urls-family SQL builders directly."""
+    from gomrjob_spark.operators.urls import (
+        _registered_domain_sql,
+        _url_normalize_sql,
     )
-    hrefs = F.regexp_extract_all(
-        clean_invisible(html), F.lit(HREF_PAT), 1
+
+    def host(u: str) -> str:
+        return f"regexp_extract({u}, '^[a-z]+://([^/:?#]+)', 1)"
+
+    base_prefix = f"regexp_extract({base}, '^([a-z]+://[^/?#]+)', 1)"
+    base_domain = _registered_domain_sql(host(base))
+    hrefs = (
+        f"regexp_extract_all({_clean_invisible_sql(h)}, {sql_lit(HREF_PAT)}, 1)"
+    )
+    raw_abs = (
+        "IF(href RLIKE '^[A-Za-z][A-Za-z0-9+.-]*://', href, "
+        f"concat({base_prefix}, href))"
+    )
+    resolved = _url_normalize_sql(raw_abs)
+    link_domain = _registered_domain_sql(host(resolved))
+    return (
+        f"transform({hrefs}, href -> named_struct('href', href, "
+        f"'resolved_url', {resolved}, 'link_domain', {link_domain}, "
+        f"'is_internal', {link_domain} = {base_domain}))"
     )
 
-    def build(href: Column) -> Column:
-        raw_abs = F.when(
-            href.rlike("^[A-Za-z][A-Za-z0-9+.-]*://"), href
-        ).otherwise(F.concat(base_prefix, href))
-        resolved = url_normalize(raw_abs)
-        link_domain = registered_domain(
-            F.regexp_extract(resolved, "^[a-z]+://([^/:?#]+)", 1)
-        )
-        return F.struct(
-            href.alias("href"),
-            resolved.alias("resolved_url"),
-            link_domain.alias("link_domain"),
-            (link_domain == base_domain).alias("is_internal"),
-        )
 
-    return F.transform(hrefs, build)
+def extract_links(html: str, base_url: str) -> Column:
+    """Array of per-link structs (href, resolved_url, link_domain,
+    is_internal) of the ``html`` column in document order — the
+    link-graph half of WET derivation (the other half is the text;
+    both come from the same cleaned page). Invisible elements are
+    removed FIRST: the synthesis plants an anchor inside a script
+    string (``http://evil<k>``), so an extractor that scans raw bytes
+    emits phantom edges and cannot hash-match. Resolution covers the
+    two shapes crawl links take: absolute (``scheme://...``, kept) and
+    root-relative (``/path``, joined to the ``base_url`` column's
+    scheme://host[:port]); the result is re-normalized through the
+    urls-family contract, and is_internal compares registered domains
+    (the crawl frontier's same-site test). Row-local codegen, zero
+    shuffles."""
+    return F.expr(_extract_links_sql(sql_ident(html), sql_ident(base_url)))
 
 
 def with_blocks(
@@ -579,7 +405,7 @@ def doc_content_summary(
     projection in the same stage as the WARC walk). main_text joins the
     content blocks' visible text in document order — the WET-style
     output the downstream text operators consume."""
-    blocks = _sql_ident(blocks_col)
+    blocks = sql_ident(blocks_col)
     content = f"filter({blocks}, b -> b.is_content)"
     summed = (
         lambda arr, field: f"aggregate({arr}, CAST(0 AS BIGINT), "  # noqa: E731

@@ -38,6 +38,10 @@ TEXT parses per row (split lines -> directive regex -> rule structs)
 and the verdict folds over the matched rules with one array
 ``aggregate`` — zero shuffles, the URL-gate posture, so robots
 admission composes into the same scan as url_normalize at 100 TB.
+Each builder is one SQL string (the urls-family convention: a
+``_x_sql`` composer over expression text, a public ``x`` over column
+NAMES); :func:`synth_verdict` composes synthesize -> parse -> decide
+as one expression.
 
 The fixture has no robots files, so the registered query SYNTHESIZES a
 robots.txt per registered domain as a formula in the domain's site
@@ -63,6 +67,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from gomrjob_spark.functions import sql_ident, sql_lit
+
 #: directive line (RFC 9309-lenient): case-insensitive verb, flexible
 #: whitespace around ':', value ends at whitespace or a '#' comment;
 #: values must start '/' (an empty Disallow value matches nothing per
@@ -72,20 +78,24 @@ _RULE_PAT = "(?i)^[ \t]*(allow|disallow)[ \t]*:[ \t]*(/[^ \t#]*)"
 #: group-header line, same leniency
 _UA_PAT = "(?i)^[ \t]*user-agent[ \t]*:[ \t]*([^ \t#]+)"
 
-
-def _sql_lit(s: str) -> str:
-    """A Python string as a SQL string literal (backslashes and quotes
-    escaped; control characters pass through as raw bytes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+#: line split shared by the rule and Sitemap-directive parsers (CRLF,
+#: CR and LF endings)
+_LINES = "'\\r\\n|\\r|\\n'"
 
 
-def _synth_robots_sql(k: str) -> str:
-    """:func:`synth_robots` as ONE SQL string over the bigint
-    expression text ``k`` — the r14 SQL-string device applied to the
-    robots family (r14 verdict item #5); operator-for-operator
-    identical to the DSL (IF ≡ when/otherwise), differential-pinned in
-    tests/test_robots.py."""
+def _synth_robots_sql(site_num: str) -> str:
+    """:func:`synth_robots` as ONE SQL string over the expression text
+    ``site_num``."""
+    k = f"CAST({site_num} AS BIGINT)"
     sec = f"CAST({k} % 4 AS STRING)"
+    # r12 RFC 9309 §2.2.3 pattern rules: every 7th-mod-2 domain blocks
+    # ALL sections with a '*' wildcard (len 5 — ties the Allow
+    # override, so Allow-wins-tie is exercised against a PATTERN
+    # rule); every 7th-mod-5 domain end-anchors a Disallow on paths
+    # ending '0'. A literal-startswith matcher never matches either and
+    # fails OPEN — hash-gate-detectable. The k%5==1 badbot group comes
+    # AFTER the * group: an all-groups parser folds its
+    # Disallow-everything into the * rules and mis-blocks the domain.
     return (
         "concat('# robots for site', CAST({k} AS STRING), "
         "'\\n\\nUser-agent: *\\nDisallow: /a', {sec}, "
@@ -96,25 +106,38 @@ def _synth_robots_sql(k: str) -> str:
         "'\\nCrawl-delay: ', CAST({k} % 5 AS STRING), "
         "IF({k} % 5 = 1, '\\n\\nUser-agent: badbot\\nDisallow: /', ''), "
         "'\\n')"
-    ).format(k=f"({k})", sec=sec)
+    ).format(k=k, sec=sec)
+
+
+def synth_robots(site_num: str) -> Column:
+    """robots.txt text per domain as a PURE formula of the site-number
+    column ``site_num`` (``k``; mirrored by the oracle CTE in
+    plans/web.py): a comment header, the ``*`` group,
+    ``Disallow: /a<k%4>``, a longest-match ``Allow: /a<k%4>/p`` override
+    on every third domain, an extra ``Disallow: /buy`` on even domains,
+    the two pattern rules, an unknown ``Crawl-delay`` directive, a
+    second ``badbot`` group on k%5==1, and a blank line."""
+    return F.expr(_synth_robots_sql(sql_ident(site_num)))
 
 
 def _parse_rules_sql(txt: str, agent: str = "*") -> str:
     """:func:`parse_rules` as one SQL string over the robots-text
-    expression ``txt``: the same single array aggregate carrying the
-    RFC 9309 group state, with the step CASE identical to the DSL's
-    when/when/otherwise chain."""
-    ua = f"regexp_extract(ln, {_sql_lit(_UA_PAT)}, 1)"
-    verb = f"lower(regexp_extract(ln, {_sql_lit(_RULE_PAT)}, 1))"
+    expression ``txt``: a single array aggregate carrying the RFC 9309
+    group state."""
+    ua = f"regexp_extract(ln, {sql_lit(_UA_PAT)}, 1)"
+    verb = f"lower(regexp_extract(ln, {sql_lit(_RULE_PAT)}, 1))"
     rule = (
         f"struct({verb} = 'allow' AS allow, "
-        f"regexp_extract(ln, {_sql_lit(_RULE_PAT)}, 2) AS prefix)"
+        f"regexp_extract(ln, {sql_lit(_RULE_PAT)}, 2) AS prefix)"
     )
     zero = (
         "struct(false AS in_header, false AS active, "
         "CAST(array() AS array<struct<allow:boolean,prefix:string>>) AS rules)"
     )
-    ua_match = f"lower({ua}) = {_sql_lit(agent.lower())}"
+    ua_match = f"lower({ua}) = {sql_lit(agent.lower())}"
+    # consecutive UA lines extend the header, a UA line after rules
+    # STARTS OVER; comments/blanks/unknown directives leave the group
+    # running
     step = (
         f"CASE WHEN {ua} != '' THEN struct("
         "true AS in_header, "
@@ -126,22 +149,43 @@ def _parse_rules_sql(txt: str, agent: str = "*") -> str:
         "ELSE acc END"
     )
     return (
-        f"aggregate(split({txt}, '\\r\\n|\\r|\\n'), {zero}, "
+        f"aggregate(split({txt}, {_LINES}), {zero}, "
         f"(acc, ln) -> {step}, acc -> acc.rules)"
     )
 
 
+def parse_rules(robots_txt: str, agent: str = "*") -> Column:
+    """robots.txt text column -> array<struct<allow boolean, prefix
+    string>>: the rules of the groups whose header names ``agent``
+    (default ``*``), in file order. One array ``aggregate`` over the
+    lines carries the RFC 9309 group state: consecutive ``User-agent``
+    lines form a header (active if ANY of them names the agent); the
+    first rule line closes the header; a ``User-agent`` line after
+    rules starts a new group. Comments, blanks, and unknown directives
+    are skipped WITHOUT ending the group; CRLF endings, lowercase
+    verbs, flexible whitespace, and trailing ``#`` comments are
+    tolerated (lenient recognition is a safety property: a dropped
+    Disallow fails open)."""
+    return F.expr(_parse_rules_sql(sql_ident(robots_txt), agent))
+
+
 def _rule_matches_sql(path: str, prefix: str) -> str:
-    """:func:`rule_matches` over expression texts (same fast
-    startswith path for plain prefixes, same anchored-regex
-    translation for pattern rules)."""
+    """Does the rule pattern ``prefix`` match ``path`` (RFC 9309
+    §2.2.3), over expression texts? Rules with neither ``*`` nor a
+    trailing ``$`` are plain prefixes and keep the fast ``startswith``
+    path (the overwhelmingly common case — no per-row regex compile).
+    Pattern rules compile to one anchored regex (shared Java/RE2
+    subset, so the translation reads identically on Spark and in the
+    DuckDB parity tests): every regex metacharacter except ``*``
+    escapes to a literal, ``*`` becomes ``.*``, a trailing ``$`` stays
+    an end anchor, and the whole pattern start-anchors with ``^``."""
     anchored = f"endswith({prefix}, '$')"
     body = f"IF({anchored}, substring({prefix}, 1, length({prefix}) - 1), {prefix})"
     escaped = (
         f"regexp_replace({body}, "
-        + _sql_lit(r"([.\[\]{}()+?^$|\\])")
+        + sql_lit(r"([.\[\]{}()+?^$|\\])")
         + ", "
-        + _sql_lit(r"\\$1")
+        + sql_lit(r"\\$1")
         + ")"
     )
     rx = (
@@ -156,9 +200,9 @@ def _rule_matches_sql(path: str, prefix: str) -> str:
 
 
 def _robots_verdict_sql(path: str, rules: str) -> str:
-    """:func:`robots_verdict` over expression texts: the same filter +
-    longest-match/Allow-ties aggregate fold, composed with
-    :func:`_rule_matches_sql`."""
+    """:func:`robots_verdict` over expression texts: filter the
+    matching rules, then one longest-match/Allow-wins-ties aggregate
+    fold."""
     matches = f"filter({rules}, r -> {_rule_matches_sql(path, 'r.prefix')})"
     step = (
         "IF(length(r.prefix) > length(acc.prefix) OR "
@@ -175,190 +219,41 @@ def _robots_verdict_sql(path: str, rules: str) -> str:
     )
 
 
-def synth_robots(site_num: Column | str) -> Column:
-    if isinstance(site_num, str):
-        # mirror the DSL's defensive bigint cast (identity on bigint
-        # inputs; catalyst removes the redundant Cast either way)
-        return F.expr(_synth_robots_sql(f"CAST({site_num} AS BIGINT)"))
-    """robots.txt text per domain as a PURE formula of the domain's
-    site number ``k`` (mirrored by the oracle CTE in plans/web.py):
-    a comment header, the ``*`` group, ``Disallow: /a<k%4>``, a
-    longest-match ``Allow: /a<k%4>/p`` override on every third domain,
-    an extra ``Disallow: /buy`` on even domains, an unknown
-    ``Crawl-delay`` directive, and a blank line."""
-    k = site_num.cast("bigint")
-    sec = (k % 4).cast("string")
-    return F.concat(
-        F.lit("# robots for site"),
-        k.cast("string"),
-        F.lit("\n\nUser-agent: *\nDisallow: /a"),
-        sec,
-        F.when(
-            k % 3 == 0,
-            F.concat(F.lit("\nAllow: /a"), sec, F.lit("/p")),
-        ).otherwise(F.lit("")),
-        F.when(k % 2 == 0, F.lit("\nDisallow: /buy")).otherwise(F.lit("")),
-        # RFC 9309 §2.2.3 pattern rules (NEW r12): every 7th-mod-2
-        # domain blocks ALL sections with a '*' wildcard (len 5 — ties
-        # the Allow override, so Allow-wins-tie is exercised against a
-        # PATTERN rule); every 7th-mod-5 domain end-anchors a
-        # Disallow on paths ending '0'. A literal-startswith matcher
-        # never matches either and fails OPEN — hash-gate-detectable.
-        F.when(k % 7 == 2, F.lit("\nDisallow: /a*/p")).otherwise(F.lit("")),
-        F.when(k % 7 == 5, F.lit("\nDisallow: /*0$")).otherwise(F.lit("")),
-        F.lit("\nCrawl-delay: "),
-        (k % 5).cast("string"),
-        # second group AFTER the * group on k%5==1: an all-groups
-        # parser folds this badbot Disallow-everything into the *
-        # rules and mis-blocks the whole domain (hash-gated group
-        # selection; placed last so the * group keeps its own rules)
-        F.when(
-            k % 5 == 1,
-            F.lit("\n\nUser-agent: badbot\nDisallow: /"),
-        ).otherwise(F.lit("")),
-        F.lit("\n"),
+def robots_verdict(path: str, rules: str) -> Column:
+    """Struct (allowed, rule_prefix) for the URL-path column ``path``
+    under the parsed rule-array column ``rules`` — RFC 9309 decision:
+    longest matching rule wins (priority = octets of the rule PATTERN,
+    wildcards and anchors counted, per §2.2.2), Allow wins length ties,
+    no match -> allowed with the empty rule. ``*``/``$`` pattern rules
+    match per §2.2.3. One array ``aggregate`` fold, row-local."""
+    return F.expr(_robots_verdict_sql(sql_ident(path), sql_ident(rules)))
+
+
+def synth_verdict(path: str, site_num: str) -> Column:
+    """:func:`robots_verdict` of the ``path`` column under the
+    synthesized robots.txt of the ``site_num`` column, composed as ONE
+    SQL string (synthesize -> parse -> decide, no staged columns) — the
+    gate, streaming-twin and funnel call shape."""
+    rules = _parse_rules_sql(_synth_robots_sql(sql_ident(site_num)))
+    return F.expr(_robots_verdict_sql(sql_ident(path), rules))
+
+
+def _parse_sitemap_directives_sql(txt: str) -> str:
+    """:func:`parse_sitemap_directives` as one SQL string over the
+    robots-text expression ``txt``."""
+    is_sitemap = sql_lit(r"(?i)^\s*sitemap\s*:")
+    value = sql_lit(r"(?i)^\s*sitemap\s*:\s*([^#]*)")
+    rtrim = sql_lit(r"\s+$")
+    return (
+        f"transform(filter(split({txt}, {_LINES}), "
+        f"ln -> regexp_like(ln, {is_sitemap})), "
+        f"ln -> regexp_replace(regexp_extract(ln, {value}, 1), {rtrim}, ''))"
     )
 
 
-def parse_rules(robots_txt: Column | str, agent: str = "*") -> Column:
-    if isinstance(robots_txt, str):
-        return F.expr(_parse_rules_sql(robots_txt, agent))
-    return _parse_rules_dsl(robots_txt, agent)
-
-
-def _parse_rules_dsl(robots_txt: Column, agent: str = "*") -> Column:
-    """robots.txt text -> array<struct<allow boolean, prefix string>>:
-    the rules of the groups whose header names ``agent`` (default
-    ``*``), in file order. One array ``aggregate`` over the lines
-    carries the RFC 9309 group state: consecutive ``User-agent`` lines
-    form a header (active if ANY of them names the agent); the first
-    rule line closes the header; a ``User-agent`` line after rules
-    starts a new group. Comments, blanks, and unknown directives are
-    skipped WITHOUT ending the group; CRLF endings, lowercase verbs,
-    flexible whitespace, and trailing ``#`` comments are tolerated
-    (lenient recognition is a safety property: a dropped Disallow
-    fails open)."""
-    lines = F.split(robots_txt, "\r\n|\r|\n")
-    zero = F.struct(
-        F.lit(False).alias("in_header"),
-        F.lit(False).alias("active"),
-        F.array().cast(
-            "array<struct<allow:boolean,prefix:string>>"
-        ).alias("rules"),
-    )
-
-    def step(acc: Column, ln: Column) -> Column:
-        ua = F.regexp_extract(ln, _UA_PAT, 1)
-        is_ua = ua != ""
-        ua_match = F.lower(ua) == agent.lower()
-        verb = F.lower(F.regexp_extract(ln, _RULE_PAT, 1))
-        is_rule = verb != ""
-        rule = F.struct(
-            (verb == "allow").alias("allow"),
-            F.regexp_extract(ln, _RULE_PAT, 2).alias("prefix"),
-        )
-        return (
-            F.when(
-                is_ua,
-                F.struct(
-                    F.lit(True).alias("in_header"),
-                    # consecutive UA lines extend the header; a UA
-                    # line after rules STARTS OVER
-                    F.when(
-                        acc["in_header"], acc["active"] | ua_match
-                    ).otherwise(ua_match).alias("active"),
-                    acc["rules"].alias("rules"),
-                ),
-            )
-            .when(
-                is_rule,
-                F.struct(
-                    F.lit(False).alias("in_header"),
-                    acc["active"].alias("active"),
-                    F.when(
-                        acc["active"],
-                        F.array_append(acc["rules"], rule),
-                    ).otherwise(acc["rules"]).alias("rules"),
-                ),
-            )
-            .otherwise(acc)  # comments/blanks/unknown: group continues
-        )
-
-    return F.aggregate(lines, zero, step, lambda acc: acc["rules"])
-
-
-def _rule_regex(prefix: Column) -> Column:
-    """RFC 9309 §2.2.3 rule pattern -> anchored regex (shared Java/RE2
-    subset, so the same translation reads identically on Spark and in
-    the DuckDB parity tests): every regex metacharacter except ``*``
-    escapes to a literal, ``*`` becomes ``.*``, a trailing ``$`` stays
-    an end anchor, and the whole pattern start-anchors with ``^``."""
-    anchored = prefix.endswith("$")
-    body = F.when(
-        anchored, F.substring(prefix, 1, F.length(prefix) - 1)
-    ).otherwise(prefix)
-    escaped = F.regexp_replace(
-        body, r"([.\[\]{}()+?^$|\\])", r"\\$1"
-    )
-    return F.concat(
-        F.lit("^"),
-        F.replace(escaped, F.lit("*"), F.lit(".*")),
-        F.when(anchored, F.lit("$")).otherwise(F.lit("")),
-    )
-
-
-def rule_matches(path: Column, rule_prefix: Column) -> Column:
-    """Does a rule pattern match a path (RFC 9309 §2.2.3)? Rules with
-    neither ``*`` nor a trailing ``$`` are plain prefixes and keep the
-    fast ``startswith`` path (the overwhelmingly common case — no
-    per-row regex compile); pattern rules compile to one anchored
-    regex."""
-    is_pattern = rule_prefix.contains("*") | rule_prefix.endswith("$")
-    return F.when(
-        is_pattern, F.regexp_like(path, _rule_regex(rule_prefix))
-    ).otherwise(path.startswith(rule_prefix))
-
-
-def robots_verdict(path: Column | str, rules: Column | str) -> Column:
-    if isinstance(path, str) and isinstance(rules, str):
-        return F.expr(_robots_verdict_sql(path, rules))
-    return _robots_verdict_dsl(path, rules)
-
-
-def _robots_verdict_dsl(path: Column, rules: Column) -> Column:
-    """Struct (allowed, rule_prefix) for a URL path under a parsed
-    rule array — RFC 9309 decision: longest matching rule wins
-    (priority = octets of the rule PATTERN, wildcards and anchors
-    counted, per §2.2.2), Allow wins length ties, no match -> allowed
-    with the empty rule. ``*``/``$`` pattern rules match per §2.2.3
-    (see :func:`rule_matches`). One array ``aggregate`` fold,
-    row-local."""
-    matches = F.filter(rules, lambda r: rule_matches(path, r["prefix"]))
-    zero = F.struct(
-        F.lit(True).alias("allow"), F.lit("").alias("prefix")
-    )
-    best = F.aggregate(
-        matches,
-        zero,
-        lambda acc, r: F.when(
-            (F.length(r["prefix"]) > F.length(acc["prefix"]))
-            | (
-                (F.length(r["prefix"]) == F.length(acc["prefix"]))
-                & r["allow"]
-                & ~acc["allow"]
-            ),
-            r,
-        ).otherwise(acc),
-    )
-    return F.struct(
-        best["allow"].alias("allowed"),
-        best["prefix"].alias("rule_prefix"),
-    )
-
-
-def parse_sitemap_directives(robots_txt: Column) -> Column:
-    """``Sitemap:`` directive URLs from robots.txt, in file order —
-    the crawl-discovery hook (sitemaps.org: the directive tells
+def parse_sitemap_directives(robots_txt: str) -> Column:
+    """``Sitemap:`` directive URLs from the robots.txt column, in file
+    order — the crawl-discovery hook (sitemaps.org: the directive tells
     crawlers where the publisher's sitemap or sitemap INDEX lives).
     Per RFC 9309 / the sitemaps protocol the directive is
     GROUP-INDEPENDENT, so extraction is line-based regardless of which
@@ -367,16 +262,4 @@ def parse_sitemap_directives(robots_txt: Column) -> Column:
     line COMMENTED OUT with a leading ``#`` never harvests (the
     sitemap-family comment decoy, one layer down). Row-local: one
     split + filter + transform."""
-    lines = F.split(robots_txt, "\r\n|\r|\n")
-    sm = F.filter(
-        lines,
-        lambda ln: F.regexp_like(ln, F.lit(r"(?i)^\s*sitemap\s*:")),
-    )
-    return F.transform(
-        sm,
-        lambda ln: F.regexp_replace(
-            F.regexp_extract(ln, r"(?i)^\s*sitemap\s*:\s*([^#]*)", 1),
-            r"\s+$",
-            "",
-        ),
-    )
+    return F.expr(_parse_sitemap_directives_sql(sql_ident(robots_txt)))

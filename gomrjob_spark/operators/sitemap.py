@@ -13,6 +13,9 @@ The parse is a pure row-local column program (strip XML comments with
 one dotall regex, extract ``<url>`` blocks, then per-block field
 extraction) — zero UDFs, zero shuffles, the robots-family posture, so
 frontier seeding composes into the same scan as robots admission.
+Builders and parsers are one SQL string each (the urls-family
+convention: a ``_x_sql`` composer over expression text, a public ``x``
+over column NAMES).
 
 The fixture synthesizes each domain's sitemap from its site number
 (:func:`synth_sitemap` — the robots-family device) with the
@@ -33,62 +36,121 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from gomrjob_spark.functions import sql_ident, sql_lit
 
-def synth_sitemap(site_num: Column) -> Column:
-    """sitemap.xml text per domain as a PURE formula of the domain's
-    site number ``k`` and registered domain (mirrored by the oracle in
-    plans/web.py, which recomputes entries from the formulas and never
-    parses): 3 + k%4 ``<url>`` entries with formula loc/lastmod/
-    priority; a commented-out decoy entry on k%3==0; whitespace-noised
-    ``<loc>`` values on k%2==1."""
-    k = site_num.cast("bigint")
-    domain = F.col("registered_domain")
+#: the synthesized files name their domain through this column
+_DOMAIN = sql_ident("registered_domain")
 
-    def entry(i: Column) -> Column:
-        loc = F.concat(
-            F.lit("https://"), domain, F.lit("/page"), i.cast("string")
-        )
-        noised = F.when(
-            k % 2 == 1,
-            F.concat(F.lit("\n      "), loc, F.lit(" \n    ")),
-        ).otherwise(loc)
-        day = 1 + (k + i) % 28
-        pri = 1 + (k + i) % 9
-        return F.concat(
-            F.lit("  <url>\n    <loc>"), noised, F.lit("</loc>\n"),
-            F.lit("    <lastmod>2026-03-"),
-            F.lpad(day.cast("string"), 2, "0"),
-            F.lit("</lastmod>\n    <priority>0."),
-            pri.cast("string"),
-            F.lit("</priority>\n  </url>\n"),
-        )
+_URLSET_OPEN = sql_lit(
+    '<?xml version="1.0" encoding="UTF-8"?>\n'
+    '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n'
+)
+_URLSET_CLOSE = sql_lit("</urlset>\n")
+_URL_DECOY = sql_lit(
+    "  <!-- retired:\n  <url><loc>https://decoy.example/x</loc>"
+    "<lastmod>2026-01-01</lastmod></url>\n  -->\n"
+)
 
-    entries = F.aggregate(
-        F.sequence(F.lit(0).cast("bigint"), 2 + k % 4),
-        F.lit("").cast("string"),
-        lambda acc, i: F.concat(acc, entry(i)),
-    )
-    decoy = F.when(
-        k % 3 == 0,
-        F.lit(
-            "  <!-- retired:\n  <url><loc>https://decoy.example/x</loc>"
-            "<lastmod>2026-01-01</lastmod></url>\n  -->\n"
-        ),
-    ).otherwise(F.lit(""))
-    return F.concat(
-        F.lit(
-            '<?xml version="1.0" encoding="UTF-8"?>\n'
-            '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n'
-        ),
-        decoy,
-        entries,
-        F.lit("</urlset>\n"),
+#: XML comments (dotall), stripped before any harvest
+_COMMENT = sql_lit(r"(?s)<!--.*?-->")
+
+#: the spec's whitespace rule — Spark's trim() strips SPACES only, and
+#: the rule includes newlines/tabs, so both ends trim with a regex
+_WTRIM = sql_lit(r"(?s)^\s+|\s+$")
+
+#: whitespace noise around a noised ``<loc>`` value
+_NOISE = (sql_lit("\n      "), sql_lit(" \n    "))
+
+
+def _noised_sql(loc: str, noisy: str) -> str:
+    """``loc`` wrapped in newline/space noise where ``noisy`` holds."""
+    return f"IF({noisy}, concat({_NOISE[0]}, {loc}, {_NOISE[1]}), {loc})"
+
+
+def _url_entries_sql(n_last: str, loc: str, noisy: str, day: str, pri: str) -> str:
+    """``<url>`` entries i = 0..``n_last`` (lambda variable ``i``),
+    concatenated in order."""
+    entry = ", ".join([
+        sql_lit("  <url>\n    <loc>"),
+        _noised_sql(loc, noisy),
+        sql_lit("</loc>\n    <lastmod>2026-03-"),
+        f"lpad(CAST({day} AS STRING), 2, '0')",
+        sql_lit("</lastmod>\n    <priority>0."),
+        f"CAST({pri} AS STRING)",
+        sql_lit("</priority>\n  </url>\n"),
+    ])
+    return (
+        f"aggregate(sequence(CAST(0 AS BIGINT), {n_last}), CAST('' AS STRING), "
+        f"(acc, i) -> concat(acc, concat({entry})))"
     )
 
 
-def parse_entries(xml: Column) -> Column:
-    """sitemap text -> array<struct<loc, lastmod, priority_ppm>> in
-    file order. Comments strip FIRST (one dotall regex — a phantom
+def _urlset_sql(decoy_when: str, entries: str) -> str:
+    return (
+        f"concat({_URLSET_OPEN}, IF({decoy_when}, {_URL_DECOY}, ''), "
+        f"{entries}, {_URLSET_CLOSE})"
+    )
+
+
+def _synth_sitemap_sql(site_num: str) -> str:
+    """:func:`synth_sitemap` as one SQL string over the expression text
+    ``site_num``."""
+    k = f"CAST({site_num} AS BIGINT)"
+    loc = f"concat('https://', {_DOMAIN}, '/page', CAST(i AS STRING))"
+    entries = _url_entries_sql(
+        f"2 + {k} % 4", loc, f"{k} % 2 = 1", f"1 + ({k} + i) % 28",
+        f"1 + ({k} + i) % 9",
+    )
+    return _urlset_sql(f"{k} % 3 = 0", entries)
+
+
+def synth_sitemap(site_num: str) -> Column:
+    """sitemap.xml text per domain as a PURE formula of the site-number
+    column ``site_num`` (``k``) and the ``registered_domain`` column
+    (mirrored by the oracle in plans/web.py, which recomputes entries
+    from the formulas and never parses): 3 + k%4 ``<url>`` entries with
+    formula loc/lastmod/priority; a commented-out decoy entry on
+    k%3==0; whitespace-noised ``<loc>`` values on k%2==1."""
+    return F.expr(_synth_sitemap_sql(sql_ident(site_num)))
+
+
+def _parse_entries_sql(xml: str) -> str:
+    """:func:`parse_entries` as one SQL string over the sitemap-text
+    expression ``xml``."""
+    clean = f"regexp_replace({xml}, {_COMMENT}, '')"
+    blocks = f"regexp_extract_all({clean}, {sql_lit(r'(?s)<url>(.*?)</url>')}, 1)"
+
+    def field(tag: str) -> str:
+        pat = sql_lit(f"(?s)<{tag}>(.*?)</{tag}>")
+        return f"regexp_replace(regexp_extract(b, {pat}, 1), {_WTRIM}, '')"
+
+    # full spec range 0.0-1.0 (the r12 advisor's finding #3: '1.0' and
+    # multi-digit fractions like '0.55' are legal), converted with
+    # fixed-point string arithmetic — int part * 10^6 plus the first 6
+    # fraction digits right-padded with zeros — never a float. The
+    # integer-1 branch admits only zero fractions (the r13 advisor's
+    # finding: '[01](\.[0-9]+)?' accepted out-of-spec '1.5'/'1.9',
+    # yielding ppm > 1000000; the spec caps priority at 1.0, so
+    # out-of-range values fail the extract and land as null ppm like
+    # any other malformed field)
+    pri_pat = sql_lit(r"<priority>(0(?:\.[0-9]+)?|1(?:\.0+)?)</priority>")
+    pri = f"regexp_extract(b, {pri_pat}, 1)"
+    dot = sql_lit(r"\.")
+    fp = f"IF(instr({pri}, '.') > 0, split({pri}, {dot})[1], '')"
+    ppm = (
+        f"CAST(split({pri}, {dot})[0] AS BIGINT) * 1000000 + "
+        f"CAST(rpad(substring({fp}, 1, 6), 6, '0') AS BIGINT)"
+    )
+    return (
+        f"transform({blocks}, b -> named_struct('loc', {field('loc')}, "
+        f"'lastmod', {field('lastmod')}, "
+        f"'priority_ppm', IF({pri} != '', {ppm}, CAST(NULL AS BIGINT))))"
+    )
+
+
+def parse_entries(xml: str) -> Column:
+    """sitemap text column -> array<struct<loc, lastmod, priority_ppm>>
+    in file order. Comments strip FIRST (one dotall regex — a phantom
     commented-out entry is the classic harvest bug), then ``<url>``
     blocks extract and each field reads per block; ``<loc>`` trims per
     the spec's whitespace rule; ``<priority>`` accepts the full spec
@@ -98,48 +160,7 @@ def parse_entries(xml: Column) -> Column:
     6th truncate). Entries missing a field get
     empty string / null ppm rather than erroring (sitemaps are
     publisher input: lenient field presence, strict structure)."""
-    clean = F.regexp_replace(xml, r"(?s)<!--.*?-->", "")
-    blocks = F.regexp_extract_all(clean, F.lit(r"(?s)<url>(.*?)</url>"), 1)
-
-    # Spark's trim() strips SPACES only — the spec's whitespace rule
-    # includes newlines/tabs, so trim with a regex on both ends
-    def wtrim(c: Column) -> Column:
-        return F.regexp_replace(c, r"(?s)^\s+|\s+$", "")
-
-    def fields(b: Column) -> Column:
-        loc = wtrim(F.regexp_extract(b, r"(?s)<loc>(.*?)</loc>", 1))
-        lastmod = wtrim(
-            F.regexp_extract(b, r"(?s)<lastmod>(.*?)</lastmod>", 1)
-        )
-        # full spec range 0.0-1.0 (the r12 advisor's finding #3:
-        # '1.0' and multi-digit fractions like '0.55' are legal),
-        # converted with fixed-point string arithmetic — int part *
-        # 10^6 plus the first 6 fraction digits right-padded with
-        # zeros — never a float. The integer-1 branch admits only
-        # zero fractions (the r13 advisor's finding: '[01](\.[0-9]+)?'
-        # accepted out-of-spec '1.5'/'1.9', yielding ppm > 1000000;
-        # the spec caps priority at 1.0, so out-of-range values now
-        # fail the extract and land as null ppm like any other
-        # malformed field)
-        pri = F.regexp_extract(
-            b, r"<priority>(0(?:\.[0-9]+)?|1(?:\.0+)?)</priority>", 1
-        )
-        ip = F.split(pri, "\\.").getItem(0)
-        fp = F.when(
-            F.instr(pri, ".") > 0, F.split(pri, "\\.").getItem(1)
-        ).otherwise(F.lit(""))
-        ppm = ip.cast("bigint") * 1000000 + F.rpad(
-            F.substring(fp, 1, 6), 6, "0"
-        ).cast("bigint")
-        return F.struct(
-            loc.alias("loc"),
-            lastmod.alias("lastmod"),
-            F.when(pri != "", ppm)
-            .otherwise(F.lit(None).cast("bigint"))
-            .alias("priority_ppm"),
-        )
-
-    return F.transform(blocks, fields)
+    return F.expr(_parse_entries_sql(sql_ident(xml)))
 
 
 @F.pandas_udf("binary")
@@ -191,152 +212,107 @@ def decode_xml_payload(payload, url):  # type: ignore[misc]
     return pd.Series(out)
 
 
-def synth_sitemap_index(site_num: Column, gz_children: bool = False) -> Column:
+def _synth_sitemap_index_sql(site_num: str, gz_children: bool) -> str:
+    """:func:`synth_sitemap_index` as one SQL string over the
+    expression text ``site_num``."""
+    k = f"CAST({site_num} AS BIGINT)"
+    ext = f"IF(({k} + j) % 2 = 0, '.xml.gz', '.xml')" if gz_children else "'.xml'"
+    loc = f"concat('https://', {_DOMAIN}, '/sitemap-c', CAST(j AS STRING), {ext})"
+    child = ", ".join([
+        sql_lit("  <sitemap>\n    <loc>"),
+        _noised_sql(loc, f"{k} % 2 = 1"),
+        sql_lit("</loc>\n  </sitemap>\n"),
+    ])
+    decoy = sql_lit(
+        "  <!-- migrated:\n  <sitemap><loc>https://decoy.example/"
+        "old-sitemap.xml</loc></sitemap>\n  -->\n"
+    )
+    head = sql_lit(
+        '<?xml version="1.0" encoding="UTF-8"?>\n'
+        '<sitemapindex xmlns="http://www.sitemaps.org/schemas/'
+        'sitemap/0.9">\n'
+    )
+    tail = sql_lit("</sitemapindex>\n")
+    return (
+        f"concat({head}, IF({k} % 3 = 0, {decoy}, ''), "
+        f"aggregate(sequence(CAST(0 AS BIGINT), {k} % 3), CAST('' AS STRING), "
+        f"(acc, j) -> concat(acc, concat({child}))), {tail})"
+    )
+
+
+def synth_sitemap_index(site_num: str, gz_children: bool = False) -> Column:
     """``<sitemapindex>`` XML per domain as a PURE formula of the
-    domain's site number ``k`` and registered domain — the discovery
-    layer above :func:`synth_sitemap`: real publishers shard large
-    sitemaps into an index file referenced from robots.txt's
-    ``Sitemap:`` directive. 1 + k%3 child sitemaps at
-    ``/sitemap-c<j>.xml``; a COMMENTED-OUT decoy ``<sitemap>`` block on
-    k%3==0 (an index harvest that does not strip comments first fetches
-    a phantom child and over-counts every later child's entries);
-    whitespace-noised child ``<loc>`` values on k%2==1 (the spec's
-    trimming rule, same device as the urlset fixture).
+    site-number column ``site_num`` (``k``) and the
+    ``registered_domain`` column — the discovery layer above
+    :func:`synth_sitemap`: real publishers shard large sitemaps into an
+    index file referenced from robots.txt's ``Sitemap:`` directive.
+    1 + k%3 child sitemaps at ``/sitemap-c<j>.xml``; a COMMENTED-OUT
+    decoy ``<sitemap>`` block on k%3==0 (an index harvest that does not
+    strip comments first fetches a phantom child and over-counts every
+    later child's entries); whitespace-noised child ``<loc>`` values on
+    k%2==1 (the spec's trimming rule, same device as the urlset
+    fixture).
 
     ``gz_children=True`` (r14): every (k + j) % 2 == 0 child is listed
     with a ``.xml.gz`` extension — the realistic mixed-encoding index
     (most production sitemaps ship gzipped; the spec blesses it). The
     formula choice lets the oracle recompute which children are
     compressed without ever seeing the bytes."""
-    k = site_num.cast("bigint")
-    domain = F.col("registered_domain")
+    return F.expr(_synth_sitemap_index_sql(sql_ident(site_num), gz_children))
 
-    def child(j: Column) -> Column:
-        ext = (
-            F.when((k + j) % 2 == 0, F.lit(".xml.gz")).otherwise(F.lit(".xml"))
-            if gz_children
-            else F.lit(".xml")
-        )
-        loc = F.concat(
-            F.lit("https://"), domain, F.lit("/sitemap-c"),
-            j.cast("string"), ext,
-        )
-        noised = F.when(
-            k % 2 == 1,
-            F.concat(F.lit("\n      "), loc, F.lit(" \n    ")),
-        ).otherwise(loc)
-        return F.concat(
-            F.lit("  <sitemap>\n    <loc>"), noised,
-            F.lit("</loc>\n  </sitemap>\n"),
-        )
 
-    children = F.aggregate(
-        F.sequence(F.lit(0).cast("bigint"), k % 3),
-        F.lit("").cast("string"),
-        lambda acc, j: F.concat(acc, child(j)),
+def _parse_index_entries_sql(xml: str) -> str:
+    """:func:`parse_index_entries` as one SQL string over the
+    sitemap-text expression ``xml``."""
+    clean = f"regexp_replace({xml}, {_COMMENT}, '')"
+    blocks = (
+        f"regexp_extract_all({clean}, "
+        f"{sql_lit(r'(?s)<sitemap>(.*?)</sitemap>')}, 1)"
     )
-    decoy = F.when(
-        k % 3 == 0,
-        F.lit(
-            "  <!-- migrated:\n  <sitemap><loc>https://decoy.example/"
-            "old-sitemap.xml</loc></sitemap>\n  -->\n"
-        ),
-    ).otherwise(F.lit(""))
-    return F.concat(
-        F.lit(
-            '<?xml version="1.0" encoding="UTF-8"?>\n'
-            '<sitemapindex xmlns="http://www.sitemaps.org/schemas/'
-            'sitemap/0.9">\n'
-        ),
-        decoy,
-        children,
-        F.lit("</sitemapindex>\n"),
-    )
+    loc = f"regexp_extract(b, {sql_lit(r'(?s)<loc>(.*?)</loc>')}, 1)"
+    return f"transform({blocks}, b -> regexp_replace({loc}, {_WTRIM}, ''))"
 
 
-def parse_index_entries(xml: Column) -> Column:
-    """sitemapindex text -> array<string> of child sitemap URLs in
-    file order: comments strip FIRST (the urlset rule — a phantom
+def parse_index_entries(xml: str) -> Column:
+    """sitemapindex text column -> array<string> of child sitemap URLs
+    in file order: comments strip FIRST (the urlset rule — a phantom
     commented-out child is the same harvest bug one level up), then
     ``<sitemap>`` blocks extract and each ``<loc>`` trims per the
     spec's whitespace rule. A urlset file yields an empty array (its
     ``<url>`` blocks are not ``<sitemap>`` blocks) — discovery code
     can therefore probe a fetched file for index-ness before choosing
     the parser."""
-    clean = F.regexp_replace(xml, r"(?s)<!--.*?-->", "")
-    blocks = F.regexp_extract_all(
-        clean, F.lit(r"(?s)<sitemap>(.*?)</sitemap>"), 1
+    return F.expr(_parse_index_entries_sql(sql_ident(xml)))
+
+
+def _synth_child_sitemap_sql(site_num: str, child_idx: str) -> str:
+    """:func:`synth_child_sitemap` as one SQL string over the
+    expression texts ``site_num`` and ``child_idx``."""
+    k = f"CAST({site_num} AS BIGINT)"
+    j = f"CAST({child_idx} AS BIGINT)"
+    path = (
+        f"IF(i % 2 = 1, concat('/a', CAST(({k} + {j}) % 4 AS STRING), '/p', "
+        f"CAST(i AS STRING)), concat('/c', CAST({j} AS STRING), '/page', "
+        "CAST(i AS STRING)))"
     )
-    return F.transform(
-        blocks,
-        lambda b: F.regexp_replace(
-            F.regexp_extract(b, r"(?s)<loc>(.*?)</loc>", 1),
-            r"(?s)^\s+|\s+$",
-            "",
-        ),
+    entries = _url_entries_sql(
+        f"1 + ({k} + {j}) % 3", f"concat('https://', {_DOMAIN}, {path})",
+        f"({k} + {j}) % 2 = 1", f"1 + ({k} + {j} + i) % 28",
+        f"1 + ({k} + {j} + i) % 9",
     )
+    return _urlset_sql(f"({k} + {j}) % 3 = 0", entries)
 
 
-def synth_child_sitemap(site_num: Column, child_idx: Column) -> Column:
-    """Child urlset ``j`` of domain ``k`` as a pure formula — the
-    sharded second level under :func:`synth_sitemap_index`. 2 +
-    (k+j)%3 entries; odd entries point INTO the domain's robots-gated
-    ``/a<(k+j)%4>/p...`` section (so the discovery query's robots join
-    has a real decision surface: some publisher-listed URLs are
-    robots-disallowed — the inconsistency worth surfacing), even
-    entries to ``/c<j>/page<i>``; same comment-decoy (k+j)%3==0 and
-    whitespace-noise (k+j)%2==1 devices as the flat fixture."""
-    k = site_num.cast("bigint")
-    j = child_idx.cast("bigint")
-    domain = F.col("registered_domain")
-
-    def entry(i: Column) -> Column:
-        path = F.when(
-            i % 2 == 1,
-            F.concat(
-                F.lit("/a"), ((k + j) % 4).cast("string"),
-                F.lit("/p"), i.cast("string"),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit("/c"), j.cast("string"),
-                F.lit("/page"), i.cast("string"),
-            )
-        )
-        loc = F.concat(F.lit("https://"), domain, path)
-        noised = F.when(
-            (k + j) % 2 == 1,
-            F.concat(F.lit("\n      "), loc, F.lit(" \n    ")),
-        ).otherwise(loc)
-        day = 1 + (k + j + i) % 28
-        pri = 1 + (k + j + i) % 9
-        return F.concat(
-            F.lit("  <url>\n    <loc>"), noised, F.lit("</loc>\n"),
-            F.lit("    <lastmod>2026-03-"),
-            F.lpad(day.cast("string"), 2, "0"),
-            F.lit("</lastmod>\n    <priority>0."),
-            pri.cast("string"),
-            F.lit("</priority>\n  </url>\n"),
-        )
-
-    entries = F.aggregate(
-        F.sequence(F.lit(0).cast("bigint"), 1 + (k + j) % 3),
-        F.lit("").cast("string"),
-        lambda acc, i: F.concat(acc, entry(i)),
-    )
-    decoy = F.when(
-        (k + j) % 3 == 0,
-        F.lit(
-            "  <!-- retired:\n  <url><loc>https://decoy.example/x</loc>"
-            "<lastmod>2026-01-01</lastmod></url>\n  -->\n"
-        ),
-    ).otherwise(F.lit(""))
-    return F.concat(
-        F.lit(
-            '<?xml version="1.0" encoding="UTF-8"?>\n'
-            '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n'
-        ),
-        decoy,
-        entries,
-        F.lit("</urlset>\n"),
+def synth_child_sitemap(site_num: str, child_idx: str) -> Column:
+    """Child urlset ``j`` (the ``child_idx`` column) of domain ``k``
+    (the ``site_num`` column) as a pure formula — the sharded second
+    level under :func:`synth_sitemap_index`. 2 + (k+j)%3 entries; odd
+    entries point INTO the domain's robots-gated ``/a<(k+j)%4>/p...``
+    section (so the discovery query's robots join has a real decision
+    surface: some publisher-listed URLs are robots-disallowed — the
+    inconsistency worth surfacing), even entries to ``/c<j>/page<i>``;
+    same comment-decoy (k+j)%3==0 and whitespace-noise (k+j)%2==1
+    devices as the flat fixture."""
+    return F.expr(
+        _synth_child_sitemap_sql(sql_ident(site_num), sql_ident(child_idx))
     )

@@ -21,7 +21,12 @@ Every operator is a ROW-LOCAL column program over the scan projection
 codegen) — the same zero-extra-shuffle property as the language-ID gate,
 which is what lets URL curation run first on the raw crawl: the only
 shuffle in the whole family is the dedup groupBy, and that one carries
-canonical URLs + ids, never document text.
+canonical URLs + ids, never document text. The expression builders
+(synth_url, url_normalize, registered_domain) are each one SQL string:
+a ``_x_sql`` composer over expression text that other builders compose
+(html.extract_links, over a lambda variable), and a public ``x`` that
+takes a column NAME and parses the string server-side in one round
+trip instead of ~100 py4j Column calls.
 
 Canonicalization rules (documented contract, applied in this order):
 
@@ -56,6 +61,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gomrjob_spark.functions import sql_ident
+
 #: query-parameter name prefixes that never change the resource
 TRACKING_PREFIXES = ("utm_", "gclid=", "fbclid=")
 
@@ -64,23 +71,16 @@ TRACKING_PREFIXES = ("utm_", "gclid=", "fbclid=")
 MULTI_LABEL_SUFFIXES = ("co.uk",)
 
 
-def _sql_ident(name: str) -> str:
-    """Backtick-quote an identifier for SQL-string interpolation (the
-    axis-LSH quoteIfNeeded escaping)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _synth_url_sql(d: str) -> str:
-    """:func:`synth_url` as ONE SQL string over the bigint expression
-    text ``d`` — the r14 axis-LSH/Viterbi device applied to the shared
-    URL builders (r14 verdict item #5): the whole formula parses
-    server-side in one round trip instead of ~100 py4j Column calls
-    per consuming query. Operator-for-operator identical to the DSL
-    form below (IF ≡ when/otherwise incl. null conditions, ``DIV`` ≡
-    call_function('div'), CAST AS STRING ≡ cast('string')); pinned by
-    tests/test_urls.py::test_sql_string_builders_match_dsl."""
+def _synth_url_sql(doc_id: str) -> str:
+    """:func:`synth_url` as ONE SQL string over the expression text
+    ``doc_id``: the whole formula parses server-side in one round trip
+    instead of ~100 py4j Column calls per consuming query."""
+    d = f"CAST({doc_id} AS BIGINT)"
+    # exact bigint DIV (float '/'+cast rounds past 2^53 — the html
+    # family's _idiv rationale)
     g = f"({d} DIV 3)"
     scheme_sem = f"IF({g} % 2 = 0, 'http', 'https')"
+    # noise: uppercase scheme on d%4==2, uppercase host on d%4==3
     scheme = f"IF({d} % 4 = 2, upper({scheme_sem}), {scheme_sem})"
     suffix = (
         f"CASE WHEN {g} % 3 = 0 THEN '.com' "
@@ -92,16 +92,22 @@ def _synth_url_sql(d: str) -> str:
     )
     host0 = f"IF({d} % 5 = 0, concat('www.', {host_sem}), {host_sem})"
     host = f"IF({d} % 4 = 3, upper({host0}), {host0})"
+    # ports: g%7==0 carries a SEMANTIC :8080; otherwise d%5==1 appends
+    # the scheme's default port as pure noise
     port = (
         f"CASE WHEN {g} % 7 = 0 THEN ':8080' "
         f"WHEN {d} % 5 = 1 THEN IF({g} % 2 = 0, ':80', ':443') "
         f"ELSE '' END"
     )
+    # path: root for g%13==0 (raw '' or '/'), else /a<g%4>/p<g> with a
+    # trailing-slash variant on d%3==1
     path = (
         f"CASE WHEN {g} % 13 = 0 THEN IF({d} % 3 = 1, '/', '') "
         f"ELSE concat('/a', CAST({g} % 4 AS STRING), '/p', "
         f"CAST({g} AS STRING), IF({d} % 3 = 1, '/', '')) END"
     )
+    # query: the real param id=<g> (absent for g%17==0) interleaved with
+    # per-doc tracking noise in three arrangements
     id_amp = f"IF({g} % 17 = 0, '', concat('&id=', CAST({g} AS STRING)))"
     id_q = f"IF({g} % 17 = 0, '', concat('id=', CAST({g} AS STRING), '&'))"
     qs = (
@@ -115,112 +121,18 @@ def _synth_url_sql(d: str) -> str:
     return f"concat({scheme}, '://', {host}, {port}, {path}, {qs}, {frag})"
 
 
-def synth_url(doc_id: Column | str) -> Column:
-    """Per-document URL as a PURE formula of ``doc_id`` — semantic parts
-    from ``g = doc_id DIV 3``, noise from ``doc_id`` itself, so each
-    id-triple names one resource behind three raw variants. Mirrored
-    verbatim by the oracle CTE ``_URL_RAW_SQL`` (plans/web.py).
-
-    A STRING argument takes the one-parse SQL path
-    (:func:`_synth_url_sql`); Column arguments (lambda variables,
-    composite expressions) keep the Column DSL below — both evaluate
-    identically (differential-pinned)."""
-    if isinstance(doc_id, str):
-        return F.expr(
-            _synth_url_sql(f"CAST({_sql_ident(doc_id)} AS BIGINT)")
-        )
-    d = doc_id.cast("bigint")
-    # exact bigint DIV (float '/'+cast rounds past 2^53 — the html
-    # family's _idiv rationale)
-    g = F.call_function("div", d, F.lit(3))
-    scheme_sem = F.when(g % 2 == 0, F.lit("http")).otherwise(F.lit("https"))
-    # noise: uppercase scheme on d%4==2, uppercase host on d%4==3
-    scheme = F.when(d % 4 == 2, F.upper(scheme_sem)).otherwise(scheme_sem)
-    suffix = (
-        F.when(g % 3 == 0, F.lit(".com"))
-        .when(g % 3 == 1, F.lit(".org"))
-        .otherwise(F.lit(".co.uk"))
-    )
-    host_sem = F.concat(
-        F.lit("cdn"), (g % 5).cast("string"), F.lit(".site"),
-        (g % 11).cast("string"), suffix,
-    )
-    host = F.when(d % 5 == 0, F.concat(F.lit("www."), host_sem)).otherwise(
-        host_sem
-    )
-    host = F.when(d % 4 == 3, F.upper(host)).otherwise(host)
-    # ports: g%7==0 carries a SEMANTIC :8080; otherwise d%5==1 appends
-    # the scheme's default port as pure noise
-    port = (
-        F.when(g % 7 == 0, F.lit(":8080"))
-        .when(
-            d % 5 == 1,
-            F.when(g % 2 == 0, F.lit(":80")).otherwise(F.lit(":443")),
-        )
-        .otherwise(F.lit(""))
-    )
-    # path: root for g%13==0 (raw '' or '/'), else /a<g%4>/p<g> with a
-    # trailing-slash variant on d%3==1
-    path = F.when(
-        g % 13 == 0,
-        F.when(d % 3 == 1, F.lit("/")).otherwise(F.lit("")),
-    ).otherwise(
-        F.concat(
-            F.lit("/a"), (g % 4).cast("string"), F.lit("/p"), g.cast("string"),
-            F.when(d % 3 == 1, F.lit("/")).otherwise(F.lit("")),
-        )
-    )
-    # query: the real param id=<g> (absent for g%17==0) interleaved with
-    # per-doc tracking noise in three arrangements
-    id_amp = F.when(g % 17 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("&id="), g.cast("string"))
-    )
-    id_q = F.when(g % 17 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("id="), g.cast("string"), F.lit("&"))
-    )
-    qs = (
-        F.when(
-            d % 3 == 0,
-            F.concat(
-                F.lit("?utm_source=u"), (d % 7).cast("string"), id_amp,
-                F.lit("&utm_campaign=x"),
-            ),
-        )
-        .when(
-            d % 3 == 1,
-            F.concat(F.lit("?"), id_q, F.lit("gclid=g"), d.cast("string")),
-        )
-        .otherwise(
-            F.concat(F.lit("?fbclid=f"), d.cast("string"), id_amp)
-        )
-    )
-    frag = F.when(
-        d % 2 == 0, F.concat(F.lit("#s"), (d % 4).cast("string"))
-    ).otherwise(F.lit(""))
-    return F.concat(scheme, F.lit("://"), host, port, path, qs, frag)
-
-
-def _strip_tracking(query: Column) -> Column:
-    """Drop tracking parameters from a raw query string, preserving the
-    order of the survivors; NULL/empty results collapse to ''."""
-    kept = F.filter(
-        F.split(F.coalesce(query, F.lit("")), "&"),
-        lambda p: ~(
-            p.startswith(TRACKING_PREFIXES[0])
-            | p.startswith(TRACKING_PREFIXES[1])
-            | p.startswith(TRACKING_PREFIXES[2])
-            | (p == "")
-        ),
-    )
-    return F.array_join(kept, "&")
+def synth_url(doc_id: str) -> Column:
+    """Per-document URL of the column ``doc_id`` as a PURE formula —
+    semantic parts from ``g = doc_id DIV 3``, noise from ``doc_id``
+    itself, so each id-triple names one resource behind three raw
+    variants. Mirrored verbatim by the oracle CTE ``_URL_RAW_SQL``
+    (plans/web.py)."""
+    return F.expr(_synth_url_sql(sql_ident(doc_id)))
 
 
 def _url_normalize_sql(u: str) -> str:
     """:func:`url_normalize` as ONE SQL string over the URL expression
-    text ``u`` (the r14 SQL-string device; see :func:`_synth_url_sql`).
-    Same parse_url parts, same IF/when equivalence, same tracking
-    filter (startswith(p, x) ≡ p.startswith(x)); differential-pinned
-    in tests/test_urls.py."""
+    text ``u`` (a lambda variable works too: extract_links)."""
     scheme = f"lower(parse_url({u}, 'PROTOCOL'))"
     host = f"regexp_replace(lower(parse_url({u}, 'HOST')), '^www\\\\.', '')"
     port = f"regexp_extract(parse_url({u}, 'AUTHORITY'), ':(\\\\d+)$', 1)"
@@ -234,6 +146,8 @@ def _url_normalize_sql(u: str) -> str:
         f"IF(length({raw_path}) > 1 AND endswith({raw_path}, '/'), "
         f"substring({raw_path}, 1, length({raw_path}) - 1), {raw_path}))"
     )
+    # tracking parameters out, survivors in their original order;
+    # NULL/empty queries collapse to ''
     drops = " OR ".join(
         [f"startswith(p, '{pref}')" for pref in TRACKING_PREFIXES] + ["p = ''"]
     )
@@ -245,40 +159,16 @@ def _url_normalize_sql(u: str) -> str:
     return f"concat({scheme}, '://', {host}, {port_part}, {path}, {q_part})"
 
 
-def url_normalize(url: Column | str) -> Column:
-    """Canonical URL per the module contract — one codegen'd column
-    expression over ``parse_url`` parts (no UDF, no shuffle). A string
-    argument takes the one-parse SQL path (:func:`_url_normalize_sql`);
-    Column arguments (lambda variables in extract_links) keep the DSL."""
-    if isinstance(url, str):
-        return F.expr(_url_normalize_sql(_sql_ident(url)))
-    scheme = F.lower(F.parse_url(url, F.lit("PROTOCOL")))
-    host = F.regexp_replace(
-        F.lower(F.parse_url(url, F.lit("HOST"))), r"^www\.", ""
-    )
-    authority = F.parse_url(url, F.lit("AUTHORITY"))
-    port = F.regexp_extract(authority, r":(\d+)$", 1)
-    default_port = F.when(scheme == "http", F.lit("80")).otherwise(
-        F.when(scheme == "https", F.lit("443")).otherwise(F.lit(""))
-    )
-    port_part = F.when(
-        (port == "") | (port == default_port), F.lit("")
-    ).otherwise(F.concat(F.lit(":"), port))
-    raw_path = F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit(""))
-    path = F.when(raw_path == "", F.lit("/")).otherwise(
-        F.when(
-            (F.length(raw_path) > 1) & raw_path.endswith("/"),
-            F.substring(raw_path, F.lit(1), F.length(raw_path) - 1),
-        ).otherwise(raw_path)
-    )
-    q = _strip_tracking(F.parse_url(url, F.lit("QUERY")))
-    q_part = F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q))
-    return F.concat(scheme, F.lit("://"), host, port_part, path, q_part)
+def url_normalize(url: str) -> Column:
+    """Canonical URL of the column ``url`` per the module contract —
+    one codegen'd column expression over ``parse_url`` parts (no UDF,
+    no shuffle)."""
+    return F.expr(_url_normalize_sql(sql_ident(url)))
 
 
 def _registered_domain_sql(h: str) -> str:
     """:func:`registered_domain` as one SQL string over the host
-    expression text ``h`` (same suffix loop, same IF nesting)."""
+    expression text ``h``."""
     out = f"regexp_extract({h}, '([^.]+\\\\.[^.]+)$', 1)"
     for suf in MULTI_LABEL_SUFFIXES:
         pat = "([^.]+\\\\." + suf.replace(".", "\\\\.") + ")$"
@@ -289,22 +179,12 @@ def _registered_domain_sql(h: str) -> str:
     return out
 
 
-def registered_domain(host: Column | str) -> Column:
-    """Registrable domain of an already-normalized host: the label
-    directly under the public suffix. Multi-label suffixes come from
-    :data:`MULTI_LABEL_SUFFIXES`; everything else is treated as a
-    single-label TLD (the PSL default rule). A string argument takes
-    the one-parse SQL path; Columns keep the DSL (lambda call sites)."""
-    if isinstance(host, str):
-        return F.expr(_registered_domain_sql(_sql_ident(host)))
-    out = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
-    for suf in MULTI_LABEL_SUFFIXES:
-        pat = r"([^.]+\." + suf.replace(".", r"\.") + r")$"
-        out = F.when(
-            host.endswith("." + suf) | (host == suf),
-            F.regexp_extract(host, pat, 1),
-        ).otherwise(out)
-    return out
+def registered_domain(host: str) -> Column:
+    """Registrable domain of the already-normalized host column
+    ``host``: the label directly under the public suffix. Multi-label
+    suffixes come from :data:`MULTI_LABEL_SUFFIXES`; everything else is
+    treated as a single-label TLD (the PSL default rule)."""
+    return F.expr(_registered_domain_sql(sql_ident(host)))
 
 
 def with_url_columns(

@@ -38,6 +38,34 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # exactly the priority rule the ledger prescribes: a query whose plan
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
+    # changed: the web expression builders (urls/robots/html/sitemap)
+    # are written once, as SQL text. Every consumer of the four
+    # families; the first seven build new plan text (whole-SQL
+    # extract_links, sitemap builders, robots composites), the rest
+    # re-verify the shared builders
+    "html_extract_links",
+    "url_domain_pagerank",
+    "robots_txt_gate",
+    "streaming_robots_gate",
+    "sitemap_frontier",
+    "sitemap_discovery",
+    "sitemap_discovery_gz",
+    "corpus_funnel_report",
+    "corpus_train_pipeline",
+    "corpus_wet_pipeline",
+    "html_extract_text",
+    "html_block_stats",
+    "html_content_gate",
+    "html_metadata",
+    "dedup_canonical",
+    "streaming_html_gate",
+    "url_canonicalize",
+    "dedup_url_exact",
+    "url_domain_gate",
+    "url_domain_stats",
+    "sample_domain_cap",
+    "url_registered_domain_psl",
+    "streaming_url_gate",
     # changed: connected_components labels an edge set that fits the
     # broadcast threshold on the driver (every connected-components
     # consumer)
@@ -62,7 +90,6 @@ _VERIFY_FIRST = [
     # are covered by pytest rows/recall checks and the registry sweep,
     # and the oracled semdedup/ivf consumers below carry the hash gate
     # for the shared device)
-    "corpus_train_pipeline",
     "multimodal_scene_cuts",
     "multimodal_phash_dedup",
     "multimodal_phash_near_pairs",
@@ -80,29 +107,6 @@ _VERIFY_FIRST = [
     "mixture_bpe_weights",
     # r15: wordpiece merge table via local_df
     "text_wordpiece_train",
-    # r15: HTML SQL-string builders (synth/block/rollup/metadata)
-    "corpus_funnel_report",
-    "corpus_wet_pipeline",
-    "html_extract_text",
-    "html_block_stats",
-    "html_content_gate",
-    "html_extract_links",
-    "html_metadata",
-    "dedup_canonical",
-    "streaming_html_gate",
-    # r15: URL + robots SQL-string builders
-    "url_canonicalize",
-    "dedup_url_exact",
-    "url_domain_gate",
-    "url_domain_stats",
-    "sample_domain_cap",
-    "url_registered_domain_psl",
-    "url_domain_pagerank",
-    "robots_txt_gate",
-    "sitemap_frontier",
-    "sitemap_discovery",
-    "sitemap_discovery_gz",
-    "streaming_url_gate",
     # r15: atomic near-dup store publish
     "streaming_near_dup_probe",
 ]

@@ -1213,11 +1213,9 @@ def sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint"),
         )
     )
-    parsed = doms.select(
+    parsed = doms.withColumn("xml", synth_sitemap("k")).select(
         "registered_domain",
-        F.posexplode(parse_entries(synth_sitemap(F.col("k")))).alias(
-            "url_idx", "e"
-        ),
+        F.posexplode(parse_entries("xml")).alias("url_idx", "e"),
     )
     return parsed.select(
         "registered_domain",
@@ -1366,24 +1364,24 @@ def sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "registered_domain",
         "k",
         parse_rules("robots_txt").alias("rules"),
-        F.element_at(
-            parse_sitemap_directives(F.col("robots_txt")), 1
-        ).alias("sitemap_url"),
+        F.element_at(parse_sitemap_directives("robots_txt"), 1).alias(
+            "sitemap_url"
+        ),
     )
     kids = model.withColumn(
-        "index_xml", synth_sitemap_index(k)
+        "index_xml", synth_sitemap_index("k")
     ).select(
         "registered_domain", "k", "rules", "sitemap_url",
-        F.posexplode(parse_index_entries(F.col("index_xml"))).alias(
+        F.posexplode(parse_index_entries("index_xml")).alias(
             "child_idx", "child_url"
         ),
     )
     ents = kids.withColumn(
-        "child_xml", synth_child_sitemap(k, F.col("child_idx"))
+        "child_xml", synth_child_sitemap("k", "child_idx")
     ).select(
         "registered_domain", "k", "rules", "sitemap_url",
         "child_idx", "child_url",
-        F.posexplode(parse_entries(F.col("child_xml"))).alias(
+        F.posexplode(parse_entries("child_xml")).alias(
             "url_idx", "e"
         ),
     )
@@ -1489,13 +1487,12 @@ def sitemap_discovery_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint"),
         )
     )
-    k = F.col("k")
     kids = doms.withColumn(
-        "index_xml", synth_sitemap_index(k, gz_children=True)
+        "index_xml", synth_sitemap_index("k", gz_children=True)
     ).select(
         "registered_domain",
         "k",
-        F.posexplode(parse_index_entries(F.col("index_xml"))).alias(
+        F.posexplode(parse_index_entries("index_xml")).alias(
             "child_idx", "child_url"
         ),
     )
@@ -1505,7 +1502,7 @@ def sitemap_discovery_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetched = kids.withColumn(
         "payload",
         encode_xml_payload(
-            synth_child_sitemap(k, F.col("child_idx")),
+            synth_child_sitemap("k", "child_idx"),
             F.col("child_url").endswith(".gz"),
         ),
     ).select("registered_domain", "child_idx", "child_url", "payload")
@@ -1519,7 +1516,7 @@ def sitemap_discovery_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("child_url").endswith(".gz"), F.lit("gzip"))
         .otherwise(F.lit("plain"))
         .alias("encoding"),
-        F.posexplode(parse_entries(F.col("xml"))).alias("url_idx", "e"),
+        F.posexplode(parse_entries("xml")).alias("url_idx", "e"),
     )
     return ents.select(
         "registered_domain",
@@ -1715,7 +1712,7 @@ def html_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = scoped_persist(
         staged.select(
             "doc_id",
-            extract_links(F.col("html"), F.col("norm_url")).alias("links"),
+            extract_links("html", "norm_url").alias("links"),
         )
     )
     exploded = staged.select(
@@ -1805,7 +1802,7 @@ def url_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     linked = scoped_persist(
         staged.select(
             F.col("registered_domain").alias("src"),
-            extract_links(F.col("html"), F.col("norm_url")).alias("links"),
+            extract_links("html", "norm_url").alias("links"),
         )
     )
     links = linked.select("src", F.explode("links").alias("link"))
@@ -2052,10 +2049,7 @@ def corpus_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bigint"
         ),
     )
-    rules_sql = robots._parse_rules_sql(
-        robots._synth_robots_sql("CAST(`k` AS BIGINT)")
-    )
-    verdict = robots.robots_verdict("path", rules_sql)
+    verdict = robots.synth_verdict("path", "k")
     gated = content_gate(doc_content_summary(with_blocks(staged)))
     f0 = gated.select(
         "doc_id",
@@ -2379,10 +2373,7 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract(F.col("registered_domain"), "site([0-9]+)", 1)
             .cast("bigint"),
         )
-        rules_sql = robots._parse_rules_sql(
-            robots._synth_robots_sql("CAST(`k` AS BIGINT)")
-        )
-        verdict = robots.robots_verdict("path", rules_sql)
+        verdict = robots.synth_verdict("path", "k")
         base = scoped_persist(
             staged.select(
                 "doc_id",

@@ -1177,11 +1177,7 @@ def robots_gate_stream(
     topology stays stateless and the full hash gate covers the live
     path. Expects the URL-staged stream (norm_url +
     registered_domain columns, urls.with_url_columns)."""
-    from gomrjob_spark.operators.robots import (
-        parse_rules,
-        robots_verdict,
-        synth_robots,
-    )
+    from gomrjob_spark.operators.robots import synth_verdict
 
     staged = docs.select(
         id_col,
@@ -1193,8 +1189,7 @@ def robots_gate_stream(
         .cast("bigint")
         .alias("k"),
     )
-    rules = parse_rules(synth_robots(F.col("k")))
-    verdict = robots_verdict(F.col("path"), rules)
+    verdict = synth_verdict("path", "k")
     return staged.select(
         id_col,
         "registered_domain",

@@ -27,7 +27,7 @@ def _plan(df) -> str:
 def _blocks(spark, page: str):
     df = spark.createDataFrame([(page,)], "html string")
     return df.select(
-        F.explode(H.block_structs(F.col("html"))).alias("b")
+        F.explode(H.block_structs("html")).alias("b")
     ).select("b.*").collect()
 
 
@@ -76,7 +76,7 @@ class TestBlockSegmentation:
             [("<html><head></head><body></body></html>",)], "html string"
         )
         assert df.select(
-            F.size(H.block_structs(F.col("html"))).alias("n")
+            F.size(H.block_structs("html")).alias("n")
         ).first()["n"] == 0
 
 
@@ -186,7 +186,7 @@ class TestPlanShape:
         )
         paged = docs.select(
             "doc_id",
-            H.synth_html(F.col("doc_id"), F.col("text")).alias("html"),
+            H.synth_html("doc_id", "text").alias("html"),
         )
         staged = H.content_gate(H.doc_content_summary(H.with_blocks(paged)))
         plan = _plan(staged)
@@ -209,13 +209,13 @@ class TestPlanShape:
 )
 def test_entity_table(spark, ent, ch):
     df = spark.createDataFrame([(f"x{ent}y",)], "s string")
-    assert df.select(H.decode_entities(F.col("s")).alias("d")).first()["d"] == f"x{ch}y"
+    assert df.select(H.decode_entities("s").alias("d")).first()["d"] == f"x{ch}y"
 
 
 def test_double_encoded_amp_decodes_once(spark):
     df = spark.createDataFrame([("&amp;lt;",)], "s string")
     # &amp;lt; is the TEXT '&lt;' — amp decoded last, no double decode
-    assert df.select(H.decode_entities(F.col("s")).alias("d")).first()["d"] == "&lt;"
+    assert df.select(H.decode_entities("s").alias("d")).first()["d"] == "&lt;"
 
 
 class TestLinkExtraction:
@@ -227,7 +227,7 @@ class TestLinkExtraction:
         )
         return df.select(
             F.explode(
-                H.extract_links(F.col("html"), F.col("base"))
+                H.extract_links("html", "base")
             ).alias("l")
         ).select("l.*").collect()
 
@@ -275,7 +275,7 @@ class TestMetadataExtraction:
     def _meta(self, spark, page):
         df = spark.createDataFrame([(page,)], "html string")
         return df.select(
-            H.extract_metadata(F.col("html")).alias("m")
+            H.extract_metadata("html").alias("m")
         ).select("m.*").first()
 
     def test_fields_extract_and_decode(self, spark):
@@ -347,66 +347,3 @@ class TestFunnelReport:
         for col in ("n_robots_blocked", "n_domain_blocked", "n_url_dup",
                     "n_chrome_rejected", "n_admitted"):
             assert sum(r[col] for r in rows) > 0, col
-
-
-def test_sql_string_html_builders_match_dsl(spark, sf_dir):
-    """The r15 SQL-string forms of synth_html / block_structs /
-    doc_content_summary / extract_metadata must evaluate bit-
-    identically to the Column-DSL forms over the real fixture corpus
-    (every decoy class the synthesis plants) — the differential pin
-    for the one-parse construction paths."""
-    import pyspark.sql.functions as F
-
-    from gomrjob_spark.catalog import load_table
-    from gomrjob_spark.operators import html as H
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    d1 = docs.select(
-        H.synth_html("doc_id", "text", "lang").alias("a"),
-        H._synth_html_dsl(
-            F.col("doc_id"), F.col("text"), F.col("lang")
-        ).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d1.count() == 0
-
-    staged = docs.withColumn(
-        "html", H.synth_html("doc_id", "text", "lang")
-    )
-    d2 = staged.select(
-        H.block_structs("html").alias("a"),
-        H._block_structs_dsl(F.col("html")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d2.count() == 0
-
-    d3 = staged.select(
-        H.extract_metadata("html").alias("a"),
-        H._extract_metadata_dsl(F.col("html")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d3.count() == 0
-
-    # doc_content_summary: SQL-string rollup vs a hand-inlined DSL
-    # twin over the same staged blocks
-    wb = H.with_blocks(staged)
-    blocks = F.col("blocks")
-    content = F.filter(blocks, lambda b: b["is_content"])
-    summed = lambda arr, f: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("bigint"), lambda acc, b: acc + b[f]
-    )
-    got = H.doc_content_summary(wb).select(
-        "doc_id", "n_blocks", "n_content_blocks", "content_chars",
-        "total_chars", "main_text",
-    )
-    want = wb.select(
-        "doc_id",
-        F.size(blocks).cast("bigint").alias("n_blocks"),
-        F.size(content).cast("bigint").alias("n_content_blocks"),
-        summed(content, "n_chars").alias("content_chars"),
-        summed(blocks, "n_chars").alias("total_chars"),
-        F.array_join(
-            F.transform(content, lambda b: b["block_text"]), " "
-        ).alias("main_text"),
-    )
-    d4 = got.exceptAll(want).unionByName(want.exceptAll(got))
-    assert d4.count() == 0

@@ -17,9 +17,11 @@ from gomrjob_spark.operators import robots as R
 
 def _verdict(spark, txt: str, path: str):
     df = spark.createDataFrame([(txt, path)], "txt string, path string")
-    out = df.select(
-        R.robots_verdict(F.col("path"), R.parse_rules(F.col("txt"))).alias("v")
-    ).select("v.*")
+    out = (
+        df.withColumn("rules", R.parse_rules("txt"))
+        .select(R.robots_verdict("path", "rules").alias("v"))
+        .select("v.*")
+    )
     return out.first()
 
 
@@ -38,7 +40,7 @@ class TestParse:
     def test_only_allow_disallow_become_rules(self, spark):
         df = spark.createDataFrame([(ROBOTS,)], "txt string")
         rules = df.select(
-            R.parse_rules(F.col("txt")).alias("r")
+            R.parse_rules("txt").alias("r")
         ).first()["r"]
         assert [(r["allow"], r["prefix"]) for r in rules] == [
             (False, "/private"),
@@ -178,9 +180,11 @@ class TestSynthesizedGroupDecoy:
         domain's own three rules (an all-groups parse would block
         everything and fail the driver hash gate)."""
         df = spark.createDataFrame([(6,)], "k bigint")
-        rules = df.select(
-            R.parse_rules(R.synth_robots(F.col("k"))).alias("r")
-        ).first()["r"]
+        rules = (
+            df.withColumn("t", R.synth_robots("k"))
+            .select(R.parse_rules("t").alias("r"))
+            .first()["r"]
+        )
         assert [(r["allow"], r["prefix"]) for r in rules] == [
             (False, "/a2"),
             (True, "/a2/p"),
@@ -188,7 +192,7 @@ class TestSynthesizedGroupDecoy:
         ]
         # and the decoy group is genuinely present in the file bytes
         txt = df.select(
-            R.synth_robots(F.col("k")).alias("t")
+            R.synth_robots("k").alias("t")
         ).first()["t"]
         assert "User-agent: badbot" in txt
 
@@ -251,56 +255,40 @@ class TestPatternRules:
         assert wild > 0 and anch > 0  # both pattern rules non-vacuous
 
 
-def test_sql_string_robots_match_dsl(spark):
-    """The r15 SQL-string forms of synth_robots / parse_rules /
-    robots_verdict (one server-side parse per consuming query) must
-    evaluate bit-identically to the Column-DSL forms at every named
-    call site — over every fixture site number x every fixture path
-    shape, so every rule class (pattern, end-anchor, Allow override,
-    second group, tie) is exercised on both paths."""
-    import pyspark.sql.functions as F
+def test_synthesized_verdicts_match_oracle_decision_table(spark):
+    """Every fixture site number x every fixture path shape through the
+    Spark chain (synth_robots -> parse_rules -> robots_verdict) must
+    agree with the oracle's independent decision table
+    (plans/web.py ``_ROBOTS_ALLOWED_CASE``, run in DuckDB — it never
+    parses the text), so every rule class (pattern, end-anchor, Allow
+    override, second group, tie) is pinned per path."""
+    import duckdb
 
-    from gomrjob_spark.operators import robots
+    from gomrjob_spark.plans.web import _ROBOTS_ALLOWED_CASE
 
+    paths = ["/a0/p7", "/a1/p9/", "/buy", "/a2", "/x0", "/", "", "/a3/p0", "/a0p"]
     ks = spark.range(0, 300).select(F.col("id").alias("k"))
-    d1 = ks.select(
-        robots.synth_robots("k").alias("a"),
-        robots.synth_robots(F.col("k")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d1.count() == 0
-
-    txts = ks.withColumn("robots_txt", robots.synth_robots("k"))
-    d2 = txts.select(
-        robots.parse_rules("robots_txt").alias("a"),
-        robots.parse_rules(F.col("robots_txt")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d2.count() == 0
-
-    paths = spark.createDataFrame(
-        [("/a0/p7",), ("/a1/p9/",), ("/buy",), ("/a2",), ("/x0",),
-         ("/",), ("",), ("/a3/p0",), ("/a0p",)],
-        "path string",
+    both = (
+        ks.withColumn("robots_txt", R.synth_robots("k"))
+        .withColumn("rules", R.parse_rules("robots_txt"))
+        .crossJoin(spark.createDataFrame([(p,) for p in paths], "path string"))
     )
-    both = txts.withColumn(
-        "rules", robots.parse_rules("robots_txt")
-    ).crossJoin(paths)
-    va = robots.robots_verdict("path", "rules")
-    vb = robots.robots_verdict(F.col("path"), F.col("rules"))
-    d3 = both.select(va.alias("a"), vb.alias("b")).filter("NOT (a <=> b)")
-    assert d3.count() == 0
-
-    # the composed all-SQL chain (the funnel/train call shape) equals
-    # the all-DSL chain end to end
-    comp_sql = robots.robots_verdict(
-        "path",
-        robots._parse_rules_sql(robots._synth_robots_sql("CAST(`k` AS BIGINT)")),
-    )
-    comp_dsl = robots._robots_verdict_dsl(
-        F.col("path"), robots._parse_rules_dsl(robots.synth_robots(F.col("k")))
-    )
-    d4 = (
-        ks.crossJoin(paths)
-        .select(comp_sql.alias("a"), comp_dsl.alias("b"))
-        .filter("NOT (a <=> b)")
-    )
-    assert d4.count() == 0
+    got = {
+        (r["k"], r["path"]): r["allowed"]
+        for r in both.select(
+            "k", "path", R.robots_verdict("path", "rules")["allowed"].alias("allowed")
+        ).collect()
+    }
+    want = {
+        (k, path): allowed
+        for k, path, allowed in duckdb.sql(
+            f"""
+            SELECT k, path, {_ROBOTS_ALLOWED_CASE} AS allowed
+            FROM range(0, 300) t(k), unnest({paths!r}) p(path)
+            """
+        ).fetchall()
+    }
+    assert len(got) == len(want) == 300 * len(paths)
+    assert got == want
+    # both verdicts genuinely occur on this grid
+    assert {True, False} <= set(got.values())

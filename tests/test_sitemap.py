@@ -11,7 +11,7 @@ def _parse(spark, xml: str):
     from gomrjob_spark.operators.sitemap import parse_entries
 
     df = spark.createDataFrame([(xml,)], "xml string")
-    return df.select(parse_entries(F.col("xml")).alias("e")).first()["e"]
+    return df.select(parse_entries("xml").alias("e")).first()["e"]
 
 
 def test_commented_out_entry_is_not_harvested(spark):
@@ -62,7 +62,7 @@ def test_fixture_decoys_nonvacuous(spark, sf_dir):
         .select("registered_domain").distinct()
         .withColumn("k", F.regexp_extract(
             F.col("registered_domain"), "site([0-9]+)", 1).cast("bigint"))
-        .withColumn("xml", synth_sitemap(F.col("k")))
+        .withColumn("xml", synth_sitemap("k"))
     )
     n_comment = doms.filter(F.col("xml").contains("<!--")).count()
     n_noise = doms.filter(F.col("xml").contains("<loc>\n")).count()
@@ -103,7 +103,7 @@ def test_index_commented_out_child_is_not_harvested(spark):
         "</sitemapindex>"
     )
     df = spark.createDataFrame([(xml,)], "xml string")
-    row = df.select(parse_index_entries(F.col("xml")).alias("c")).first()["c"]
+    row = df.select(parse_index_entries("xml").alias("c")).first()["c"]
     assert row == ["https://a.example/sitemap-c0.xml"]
 
 
@@ -113,7 +113,7 @@ def test_index_parser_yields_nothing_on_a_urlset(spark):
     xml = "<urlset><url><loc>https://a.example/p</loc></url></urlset>"
     df = spark.createDataFrame([(xml,)], "xml string")
     assert (
-        df.select(parse_index_entries(F.col("xml")).alias("c")).first()["c"]
+        df.select(parse_index_entries("xml").alias("c")).first()["c"]
         == []
     )
 
@@ -128,7 +128,7 @@ def test_commented_sitemap_directive_is_not_harvested(spark):
     )
     df = spark.createDataFrame([(txt,)], "robots string")
     got = df.select(
-        parse_sitemap_directives(F.col("robots")).alias("s")
+        parse_sitemap_directives("robots").alias("s")
     ).first()["s"]
     assert got == ["https://a.example/sitemap-index.xml"]
 
@@ -222,11 +222,11 @@ def test_gz_index_extension_choice_is_formula(spark):
     df = spark.createDataFrame(
         [("site7.canon.site", 7)], "registered_domain string, k bigint"
     )
-    kids = df.select(
-        parse_index_entries(
-            synth_sitemap_index(F.col("k"), gz_children=True)
-        ).alias("c")
-    ).first()["c"]
+    kids = (
+        df.withColumn("xml", synth_sitemap_index("k", gz_children=True))
+        .select(parse_index_entries("xml").alias("c"))
+        .first()["c"]
+    )
     # k=7: children j=0 (7+0 odd -> .xml), j=1 (even -> .xml.gz)
     assert kids == [
         "https://site7.canon.site/sitemap-c0.xml",
@@ -234,7 +234,9 @@ def test_gz_index_extension_choice_is_formula(spark):
     ]
     # default stays extensionless-gz (the r13-gated sitemap_discovery
     # child urls must not change)
-    plain = df.select(
-        parse_index_entries(synth_sitemap_index(F.col("k"))).alias("c")
-    ).first()["c"]
+    plain = (
+        df.withColumn("xml", synth_sitemap_index("k"))
+        .select(parse_index_entries("xml").alias("c"))
+        .first()["c"]
+    )
     assert all(u.endswith(".xml") for u in plain)
