@@ -71,6 +71,35 @@ class Counters:
             "n_stages": stages.size(),
         }
 
+    def compile_report(self) -> dict[str, float]:
+        """Compile-layer totals of this JVM so far, read-only: Janino
+        compiles of generated code (the count of Spark's
+        ``CodegenMetrics`` compilation-time histogram, one sample per
+        codegen-cache miss), their total milliseconds (Spark's exact
+        ``CodeGenerator.compileTime`` sum; the histogram keeps only a
+        sample of its values), and HotSpot's JIT total from the
+        ``CompilationMXBean``. Diff two readings around a span::
+
+            before = c.compile_report()
+            df.collect()
+            after = c.compile_report()
+            spent = {k: after[k] - before[k] for k in after}
+
+        Returns ``{janino_compiles, janino_compile_ms, jit_compile_ms}``.
+        In local mode the executors share the driver's JVM, so these
+        cover task-side compiles too; on a cluster they cover the
+        driver only."""
+        jvm = self._sc._jvm
+        codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        return {
+            "janino_compiles": int(
+                jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+            ),
+            "janino_compile_ms": codegen.compileTime() / 1e6,
+            "jit_compile_ms": int(jit.getTotalCompilationTime()),
+        }
+
     def _stage_list(self):
         store = self._sc._jsc.sc().statusStore()
         gw = self._sc._gateway

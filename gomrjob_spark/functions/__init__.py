@@ -83,9 +83,23 @@ def sql_lit(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+#: Prefix of every lambda variable in the SQL-text expression builders
+#: (``_lv_i``, ``_lv_acc``, ...). Inside a lambda its variable shadows a
+#: column of the same name (case-insensitively, as Spark resolves), so
+#: :func:`sql_ident` refuses column names that carry this prefix.
+LAMBDA_PREFIX = "_lv_"
+
+
 def sql_ident(name: str) -> str:
     """A column name as a backtick-quoted Spark SQL identifier (the
-    ``quoteIfNeeded`` escaping), for builders that take column names."""
+    ``quoteIfNeeded`` escaping), for builders that take column names.
+    Raises ``ValueError`` for a name with the builders' reserved
+    lambda-variable prefix (:data:`LAMBDA_PREFIX`)."""
+    if name.lower().startswith(LAMBDA_PREFIX):
+        raise ValueError(
+            f"column name {name!r} starts with {LAMBDA_PREFIX!r}, the prefix "
+            "reserved for the expression builders' lambda variables; rename the column"
+        )
     return "`" + name.replace("`", "``") + "`"
 
 

@@ -145,11 +145,11 @@ def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
     )
     para = (
         "concat('<p class=\"c', CAST({d} % 3 AS STRING), '\">', "
-        "substring({t}, CAST(i * {c} + 1 AS INT), {c}), "
-        "IF(({d} + i) % 4 = 0, concat(' <a href=\"/r', CAST(i AS STRING), "
+        "substring({t}, CAST(_lv_i * {c} + 1 AS INT), {c}), "
+        "IF(({d} + _lv_i) % 4 = 0, concat(' <a href=\"/r', CAST(_lv_i AS STRING), "
         "'\">more</a>'), ''), '</p>')"
     ).format(d=d, t=t, c=CHUNK)
-    paras = f"array_join(transform({idxs}, i -> {para}), '')"
+    paras = f"array_join(transform({idxs}, _lv_i -> {para}), '')"
     # the '<pre>' decoy: a boundary-free block pattern matches its 'p'
     # and fabricates a block; correctly it is inline markup whose text
     # joins the promo fragment
@@ -243,7 +243,7 @@ def _visible_text_sql(frag: str) -> str:
 
 def _stop_hits_sql(txt: str) -> str:
     stops = ", ".join(sql_lit(w) for w in STOPWORDS)
-    return f"size(filter(split({txt}, ' '), w -> w IN ({stops})))"
+    return f"size(filter(split({txt}, ' '), _lv_w -> _lv_w IN ({stops})))"
 
 
 def _block_structs_sql(h: str) -> str:
@@ -252,12 +252,12 @@ def _block_structs_sql(h: str) -> str:
     ch = _clean_invisible_sql(h)
     frags = f"split({ch}, {sql_lit(BLOCK_OPEN)})"
     opens = f"regexp_extract_all({ch}, {sql_lit(BLOCK_OPEN_TAG)}, 1)"
-    frag = f"element_at({frags}, CAST(i + 2 AS INT))"
+    frag = f"element_at({frags}, CAST(_lv_i + 2 AS INT))"
     txt = _visible_text_sql(frag)
     n_chars = f"CAST(length({txt}) AS BIGINT)"
     link_chars = (
         f"aggregate(regexp_extract_all({frag}, {sql_lit(LINK_TEXT)}, 1), "
-        f"CAST(0 AS BIGINT), (acc, l) -> acc + length({_decode_entities_sql('l')}))"
+        f"CAST(0 AS BIGINT), (_lv_acc, _lv_l) -> _lv_acc + length({_decode_entities_sql('_lv_l')}))"
     )
     ld_pm = (
         f"IF({n_chars} > 0, "
@@ -269,13 +269,13 @@ def _block_structs_sql(h: str) -> str:
     )
     n_stop = f"CAST({_stop_hits_sql(txt)} AS BIGINT)"
     build = (
-        f"struct(tag AS tag, {txt} AS block_text, {n_chars} AS n_chars, "
+        f"struct(_lv_tag AS tag, {txt} AS block_text, {n_chars} AS n_chars, "
         f"{link_chars} AS link_chars, {ld_pm} AS link_density_pm, "
         f"{n_words} AS n_words, {n_stop} AS n_stop, "
         f"({n_chars} >= {MIN_CONTENT_CHARS} AND {ld_pm} <= {MAX_LINK_DENSITY_PM} "
         f"AND {n_stop} >= 1) AS is_content)"
     )
-    return f"transform({opens}, (tag, i) -> {build})"
+    return f"transform({opens}, (_lv_tag, _lv_i) -> {build})"
 
 
 def block_structs(html: str) -> Column:
@@ -359,13 +359,13 @@ def _extract_links_sql(h: str, base: str) -> str:
         f"regexp_extract_all({_clean_invisible_sql(h)}, {sql_lit(HREF_PAT)}, 1)"
     )
     raw_abs = (
-        "IF(href RLIKE '^[A-Za-z][A-Za-z0-9+.-]*://', href, "
-        f"concat({base_prefix}, href))"
+        "IF(_lv_href RLIKE '^[A-Za-z][A-Za-z0-9+.-]*://', _lv_href, "
+        f"concat({base_prefix}, _lv_href))"
     )
     resolved = _url_normalize_sql(raw_abs)
     link_domain = _registered_domain_sql(host(resolved))
     return (
-        f"transform({hrefs}, href -> named_struct('href', href, "
+        f"transform({hrefs}, _lv_href -> named_struct('href', _lv_href, "
         f"'resolved_url', {resolved}, 'link_domain', {link_domain}, "
         f"'is_internal', {link_domain} = {base_domain}))"
     )
@@ -406,10 +406,10 @@ def doc_content_summary(
     content blocks' visible text in document order — the WET-style
     output the downstream text operators consume."""
     blocks = sql_ident(blocks_col)
-    content = f"filter({blocks}, b -> b.is_content)"
+    content = f"filter({blocks}, _lv_b -> _lv_b.is_content)"
     summed = (
         lambda arr, field: f"aggregate({arr}, CAST(0 AS BIGINT), "  # noqa: E731
-        f"(acc, b) -> acc + b.{field})"
+        f"(_lv_acc, _lv_b) -> _lv_acc + _lv_b.{field})"
     )
     # one SQL parse per derived column (the r14 SQL-string device);
     # expression-for-expression identical to the HOF DSL this replaces
@@ -420,7 +420,7 @@ def doc_content_summary(
             "content_chars": F.expr(summed(content, "n_chars")),
             "total_chars": F.expr(summed(blocks, "n_chars")),
             "main_text": F.expr(
-                f"array_join(transform({content}, b -> b.block_text), ' ')"
+                f"array_join(transform({content}, _lv_b -> _lv_b.block_text), ' ')"
             ),
         }
     )

@@ -124,11 +124,11 @@ def _parse_rules_sql(txt: str, agent: str = "*") -> str:
     """:func:`parse_rules` as one SQL string over the robots-text
     expression ``txt``: a single array aggregate carrying the RFC 9309
     group state."""
-    ua = f"regexp_extract(ln, {sql_lit(_UA_PAT)}, 1)"
-    verb = f"lower(regexp_extract(ln, {sql_lit(_RULE_PAT)}, 1))"
+    ua = f"regexp_extract(_lv_ln, {sql_lit(_UA_PAT)}, 1)"
+    verb = f"lower(regexp_extract(_lv_ln, {sql_lit(_RULE_PAT)}, 1))"
     rule = (
         f"struct({verb} = 'allow' AS allow, "
-        f"regexp_extract(ln, {sql_lit(_RULE_PAT)}, 2) AS prefix)"
+        f"regexp_extract(_lv_ln, {sql_lit(_RULE_PAT)}, 2) AS prefix)"
     )
     zero = (
         "struct(false AS in_header, false AS active, "
@@ -141,16 +141,16 @@ def _parse_rules_sql(txt: str, agent: str = "*") -> str:
     step = (
         f"CASE WHEN {ua} != '' THEN struct("
         "true AS in_header, "
-        f"IF(acc.in_header, acc.active OR ({ua_match}), {ua_match}) AS active, "
-        "acc.rules AS rules) "
+        f"IF(_lv_acc.in_header, _lv_acc.active OR ({ua_match}), {ua_match}) AS active, "
+        "_lv_acc.rules AS rules) "
         f"WHEN {verb} != '' THEN struct("
-        "false AS in_header, acc.active AS active, "
-        f"IF(acc.active, array_append(acc.rules, {rule}), acc.rules) AS rules) "
-        "ELSE acc END"
+        "false AS in_header, _lv_acc.active AS active, "
+        f"IF(_lv_acc.active, array_append(_lv_acc.rules, {rule}), _lv_acc.rules) AS rules) "
+        "ELSE _lv_acc END"
     )
     return (
         f"aggregate(split({txt}, {_LINES}), {zero}, "
-        f"(acc, ln) -> {step}, acc -> acc.rules)"
+        f"(_lv_acc, _lv_ln) -> {step}, _lv_acc -> _lv_acc.rules)"
     )
 
 
@@ -203,15 +203,15 @@ def _robots_verdict_sql(path: str, rules: str) -> str:
     """:func:`robots_verdict` over expression texts: filter the
     matching rules, then one longest-match/Allow-wins-ties aggregate
     fold."""
-    matches = f"filter({rules}, r -> {_rule_matches_sql(path, 'r.prefix')})"
+    matches = f"filter({rules}, _lv_r -> {_rule_matches_sql(path, '_lv_r.prefix')})"
     step = (
-        "IF(length(r.prefix) > length(acc.prefix) OR "
-        "(length(r.prefix) = length(acc.prefix) AND r.allow AND NOT acc.allow), "
-        "r, acc)"
+        "IF(length(_lv_r.prefix) > length(_lv_acc.prefix) OR "
+        "(length(_lv_r.prefix) = length(_lv_acc.prefix) AND _lv_r.allow AND NOT _lv_acc.allow), "
+        "_lv_r, _lv_acc)"
     )
     best = (
         f"aggregate({matches}, struct(true AS allow, '' AS prefix), "
-        f"(acc, r) -> {step})"
+        f"(_lv_acc, _lv_r) -> {step})"
     )
     return (
         f"named_struct('allowed', ({best}).allow, "
@@ -246,8 +246,8 @@ def _parse_sitemap_directives_sql(txt: str) -> str:
     rtrim = sql_lit(r"\s+$")
     return (
         f"transform(filter(split({txt}, {_LINES}), "
-        f"ln -> regexp_like(ln, {is_sitemap})), "
-        f"ln -> regexp_replace(regexp_extract(ln, {value}, 1), {rtrim}, ''))"
+        f"_lv_ln -> regexp_like(_lv_ln, {is_sitemap})), "
+        f"_lv_ln -> regexp_replace(regexp_extract(_lv_ln, {value}, 1), {rtrim}, ''))"
     )
 
 

@@ -68,7 +68,7 @@ def _noised_sql(loc: str, noisy: str) -> str:
 
 
 def _url_entries_sql(n_last: str, loc: str, noisy: str, day: str, pri: str) -> str:
-    """``<url>`` entries i = 0..``n_last`` (lambda variable ``i``),
+    """``<url>`` entries i = 0..``n_last`` (lambda variable ``_lv_i``),
     concatenated in order."""
     entry = ", ".join([
         sql_lit("  <url>\n    <loc>"),
@@ -81,7 +81,7 @@ def _url_entries_sql(n_last: str, loc: str, noisy: str, day: str, pri: str) -> s
     ])
     return (
         f"aggregate(sequence(CAST(0 AS BIGINT), {n_last}), CAST('' AS STRING), "
-        f"(acc, i) -> concat(acc, concat({entry})))"
+        f"(_lv_acc, _lv_i) -> concat(_lv_acc, concat({entry})))"
     )
 
 
@@ -96,10 +96,10 @@ def _synth_sitemap_sql(site_num: str) -> str:
     """:func:`synth_sitemap` as one SQL string over the expression text
     ``site_num``."""
     k = f"CAST({site_num} AS BIGINT)"
-    loc = f"concat('https://', {_DOMAIN}, '/page', CAST(i AS STRING))"
+    loc = f"concat('https://', {_DOMAIN}, '/page', CAST(_lv_i AS STRING))"
     entries = _url_entries_sql(
-        f"2 + {k} % 4", loc, f"{k} % 2 = 1", f"1 + ({k} + i) % 28",
-        f"1 + ({k} + i) % 9",
+        f"2 + {k} % 4", loc, f"{k} % 2 = 1", f"1 + ({k} + _lv_i) % 28",
+        f"1 + ({k} + _lv_i) % 9",
     )
     return _urlset_sql(f"{k} % 3 = 0", entries)
 
@@ -122,7 +122,7 @@ def _parse_entries_sql(xml: str) -> str:
 
     def field(tag: str) -> str:
         pat = sql_lit(f"(?s)<{tag}>(.*?)</{tag}>")
-        return f"regexp_replace(regexp_extract(b, {pat}, 1), {_WTRIM}, '')"
+        return f"regexp_replace(regexp_extract(_lv_b, {pat}, 1), {_WTRIM}, '')"
 
     # full spec range 0.0-1.0 (the r12 advisor's finding #3: '1.0' and
     # multi-digit fractions like '0.55' are legal), converted with
@@ -134,7 +134,7 @@ def _parse_entries_sql(xml: str) -> str:
     # out-of-range values fail the extract and land as null ppm like
     # any other malformed field)
     pri_pat = sql_lit(r"<priority>(0(?:\.[0-9]+)?|1(?:\.0+)?)</priority>")
-    pri = f"regexp_extract(b, {pri_pat}, 1)"
+    pri = f"regexp_extract(_lv_b, {pri_pat}, 1)"
     dot = sql_lit(r"\.")
     fp = f"IF(instr({pri}, '.') > 0, split({pri}, {dot})[1], '')"
     ppm = (
@@ -142,7 +142,7 @@ def _parse_entries_sql(xml: str) -> str:
         f"CAST(rpad(substring({fp}, 1, 6), 6, '0') AS BIGINT)"
     )
     return (
-        f"transform({blocks}, b -> named_struct('loc', {field('loc')}, "
+        f"transform({blocks}, _lv_b -> named_struct('loc', {field('loc')}, "
         f"'lastmod', {field('lastmod')}, "
         f"'priority_ppm', IF({pri} != '', {ppm}, CAST(NULL AS BIGINT))))"
     )
@@ -216,8 +216,8 @@ def _synth_sitemap_index_sql(site_num: str, gz_children: bool) -> str:
     """:func:`synth_sitemap_index` as one SQL string over the
     expression text ``site_num``."""
     k = f"CAST({site_num} AS BIGINT)"
-    ext = f"IF(({k} + j) % 2 = 0, '.xml.gz', '.xml')" if gz_children else "'.xml'"
-    loc = f"concat('https://', {_DOMAIN}, '/sitemap-c', CAST(j AS STRING), {ext})"
+    ext = f"IF(({k} + _lv_j) % 2 = 0, '.xml.gz', '.xml')" if gz_children else "'.xml'"
+    loc = f"concat('https://', {_DOMAIN}, '/sitemap-c', CAST(_lv_j AS STRING), {ext})"
     child = ", ".join([
         sql_lit("  <sitemap>\n    <loc>"),
         _noised_sql(loc, f"{k} % 2 = 1"),
@@ -236,7 +236,7 @@ def _synth_sitemap_index_sql(site_num: str, gz_children: bool) -> str:
     return (
         f"concat({head}, IF({k} % 3 = 0, {decoy}, ''), "
         f"aggregate(sequence(CAST(0 AS BIGINT), {k} % 3), CAST('' AS STRING), "
-        f"(acc, j) -> concat(acc, concat({child}))), {tail})"
+        f"(_lv_acc, _lv_j) -> concat(_lv_acc, concat({child}))), {tail})"
     )
 
 
@@ -269,8 +269,8 @@ def _parse_index_entries_sql(xml: str) -> str:
         f"regexp_extract_all({clean}, "
         f"{sql_lit(r'(?s)<sitemap>(.*?)</sitemap>')}, 1)"
     )
-    loc = f"regexp_extract(b, {sql_lit(r'(?s)<loc>(.*?)</loc>')}, 1)"
-    return f"transform({blocks}, b -> regexp_replace({loc}, {_WTRIM}, ''))"
+    loc = f"regexp_extract(_lv_b, {sql_lit(r'(?s)<loc>(.*?)</loc>')}, 1)"
+    return f"transform({blocks}, _lv_b -> regexp_replace({loc}, {_WTRIM}, ''))"
 
 
 def parse_index_entries(xml: str) -> Column:
@@ -291,14 +291,14 @@ def _synth_child_sitemap_sql(site_num: str, child_idx: str) -> str:
     k = f"CAST({site_num} AS BIGINT)"
     j = f"CAST({child_idx} AS BIGINT)"
     path = (
-        f"IF(i % 2 = 1, concat('/a', CAST(({k} + {j}) % 4 AS STRING), '/p', "
-        f"CAST(i AS STRING)), concat('/c', CAST({j} AS STRING), '/page', "
-        "CAST(i AS STRING)))"
+        f"IF(_lv_i % 2 = 1, concat('/a', CAST(({k} + {j}) % 4 AS STRING), '/p', "
+        f"CAST(_lv_i AS STRING)), concat('/c', CAST({j} AS STRING), '/page', "
+        "CAST(_lv_i AS STRING)))"
     )
     entries = _url_entries_sql(
         f"1 + ({k} + {j}) % 3", f"concat('https://', {_DOMAIN}, {path})",
-        f"({k} + {j}) % 2 = 1", f"1 + ({k} + {j} + i) % 28",
-        f"1 + ({k} + {j} + i) % 9",
+        f"({k} + {j}) % 2 = 1", f"1 + ({k} + {j} + _lv_i) % 28",
+        f"1 + ({k} + {j} + _lv_i) % 9",
     )
     return _urlset_sql(f"({k} + {j}) % 3 = 0", entries)
 

@@ -149,11 +149,11 @@ def _url_normalize_sql(u: str) -> str:
     # tracking parameters out, survivors in their original order;
     # NULL/empty queries collapse to ''
     drops = " OR ".join(
-        [f"startswith(p, '{pref}')" for pref in TRACKING_PREFIXES] + ["p = ''"]
+        [f"startswith(_lv_p, '{pref}')" for pref in TRACKING_PREFIXES] + ["_lv_p = ''"]
     )
     q = (
         f"array_join(filter(split(coalesce(parse_url({u}, 'QUERY'), ''), "
-        f"'&'), p -> NOT ({drops})), '&')"
+        f"'&'), _lv_p -> NOT ({drops})), '&')"
     )
     q_part = f"IF({q} = '', '', concat('?', {q}))"
     return f"concat({scheme}, '://', {host}, {port_part}, {path}, {q_part})"

@@ -39,10 +39,11 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
     # changed: the web expression builders (urls/robots/html/sitemap)
-    # are written once, as SQL text. Every consumer of the four
-    # families; the first seven build new plan text (whole-SQL
-    # extract_links, sitemap builders, robots composites), the rest
-    # re-verify the shared builders
+    # are written once, as SQL text, and their lambda variables carry
+    # a reserved prefix. Every consumer of the four families; the
+    # first seven build new plan text (whole-SQL extract_links, sitemap
+    # builders, robots composites), the rest re-verify the shared
+    # builders
     "html_extract_links",
     "url_domain_pagerank",
     "robots_txt_gate",

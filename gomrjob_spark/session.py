@@ -25,6 +25,21 @@ Defaults are tuned for the local[32] test harness but chosen to be the
   is lazy anyway and the daemon is plain ``pyspark.daemon``. The engine's
   root directory goes on the workers' ``PYTHONPATH`` so they can import
   the daemon from any working directory.
+- The codegen cache (``spark.sql.codegen.cache.maxEntries``) holds 8192
+  generated classes, not Spark's 100. A query that ran before then
+  reuses its Janino-compiled classes, and HotSpot keeps their JIT-compiled
+  code; a class compiled again is new code to the JIT. Spark splits the
+  cache into 4 segments that each evict at a quarter of the bound, so
+  100 held too few for one round of the benchmark's crawl jobs (92
+  classes): on each of 4 seeds measured, every warm round recompiled
+  10-46 of them.
+  Every registered query, run once in one session at sf0.001, compiles
+  3803 distinct classes, and a second pass 190 more (classes whose code
+  changes from run to run); 8192 holds that working set with room for
+  segment skew. After one such pass Metaspace held 238 MB at 8192 (two
+  runs) and 214 or 252 MB at the default bound, which compiled 6312
+  classes in the pass and frees a dropped class only when a GC unloads
+  it.
 """
 
 from __future__ import annotations
@@ -88,6 +103,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         # local-only: let spread() widen single-split test files without
         # inspecting .rdd at plan time (no-op on real clusters — unset)
         .config("spark.gomrjob.spread.partitions", str(cpus))
