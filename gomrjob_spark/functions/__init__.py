@@ -68,15 +68,6 @@ def dmedian_money(col: Column | str) -> Column:
     return F.percentile(cents, F.lit(0.5)) / F.lit(100.0)
 
 
-def sql_dsum(expr: str, carrier: str = "DECIMAL(18,2)") -> str:
-    """DuckDB-side twin of :func:`dsum`."""
-    return f"CAST(sum(CAST({expr} AS {carrier})) AS DOUBLE)"
-
-
-def sql_davg(expr: str, carrier: str = "DECIMAL(18,2)") -> str:
-    return f"(CAST(sum(CAST({expr} AS {carrier})) AS DOUBLE) / count({expr}))"
-
-
 def sql_lit(s: str) -> str:
     """A Python string as a Spark SQL string literal (backslashes and
     quotes escaped; control characters pass through as raw bytes)."""

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gomrjob_spark.cache import scoped_persist
+from gomrjob_spark.cache import iterate, scoped_persist
 from gomrjob_spark.functions import sql_ident
 from gomrjob_spark.operators.text import fingerprint, normalized, spread, tokens
 
@@ -1217,12 +1217,12 @@ def connected_components(
     dst_col: str = "id_b",
     max_iter: int = 25,
     stats: dict | None = None,
-    edges_distinct: bool = False,
 ) -> DataFrame:
     """Connected components over an undirected pair graph — the survivor
     -selection step after near-dup pair detection (every doc maps to the
     minimum id reachable through dup pairs; singletons map to
-    themselves). Returns (id, component).
+    themselves). Returns (id, component). Edges may repeat and come in
+    either direction.
 
     Algorithm: alternating large-star / small-star contraction (Kiveris
     et al. 2014) — each round hangs nodes directly off their
@@ -1234,10 +1234,11 @@ def connected_components(
     component's minimum id.
 
     Distribution: each round is two grouped aggregates + two joins, all
-    shuffling on node id; the driver coordinates the loop and reads one
-    per-round (count, hash-sum) fingerprint, the changed-edge check.
-    ``localCheckpoint`` truncates lineage so round N's plan doesn't
-    replay rounds 1..N-1.
+    shuffling on node id; :func:`~gomrjob_spark.cache.iterate` runs the
+    rounds and checkpoints each round's edge set, and the driver reads
+    one (count, hash-sum) fingerprint per edge set, the changed-edge
+    check. The raw edges enter without a ``distinct()``: the star rounds
+    de-duplicate their own output and the driver finish ignores repeats.
 
     Driver finish: once a fingerprint (the one before the first round
     included) counts ``n`` edges with ``n * 16`` bytes <=
@@ -1248,51 +1249,6 @@ def connected_components(
     above the bound raises ``RuntimeError``. Pass ``stats={}`` to
     receive ``{"rounds": r}`` back: the number of distributed rounds
     run, 0 when the driver finishes at once."""
-    def _materialize(
-        df: DataFrame, n_hint: int | None = None
-    ) -> tuple[DataFrame, tuple[int, int]]:
-        """One action per round: the lazy localCheckpoint materializes under
-        the same action that computes the edge-set fingerprint
-        (count, wrapping sum of xxhash64(src,dst)). Two consecutive
-        DISTINCT edge sets with equal fingerprints are equal up to a
-        64-bit hash-sum collision — vanishingly unlikely and
-        non-adversarial here; max_iter still bounds the loop. This
-        replaces an exceptAll + two counts (three driver jobs) per
-        round.
-
-        ``spread`` before the checkpoint (r14): AQE coalesces each
-        round's distinct() output by BYTES (a few MB of edges -> 2-3
-        partitions) and the checkpoint freezes that layout, so the next
-        round's whole map side (symmetric union + star relink) and the
-        post-loop star_map aggregation ran 3-wide on a 32-core box
-        (measured: 1.4 cpu-s stages at wall ~= cpu). One round-robin
-        exchange of the already-distinct few-MB edge set per round
-        restores width; conf-gated no-op on a real cluster, where the
-        edge set is large enough that AQE keeps it wide anyway.
-
-        r15 (the r14 verdict's inverse-scaling catch: 8 cores beat 32
-        on the unconditional full-width spread): the loop already
-        collects each round's edge COUNT in the fingerprint, so the
-        spread width is data-proportional — ``n_hint`` is the previous
-        round's count (star contraction never grows the distinct edge
-        set enough to matter for a width estimate), and a few hundred
-        edges now run 1-wide instead of paying a 32-way exchange plus
-        32 near-empty tasks per round."""
-        ck = spread(df, rows_hint=n_hint).localCheckpoint(eager=False)
-        row = ck.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) sum: exact and overflow-free under ANSI mode
-            # (a bigint sum of 64-bit hashes would overflow)
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("fp"),
-        ).first()
-        return ck, (row["n"], row["fp"])
-
-    # ``edges_distinct=True`` (r15): every pair operator in this module
-    # emits ONE row per (id_a < id_b) pair (the pair aggregate's group
-    # key), so the init-round distinct() was a pure extra shuffle of
-    # already-unique rows (guide §2.4); callers passing raw edge lists
-    # keep the dedup. The loop itself is unaffected — the star rounds
-    # re-distinct their own output either way.
     e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).filter(
         F.col("src") != F.col("dst")
     )
@@ -1300,23 +1256,43 @@ def connected_components(
     # bytes (two 8-byte ids), and <= 0 disables the driver finish
     bound = e0.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     max_driver_edges = min(bound // 16, _DRIVER_FINISH_MAX_EDGES) if bound > 0 else -1
-    e, sig = _materialize(e0 if edges_distinct else e0.distinct())
-    rounds = 0
-    while sig[0] > max_driver_edges:
-        if rounds == max_iter:
-            raise RuntimeError(
-                f"connected_components: no fixpoint after {rounds} rounds and "
-                f"{sig[0]} edges remain above the driver-finish bound of "
-                f"{max_driver_edges} edges (spark.sql.autoBroadcastJoinThreshold="
-                f"{bound}); raise max_iter"
-            )
-        rounds += 1
-        e, new_sig = _materialize(_small_star(_large_star(e)), n_hint=sig[0])
-        if new_sig == sig:
-            star_map = e.groupBy("src").agg(F.min("dst").alias("_component"))
-            break
-        sig = new_sig
-    else:
+    sigs: list[tuple] = []  # (count, hash-sum) of every edge set, in order
+
+    def done(e: DataFrame) -> bool:
+        """One action per edge set: the fingerprint (count, wrapping sum
+        of xxhash64(src,dst)) reads the checkpointed frame and so stores
+        it. Two consecutive edge sets with equal fingerprints are equal
+        up to a 64-bit hash-sum collision — vanishingly unlikely and
+        non-adversarial here; max_iter still bounds the loop."""
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            # decimal(38,0) sum: exact and overflow-free under ANSI mode
+            # (a bigint sum of 64-bit hashes would overflow)
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("fp"),
+        ).first()
+        sigs.append((row["n"], row["fp"]))
+        return sigs[-1][0] <= max_driver_edges or fixpoint()
+
+    def fixpoint() -> bool:
+        return len(sigs) > 1 and sigs[-1] == sigs[-2]
+
+    # ``spread`` before each checkpoint: AQE coalesces a round's
+    # distinct() output by BYTES (a few MB of edges -> 2-3 partitions)
+    # and the checkpoint freezes that layout, so the next round's map
+    # side ran 3-wide on a 32-core box. The width follows the previous
+    # edge count, so a few hundred edges run 1-wide instead of paying a
+    # 32-way exchange plus 32 near-empty tasks per round; a conf-gated
+    # no-op on a real cluster.
+    e = iterate(
+        lambda e, _: spread(_small_star(_large_star(e)), rows_hint=sigs[-1][0]),
+        spread(e0),
+        max_rounds=max_iter,
+        until=done,
+    )
+    rounds = len(sigs) - 1
+    if fixpoint():
+        star_map = e.groupBy("src").agg(F.min("dst").alias("_component"))
+    elif sigs[-1][0] <= max_driver_edges:
         import pandas as pd  # noqa: PLC0415
 
         pdf = e.toPandas()
@@ -1326,9 +1302,16 @@ def connected_components(
             pd.DataFrame({"src": ids, "_component": labels}),
             f"src {id_type}, _component {id_type}",
         )
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {rounds} rounds and "
+            f"{sigs[-1][0]} edges remain above the driver-finish bound of "
+            f"{max_driver_edges} edges (spark.sql.autoBroadcastJoinThreshold="
+            f"{bound}); raise max_iter"
+        )
     if stats is not None:
         stats["rounds"] = rounds
-    out = (
+    return (
         nodes.select(F.col(id_col).alias("node"))
         .join(star_map, F.col("node") == F.col("src"), "left")
         .select(
@@ -1336,7 +1319,6 @@ def connected_components(
             F.coalesce(F.col("_component"), F.col("node")).alias("component"),
         )
     )
-    return out
 
 
 def incremental_dedup(

@@ -12,15 +12,18 @@ bit-reproducible across engines, partitionings, and reruns.
 Scale shape per iteration: one equi-join of the edge list with the
 (node, pr) frame on the source, one partial-aggregated shuffle keyed by
 the destination, one left join back to the node set — all keyed on node
-ids, no driver-side data paths, O(E) work per round. A handful of rounds
-fuse into one lazy plan (for deep iteration counts, checkpoint like the
-connected-components loop).
+ids, no driver-side data paths, O(E) work per round. The rounds run
+through :func:`~gomrjob_spark.cache.iterate`, which checkpoints each
+round's rank table, so round k's plan scans round k-1's rows instead of
+re-nesting rounds 1..k-1.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
+
+from gomrjob_spark.cache import iterate, scoped_persist
 
 
 def pagerank_fixedpoint(
@@ -44,8 +47,6 @@ def pagerank_fixedpoint(
     converges to the base term, and dangling nodes (no out-edges)
     simply contribute nothing (their mass is dropped, the standard
     simplification). Returns (node, pr)."""
-    from gomrjob_spark.cache import scoped_persist
-
     base = (scale * (damp_den - damp_num)) // damp_den
     # Persist the loop INVARIANTS once (r13, from the 64x probe: the
     # un-persisted edge frame — often a distinct over a large fact
@@ -60,15 +61,15 @@ def pagerank_fixedpoint(
         .distinct()
     )
     deg = scoped_persist(edges.groupBy("src").agg(F.count("*").alias("deg")))
-    pr = nodes.select("node", F.lit(scale).cast("bigint").alias("pr"))
-    for _ in range(n_iters):
+
+    def power_round(pr: DataFrame, _) -> DataFrame:
         contrib = (
             edges.join(pr, edges["src"] == pr["node"])
             .join(deg, "src")
             .select(F.col("dst").alias("node"), F.expr("pr DIV deg").alias("c"))
         )
         sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        pr = nodes.join(sums, "node", "left").select(
+        return nodes.join(sums, "node", "left").select(
             "node",
             (
                 F.lit(base)
@@ -76,11 +77,10 @@ def pagerank_fixedpoint(
             )
             .cast("bigint")
             .alias("pr"),
-        # the rank table is |nodes|-sized — truncate its lineage per
-        # round (the CC-fixpoint device) so round k's plan does not
-        # re-nest rounds 1..k-1
-        ).localCheckpoint(eager=False)
-    return pr
+        )
+
+    pr0 = nodes.select("node", F.lit(scale).cast("bigint").alias("pr"))
+    return iterate(power_round, pr0, max_rounds=n_iters)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:

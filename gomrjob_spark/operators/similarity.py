@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gomrjob_spark.cache import iterate
 from gomrjob_spark.functions import local_df
 
 
@@ -150,31 +151,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     """Deterministic unit-free hyperplanes (Gaussian entries, fixed seed)."""
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def lsh_signature(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: one bit per hyperplane, packed into a long.
-
-    The plane matrix is ONE SQL literal folded by a single nested-HOF
-    expression (re-planned r14 — the r13 verdict's item #3: the
-    previous form built every plane as per-element ``F.lit`` arrays,
-    ~n_planes x dim py4j round-trips per call site, the exact r5
-    gotcha #4 that :func:`_sql_arr` exists to prevent). ``vec`` must be
-    a plain column name or simple column reference — it is inlined into
-    the SQL expression, so referencing it inside the inner lambda costs
-    nothing (no CSE hazard)."""
-    vec_sql = vec if isinstance(vec, str) else vec._jc.toString()
-    mat = "array(" + ",".join(_sql_arr(p) for p in planes) + ")"
-    return F.expr(
-        f"""aggregate(
-            zip_with({mat}, sequence(0, {len(planes) - 1}),
-              (p, i) -> IF(
-                aggregate(zip_with({vec_sql}, p, (x, y) -> x * y),
-                          CAST(0 AS DOUBLE), (a, x) -> a + x) >= 0,
-                shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)),
-                CAST(0 AS BIGINT))),
-            CAST(0 AS BIGINT), (a, x) -> a + x)"""
-    )
 
 
 def lsh_bucket(
@@ -465,13 +441,12 @@ def ivf_centroids_kmeans(
     Scale: per round, the data-sized work is one scan (broadcast assign,
     |corpus| x n_centroids map-side scores) plus one partial-agg shuffle
     whose reduce side is |cells| x dim rows. The centroid frame is a
-    MODEL — O(cells x dim) — so it is collected to the driver each round
-    (the same bounded, documented driver read as the connected-components
-    convergence check) to truncate lineage: n_iters jobs total, not one
-    exponentially-nested plan. Cells that lose every member keep their
-    previous centroid."""
+    MODEL — O(cells x dim) — so :func:`_lloyd_update` collects it to the
+    driver each round, and the round state that
+    :func:`~gomrjob_spark.cache.iterate` carries is a driver-side dict:
+    n_iters jobs total, not one exponentially-nested plan. Cells that
+    lose every member keep their previous centroid."""
     spark = corpus.sparkSession
-    quant = float(CENTROID_QUANT)
     seed_df = (
         seeds
         if seeds is not None
@@ -488,7 +463,8 @@ def ivf_centroids_kmeans(
             "ivf_centroids_kmeans: empty seed set (no corpus rows to "
             "sample centroids from)"
         )
-    for _ in range(n_iters):
+
+    def lloyd_round(cur: dict, _) -> dict:
         # training forces the BROADCAST assignment path
         # (max_literal_terms=0): each Lloyd round would otherwise bake
         # the round's centroids into fresh plan literals and re-pay
@@ -502,23 +478,28 @@ def ivf_centroids_kmeans(
             corpus, None, 1, id_col, vec_col,
             max_literal_terms=0, centroid_rows=sorted(cur.items()),
         )
-        # ONE job per round: the fixed-point component sums; the new
-        # centroids rebuild in plain Python over the model-sized result
-        # (qsum/(n*2^20) is a single IEEE division of exact integers —
-        # bit-identical to computing it JVM-side)
-        acc: dict = {}
-        for r in centroid_sums(assigned, group_col="cell", vec_col=vec_col).collect():
-            acc.setdefault(int(r["cell"]), {})[int(r["pos"])] = (
-                int(r["qsum"]), int(r["n"])
-            )
-        nxt = dict(cur)
-        for cell, poses in acc.items():
-            vec = list(cur[cell])
-            for pos, (qs, n) in poses.items():
-                vec[pos] = qs / (n * quant)
-            nxt[cell] = vec
-        cur = nxt
+        sums = centroid_sums(assigned, group_col="cell", vec_col=vec_col)
+        return _lloyd_update(cur, sums, lambda r: int(r["cell"]))
+
+    cur = iterate(lloyd_round, cur, max_rounds=n_iters)
     return local_df(spark, sorted(cur.items()), "cell int, centroid array<double>")
+
+
+def _lloyd_update(cur: dict, sums: DataFrame, key) -> dict:
+    """One Lloyd centroid update on the driver: ONE job collects the
+    model-sized fixed-point component sums (:func:`centroid_sums`), and
+    each centroid component becomes qsum/(n*2^20) — a single IEEE
+    division of exact integers, bit-identical to computing it JVM-side.
+    ``key(row)`` maps a sums row to its ``cur`` key; a centroid that
+    lost every member keeps its previous value."""
+    quant = float(CENTROID_QUANT)
+    acc: dict = {}
+    for r in sums.collect():
+        acc.setdefault(key(r), {})[int(r["pos"])] = int(r["qsum"]) / (int(r["n"]) * quant)
+    return {
+        k: [acc[k].get(i, x) for i, x in enumerate(v)] if k in acc else v
+        for k, v in cur.items()
+    }
 
 
 def knn_ivf(
@@ -862,7 +843,8 @@ def pq_train(
         (int(r["sub"]), int(r["cell"])): [float(x) for x in r["v"]]
         for r in seeds.collect()
     }
-    for _ in range(n_iters):
+
+    def lloyd_round(book: dict, _) -> dict:
         # row-local assignment: the WHOLE codebook enters as ONE 3-D
         # literal array; the row's sub picks its slab via element_at
         # and a single transform evaluates the fold per cell. The
@@ -886,21 +868,13 @@ def pq_train(
             staged.select("sub", code.alias("cell"), F.posexplode("v").alias("pos", "val"))
             .groupBy("sub", "cell", "pos")
             .agg(
-                F.sum(F.floor(F.col("val") * quant).cast("bigint")).alias("qs"),
+                F.sum(F.floor(F.col("val") * quant).cast("bigint")).alias("qsum"),
                 F.count("*").alias("n"),
             )
-            .collect()
         )
-        newbook = dict(book)
-        by_cell: dict = {}
-        for r in sums:
-            by_cell.setdefault((int(r["sub"]), int(r["cell"])), []).append(r)
-        for key, rows in by_cell.items():
-            cent = [0.0] * sub_dim
-            for r in rows:
-                cent[int(r["pos"])] = int(r["qs"]) / (int(r["n"]) * quant)
-            newbook[key] = cent
-        book = newbook
+        return _lloyd_update(book, sums, lambda r: (int(r["sub"]), int(r["cell"])))
+
+    book = iterate(lloyd_round, book, max_rounds=n_iters)
     return [[book[(s, c)] for c in range(1, n_centroids + 1)] for s in range(m)]
 
 
@@ -935,16 +909,6 @@ def _sq_dist_fold(vec_sql: str, arr_sql: str) -> str:
         f"aggregate(zip_with({vec_sql}, {arr_sql}, "
         "(x, y) -> power(CAST(x AS DOUBLE) - CAST(y AS DOUBLE), 2)), "
         "CAST(0.0 AS DOUBLE), (acc, w) -> acc + w)"
-    )
-
-
-def _dot_sql(vec_sql: str, vals: list[float]) -> str:
-    """Dot product against a literal vector as one SQL string (same
-    sequential left fold as :func:`dot`)."""
-    return (
-        f"aggregate(zip_with({vec_sql}, {_sql_arr(vals)}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
 
 
@@ -1507,10 +1471,11 @@ def fine_centroids_kmeans(
     deterministic under any partitioning, bit-identical to the oracle's
     grouped round. (ccell, fcell) pairs that lose every member keep
     their previous centroid (the COALESCE rule). Returns (ccell, fcell,
-    centroid); like ivf_centroids_kmeans, the model is collected to the
-    driver each round (bounded O(k x dim) read) to truncate lineage."""
+    centroid); like ivf_centroids_kmeans, the rounds run through
+    :func:`~gomrjob_spark.cache.iterate` with the model collected to the
+    driver each round (:func:`_lloyd_update`, a bounded O(k x dim)
+    read)."""
     spark = staged.sparkSession
-    quant = float(CENTROID_QUANT)
     w = W.partitionBy("ccell").orderBy(
         F.md5(F.col(id_col).cast("string")), F.col(id_col)
     )
@@ -1528,7 +1493,8 @@ def fine_centroids_kmeans(
         (int(r["ccell"]), int(r["fcell"])): [float(x) for x in r["centroid"]]
         for r in seeds.collect()
     }
-    for _ in range(n_iters):
+
+    def lloyd_round(cur: dict, _) -> dict:
         # r15: the per-round grouped broadcast row builds driver-side
         # from ``cur`` (no groupBy(ccell) shuffle over a model frame)
         assigned = _fine_argmax(
@@ -1541,18 +1507,10 @@ def fine_centroids_kmeans(
             ).alias("_gk"),
             F.col(vec_col),
         )
-        acc: dict = {}
-        for r in centroid_sums(keyed, group_col="_gk", vec_col=vec_col).collect():
-            gk = int(r["_gk"])
-            key = (gk // _FINE_KEY_STRIDE, gk % _FINE_KEY_STRIDE)
-            acc.setdefault(key, {})[int(r["pos"])] = (int(r["qsum"]), int(r["n"]))
-        nxt = dict(cur)
-        for key, poses in acc.items():
-            vec = list(cur[key])
-            for pos, (qs, n) in poses.items():
-                vec[pos] = qs / (n * quant)
-            nxt[key] = vec
-        cur = nxt
+        sums = centroid_sums(keyed, group_col="_gk", vec_col=vec_col)
+        return _lloyd_update(cur, sums, lambda r: divmod(int(r["_gk"]), _FINE_KEY_STRIDE))
+
+    cur = iterate(lloyd_round, cur, max_rounds=n_iters)
     return local_df(
         spark,
         [(c, f, v) for (c, f), v in sorted(cur.items())],

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gomrjob_spark.cache import scoped_persist
+from gomrjob_spark.cache import iterate, scoped_persist
 from gomrjob_spark.functions import local_df
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
@@ -302,25 +302,22 @@ def quality_perceptron_train(
 
     Scale shape: the feature frame is computed ONCE and persisted
     (8 rounds = 8 partial-agg scans of the cached integer features,
-    never the text); the weight vector is a 1-ROW frame crossed in as
-    a broadcast per round (the BPE winning-pair device — no driver
-    read, no literals in the plan) and lazily localCheckpointed per
-    round (each round references its predecessor twice — the
-    wordpiece lineage rule)."""
+    never the text). The round state is the training curve so far, one
+    row per round; round r crosses its last row in as a 1-ROW broadcast
+    (no driver read, no literals in the plan) and appends the next, and
+    :func:`~gomrjob_spark.cache.iterate` checkpoints the curve each
+    round, so the returned plan does not grow with ``n_rounds``."""
     feats = scoped_persist(
         teacher_label(
             quality_features(spread(docs), text_col=text_col, id_col=id_col)
         ).select("y", *_PERCEPTRON_FEATS)
     )
-    spark = docs.sparkSession
-    w = spark.range(1).select(
-        *[F.lit(0).cast("bigint").alias(c) for c in _PERCEPTRON_W]
-    )
     margin = " + ".join(
         f"{wc} * {xc}" for wc, xc in zip(_PERCEPTRON_W, _PERCEPTRON_FEATS)
     )
-    out = None
-    for r in range(1, n_rounds + 1):
+
+    def train_round(curve: DataFrame, r: int) -> DataFrame:
+        w = curve.filter(F.col("round") == r - 1).select(*_PERCEPTRON_W)
         mistakes = feats.join(F.broadcast(w)).filter(
             F.expr(f"y * ({margin}) <= 0")
         )
@@ -333,27 +330,24 @@ def quality_perceptron_train(
                 for j, xc in enumerate(_PERCEPTRON_FEATS)
             ],
         )
-        w = (
-            w.join(F.broadcast(delta))
-            .select(
-                "_n",
+        return curve.unionByName(
+            w.join(F.broadcast(delta)).select(
+                F.lit(r).cast("int").alias("round"),
+                F.col("_n").alias("n_mistakes"),
                 *[
-                    F.expr(f"{wc} + _d{j} DIV {r}")
-                    .cast("bigint")
-                    .alias(wc)
+                    F.expr(f"{wc} + _d{j} DIV {r}").cast("bigint").alias(wc)
                     for j, wc in enumerate(_PERCEPTRON_W)
                 ],
             )
-            .localCheckpoint(eager=False)
         )
-        row = w.select(
-            F.lit(r).cast("int").alias("round"),
-            F.col("_n").alias("n_mistakes"),
-            *_PERCEPTRON_W,
-        )
-        out = row if out is None else out.unionByName(row)
-        w = w.select(*_PERCEPTRON_W)
-    return out.orderBy("round")
+
+    w0 = docs.sparkSession.range(1).select(
+        F.lit(0).cast("int").alias("round"),
+        F.lit(0).cast("bigint").alias("n_mistakes"),
+        *[F.lit(0).cast("bigint").alias(c) for c in _PERCEPTRON_W],
+    )
+    curve = iterate(train_round, w0, max_rounds=n_rounds)
+    return curve.filter(F.col("round") >= 1).orderBy("round")
 
 
 def perceptron_score(
@@ -946,14 +940,10 @@ def bpe_train_merges(
     0x02 marker (stripped from input tokens first), and tokens are
     identified by surface string exactly as in standard BPE.
 
-    Scale shape per round: one pair-count aggregation over the
-    scoped-persisted symbol arrays (position explode of a cheap
-    sequence — never of an expensive transform), a 1-ROW broadcast of
-    the winning pair (no driver read: the fold's lambda references the
-    joined row's columns), and one row-local fold rewriting each doc's
-    array. Per-round state is the rewritten corpus, persisted so round
-    r+1 reads round r's output once instead of recomputing the whole
-    fold chain (without it the lineage doubles per round).
+    Scale shape per round (:func:`_merge_table`): one pair-count
+    aggregation over the checkpointed symbol arrays (position explode of
+    a cheap sequence — never of an expensive transform), a <=1-row
+    winner collect, and one row-local fold rewriting each doc's array.
     """
     toks0 = spread(docs).select(
         F.filter(
@@ -968,83 +958,82 @@ def bpe_train_merges(
 
 
 def _bpe_round_loop(sym0: DataFrame, n_merges: int) -> DataFrame:
-    """The BPE training loop over any frame of symbol arrays (column
-    ``toks``) — shared verbatim by the whitespace-token trainer above
-    and the byte-level trainer (:func:`byte_bpe_train_merges`), so both
-    granularities pin the SAME pair-count / winner-pick / greedy-merge
-    semantics by construction.
-
-    Lineage discipline (r14): each round's WINNER is collected to the
-    driver — a <=1-row model-sized read, the exact
-    ``ivf_centroids_kmeans`` Lloyd-round device — and the merge fold
-    takes the winning pair as plan LITERALS. Without this, a round's
-    frame referenced its predecessor TWICE (the pair count feeding the
-    winner, and the rewrite join), the logical plan doubled per round,
-    and at 5 rounds the byte-level encode's plan carried ~10k Exchange
-    nodes: query CONSTRUCTION alone (driver-side plan copying, before
-    any execution) measured 10.4 s at sf0.1. With winner literals the
-    per-round plan is ONE projection over the persisted predecessor —
-    linear growth, columnar cache reuse — and the winner computation
-    itself is the same persisted-frame aggregate as before, now
-    driver-paced: n_merges bounded collect jobs instead of one
-    exponentially-nested action. The winner pick (count desc, w1, w2)
-    and the greedy fold are byte-identical, so the returned merge
-    table — and everything an apply pass derives from it — is
-    unchanged row for row."""
-    spark = sym0.sparkSession
-    cur = scoped_persist(sym0)
-    weighted = "_w" in sym0.columns
-    rows: list[tuple[int, str, str, int]] = []
-    for r in range(1, n_merges + 1):
-        idx = F.when(
-            F.size("toks") >= 2, F.sequence(F.lit(1), F.size("toks") - 1)
-        ).otherwise(F.array().cast("array<int>"))
-        pair_cols = [
-            F.element_at("toks", F.col("_i")).alias("w1"),
-            F.element_at("toks", F.col("_i") + 1).alias("w2"),
-        ]
-        if weighted:
-            # weighted rows (r15 byte-level trainer): each distinct
-            # symbol array carries its corpus multiplicity in ``_w``,
-            # so the pair count is the weighted sum — identical totals
-            # to exploding every instance, with the explode+agg sized
-            # by DISTINCT types instead of corpus volume.
-            pairs = cur.select("toks", "_w", F.explode(idx).alias("_i")).select(
-                *pair_cols, "_w"
-            )
-            counted = pairs.groupBy("w1", "w2").agg(F.sum("_w").alias("n_pair"))
-        else:
-            pairs = cur.select("toks", F.explode(idx).alias("_i")).select(*pair_cols)
-            counted = pairs.groupBy("w1", "w2").agg(
-                F.count(F.lit(1)).alias("n_pair")
-            )
-        top1 = counted.orderBy(F.desc("n_pair"), "w1", "w2").limit(1).collect()
-        if not top1:
-            # No adjacent pairs remain: the old rewrite join emptied
-            # `cur` silently and every later round emitted no merge
-            # row — the merge table simply ends here, exactly as then.
-            break
-        w1, w2 = top1[0]["w1"], top1[0]["w2"]
-        rows.append((r, w1, w2, int(top1[0]["n_pair"])))
-        folded = cur.select(
-            _greedy_merge_fold("toks", F.lit(w1), F.lit(w2)).alias("toks"),
-            *([F.col("_w")] if weighted else []),
-        )
-        cur = scoped_persist(folded)
+    """The BPE merge table (round, w1, w2, n_pair) of a frame of symbol
+    arrays ``toks`` — shared by the whitespace-token trainer above and
+    the byte-level trainer (:func:`byte_bpe_train_merges`), so both
+    granularities pin the same round by construction. A round with no
+    adjacent pair left ends the table early."""
     return local_df(
-        spark, rows, "round int, w1 string, w2 string, n_pair bigint"
+        sym0.sparkSession,
+        _merge_table(sym0, n_merges, _bpe_merged),
+        "round int, w1 string, w2 string, n_pair bigint",
     ).orderBy("round")
 
 
-def _greedy_merge_fold(arr, w1, w2):
-    """One BPE merge applied greedily left-to-right, non-overlapping,
-    as a row-local array fold: whenever the accumulator's last symbol
-    is ``w1`` and the incoming symbol is ``w2``, replace the tail with
-    the 0x02-joined merged symbol (so in [a,a,a] positions 1-2 merge
-    and 3 stays; [a,b,a,b] merges both occurrences). Shared by the
-    trainer round and ``bpe_apply`` so train and encode pin the SAME
+def _merge_table(sym0: DataFrame, n_merges: int, merged, score=None) -> list[tuple]:
+    """The merge-table round of BPE and WordPiece, run by
+    :func:`~gomrjob_spark.cache.iterate` over a frame of symbol arrays
+    ``toks``, each optionally weighted by its multiplicity ``_w`` (a
+    distinct-array table). A round counts the weighted adjacent pairs,
+    collects the winner to the driver (a <=1-row read), and folds it
+    into every array as plan literals (:func:`_greedy_merge_fold`, the
+    merged symbol from ``merged(w1, w2)``), so a round's plan is one
+    projection over the checkpointed predecessor.
+
+    ``score(cur, pairs)`` ranks the (w1, w2, n_pair) pair counts and
+    returns (w1, w2, n_pair, ...) whose LAST column orders the winner
+    (desc, ties to w1, w2); without it the pair count does. Returns one
+    (round, *winner) tuple per round that found a pair; a round that
+    finds none leaves the arrays unchanged, which ends the loop."""
+    weighted = "_w" in sym0.columns
+    idx = F.when(
+        F.size("toks") >= 2, F.sequence(F.lit(1), F.size("toks") - 1)
+    ).otherwise(F.array().cast("array<int>"))
+    rows: list[tuple] = []
+
+    def merge_round(cur: DataFrame, r: int) -> DataFrame:
+        pairs = (
+            cur.select(
+                "toks",
+                (F.col("_w") if weighted else F.lit(1)).alias("_w"),
+                F.explode(idx).alias("_i"),
+            )
+            .select(
+                F.element_at("toks", F.col("_i")).alias("w1"),
+                F.element_at("toks", F.col("_i") + 1).alias("w2"),
+                "_w",
+            )
+            .groupBy("w1", "w2")
+            .agg(F.sum("_w").cast("bigint").alias("n_pair"))
+        )
+        ranked = score(cur, pairs) if score else pairs
+        top1 = ranked.orderBy(F.desc(ranked.columns[-1]), "w1", "w2").limit(1).collect()
+        if not top1:
+            return cur
+        rows.append((r, *top1[0]))
+        w1, w2 = F.lit(top1[0]["w1"]), F.lit(top1[0]["w2"])
+        return cur.select(
+            _greedy_merge_fold("toks", w1, w2, merged(w1, w2)).alias("toks"),
+            *(["_w"] if weighted else []),
+        )
+
+    iterate(merge_round, sym0, max_rounds=n_merges)
+    return rows
+
+
+def _bpe_merged(w1, w2):
+    """BPE's merged symbol: the pair joined by the 0x02 marker."""
+    return F.concat(w1, F.lit("\x02"), w2)
+
+
+def _greedy_merge_fold(arr, w1, w2, merged_tok):
+    """One merge applied greedily left-to-right, non-overlapping, as a
+    row-local array fold: whenever the accumulator's last symbol is
+    ``w1`` and the incoming symbol is ``w2``, replace the tail with
+    ``merged_tok`` (so in [a,a,a] positions 1-2 merge and 3 stays;
+    [a,b,a,b] merges both occurrences). Shared by the BPE and WordPiece
+    trainer rounds and ``bpe_apply``, so train and encode pin the SAME
     merge semantics by construction."""
-    merged_tok = F.concat(w1, F.lit("\x02"), w2)
     return F.aggregate(
         arr,
         F.array().cast("array<string>"),
@@ -1100,7 +1089,9 @@ def bpe_apply(
         F.aggregate(
             "_bpe_merges",
             F.col("_toks"),
-            lambda acc, m: _greedy_merge_fold(acc, m["w1"], m["w2"]),
+            lambda acc, m: _greedy_merge_fold(
+                acc, m["w1"], m["w2"], _bpe_merged(m["w1"], m["w2"])
+            ),
         ).alias("toks"),
     )
 
@@ -1266,7 +1257,9 @@ def byte_bpe_apply(
             F.aggregate(
                 "_bpe_merges",
                 F.col("toks"),
-                lambda acc, m: _greedy_merge_fold(acc, m["w1"], m["w2"]),
+                lambda acc, m: _greedy_merge_fold(
+                    acc, m["w1"], m["w2"], _bpe_merged(m["w1"], m["w2"])
+                ),
             ).alias("toks"),
         )
     )
@@ -2090,8 +2083,9 @@ def unigram_lm_train(
     Scale shape per round: the corpus-sized work was paid ONCE in
     :func:`_word_freqs` (the distinct-word frame is persisted); each
     EM round is |distinct words| row-local folds + one (piece) key
-    shuffle; the vocabulary crosses as a 1-row broadcast (the
-    bpe_train_merges loop shape — remember the BNLJ allowlist)."""
+    shuffle; the vocabulary crosses as a 1-row broadcast (remember the
+    BNLJ allowlist), and :func:`~gomrjob_spark.cache.iterate`
+    checkpoints each round's vocabulary."""
     wf = scoped_persist(_word_freqs(train, text_col))
     # seed counts: every substring of length 1..max_piece_len (all
     # positions, overlapping), weighted by word frequency
@@ -2120,7 +2114,8 @@ def unigram_lm_train(
     )
     # the seed's single characters: kept forever (coverage guarantee)
     chars = scoped_persist(vocab.filter(F.length("piece") == 1).select("piece"))
-    for _ in range(n_rounds):
+
+    def em_round(vocab: DataFrame, _) -> DataFrame:
         vrow = _unigram_vocab_row(vocab, oov_bits)
         seg = wf.join(F.broadcast(vrow)).select(
             F.col("wn"),
@@ -2141,7 +2136,9 @@ def unigram_lm_train(
                 "bigint"
             ).alias("q")
         )
-        vocab = scoped_persist(multi.unionByName(kept_chars))
+        return multi.unionByName(kept_chars)
+
+    vocab = iterate(em_round, vocab, max_rounds=n_rounds)
     # published cost: bitlen(T DIV n) under the FINAL counts (1-row
     # total broadcast — the ngram_perplexity allowlist class), so the
     # returned table is self-contained for unigram_encode
@@ -2285,20 +2282,10 @@ def _wp_init_syms(w):
     return F.concat(F.array(F.substr(w, F.lit(1), F.lit(1))), tail)
 
 
-def _wp_merge_fold(arr, w1, w2):
-    """One WordPiece merge applied greedily left-to-right,
-    non-overlapping (the shared _greedy_merge_fold semantics); the
-    merged symbol concatenates with the continuation marker of the
-    right side stripped: merge(a, ##b) = ab, merge(##b, ##c) = ##bc."""
-    merged_tok = F.concat(w1, F.regexp_replace(w2, "^##", ""))
-    return F.aggregate(
-        arr,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == w1) & (x == w2),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged_tok)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
+def _wp_merged(w1, w2):
+    """WordPiece's merged symbol: the right side's continuation marker
+    stripped, merge(a, ##b) = ab and merge(##b, ##c) = ##bc."""
+    return F.concat(w1, F.regexp_replace(w2, "^##", ""))
 
 
 #: fixed-point scale for the WordPiece likelihood score — two staged
@@ -2343,84 +2330,53 @@ def wordpiece_train(
     first char plus '##'-prefixed continuations, and merges apply
     greedily left-to-right non-overlapping exactly as in BPE.
 
-    Scale shape per round: one weighted symbol-count aggregate + one
-    weighted pair-count aggregate over the persisted distinct-word
-    symbol arrays, two vocabulary-sized equi-joins to attach the
-    left/right counts, a <=1-row WINNER collect (the bpe_train_merges /
-    ivf Lloyd-round bounded driver read, r14 — folded back as plan
-    literals, so no per-round broadcast join), and one
-    row-local fold rewriting each word's array. Each round's rewritten
-    symbol frame is lazily ``localCheckpoint``ed (the connected-
-    components fixpoint device): a round references its predecessor
-    THREE times (symbol counts, pair counts, the rewrite join), so
-    without the lineage barrier the logical plan grows ~4^rounds and
-    the 5-round plan string alone overflows the driver heap; the
-    checkpointed frame is the DISTINCT-WORD table — vocabulary-sized
-    (Heaps-bounded), never corpus-sized."""
-    wf = scoped_persist(_wp_word_freqs(docs, text_col))
-    cur = scoped_persist(
-        wf.select(_wp_init_syms(F.col("w")).alias("syms"), "wn")
-    )
-    spark = docs.sparkSession
-    rows: list[tuple[int, str, str, int, int]] = []
-    for r in range(1, n_merges + 1):
+    Scale shape per round: the BPE round (:func:`_merge_table` — one
+    weighted pair-count aggregate over the distinct-word symbol arrays,
+    a <=1-row winner collect, one row-local literal fold) plus one
+    weighted symbol-count aggregate and two vocabulary-sized equi-joins
+    that attach the left/right counts to score the pairs. A round reads
+    its predecessor three times (symbol counts, pair counts, the fold),
+    so without the checkpoint :func:`~gomrjob_spark.cache.iterate`
+    puts between rounds the plan would grow ~4^rounds; the checkpointed
+    frame is the DISTINCT-WORD table — vocabulary-sized (Heaps-bounded),
+    never corpus-sized."""
+
+    def score(cur: DataFrame, pairs: DataFrame) -> DataFrame:
         cnt = (
-            cur.select(F.explode("syms").alias("s"), "wn")
+            cur.select(F.explode("toks").alias("s"), "_w")
             .groupBy("s")
-            .agg(F.sum("wn").cast("bigint").alias("c"))
+            .agg(F.sum("_w").cast("bigint").alias("c"))
         )
-        idx = F.when(
-            F.size("syms") >= 2, F.sequence(F.lit(1), F.size("syms") - 1)
-        ).otherwise(F.array().cast("array<int>"))
-        pairs = (
-            cur.select("syms", "wn", F.explode(idx).alias("_i"))
-            .select(
-                F.element_at("syms", F.col("_i")).alias("w1"),
-                F.element_at("syms", F.col("_i") + 1).alias("w2"),
-                "wn",
-            )
-            .groupBy("w1", "w2")
-            .agg(F.sum("wn").cast("bigint").alias("n_pair"))
-        )
-        scored = (
+        return (
             pairs.join(cnt.select(F.col("s").alias("w1"), F.col("c").alias("_cl")), "w1")
             .join(cnt.select(F.col("s").alias("w2"), F.col("c").alias("_cr")), "w2")
-            .withColumn(
-                "score_fp",
+            .select(
+                "w1",
+                "w2",
+                "n_pair",
                 F.expr(
                     f"(((n_pair * {WP_SCORE_SCALE}) DIV _cl) * {WP_SCORE_SCALE})"
                     " DIV _cr"
-                ).cast("bigint"),
+                ).cast("bigint").alias("score_fp"),
             )
         )
-        # The round's winner is a <=1-row MODEL: collect it (the BPE /
-        # ivf Lloyd-round device, r14 — one bounded driver read, the
-        # same single materializing job the old persist + count() pair
-        # paid) and fold it back as plan LITERALS — no per-round
-        # broadcast join, and the merge table becomes literal rows. A
-        # round with NO remaining adjacent pairs used to silently empty
-        # `cur` through the rewrite cross-join; the explicit raise is
-        # unchanged.
-        top1 = (
-            scored.orderBy(F.desc("score_fp"), "w1", "w2").limit(1).collect()
+
+    words = _wp_word_freqs(docs, text_col).select(
+        _wp_init_syms(F.col("w")).alias("toks"), F.col("wn").alias("_w")
+    )
+    rows = _merge_table(words, n_merges, _wp_merged, score)
+    if len(rows) < n_merges:
+        r = len(rows) + 1
+        raise RuntimeError(
+            f"wordpiece_train exhausted at round {r}: no adjacent "
+            f"symbol pairs remain after {r - 1} merges (requested "
+            f"n_merges={n_merges}); every distinct word is fully "
+            "merged — lower n_merges to the corpus's merge capacity."
         )
-        if not top1:
-            raise RuntimeError(
-                f"wordpiece_train exhausted at round {r}: no adjacent "
-                f"symbol pairs remain after {r - 1} merges (requested "
-                f"n_merges={n_merges}); every distinct word is fully "
-                "merged — lower n_merges to the corpus's merge capacity."
-            )
-        w1, w2 = top1[0]["w1"], top1[0]["w2"]
-        rows.append(
-            (r, w1, w2, int(top1[0]["n_pair"]), int(top1[0]["score_fp"]))
-        )
-        cur = cur.select(
-            _wp_merge_fold("syms", F.lit(w1), F.lit(w2)).alias("syms"),
-            "wn",
-        ).localCheckpoint(eager=False)
     return local_df(
-        spark, rows, "round int, w1 string, w2 string, n_pair bigint, score_fp bigint"
+        docs.sparkSession,
+        rows,
+        "round int, w1 string, w2 string, n_pair bigint, score_fp bigint",
     ).orderBy("round")
 
 
@@ -2438,11 +2394,7 @@ def wordpiece_vocab(
         .select(F.explode(_wp_init_syms(F.col("w"))).alias("piece"))
         .distinct()
     )
-    merged = merges.select(
-        F.concat(
-            F.col("w1"), F.regexp_replace(F.col("w2"), "^##", "")
-        ).alias("piece")
-    )
+    merged = merges.select(_wp_merged(F.col("w1"), F.col("w2")).alias("piece"))
     return seeds.unionByName(merged).distinct()
 
 

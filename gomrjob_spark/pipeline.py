@@ -114,15 +114,11 @@ class Pipeline:
 
     Unlike the reference's runner (each step a separate ``hadoop jar``
     submission writing part files, runner.go:352-356), ``run`` builds a
-    single lazy plan; nothing materializes until the caller acts. Pass
-    ``checkpoint=True`` to localCheckpoint between steps if a step chain
-    grows too deep for one plan (the reference's materialization as an
-    opt-in, not the default).
+    single lazy plan; nothing materializes until the caller acts.
     """
 
     steps: list[Step] = field(default_factory=list)
     name: str = "gomrjob_spark_pipeline"
-    checkpoint: bool = False
 
     def step(self, **kwargs) -> "Pipeline":
         self.steps.append(Step(**kwargs))
@@ -133,8 +129,6 @@ class Pipeline:
             raise ValueError("pipeline has no steps")
         for s in self.steps:
             df = _run_step(df, s)
-            if self.checkpoint:
-                df = df.localCheckpoint(eager=False)
         return df
 
     def run_stream(self, df: DataFrame) -> DataFrame:

@@ -24,8 +24,9 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
     web,
 )
 
-# Tier 1 (round 15, the r14 verdict's item #1 — close the verification
-# debt): the r14 OPTIMIZER-touched queries shipped WITHOUT a
+# Tier 1: the queries whose plan changed, the newest change first (each
+# block below names its change). Before the newest blocks (round 15,
+# the r14 verdict's item #1 — close the verification debt): the r14 OPTIMIZER-touched queries shipped WITHOUT a
 # driver-verified row (the r14 window was locked before the
 # optimization session started), so they head this window; then every
 # query whose PLAN changed in round 15 itself — the capped pair stage
@@ -38,6 +39,36 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # exactly the priority rule the ledger prescribes: a query whose plan
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
+    # changed: every round loop runs through cache.iterate (one lazy
+    # checkpoint per round, dead rounds released), the BPE and
+    # WordPiece trainers share one merge round, and connected
+    # components skips its initial distinct(). Every oracle-checked
+    # consumer of the eight loops; knn_ivf, knn_ivf_kmeans and knn_pq
+    # use the Lloyd loops too but are rows-only
+    "corpus_train_pipeline",
+    "dedup_best_quality_survivors",
+    "dedup_cluster_survivors",
+    "dedup_semantic_diversity",
+    "entity_resolution_pipeline",
+    "graph_pagerank",
+    "mixture_bpe_weights",
+    "pack_bpe_batches",
+    "pack_unigram_batches",
+    "quality_perceptron_gate",
+    "quality_perceptron_train",
+    "split_cluster_aware",
+    "streaming_quality_gate",
+    "streaming_semdedup_gate",
+    "streaming_wordpiece_drift",
+    "text_bpe_encode",
+    "text_bpe_merges",
+    "text_byte_bpe_encode",
+    "text_byte_bpe_train",
+    "text_unigram_encode",
+    "text_unigram_lm_train",
+    "text_wordpiece_encode",
+    "text_wordpiece_train",
+    "url_domain_pagerank",
     # changed: the web expression builders (urls/robots/html/sitemap)
     # are written once, as SQL text, and their lambda variables carry
     # a reserved prefix. Every consumer of the four families; the
@@ -45,14 +76,12 @@ _VERIFY_FIRST = [
     # builders, robots composites), the rest re-verify the shared
     # builders
     "html_extract_links",
-    "url_domain_pagerank",
     "robots_txt_gate",
     "streaming_robots_gate",
     "sitemap_frontier",
     "sitemap_discovery",
     "sitemap_discovery_gz",
     "corpus_funnel_report",
-    "corpus_train_pipeline",
     "corpus_wet_pipeline",
     "html_extract_text",
     "html_block_stats",
@@ -67,20 +96,9 @@ _VERIFY_FIRST = [
     "sample_domain_cap",
     "url_registered_domain_psl",
     "streaming_url_gate",
-    # changed: connected_components labels an edge set that fits the
-    # broadcast threshold on the driver (every connected-components
-    # consumer)
-    "dedup_cluster_survivors",
-    "split_cluster_aware",
-    "entity_resolution_pipeline",
-    "dedup_best_quality_survivors",
     # r14-optimizer-touched, no driver row since the change (verdict #1)
     "text_kn_perplexity",
     "text_langid_gate",
-    "text_bpe_merges",
-    "text_bpe_encode",
-    "text_byte_bpe_encode",
-    "text_wordpiece_encode",
     "search_bm25_topk",
     "search_tf_topk",
     "search_phrase_topk",
@@ -89,7 +107,7 @@ _VERIFY_FIRST = [
     # (knn_pq and knn_ivf_kmeans are rows-only: the window discipline
     # keeps the 50 hash slots oracle-eligible — their Lloyd/PQ changes
     # are covered by pytest rows/recall checks and the registry sweep,
-    # and the oracled semdedup/ivf consumers below carry the hash gate
+    # and the oracled semdedup consumers above carry the hash gate
     # for the shared device)
     "multimodal_scene_cuts",
     "multimodal_phash_dedup",
@@ -98,16 +116,6 @@ _VERIFY_FIRST = [
     # r15: capped shingle pair stage (grouped candidates + sizes persist)
     "dedup_ngram_jaccard",
     "dedup_ngram_containment",
-    # r15: Lloyd broadcast-rows device + local_df model frames
-    "dedup_semantic_diversity",
-    "streaming_semdedup_gate",
-    # r15: byte-BPE distinct-pretoken trainer/encoder + the BPE-family
-    # twins whose merge-table frame construction changed (local_df)
-    "text_byte_bpe_train",
-    "pack_bpe_batches",
-    "mixture_bpe_weights",
-    # r15: wordpiece merge table via local_df
-    "text_wordpiece_train",
     # r15: atomic near-dup store publish
     "streaming_near_dup_probe",
 ]
@@ -144,7 +152,6 @@ _BACKFILL = [
     "streaming_incremental_dedup",
     "streaming_sliding_counts",
     "streaming_tumbling_agg",
-    "streaming_wordpiece_drift",
     "text_bigram_novelty",
     "text_chunks",
     "text_dup_ngram_coverage",

@@ -595,7 +595,7 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the jaccard >= 0.6 pair graph — every doc maps to the minimum
     id in its dup cluster (singletons to themselves), the id a cleaning
     pipeline keeps. Spark side is alternating large/small-star to a
-    fixpoint (lineage checkpointed); the oracle computes the same
+    fixpoint (rounds run by cache.iterate); the oracle computes the same
     closure with a recursive CTE.
 
     r14 (the wave-4 64x probe's catch): the pair stage runs WITH the
@@ -615,9 +615,7 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_pairs(
         docs, n=3, threshold=0.6, max_shingle_freq=_SURVIVOR_SHINGLE_CAP
     )
-    return dedup.connected_components(
-        pairs, docs, edges_distinct=True
-    ).orderBy("doc_id")
+    return dedup.connected_components(pairs, docs).orderBy("doc_id")
 
 
 @query(
@@ -684,7 +682,7 @@ def split_cluster_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_pairs(
         docs, n=3, threshold=0.6, max_shingle_freq=_SURVIVOR_SHINGLE_CAP
     )
-    comp = dedup.connected_components(pairs, docs, edges_distinct=True)
+    comp = dedup.connected_components(pairs, docs)
     b = hash_bucket(F.col("component"), 100, "split")
     return (
         comp.withColumn("bucket", b)
@@ -5150,9 +5148,7 @@ def entity_resolution_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     te = dedup.token_edit1_pairs(titles).select("id_a", "id_b")
     edges = jp.unionByName(te).distinct()
-    comp = dedup.connected_components(
-        edges, docs.select("doc_id"), edges_distinct=True
-    )
+    comp = dedup.connected_components(edges, docs.select("doc_id"))
     return (
         comp.groupBy("component")
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -5669,9 +5665,7 @@ def dedup_best_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = dedup.jaccard_prefix_pairs(
         docs, n=3, threshold_num=4, threshold_den=5
     ).select("id_a", "id_b")
-    comp = dedup.connected_components(
-        edges, docs.select("doc_id"), edges_distinct=True
-    )
+    comp = dedup.connected_components(edges, docs.select("doc_id"))
     q = docs.select("doc_id", F.col("n_chars").cast("bigint").alias("quality"))
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
@@ -8007,9 +8001,9 @@ def quality_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     is hash-gated round-by-round: the oracle replays every mistake
     aggregate and every decayed update via chained 1-row CTEs. Scale:
     features computed once and persisted (rounds re-scan cached
-    integers, never text); the weight vector is a 1-row broadcast per
-    round (the BPE winning-pair device), lazily localCheckpointed (2
-    predecessor refs/round — the wordpiece lineage rule). Floor vs
+    integers, never text); each round crosses the last weight row in
+    as a 1-row broadcast and appends the next to the training curve,
+    which cache.iterate checkpoints between rounds. Floor vs
     truncating division on the negative gradient sums is reconciled by
     the portable floor-div expression (text._floordiv)."""
     docs = load_table(spark, sf_dir, "documents")

@@ -2423,7 +2423,7 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # robots-fold HOF tree, and the minhash banding — every downstream
         # stage would re-embed (and catalyst re-optimize, and the
         # checkpoint's RDD path re-execute WITHOUT codegen) all of it, so
-        # truncate here (the BPE/PageRank lineage rule).
+        # truncate here (the rule cache.iterate applies between rounds).
         # the survivor id-lists are 1-partition checkpoints with no stats,
         # so every docs-side join broadcasts docs and streams the id list —
         # the CPU-dense consumers (HTML block parse here, token_count in
@@ -2456,7 +2456,7 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scorer's input would re-embed the whole upstream flag plan, the
         # next join would embed it AGAIN, and the final plan nests
         # exponentially (measured: catalyst alone ran minutes at sf0.1) —
-        # the BPE/PageRank lineage rule applied to the funnel.
+        # the round-loop lineage rule of cache.iterate applied to the funnel.
         s6_ids = gated.filter("s6").select("doc_id").localCheckpoint()
         lg = langid_apply(docs.join(s6_ids, "doc_id"), lg_row).select(
             "doc_id", "pred_lang"

@@ -65,21 +65,20 @@ def test_binding_cap_drops_hot_shingles(spark):
     assert pairs[(10, 11)] == 1.0
 
 
-def test_connected_components_edges_distinct_flag(spark, broadcast_threshold):
-    """Same rows with and without the distinct pass, on the driver
-    finish and on the distributed loop (threshold -1), and the output
-    keeps the caller's id type on both."""
-    pairs = [(1, 2), (2, 3), (5, 6)]
+def test_connected_components_raw_edges(spark, broadcast_threshold):
+    """Duplicate and reversed raw edges label the same as their distinct
+    set, on the driver finish and on the distributed loop (threshold
+    -1), and the output keeps the caller's id type on both."""
+    pairs = [(1, 2), (2, 3), (5, 6), (2, 1), (1, 2), (3, 2), (6, 5), (6, 5)]
     for id_type in ("bigint", "int"):
         edges = spark.createDataFrame(pairs, f"id_a {id_type}, id_b {id_type}")
         nodes = spark.createDataFrame([(i,) for i in range(1, 8)], f"doc_id {id_type}")
         for threshold in (None, "-1"):
             broadcast_threshold(threshold)
-            for distinct in (False, True):
-                comp = dedup.connected_components(edges, nodes, edges_distinct=distinct)
-                assert [(f.name, f.dataType.simpleString()) for f in comp.schema] == [
-                    ("doc_id", id_type),
-                    ("component", id_type),
-                ]
-                got = {(r["doc_id"], r["component"]) for r in comp.collect()}
-                assert got == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7)}
+            comp = dedup.connected_components(edges, nodes)
+            assert [(f.name, f.dataType.simpleString()) for f in comp.schema] == [
+                ("doc_id", id_type),
+                ("component", id_type),
+            ]
+            got = {(r["doc_id"], r["component"]) for r in comp.collect()}
+            assert got == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7)}
