@@ -24,124 +24,8 @@ from gomrjob_spark.session import get_session  # noqa: E402
 
 #: One representative per operator family (SURVEY.md §2 / §7 P6). Streaming
 #: queries drive a full Structured Streaming topology; the rest are batch.
-#: r6 rotation: set_ops, dedup_exact, text_chunks, sample_hash_split,
-#: cap_per_source, pack_token_batches, funnel_conversion and join_asof
-#: (flat sub-1 s shapes benched unchanged since r01-r02; join_asof's
-#: union-stream plan is still covered by join_asof_nearest) rotated OUT
-#: to keep the grown suite inside the 2000-byte stdout tail window;
-#: their plan shapes stay pinned by tests/test_plan_quality.py and any
-#: can rotate back in a later round. join_range rotated out likewise
-#: (the harder inequality class stays measured via join_band_time).
-#: r7 rotation: IN text_bpe_encode (the new encode pass; pack/mixture
-#: twins share its dominant cost and carry sweep rows instead),
-#: text_ngram_perplexity, decontaminate_semantic; OUT flat shapes
-#: window_topk_per_group (r01, plan-pinned), search_tf_topk (bm25
-#: keeps the retrieval class measured), sample_weighted (0.17 s flat,
-#: sweep row -0.07) — byte budget stays ~1.9 KB of the 2000-byte tail.
-#: r8 rotation: IN dedup_semantic_diversity (SemDeDup: trained k-means
-#: + cell-scoped survivorship), text_unigram_encode (carries the
-#: unigram-LM trainer + one-pass Viterbi encode; the train twin has a
-#: sweep row), dedup_paragraph_containment (sub-doc containment
-#: rollup), multimodal_lossless_pixel_stats (SOF3/SOF11 decode); OUT
-#: flat r01-era shapes whose cost class stays measured elsewhere:
-#: multimodal_pixel_stats (0.18 s; compressed/progressive variants
-#: carry the decode class), q6_forecast_revenue (0.36 s scan-agg; q1
-#: carries it), events_outlier_audit (0.49 s; streaming_outlier_flags
-#: keeps the outlier class), search_phrase_topk (0.56 s; bm25 keeps
-#: retrieval). 62 shared entries vs r7; ~1.93 KB of the 2000-byte tail.
-#: r9 rotation: IN dedup_span_removal (the ExactSubstr corpus rewrite —
-#: winner agg + ids-only joins + row-local splice) and
-#: text_wordpiece_encode (carries the 5-round likelihood trainer + the
-#: greedy longest-match encode; the train twin has a sweep row); OUT
-#: flat shapes whose cost class stays measured elsewhere:
-#: mr_field_count (0.52 s flat since r01 — mr_combiner runs the same
-#: Step graph and mr_field_count_gzip keeps the text-protocol path
-#: end-to-end) and dedup_repeated_chunks (0.28 s, the suite's flattest
-#: entry — dedup_paragraph_containment measures the same 256-char
-#: chunk-fingerprint shuffle class plus its rollup). 64 shared entries
-#: vs r8; ~1.93 KB of the 2000-byte tail. The other r9 queries stay
-#: tier 2 with sweep rows or documented cost classes (SCALING.md
-#: round-9): multimodal_caption_alignment (scan-linear),
-#: streaming_semdedup_gate (the benched semdedup trainer class),
-#: text_dup_ngram_coverage (the repetition_stats shuffle class),
-#: dedup_cross_source_overlap (flat partial-agg),
-#: streaming_wordpiece_drift + decontaminate_span_scrub (strict
-#: subsets of the benched wordpiece_encode / span_removal plans),
-#: mix_weights_temperature (the mixture-agg class), and the two
-#: hierarchical codec queries (the benched pixel-stats dispatch
-#: floor).
-#: r10 rotation (r9 verdict item #1 — the self-adjudicating artifact):
-#: the per-query warm-dispersion array `wx` (~170 B) and the q1 noise
-#: canary triple (~30 B) must fit inside the same 2000-byte stdout
-#: tail, so TEN flat entries rotate OUT, each with its cost class
-#: still measured (all were <=0.76 s and within noise since r08; plan
-#: shapes stay pinned by tests/test_plan_quality.py): q3_shipping_priority
-#: (q5/q18 keep the TPC-H multi-join-agg class), agg_cube (0.52 s flat;
-#: q1 keeps scan-agg, grouping-set plan pinned), profile_table_stats
-#: (0.55 s flat multi-stat scan; text_token_stats keeps the class),
-#: scd2_build (0.56 s flat, sweep row on record), quality_model_gate
-#: (corpus_curation_pipeline — benched — composes the same broadcast
-#: gate), concurrency_profile (0.73 s flat sweepline; sessionize_windows
-#: keeps event-ordering), knn_bruteforce (axis_lsh/ivf/pq/sq8 keep the
-#: ANN class; brute is the flat 0.66 s baseline twin),
-#: multimodal_progressive_pixel_stats (0.49 s; compressed_pixel_stats
-#: keeps the Huffman-decode dispatch floor), dedup_embedding_cosine_lowsim
-#: (the SAME plan as dedup_embedding_cosine at a lower threshold dial —
-#: the base + rp variants stay in), and knn_sq8 (0.76 s flat scan-local
-#: scalar-quant scoring; knn_pq keeps the quantized-ANN class). IN:
-#: text_langid_gate (the new language-ID broadcast-model fold — the
-#: first gate of a real curation pipeline; its train twin has a sweep
-#: row). 55 shared entries vs r8/r9 (56 total with gzip).
-#: r11 rotation: IN text_kn_perplexity (modified-KN smoothing — five
-#: vocab-sized model joins on the corpus trigram stream, the heaviest
-#: perplexity shape; the fixed-penalty twin stays in for the
-#: round-over-round pair) and text_byte_bpe_encode (byte-level encode:
-#: ~5x the symbol count of word-level BPE through the same fold). OUT
-#: two flat entries, cost classes still measured: feature_decile_stats
-#: (0.55 s flat since r01; the exact-quantile window class stays via
-#: curriculum_difficulty_buckets' sweep row + plan pins) and
-#: dedup_title_edit1 (0.66 s flat; dedup_jaccard_prefix keeps the
-#: string-pair-dedup class). The other r11 queries are tier 2 with
-#: sweep rows or documented cost classes (SCALING.md round-11): the
-#: URL family is scan-local column programs (url_canonicalize sweep
-#: row), multimodal_exif_stats is the benched pixel-stats dispatch
-#: floor, streaming_url_gate is a strict subset of the benched langid
-#: gate shape, streaming_replay_idempotent_sink is IO-bound setup.
-#: r14 rotation (r13 verdict item #1 — the artifact outgrew the
-#: driver's 2000-byte stdout window: r13's 65-entry line truncated,
-#: losing q1/q5/q18 and leaving parsed=null). ELEVEN flat entries
-#: rotate OUT, each with its cost class still measured and its plan
-#: shape pinned in tests/test_plan_quality.py:
-#: multimodal_compressed_pixel_stats (0.45 s — scene_cuts + the phash
-#: entries keep the JPEG-decode dispatch floor), warc_file_source
-#: (0.57 s — warc_cdx_member_index + streaming_warc_member_source keep
-#: the WARC walk, member-compressed variant included),
-#: join_asof_nearest left IN (the one as-of representative);
-#: join_interval_lookup (0.96 s — join_band_time keeps the inequality
-#: class), text_pii_scrub (0.74 s flat regex scan — the langid gate +
-#: html_extract keep scan-local text programs),
-#: multimodal_flac_metadata (0.80 s — mp3_metadata keeps the audio
-#: metadata walk, audio_fingerprint_dedup the audio compute class),
-#: decontaminate_ngrams (0.93 s — decontaminate_semantic keeps the
-#: decontamination class), multimodal_avi_frames (0.93 s — the two
-#: mp4 walks keep the container class), robots_txt_gate (0.94 s —
-#: corpus_funnel_report and sitemap_discovery both compose the same
-#: robots verdict fold), text_pmi_collocations (1.09 s —
-#: heavy_hitter_tokens + text_bigram_novelty keep the pair-count
-#: shuffle class), streaming_search_score and streaming_phash_admission
-#: (1.24/1.26 s — streaming keeps FIVE entries: tumbling_agg,
-#: interval_join, near_dup_probe, upsert_apply, outlier_flags,
-#: warc_member_source; the batch phash twins keep the phash class).
-#: Every rotated entry can rotate back in a later round.
-#: r14 rotation, second pass: the sf0.001 smoke line measured 1985 B —
-#: 15 B of margin, which sf0.1's longer times (17.83 vs 0.59) would
-#: blow — so TWO more flat entries rotate OUT: join_asof_nearest
-#: (0.68 s flat since r02; the as-of PLAN stays pinned in
-#: test_plan_quality and join_asof is in the r14 correctness window)
-#: and streaming_outlier_flags (1.33 s; streaming keeps five entries —
-#: tumbling_agg, interval_join, near_dup_probe, upsert_apply,
-#: warc_member_source — and the outlier scoring class stays measured
-#: batch-side via sessionize/window shapes). ~70 B regained.
+#: Which entries rotated in or out, and where each rotated-out entry's cost
+#: class is still measured: SCALING.md, "bench.py HEADLINE rotation history".
 HEADLINE = [
     "q1_pricing_summary",
     "q5_nation_revenue",

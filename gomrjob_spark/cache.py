@@ -38,7 +38,14 @@ _tracked: list[DataFrame] = []
 def scoped_persist(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
-    """``df.persist(level)``, registered for later :func:`release_scoped`."""
+    """``df.persist(level)``, registered for later :func:`release_scoped`.
+
+    Under adaptive execution every read of a persisted frame in one plan
+    is its own table-cache query stage, and so its own Spark job: the
+    first fills the cache, each later one scans the filled blocks (a few
+    ms of tasks, but a job's scheduling all the same). AQE reuses
+    repeated exchanges within a plan, not cache stages, so a frame read
+    k times by one plan and by no other is cheaper left unpersisted."""
     df = df.persist(level)
     with _lock:
         _tracked.append(df)

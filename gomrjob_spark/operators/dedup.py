@@ -21,7 +21,7 @@ training-data pipeline runs first):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from gomrjob_spark.cache import iterate, scoped_persist
@@ -83,60 +83,68 @@ def _pair_intersections(
     the per-doc kept-shingle sizes (id, n_sh) from a (id, shingle)
     stream whose shingles are distinct per doc.
 
-    CAPPED mode (r15): ONE hash exchange of the shingle stream groups
-    each kept shingle's member ids; candidate pairs then explode
+    CAPPED mode: ONE hash exchange of the shingle stream. A
+    ``count(*) over (partition by shingle)`` on that exchange drops the
+    stop shingles (frequency > cap), and the ``collect_list`` grouping
+    reads the same partitioning, so it adds no exchange. The window
+    drops a stop shingle's rows before ``collect_list`` buffers them:
+    the window's row buffer spills to disk past its in-memory
+    threshold, so a 1e9-doc stop shingle costs one long, spilling task,
+    never the OOM the cap exists to kill, and every collected group
+    holds <= cap ids (cap^2/2 pair structs per row, bounded). Both keys
+    lead with ``xxhash64(shingle)``, so the sort under the window
+    compares 8-byte prefixes, not strings (the shingle stays in the
+    key: a hash collision merges nothing). Candidate pairs then explode
     row-locally from the sorted id array (i < j, so id_a < id_b by
-    construction) instead of a second+third exchange feeding a
-    shingle-keyed self-join — same pair multiset, one fewer data-sized
-    shuffle, no join. The stop-shingle frequency pass stays a separate
-    pre-filter (NOT folded into the group agg): a collect_list buffer
-    materializes the whole group before any size filter could drop it,
-    so a 1e9-doc stop shingle would rebuild the exact OOM the cap
-    exists to kill; after the anti-join every group is <= cap ids
-    (cap^2/2 pair structs per row, bounded). The grouped frame is the
-    only persisted intermediate — the raw shingle stream now has ONE
-    consumer per pass, so the r14 multi-consumer cache-fill race on it
-    is gone.
+    construction) instead of feeding a shingle-keyed self-join.
+
+    Nothing is persisted: one aggregate yields the pairs and the sizes
+    (see ``combos``), and adaptive execution runs the exchange both read
+    once. A persisted frame read twice by one plan would run one
+    table-cache stage, and so one Spark job, per read. The price is that
+    the sizes re-aggregate that exchange's pair rows too: at the 64x
+    probe the stage costs 15-20% more executor CPU than persisted
+    intermediates did, for 13 fewer Spark jobs a call at 1000 docs
+    (SCALING.md, "Fewer Spark jobs per crawl round").
 
     UNCAPPED mode keeps the r13 equi-join shape: with no frequency
     bound, one hot shingle's id group (and its f^2/2 combination
     structs) must not land in a single row/task."""
     if max_shingle_freq is not None:
-        sh = scoped_persist(sh)
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-        kept = sh.join(
-            F.broadcast(freq.filter(F.col("_f") > max_shingle_freq)),
-            "shingle",
-            "left_anti",
-        )
-        grp = scoped_persist(
-            kept.groupBy("shingle")
+        freq = F.count(F.lit(1)).over(Window.partitionBy("_h", "shingle"))
+        grp = (
+            sh.withColumn("_h", F.xxhash64("shingle"))
+            .select(id_col, "_h", "shingle", freq.alias("_f"))
+            .filter(F.col("_f") <= max_shingle_freq)
+            .groupBy("_h", "shingle")
             .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
             .select("_ids")
         )
-        # sizes is persisted because jaccard/containment reference it
-        # TWICE (the id_a and id_b sides): unpersisted, AQE materializes
-        # both subtrees as CONCURRENT query stages before either fills
-        # grp's cache, so each re-ran kept -> sh -> the full tokenize+
-        # shingle scan (r15 stage profile: the heavy shingle stage
-        # appeared ~5x per query, ~77 of 106 executor-seconds). A
-        # doc-count-sized (id, n_sh) cache breaks both duplicate chains.
-        sizes = scoped_persist(
-            grp.select(F.explode("_ids").alias(id_col))
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_sh"))
-        )
+        # every (x, y) with x <= y of a group: the diagonal (x, x) counts
+        # x's kept shingles, the rest the pairs' shared ones, so one
+        # aggregate serves both. ``_diag`` is an aggregate output, so
+        # the two filters below stay above the aggregate (a filter on a
+        # grouping key would be pushed under it into each branch) and
+        # both read one exchange.
         combos = F.expr(
             "flatten(transform(_ids, (x, i) -> "
-            "transform(slice(_ids, i + 2, size(_ids) - i - 1), "
+            "transform(slice(_ids, i + 1, size(_ids) - i), "
             "y -> struct(x AS id_a, y AS id_b))))"
         )
-        inter = (
-            grp.filter(F.size("_ids") >= 2)
-            .select(F.explode(combos).alias("_p"))
-            .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
+        counts = (
+            grp.select(F.explode(combos).alias("_p"))
+            .select("_p.id_a", "_p.id_b")
             .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
+            .agg(
+                F.count(F.lit(1)).alias("_n"),
+                F.max(F.col("id_a") == F.col("id_b")).alias("_diag"),
+            )
+        )
+        sizes = counts.filter("_diag").select(
+            F.col("id_a").alias(id_col), F.col("_n").alias("n_sh")
+        )
+        inter = counts.filter(~F.col("_diag")).select(
+            "id_a", "id_b", F.col("_n").alias("n_common")
         )
         return inter, sizes
     sh = scoped_persist(sh)
@@ -150,6 +158,25 @@ def _pair_intersections(
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return inter, sizes
+
+
+def _pair_sizes(inter: DataFrame, sizes: DataFrame, id_col: str) -> DataFrame:
+    """``inter`` with both endpoints' sizes, (id_a, id_b, n_common, n_a,
+    n_b). Both joins read ``sizes`` unrenamed, so their build sides are
+    one plan and adaptive execution broadcasts (or shuffles) it once; a
+    rename below either join would make two plans, and two broadcasts."""
+    sa, sb = sizes.alias("_sa"), sizes.alias("_sb")
+    return (
+        inter.join(sa, F.col("id_a") == F.col(f"_sa.{id_col}"))
+        .join(sb, F.col("id_b") == F.col(f"_sb.{id_col}"))
+        .select(
+            "id_a",
+            "id_b",
+            "n_common",
+            F.col("_sa.n_sh").alias("n_a"),
+            F.col("_sb.n_sh").alias("n_b"),
+        )
+    )
 
 
 def jaccard_pairs(
@@ -170,11 +197,8 @@ def jaccard_pairs(
     inter, sizes = _pair_intersections(
         word_shingles(df, n, text_col, id_col), id_col, max_shingle_freq
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _pair_sizes(inter, sizes, id_col)
         .withColumn(
             "jaccard",
             F.col("n_common").cast("double")
@@ -208,29 +232,32 @@ def containment_pairs(
     (:func:`_pair_intersections` — each UNDIRECTED intersection
     computed once, never all-pairs, same stop-shingle skew dial); both
     directions then derive row-locally from the one (n_common, n_a,
-    n_b) row — no second join, no second shuffle. Exact bigint counts
-    + one IEEE division per direction -> cross-engine hash-stable."""
+    n_b) row, one explode of a two-struct array — no second join, no
+    second shuffle, and no union whose two branches would each run the
+    pair plan above the shared exchanges. Exact bigint counts + one IEEE
+    division per direction -> cross-engine hash-stable."""
     inter, sizes = _pair_intersections(
         word_shingles(df, n, text_col, id_col), id_col, max_shingle_freq
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    joined = inter.join(sa, "id_a").join(sb, "id_b")
-    fwd = joined.select(
-        F.col("id_a").alias("id_src"),
-        F.col("id_b").alias("id_dst"),
-        (F.col("n_common").cast("double") / F.col("n_a").cast("double")).alias(
-            "containment"
+    common = F.col("n_common").cast("double")
+    both = F.array(
+        F.struct(
+            F.col("id_a").alias("id_src"),
+            F.col("id_b").alias("id_dst"),
+            (common / F.col("n_a").cast("double")).alias("containment"),
+        ),
+        F.struct(
+            F.col("id_b").alias("id_src"),
+            F.col("id_a").alias("id_dst"),
+            (common / F.col("n_b").cast("double")).alias("containment"),
         ),
     )
-    bwd = joined.select(
-        F.col("id_b").alias("id_src"),
-        F.col("id_a").alias("id_dst"),
-        (F.col("n_common").cast("double") / F.col("n_b").cast("double")).alias(
-            "containment"
-        ),
+    return (
+        _pair_sizes(inter, sizes, id_col)
+        .select(F.explode(both).alias("_c"))
+        .select("_c.*")
+        .filter(F.col("containment") >= threshold)
     )
-    return fwd.unionByName(bwd).filter(F.col("containment") >= threshold)
 
 
 def shingle_array(text_col: Column | str, n: int = 3) -> Column:
@@ -451,11 +478,8 @@ def _jaccard_verify(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _pair_sizes(inter, sizes, id_col)
         .withColumn(
             "jaccard",
             F.col("n_common").cast("double")
@@ -1142,36 +1166,40 @@ def embedding_dup_pairs_rp(
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round (Kiveris et al., "Connected Components in
     MapReduce and Beyond"): for every node u, connect each strictly
-    larger neighbor to m = min(N(u) ∪ {u}). One shuffle on node id."""
+    larger neighbor to m = min(N(u) ∪ {u}). One shuffle on node id: the
+    minimum is a window over u's edges, not an aggregate joined back.
+    The output may repeat edges; the small star that reads it ignores
+    repeats."""
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    mins = sym.groupBy("src").agg(F.least(F.min("dst"), F.col("src")).alias("_m"))
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
-        sym.join(mins, "src")
+        sym.select("src", "dst", m.alias("_m"))
         .filter(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Small-star round: orient every edge large→small, then for each
     node u link all of its smaller neighbors (and u itself) to the
-    minimum one. One shuffle on the larger endpoint."""
+    minimum one. One shuffle on the larger endpoint (a window, as in
+    :func:`_large_star`). The output may repeat edges; the caller
+    de-duplicates it."""
     directed = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
-    mins = directed.groupBy("src").agg(F.min("dst").alias("_m"))
-    relinked = directed.join(mins, "src").select(
-        F.col("dst").alias("src"), F.col("_m").alias("dst")
+    m = F.col("_m")
+    linked = F.array(
+        F.struct(F.col("dst").alias("src"), m.alias("dst")),  # neighbor -> min
+        F.struct(F.col("src").alias("src"), m.alias("dst")),  # u -> min
     )
-    centers = mins.select("src", F.col("_m").alias("dst"))
     return (
-        relinked.unionByName(centers)
+        directed.withColumn("_m", F.min("dst").over(Window.partitionBy("src")))
+        .select(F.explode(linked).alias("_e"))
+        .select("_e.src", "_e.dst")
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
@@ -1233,12 +1261,19 @@ def connected_components(
     point the edge set is a forest of stars centered at each
     component's minimum id.
 
-    Distribution: each round is two grouped aggregates + two joins, all
-    shuffling on node id; :func:`~gomrjob_spark.cache.iterate` runs the
-    rounds and checkpoints each round's edge set, and the driver reads
-    one (count, hash-sum) fingerprint per edge set, the changed-edge
-    check. The raw edges enter without a ``distinct()``: the star rounds
-    de-duplicate their own output and the driver finish ignores repeats.
+    Distribution: each round is two window minimums, one per star, each
+    shuffling on node id, and one ``distinct()`` that shares its
+    exchange with the round's ``spread``; adaptive execution runs each
+    exchange as one Spark job. :func:`~gomrjob_spark.cache.iterate`
+    runs the rounds and checkpoints each round's edge set, and one noop
+    write per edge set stores the checkpoint and observes its (count,
+    hash-sum) fingerprint, the changed-edge check: 4 Spark jobs a
+    round. The raw edges enter without a ``distinct()`` or a self-loop
+    filter: the star rounds drop both from their own output and the
+    driver finish ignores both. (A filter on the ids would also be
+    pushed into the caller's plan, e.g. under the pair aggregate of
+    :func:`_pair_intersections`, and split the exchange its two
+    readers share.)
 
     Driver finish: once a fingerprint (the one before the first round
     included) counts ``n`` edges with ``n * 16`` bytes <=
@@ -1249,9 +1284,7 @@ def connected_components(
     above the bound raises ``RuntimeError``. Pass ``stats={}`` to
     receive ``{"rounds": r}`` back: the number of distributed rounds
     run, 0 when the driver finishes at once."""
-    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).filter(
-        F.col("src") != F.col("dst")
-    )
+    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     # Spark's own parse of the conf ('10MB', '-1', ...); an edge costs 16
     # bytes (two 8-byte ids), and <= 0 disables the driver finish
     bound = e0.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -1259,36 +1292,47 @@ def connected_components(
     sigs: list[tuple] = []  # (count, hash-sum) of every edge set, in order
 
     def done(e: DataFrame) -> bool:
-        """One action per edge set: the fingerprint (count, wrapping sum
-        of xxhash64(src,dst)) reads the checkpointed frame and so stores
-        it. Two consecutive edge sets with equal fingerprints are equal
-        up to a 64-bit hash-sum collision — vanishingly unlikely and
+        """One Spark job per edge set: a noop write reads the
+        checkpointed frame, and so stores it, while an ``Observation``
+        takes the fingerprint (count, wrapping sum of xxhash64(src,dst))
+        off the same job; a global aggregate would cost two. Two
+        consecutive edge sets with equal fingerprints are equal up to a
+        64-bit hash-sum collision — vanishingly unlikely and
         non-adversarial here; max_iter still bounds the loop."""
-        row = e.agg(
+        obs = Observation()
+        e.observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             # decimal(38,0) sum: exact and overflow-free under ANSI mode
             # (a bigint sum of 64-bit hashes would overflow)
             F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("fp"),
-        ).first()
-        sigs.append((row["n"], row["fp"]))
+        ).write.format("noop").mode("overwrite").save()
+        sigs.append((obs.get["n"], obs.get["fp"]))
         return sigs[-1][0] <= max_driver_edges or fixpoint()
 
     def fixpoint() -> bool:
         return len(sigs) > 1 and sigs[-1] == sigs[-2]
 
-    # ``spread`` before each checkpoint: AQE coalesces a round's
-    # distinct() output by BYTES (a few MB of edges -> 2-3 partitions)
-    # and the checkpoint freezes that layout, so the next round's map
-    # side ran 3-wide on a 32-core box. The width follows the previous
-    # edge count, so a few hundred edges run 1-wide instead of paying a
-    # 32-way exchange plus 32 near-empty tasks per round; a conf-gated
-    # no-op on a real cluster.
-    e = iterate(
-        lambda e, _: spread(_small_star(_large_star(e)), rows_hint=sigs[-1][0]),
-        spread(e0),
-        max_rounds=max_iter,
-        until=done,
-    )
+    def star_round(e: DataFrame, r: int) -> DataFrame:
+        """One large-star + small-star round. ``spread`` keeps the
+        layout wide: AQE coalesces a round's output by BYTES (a few MB
+        of edges -> 2-3 partitions) and the checkpoint freezes that
+        layout, so the next round's map side ran 3-wide on a 32-core
+        box. The width follows the input's edge count, read from its
+        fingerprint, so a few hundred edges run 1-wide instead of
+        paying a 32-way exchange plus 32 near-empty tasks per round.
+        The output's spread hash-partitions on the edge, so the
+        ``distinct()`` after it reuses that exchange; round 1 also
+        spreads its input, the caller's edges, whose layout is the
+        caller's. A graph the driver labels at once pays no spread;
+        a conf-gated no-op on a real cluster."""
+        n = sigs[-1][0]
+        if r == 1:
+            e = spread(e, rows_hint=n)
+        out = _small_star(_large_star(e))
+        return spread(out, rows_hint=n, cols=("src", "dst")).distinct()
+
+    e = iterate(star_round, e0, max_rounds=max_iter, until=done)
     rounds = len(sigs) - 1
     if fixpoint():
         star_map = e.groupBy("src").agg(F.min("dst").alias("_component"))

@@ -30,17 +30,17 @@ _sink_counter = itertools.count()
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-replay stream of the events table, with the same ``ts``
     handling as the batch catalog (gomrjob_spark.catalog.load_table):
-    the file source needs an explicit schema, so take it from a static
-    read of the same file — parquet TIMESTAMP(MICROS) arrives as
-    TIMESTAMP/TIMESTAMP_NTZ and passes through; TIMESTAMP(NANOS) (which
-    Spark can only read as int64 under nanosAsLong) arrives as bigint
-    and is truncated to microseconds, matching DuckDB's scan behavior."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    the file source needs an explicit schema, so take the catalog's
+    (memoized) schema of the same file — parquet TIMESTAMP(MICROS)
+    arrives as TIMESTAMP/TIMESTAMP_NTZ and passes through;
+    TIMESTAMP(NANOS) (which Spark can only read as int64 under
+    nanosAsLong) arrives as bigint and is truncated to microseconds,
+    matching DuckDB's scan behavior."""
     # the file source requires a directory: point at sf_dir and glob-filter
-    # down to the events table
-    from gomrjob_spark.catalog import table_path
+    # down to the events table; table_schema also sets nanosAsLong
+    from gomrjob_spark.catalog import table_schema
 
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = table_schema(spark, sf_dir, "events")
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -273,11 +273,11 @@ def run_to_memory(stream_df: DataFrame, mode: str = "complete", name: str | None
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-replay stream of the documents table (schema from a static
-    read, same convention as read_events_stream)."""
-    from gomrjob_spark.catalog import table_path
+    """File-replay stream of the documents table (schema from the
+    catalog, same convention as read_events_stream)."""
+    from gomrjob_spark.catalog import table_schema
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = table_schema(spark, sf_dir, "documents")
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -286,11 +286,11 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-replay stream of the embeddings table (schema from a static
-    read, same convention as read_events_stream)."""
-    from gomrjob_spark.catalog import table_path
+    """File-replay stream of the embeddings table (schema from the
+    catalog, same convention as read_events_stream)."""
+    from gomrjob_spark.catalog import table_schema
 
-    schema = spark.read.parquet(table_path(sf_dir, "embeddings")).schema
+    schema = table_schema(spark, sf_dir, "embeddings")
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet")

@@ -429,11 +429,23 @@ def test_connected_components_no_edges(spark, broadcast_threshold):
     assert got == {"driver": (want, 0), "distributed": (want, 1)}
 
 
+def test_connected_components_self_loops(spark, broadcast_threshold):
+    """Self-loop edges enter the loop unfiltered and change no label on
+    either path."""
+    edges = spark.createDataFrame([(1, 2), (3, 3), (2, 2)], "id_a bigint, id_b bigint")
+    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id bigint")
+    got = _cc_both_paths(broadcast_threshold, edges, nodes)
+    want = {1: 1, 2: 1, 3: 3, 4: 4}
+    assert got["driver"] == (want, 0)
+    assert got["distributed"][0] == want
+
+
 def test_connected_components_job_budget(spark):
     """Spark-job budget of one small-graph call (its edges fit the
     broadcast threshold, so the driver labels them after one
-    fingerprint): 7 jobs measured; the star-contraction loop it
-    replaces ran 38."""
+    fingerprint): 4 jobs measured, the fingerprint's noop write, the
+    edge collect and two for the caller's collect; the star-contraction
+    loop the driver finish replaces ran 38."""
     sc = spark.sparkContext
     group = "test_connected_components_job_budget"
     sc.setJobGroup(group, group)
@@ -442,7 +454,28 @@ def test_connected_components_job_budget(spark):
     finally:
         sc._jsc.clearJobGroup()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 7, f"{n_jobs} Spark jobs"
+    assert n_jobs <= 4, f"{n_jobs} Spark jobs"
+
+
+def test_cluster_survivors_job_budget(spark, sf_dir):
+    """Spark-job budget of one ``dedup_cluster_survivors`` call at the
+    smoke scale, construction and collect together: 10 jobs measured
+    with the table schema memoized, 11 when this call infers it. The
+    pair stage is 4 (the spread and shingle exchanges, the pair
+    aggregate, the sizes broadcast), connected components 2 (the
+    fingerprint's noop write and the edge collect), the caller's sorted
+    collect 4."""
+    from gomrjob_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    group = "test_cluster_survivors_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES["dedup_cluster_survivors"](spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 14, f"{n_jobs} Spark jobs"
 
 
 def test_winnow_shared_passage_guarantee(spark):

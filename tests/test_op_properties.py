@@ -218,17 +218,77 @@ def _union_find_min_labels(edges):
 
 @given(
     st.lists(
-        st.tuples(st.integers(-50, 50), st.integers(-50, 50)).filter(lambda e: e[0] != e[1]),
+        st.tuples(st.integers(-50, 50), st.integers(-50, 50)),
         max_size=80,
     )
 )
 @settings(max_examples=300, deadline=None)
 def test_driver_min_labels_match_union_find(edges):
     """The numpy hooking + pointer-jumping finish labels every endpoint
-    with its component minimum, exactly as a sequential union-find."""
+    with its component minimum, exactly as a sequential union-find;
+    self-loops included, which connected_components passes through."""
     import numpy as np
 
     src = np.array([a for a, _ in edges], dtype=np.int64)
     dst = np.array([b for _, b in edges], dtype=np.int64)
     ids, labels = _driver_min_labels(src, dst)
     assert dict(zip(ids.tolist(), labels.tolist())) == _union_find_min_labels(edges)
+
+
+def _capped_pair_reference(docs, n, cap):
+    """Plain-Python capped pair stage: per-doc kept shingles (every
+    shingle in more than ``cap`` docs dropped) and the intersection
+    count of every pair sharing one, {(id_a, id_b): n_common}."""
+    from collections import Counter
+
+    shingles = {}
+    for i, text in enumerate(docs):
+        toks = text.split()
+        shingles[i] = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+    freq = Counter(s for sh in shingles.values() for s in sh)
+    kept = {i: {s for s in sh if freq[s] <= cap} for i, sh in shingles.items()}
+    inter = {}
+    for a in kept:
+        for b in kept:
+            if a < b and kept[a] & kept[b]:
+                inter[(a, b)] = len(kept[a] & kept[b])
+    return kept, inter
+
+
+@given(
+    st.lists(
+        st.lists(st.sampled_from(["ab", "cd", "ef", "gh"]), min_size=1, max_size=9).map(" ".join),
+        min_size=2,
+        max_size=9,
+    ),
+    st.sampled_from([2, 3]),
+    st.integers(min_value=1, max_value=4),
+    st.sampled_from([0.25, 0.5, 0.75, 1.0]),
+)
+@settings(max_examples=10, deadline=None)
+def test_capped_pairs_match_reference(spark, docs, n, cap, threshold):
+    """Capped ``jaccard_pairs`` and ``containment_pairs`` against a
+    plain-Python reference, with a cap drawn small enough to bind: the
+    four-word vocabulary puts most shingles in more docs than the cap.
+    No registered scale reaches the registry's cap (sf0.1's most
+    frequent shingle is in 25 docs), so the oracle gate alone cannot
+    catch a wrong stop-shingle filter."""
+    from gomrjob_spark.operators.dedup import containment_pairs, jaccard_pairs
+
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id bigint, text string")
+    kept, inter = _capped_pair_reference(docs, n, cap)
+    want_j = {}
+    want_c = {}
+    for (a, b), common in inter.items():
+        j = float(common) / float(len(kept[a]) + len(kept[b]) - common)
+        if j >= threshold:
+            want_j[(a, b)] = j
+        for src, dst in ((a, b), (b, a)):
+            c = float(common) / float(len(kept[src]))
+            if c >= threshold:
+                want_c[(src, dst)] = c
+    got_j = jaccard_pairs(df, n=n, threshold=threshold, max_shingle_freq=cap).collect()
+    got_c = containment_pairs(df, n=n, threshold=threshold, max_shingle_freq=cap).collect()
+    assert {(r.id_a, r.id_b): r.jaccard for r in got_j} == want_j
+    assert {(r.id_src, r.id_dst): r.containment for r in got_c} == want_c
+    assert len(got_j) == len(want_j) and len(got_c) == len(want_c)

@@ -465,14 +465,16 @@ def test_simhash_pair_dedup_is_shuffle_free(spark, sf_dir):
 
 def test_operator_scoped_caches_released_between_queries(spark, sf_dir):
     """Back-to-back persisted-operator queries + release_scoped leave no
-    lingering cached relations (the r03 bench-drift leak, closed)."""
+    lingering cached relations (the r03 bench-drift leak, closed). Both
+    queries persist operator-scoped frames (the capped shingle-pair
+    stage of dedup_ngram_jaccard persists none, so it cannot serve)."""
     from gomrjob_spark.cache import release_scoped
 
     # other test modules cache fixture tables in this shared session;
     # establish a clean baseline so the assertion measures OUR lifecycle
     release_scoped()
     spark.catalog.clearCache()
-    for name in ("dedup_minhash_md5", "dedup_ngram_jaccard"):
+    for name in ("dedup_minhash_md5", "dedup_jaccard_prefix"):
         plans.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         released = release_scoped()
         assert released >= 1, name

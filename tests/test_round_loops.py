@@ -91,7 +91,7 @@ def _fine_kmeans(spark, rounds):
 # and then runs one job more in a call (seen for wordpiece_train), so
 # the check allows one job of slack.
 _LOOPS = {
-    "connected_components": (_cc, 9, True),
+    "connected_components": (_cc, 4, True),
     "pagerank_fixedpoint": (_pagerank, 4, False),
     "quality_perceptron_train": (_perceptron, 3, False),
     "bpe_train_merges": (_bpe, 2, True),
