@@ -98,14 +98,22 @@ def _pair_intersections(
     row-locally from the sorted id array (i < j, so id_a < id_b by
     construction) instead of feeding a shingle-keyed self-join.
 
-    Nothing is persisted: one aggregate yields the pairs and the sizes
-    (see ``combos``), and adaptive execution runs the exchange both read
-    once. A persisted frame read twice by one plan would run one
-    table-cache stage, and so one Spark job, per read. The price is that
-    the sizes re-aggregate that exchange's pair rows too: at the 64x
-    probe the stage costs 15-20% more executor CPU than persisted
-    intermediates did, for 13 fewer Spark jobs a call at 1000 docs
-    (SCALING.md, "Fewer Spark jobs per crawl round").
+    The grouped frame is read twice, by the pair aggregate and by the
+    sizes (a map-side-combined count on id), so it passes one lazy
+    ``localCheckpoint``: building it runs the shingle exchange, and the
+    first task to read a grouped partition stores it for the other
+    reader. Without it, each reader would sort, window and collect the
+    shingle exchange again. A persisted frame would do the same work
+    once but cost one Spark job per read (adaptive execution makes each
+    read its own table-cache stage and reuses no exchange above one, so
+    the sizes, read by both sides of their join, would be aggregated
+    and broadcast twice). Taking the sizes off the pair aggregate
+    instead, as a diagonal (x, x) row per kept id, re-aggregated every
+    pair row once more for them: 15-20% more executor CPU at the 64x
+    probe (SCALING.md, "Fewer Spark jobs per crawl round"). Like every
+    checkpoint, the grouped frame cannot recompute, so it stays out of
+    ``release_scoped``; Spark's context cleaner frees it once no frame
+    refers to it.
 
     UNCAPPED mode keeps the r13 equi-join shape: with no frequency
     bound, one hot shingle's id group (and its f^2/2 combination
@@ -119,32 +127,24 @@ def _pair_intersections(
             .groupBy("_h", "shingle")
             .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
             .select("_ids")
+            .localCheckpoint(eager=False)
         )
-        # every (x, y) with x <= y of a group: the diagonal (x, x) counts
-        # x's kept shingles, the rest the pairs' shared ones, so one
-        # aggregate serves both. ``_diag`` is an aggregate output, so
-        # the two filters below stay above the aggregate (a filter on a
-        # grouping key would be pushed under it into each branch) and
-        # both read one exchange.
+        sizes = (
+            grp.select(F.explode("_ids").alias(id_col))
+            .groupBy(id_col)
+            .agg(F.count(F.lit(1)).alias("n_sh"))
+        )
         combos = F.expr(
             "flatten(transform(_ids, (x, i) -> "
-            "transform(slice(_ids, i + 1, size(_ids) - i), "
+            "transform(slice(_ids, i + 2, size(_ids) - i - 1), "
             "y -> struct(x AS id_a, y AS id_b))))"
         )
-        counts = (
-            grp.select(F.explode(combos).alias("_p"))
-            .select("_p.id_a", "_p.id_b")
+        inter = (
+            grp.filter(F.size("_ids") >= 2)
+            .select(F.explode(combos).alias("_p"))
+            .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
             .groupBy("id_a", "id_b")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.max(F.col("id_a") == F.col("id_b")).alias("_diag"),
-            )
-        )
-        sizes = counts.filter("_diag").select(
-            F.col("id_a").alias(id_col), F.col("_n").alias("n_sh")
-        )
-        inter = counts.filter(~F.col("_diag")).select(
-            "id_a", "id_b", F.col("_n").alias("n_common")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
         return inter, sizes
     sh = scoped_persist(sh)
@@ -1166,40 +1166,36 @@ def embedding_dup_pairs_rp(
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round (Kiveris et al., "Connected Components in
     MapReduce and Beyond"): for every node u, connect each strictly
-    larger neighbor to m = min(N(u) ∪ {u}). One shuffle on node id: the
-    minimum is a window over u's edges, not an aggregate joined back.
-    The output may repeat edges; the small star that reads it ignores
-    repeats."""
+    larger neighbor to m = min(N(u) ∪ {u}). One shuffle on node id."""
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
+    mins = sym.groupBy("src").agg(F.least(F.min("dst"), F.col("src")).alias("_m"))
     return (
-        sym.select("src", "dst", m.alias("_m"))
+        sym.join(mins, "src")
         .filter(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Small-star round: orient every edge large→small, then for each
     node u link all of its smaller neighbors (and u itself) to the
-    minimum one. One shuffle on the larger endpoint (a window, as in
-    :func:`_large_star`). The output may repeat edges; the caller
-    de-duplicates it."""
+    minimum one. One shuffle on the larger endpoint."""
     directed = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
-    m = F.col("_m")
-    linked = F.array(
-        F.struct(F.col("dst").alias("src"), m.alias("dst")),  # neighbor -> min
-        F.struct(F.col("src").alias("src"), m.alias("dst")),  # u -> min
+    mins = directed.groupBy("src").agg(F.min("dst").alias("_m"))
+    relinked = directed.join(mins, "src").select(
+        F.col("dst").alias("src"), F.col("_m").alias("dst")
     )
+    centers = mins.select("src", F.col("_m").alias("dst"))
     return (
-        directed.withColumn("_m", F.min("dst").over(Window.partitionBy("src")))
-        .select(F.explode(linked).alias("_e"))
-        .select("_e.src", "_e.dst")
+        relinked.unionByName(centers)
         .filter(F.col("src") != F.col("dst"))
+        .distinct()
     )
 
 
@@ -1261,19 +1257,13 @@ def connected_components(
     point the edge set is a forest of stars centered at each
     component's minimum id.
 
-    Distribution: each round is two window minimums, one per star, each
-    shuffling on node id, and one ``distinct()`` that shares its
-    exchange with the round's ``spread``; adaptive execution runs each
-    exchange as one Spark job. :func:`~gomrjob_spark.cache.iterate`
-    runs the rounds and checkpoints each round's edge set, and one noop
-    write per edge set stores the checkpoint and observes its (count,
-    hash-sum) fingerprint, the changed-edge check: 4 Spark jobs a
-    round. The raw edges enter without a ``distinct()`` or a self-loop
-    filter: the star rounds drop both from their own output and the
-    driver finish ignores both. (A filter on the ids would also be
-    pushed into the caller's plan, e.g. under the pair aggregate of
-    :func:`_pair_intersections`, and split the exchange its two
-    readers share.)
+    Distribution: each round is two grouped aggregates + two joins, all
+    shuffling on node id; :func:`~gomrjob_spark.cache.iterate` runs the
+    rounds and checkpoints each round's edge set, and one noop write per
+    edge set stores the checkpoint and observes its (count, hash-sum)
+    fingerprint, the changed-edge check. The raw edges enter without a
+    ``distinct()``: the star rounds de-duplicate their own output and
+    the driver finish ignores repeats.
 
     Driver finish: once a fingerprint (the one before the first round
     included) counts ``n`` edges with ``n * 16`` bytes <=
@@ -1284,7 +1274,9 @@ def connected_components(
     above the bound raises ``RuntimeError``. Pass ``stats={}`` to
     receive ``{"rounds": r}`` back: the number of distributed rounds
     run, 0 when the driver finishes at once."""
-    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).filter(
+        F.col("src") != F.col("dst")
+    )
     # Spark's own parse of the conf ('10MB', '-1', ...); an edge costs 16
     # bytes (two 8-byte ids), and <= 0 disables the driver finish
     bound = e0.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -1315,22 +1307,19 @@ def connected_components(
 
     def star_round(e: DataFrame, r: int) -> DataFrame:
         """One large-star + small-star round. ``spread`` keeps the
-        layout wide: AQE coalesces a round's output by BYTES (a few MB
-        of edges -> 2-3 partitions) and the checkpoint freezes that
-        layout, so the next round's map side ran 3-wide on a 32-core
-        box. The width follows the input's edge count, read from its
-        fingerprint, so a few hundred edges run 1-wide instead of
+        layout wide: AQE coalesces a round's distinct() output by BYTES
+        (a few MB of edges -> 2-3 partitions) and the checkpoint freezes
+        that layout, so the next round's map side ran 3-wide on a
+        32-core box. The width follows the input's edge count, read from
+        its fingerprint, so a few hundred edges run 1-wide instead of
         paying a 32-way exchange plus 32 near-empty tasks per round.
-        The output's spread hash-partitions on the edge, so the
-        ``distinct()`` after it reuses that exchange; round 1 also
-        spreads its input, the caller's edges, whose layout is the
-        caller's. A graph the driver labels at once pays no spread;
-        a conf-gated no-op on a real cluster."""
+        Round 1 also spreads its input, the caller's edges, whose layout
+        is the caller's; a graph the driver labels at once pays no
+        spread. A conf-gated no-op on a real cluster."""
         n = sigs[-1][0]
         if r == 1:
             e = spread(e, rows_hint=n)
-        out = _small_star(_large_star(e))
-        return spread(out, rows_hint=n, cols=("src", "dst")).distinct()
+        return spread(_small_star(_large_star(e)), rows_hint=n)
 
     e = iterate(star_round, e0, max_rounds=max_iter, until=done)
     rounds = len(sigs) - 1

@@ -34,13 +34,7 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def spread(
-    df,
-    min_factor: int = 1,
-    rows_hint: int | None = None,
-    rows_per_task: int = 2048,
-    cols: tuple[str, ...] = (),
-):
+def spread(df, min_factor: int = 1, rows_hint: int | None = None, rows_per_task: int = 2048):
     """Repartition to ``spark.gomrjob.spread.partitions`` when that conf
     is set — the local-mode escape hatch for single-row-group test files
     that would otherwise serialize every CPU-heavy text expression into
@@ -54,10 +48,6 @@ def spread(
     few hundred rows stop paying a 32-wide exchange plus 32 tiny tasks
     per round (measured: the CC loop ran FASTER at 8 cores than 32 with
     an unconditional full-width spread).
-
-    ``cols`` hash-partitions on those columns instead of round-robin,
-    so an aggregate or ``distinct()`` on them right after needs no
-    exchange of its own: the spread and the grouping share one.
 
     Deliberately decided from driver-side strings (conf + master URL)
     rather than inspecting ``df.rdd``: touching ``.rdd`` during query
@@ -73,8 +63,9 @@ def spread(
         return df  # real cluster: scans already have >> cores splits
     if rows_hint is not None and target > 0:
         target = min(target, max(1, -(-int(rows_hint) // rows_per_task)))
+        return df.repartition(target * min_factor)
     if target > 0:
-        return df.repartition(target * min_factor, *cols)
+        return df.repartition(target * min_factor)
     return df
 
 

@@ -39,24 +39,39 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # exactly the priority rule the ledger prescribes: a query whose plan
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
+    # changed: the n-gram pair stage (capped: one shingle exchange, the
+    # grouped frame checkpointed; both sides of the sizes join read one
+    # plan; containment's two directions one explode), the MinHash
+    # verify's sizes join, and connected components' fingerprint (one
+    # noop write with an Observation) and first-round spread. Every
+    # oracle-checked consumer of jaccard_pairs, containment_pairs,
+    # _jaccard_verify and connected_components; dedup_minhash_lsh is
+    # rows-only. The catalog now passes each table's memoized schema,
+    # equal to the inferred one (tests/test_catalog.py), so no other
+    # query's plan changes
+    "dedup_cluster_survivors",
+    "split_cluster_aware",
+    "dedup_ngram_jaccard",
+    "dedup_ngram_containment",
+    "dedup_minhash_md5",
+    "dedup_paragraph_minhash_rollup",
+    "corpus_train_pipeline",
+    "entity_resolution_pipeline",
+    "dedup_best_quality_survivors",
     # changed: every round loop runs through cache.iterate (one lazy
     # checkpoint per round, dead rounds released), the BPE and
     # WordPiece trainers share one merge round, and connected
     # components skips its initial distinct(). Every oracle-checked
-    # consumer of the eight loops; knn_ivf, knn_ivf_kmeans and knn_pq
-    # use the Lloyd loops too but are rows-only
-    "corpus_train_pipeline",
-    "dedup_best_quality_survivors",
-    "dedup_cluster_survivors",
+    # consumer of the eight loops (the connected-components ones head
+    # the block above); knn_ivf, knn_ivf_kmeans and knn_pq use the
+    # Lloyd loops too but are rows-only
     "dedup_semantic_diversity",
-    "entity_resolution_pipeline",
     "graph_pagerank",
     "mixture_bpe_weights",
     "pack_bpe_batches",
     "pack_unigram_batches",
     "quality_perceptron_gate",
     "quality_perceptron_train",
-    "split_cluster_aware",
     "streaming_quality_gate",
     "streaming_semdedup_gate",
     "streaming_wordpiece_drift",
@@ -113,9 +128,6 @@ _VERIFY_FIRST = [
     "multimodal_phash_dedup",
     "multimodal_phash_near_pairs",
     "multimodal_audio_fingerprint_dedup",
-    # r15: capped shingle pair stage (grouped candidates + sizes persist)
-    "dedup_ngram_jaccard",
-    "dedup_ngram_containment",
     # r15: atomic near-dup store publish
     "streaming_near_dup_probe",
 ]

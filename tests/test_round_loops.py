@@ -91,7 +91,7 @@ def _fine_kmeans(spark, rounds):
 # and then runs one job more in a call (seen for wordpiece_train), so
 # the check allows one job of slack.
 _LOOPS = {
-    "connected_components": (_cc, 4, True),
+    "connected_components": (_cc, 8, True),
     "pagerank_fixedpoint": (_pagerank, 4, False),
     "quality_perceptron_train": (_perceptron, 3, False),
     "bpe_train_merges": (_bpe, 2, True),
@@ -131,3 +131,25 @@ def test_round_budget(spark, broadcast_threshold, loop):
     assert plan2 == plan1, f"plan grew from {plan1} to {plan2} lines"
     if acts:
         assert held2 <= held1, f"{held2} cached RDDs after one more round, {held1} before"
+
+
+def test_cluster_survivors_job_budget(spark, sf_dir):
+    """Spark-job budget of one ``dedup_cluster_survivors`` call at the
+    smoke scale, construction and collect together, against the file
+    scan (a cached documents frame would plan differently): 11 jobs
+    measured with the table schema memoized, 12 when this call infers
+    it. The pair stage is 5 (the spread and shingle exchanges, the pair
+    and sizes aggregates, the sizes broadcast), connected components 2
+    (the fingerprint's noop write and the edge collect), the caller's
+    sorted collect 4."""
+    from gomrjob_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    group = "test_cluster_survivors_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES["dedup_cluster_survivors"](spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 14, f"{n_jobs} Spark jobs"
