@@ -12,6 +12,7 @@ on the DataFrame path use ``DataFrame.observe`` instead (SURVEY.md §7
 from __future__ import annotations
 
 import logging
+import threading
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import SparkSession
@@ -51,24 +52,11 @@ class Counters:
         stages, read from Spark's status store — the engine-side metrics
         Hadoop's counter dump carried. Returns
         ``{executor_cpu_ns, executor_run_ms, n_stages}``."""
-        store = self._sc._jsc.sc().statusStore()
-        gw = self._sc._gateway
-        stages = store.stageList(
-            None,  # no status filter: all stages
-            False,
-            False,
-            gw.new_array(gw.jvm.double, 0),
-            gw.jvm.java.util.Collections.emptyList(),
-        )
-        cpu_ns = run_ms = 0
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            cpu_ns += s.executorCpuTime()
-            run_ms += s.executorRunTime()
+        _, stages = self._stage_list()
         return {
-            "executor_cpu_ns": int(cpu_ns),
-            "executor_run_ms": int(run_ms),
-            "n_stages": stages.size(),
+            "executor_cpu_ns": int(sum(s.executorCpuTime() for s in stages)),
+            "executor_run_ms": int(sum(s.executorRunTime() for s in stages)),
+            "n_stages": len(stages),
         }
 
     def compile_report(self) -> dict[str, float]:
@@ -104,7 +92,7 @@ class Counters:
         store = self._sc._jsc.sc().statusStore()
         gw = self._sc._gateway
         stages = store.stageList(
-            None,
+            None,  # no status filter: all stages
             False,
             False,
             gw.new_array(gw.jvm.double, 0),
@@ -330,8 +318,6 @@ class ProgressWatch:
     """
 
     def __init__(self, sc, fn, interval_s: float = 0.25):
-        import threading
-
         self._sc = sc
         self._fn = fn
         self._interval = interval_s
@@ -370,8 +356,6 @@ class ProgressWatch:
                 try:
                     self._fn(ev)
                 except Exception:
-                    import logging
-
                     logging.getLogger("gomrjob_spark.progress").exception(
                         "on_progress callback raised; continuing to poll"
                     )

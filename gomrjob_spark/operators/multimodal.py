@@ -9,9 +9,10 @@ North-star operator family (BASELINE.json). The convention:
 - metadata: a struct column (modality, n_bytes, content hash, magic) kept
   NEXT TO the payload, populated at ingest.
 
-Decode / feature-extract run as Arrow-batched ``mapInPandas`` — the only
-viable shape at 100 TB (payload bytes never route through the driver; each
-task decodes its own partition). Container headers (PNG/JPEG/GIF
+Decode / feature-extract run per row through ``pipeline.map_rows`` (one
+``mapInPandas`` over Arrow batches) — the only viable shape at 100 TB
+(payload bytes never route through the driver; each task decodes its
+own partition). Container headers (PNG/JPEG/GIF
 dimensions + channels) decode for REAL via ``decode_image_header``, and
 full pixel decode (``decode_image``) is REAL across the board — pure
 Python/numpy over bytes, no codec library: PPM/PGM/BMP rasters, PNG
@@ -44,11 +45,10 @@ cell of the Annex J matrix is implemented.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gomrjob_spark.pipeline import map_rows
 
 #: metadata struct appended by attach_payload
 METADATA_SCHEMA = "struct<modality:string,n_bytes:int,sha:string,magic:string>"
@@ -4460,7 +4460,7 @@ def extract_features(
     id_col: str = "doc_id",
     decoder=decode_meta,
 ) -> DataFrame:
-    """Per-payload feature extraction via mapInPandas (Arrow batches).
+    """Per-payload feature extraction through ``map_rows``.
 
     The decoder sees raw bytes per row inside the task; output schema is
     fixed (FEATURE_SCHEMA) so downstream plans are stable regardless of
@@ -4468,25 +4468,15 @@ def extract_features(
     (payloads are the dominant bytes; spark.sql.execution.arrow.
     maxRecordsPerBatch bounds rows per batch)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decoder(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "modality": pdf["modality"].values,
-                    "n_bytes": pdf["n_bytes"].values,
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "channels": [m["channels"] for m in metas],
-                }
-            )
+    def features(doc_id, payload, modality, n_bytes):
+        m = decoder(payload)
+        yield doc_id, modality, n_bytes, m["width"], m["height"], m["channels"]
 
     cols = df.select(
         F.col(id_col), F.col("payload"), F.col("meta.modality").alias("modality"),
         F.col("meta.n_bytes").alias("n_bytes"),
     )
-    return cols.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(cols, features, FEATURE_SCHEMA)
 
 
 def frame_sample_indices(n_frames_col, every: int = 10):
@@ -4520,7 +4510,7 @@ def resize_images(
     id_col: str = "doc_id",
     decoder=decode_meta,
 ) -> DataFrame:
-    """Per-payload resize via mapInPandas — the thumbnail/normalize stage
+    """Per-payload resize through ``map_rows`` — the thumbnail/normalize stage
     of an image pipeline. Decode gives (width, height, channels); the
     output buffer is built by nearest-neighbor sampling over the payload
     bytes (REAL for a raw w*h*c buffer; for synthetic/fake-decoded
@@ -4531,37 +4521,26 @@ def resize_images(
     Scale: pure per-row work inside Arrow batches, no shuffle; payload
     bytes stay on the task that scanned them."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "channels", "out_w", "out_h", "resized")}
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                p = bytes(p)
-                m = decoder(p)
-                w, h, ch = m["width"], m["height"], m["channels"]
-                ow, oh = resize_dims(w, h, target_long_side)
-                n = len(p)
-                buf = bytearray(ow * oh * ch)  # empty payload -> zero buffer
-                if n:
-                    pos = 0
-                    for y in range(oh):
-                        sy = y * h // oh
-                        for x in range(ow):
-                            sx = x * w // ow
-                            src = (sy * w + sx) * ch
-                            for c in range(ch):
-                                buf[pos] = p[(src + c) % n]
-                                pos += 1
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(ch)
-                rows["out_w"].append(ow)
-                rows["out_h"].append(oh)
-                rows["resized"].append(bytes(buf))
-            yield pd.DataFrame(rows)
+    def resize(doc_id, p):
+        p = bytes(p)
+        m = decoder(p)
+        w, h, ch = m["width"], m["height"], m["channels"]
+        ow, oh = resize_dims(w, h, target_long_side)
+        n = len(p)
+        buf = bytearray(ow * oh * ch)  # empty payload -> zero buffer
+        if n:
+            pos = 0
+            for y in range(oh):
+                sy = y * h // oh
+                for x in range(ow):
+                    sx = x * w // ow
+                    src = (sy * w + sx) * ch
+                    for c in range(ch):
+                        buf[pos] = p[(src + c) % n]
+                        pos += 1
+        yield doc_id, w, h, ch, ow, oh, bytes(buf)
 
-    cols = df.select(F.col(id_col), F.col("payload"))
-    return cols.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return map_rows(df.select(F.col(id_col), F.col("payload")), resize, RESIZE_SCHEMA)
 
 
 #: schema produced by extract_audio_features
@@ -4614,24 +4593,18 @@ def extract_audio_features(
     id_col: str = "doc_id",
     decoder=decode_audio_header,
 ) -> DataFrame:
-    """Audio metadata extraction via mapInPandas (same batch shape as
+    """Audio metadata extraction through ``map_rows`` (same row shape as
     extract_features); unrecognized payloads yield NULL features."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decoder(bytes(p)) or {} for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "channels": [m.get("channels") for m in metas],
-                    "sample_rate": [m.get("sample_rate") for m in metas],
-                    "bits_per_sample": [m.get("bits_per_sample") for m in metas],
-                    "duration_ms": [m.get("duration_ms") for m in metas],
-                }
-            )
+    def features(doc_id, p):
+        m = decoder(bytes(p)) or {}
+        yield (
+            doc_id, m.get("channels"), m.get("sample_rate"),
+            m.get("bits_per_sample"), m.get("duration_ms"),
+        )
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
+    return map_rows(
+        df.select(F.col(id_col), F.col("payload")), features, AUDIO_FEATURE_SCHEMA
     )
 
 
@@ -4652,31 +4625,20 @@ def extract_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Integer-only outputs -> exactly mirrorable by a SQL oracle that
     recomputes the same sums from the generator formula. Same 100 TB
-    shape as extract_features: Arrow-batched mapInPandas, payload bytes
-    never leave the task."""
+    shape as extract_features: through ``map_rows``, payload bytes never
+    leave the task."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "format", "width", "height", "channels",
-                "px_sum", "px_min", "px_max", "px_possum",
-            )}
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                m = decode_image(bytes(p))
-                px = m["pixels"]
-                rows["doc_id"].append(doc_id)
-                rows["format"].append(m["format"])
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["channels"].append(m["channels"])
-                rows["px_sum"].append(sum(px))
-                rows["px_min"].append(min(px) if px else None)
-                rows["px_max"].append(max(px) if px else None)
-                rows["px_possum"].append(sum(i * v for i, v in enumerate(px)))
-            yield pd.DataFrame(rows)
+    def stats(doc_id, p):
+        m = decode_image(bytes(p))
+        px = m["pixels"]
+        yield (
+            doc_id, m["format"], m["width"], m["height"], m["channels"],
+            sum(px), min(px) if px else None, max(px) if px else None,
+            sum(i * v for i, v in enumerate(px)),
+        )
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=PIXEL_STATS_SCHEMA
+    return map_rows(
+        df.select(F.col(id_col), F.col("payload")), stats, PIXEL_STATS_SCHEMA
     )
 
 
@@ -4715,24 +4677,18 @@ AUDIO_SAMPLE_STATS_SCHEMA = (
 def extract_audio_sample_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode REAL 16-bit PCM samples and emit integer statistics
     (sum/min/max + position-weighted checksum) — the audio counterpart
-    of extract_pixel_stats, same Arrow-batched shape, same exact-integer
+    of extract_pixel_stats, same ``map_rows`` shape, same exact-integer
     oracle-mirrorability (an endianness or sign bug flips every stat)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "s_sum", "s_min", "s_max", "s_possum")}
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                sm = decode_audio_samples(bytes(p))["samples"]
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(len(sm))
-                rows["s_sum"].append(sum(sm))
-                rows["s_min"].append(min(sm) if sm else None)
-                rows["s_max"].append(max(sm) if sm else None)
-                rows["s_possum"].append(sum(k * v for k, v in enumerate(sm)))
-            yield pd.DataFrame(rows)
+    def stats(doc_id, p):
+        sm = decode_audio_samples(bytes(p))["samples"]
+        yield (
+            doc_id, len(sm), sum(sm), min(sm) if sm else None,
+            max(sm) if sm else None, sum(k * v for k, v in enumerate(sm)),
+        )
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=AUDIO_SAMPLE_STATS_SCHEMA
+    return map_rows(
+        df.select(F.col(id_col), F.col("payload")), stats, AUDIO_SAMPLE_STATS_SCHEMA
     )
 
 
@@ -4777,23 +4733,16 @@ def perceptual_dhash(payload: bytes) -> int:
 
 
 def extract_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, dhash) via Arrow-batched mapInPandas — the image-dedup key
+    """(id, dhash) through ``map_rows`` — the image-dedup key
     extraction stage: payload bytes never leave the scanning task; the
     hash is 8 bytes per image regardless of image size, so everything
     downstream (grouping, banding, Hamming joins) works on a
     64-bit-per-image frame exactly like text simhash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                ids.append(doc_id)
-                hashes.append(perceptual_dhash(bytes(p)))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
+    def dhash(doc_id, p):
+        yield doc_id, perceptual_dhash(bytes(p))
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=DHASH_SCHEMA
-    )
+    return map_rows(df.select(F.col(id_col), F.col("payload")), dhash, DHASH_SCHEMA)
 
 
 #: schema produced by extract_audio_fingerprint
@@ -4833,20 +4782,15 @@ def audio_fingerprint(payload: bytes) -> int:
 
 
 def extract_audio_fingerprint(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, afp) via Arrow-batched mapInPandas — payload bytes never
+    """(id, afp) through ``map_rows`` — payload bytes never
     leave the scanning task; everything downstream (grouping, Hamming
     banding) works on a 4-byte-per-clip key."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                ids.append(doc_id)
-                fps.append(audio_fingerprint(bytes(p)))
-            yield pd.DataFrame({"doc_id": ids, "afp": fps})
+    def fingerprint(doc_id, p):
+        yield doc_id, audio_fingerprint(bytes(p))
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=AUDIO_FP_SCHEMA
+    return map_rows(
+        df.select(F.col(id_col), F.col("payload")), fingerprint, AUDIO_FP_SCHEMA
     )
 
 
@@ -4859,19 +4803,13 @@ def extract_frame_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     FRAME for video pipelines: frame payloads never leave the scanning
     task, and downstream shot analytics work on 8 bytes per frame."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, hashes = [], [], []
-            for doc_id, fi, p in zip(pdf[id_col], pdf["frame_idx"], pdf["payload"]):
-                ids.append(doc_id)
-                frames.append(fi)
-                hashes.append(perceptual_dhash(bytes(p)))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": frames, "dhash": hashes}
-            )
+    def dhash(doc_id, fi, p):
+        yield doc_id, fi, perceptual_dhash(bytes(p))
 
-    return df.select(F.col(id_col), F.col("frame_idx"), F.col("payload")).mapInPandas(
-        run, schema=FRAME_DHASH_SCHEMA
+    return map_rows(
+        df.select(F.col(id_col), F.col("frame_idx"), F.col("payload")),
+        dhash,
+        FRAME_DHASH_SCHEMA,
     )
 
 
@@ -5119,35 +5057,19 @@ EXIF_SCHEMA = (
 
 
 def extract_exif_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Per-payload EXIF extraction via Arrow-batched mapInPandas — the
-    extract_features batch shape: payload bytes never leave the task,
+    """Per-payload EXIF extraction through ``map_rows`` — the
+    extract_features row shape: payload bytes never leave the task,
     output is a fixed narrow row per image."""
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                meta = decode_exif(bytes(payload))
-                rows.append(
-                    {
-                        id_col: doc_id,
-                        "byte_order": meta["byte_order"],
-                        "exif_w": meta["exif_w"],
-                        "exif_h": meta["exif_h"],
-                        "orientation": meta["orientation"],
-                        "xres_num": meta["xres_num"],
-                        "xres_den": meta["xres_den"],
-                        "model": meta["model"],
-                        "iso": meta["iso"],
-                        "n_ifd0": meta["n_ifd0"],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def exif(doc_id, payload):
+        meta = decode_exif(bytes(payload))
+        yield (
+            doc_id, meta["byte_order"], meta["exif_w"], meta["exif_h"],
+            meta["orientation"], meta["xres_num"], meta["xres_den"],
+            meta["model"], meta["iso"], meta["n_ifd0"],
+        )
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=EXIF_SCHEMA
-    )
+    return map_rows(df.select(F.col(id_col), F.col("payload")), exif, EXIF_SCHEMA)
 
 
 #: EXIF orientation -> (output row, col) reads input (row, col): the 8
@@ -5205,35 +5127,20 @@ def extract_oriented_pixel_stats(
     NORMALIZED raster: px_sum is orientation-invariant (a permutation),
     px_possum + the first/last samples pin the exact permutation — a
     wrong transform direction or a dimension-swap bug changes them.
-    Arrow-batched mapInPandas, scan-local (the extract_pixel_stats
-    shape)."""
+    Through ``map_rows``, scan-local (the extract_pixel_stats shape)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "orientation", "out_w", "out_h",
-                "px_sum", "px_possum", "px_first", "px_last",
-            )}
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                payload = bytes(p)
-                o = decode_exif(payload)["orientation"]
-                m = decode_image(payload)
-                out, ow, oh = apply_exif_orientation(
-                    m["pixels"], m["width"], m["height"], o,
-                    channels=m["channels"],
-                )
-                rows["doc_id"].append(doc_id)
-                rows["orientation"].append(o)
-                rows["out_w"].append(ow)
-                rows["out_h"].append(oh)
-                rows["px_sum"].append(sum(out))
-                rows["px_possum"].append(
-                    sum(i * v for i, v in enumerate(out))
-                )
-                rows["px_first"].append(out[0] if out else None)
-                rows["px_last"].append(out[-1] if out else None)
-            yield pd.DataFrame(rows)
+    def stats(doc_id, p):
+        payload = bytes(p)
+        o = decode_exif(payload)["orientation"]
+        m = decode_image(payload)
+        out, ow, oh = apply_exif_orientation(
+            m["pixels"], m["width"], m["height"], o, channels=m["channels"],
+        )
+        yield (
+            doc_id, o, ow, oh, sum(out), sum(i * v for i, v in enumerate(out)),
+            out[0] if out else None, out[-1] if out else None,
+        )
 
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        run, schema=ORIENT_STATS_SCHEMA
+    return map_rows(
+        df.select(F.col(id_col), F.col("payload")), stats, ORIENT_STATS_SCHEMA
     )

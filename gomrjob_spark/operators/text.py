@@ -30,11 +30,15 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
+#: rows one ``spread`` task takes when the caller passes ``rows_hint``
+SPREAD_ROWS_PER_TASK = 2048
+
+
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def spread(df, min_factor: int = 1, rows_hint: int | None = None, rows_per_task: int = 2048):
+def spread(df, rows_hint: int | None = None):
     """Repartition to ``spark.gomrjob.spread.partitions`` when that conf
     is set — the local-mode escape hatch for single-row-group test files
     that would otherwise serialize every CPU-heavy text expression into
@@ -44,10 +48,10 @@ def spread(df, min_factor: int = 1, rows_hint: int | None = None, rows_per_task:
     ``rows_hint`` (r15, the r14 verdict's cluster-survivors item): when
     the caller already KNOWS the row count (e.g. a fixpoint loop that
     collected it last round), the width scales with the data —
-    ``ceil(rows_hint / rows_per_task)`` capped at the conf target — so a
-    few hundred rows stop paying a 32-wide exchange plus 32 tiny tasks
-    per round (measured: the CC loop ran FASTER at 8 cores than 32 with
-    an unconditional full-width spread).
+    ``ceil(rows_hint / SPREAD_ROWS_PER_TASK)`` capped at the conf target —
+    so a few hundred rows stop paying a 32-wide exchange plus 32 tiny
+    tasks per round (measured: the CC loop ran FASTER at 8 cores than 32
+    with an unconditional full-width spread).
 
     Deliberately decided from driver-side strings (conf + master URL)
     rather than inspecting ``df.rdd``: touching ``.rdd`` during query
@@ -61,12 +65,11 @@ def spread(df, min_factor: int = 1, rows_hint: int | None = None, rows_per_task:
         target = sess.sparkContext.defaultParallelism
     else:
         return df  # real cluster: scans already have >> cores splits
-    if rows_hint is not None and target > 0:
-        target = min(target, max(1, -(-int(rows_hint) // rows_per_task)))
-        return df.repartition(target * min_factor)
-    if target > 0:
-        return df.repartition(target * min_factor)
-    return df
+    if target <= 0:
+        return df
+    if rows_hint is not None:
+        target = min(target, max(1, -(-int(rows_hint) // SPREAD_ROWS_PER_TASK)))
+    return df.repartition(target)
 
 
 def tokens(col: Column | str) -> Column:

@@ -12,6 +12,8 @@ Spark-first translation:
 reference                 engine
 ==========================  ==================================================
 ``Mapper(r, w)``          ``Step.mapper``: pandas-batch fn via ``mapInPandas``
+per-record ``Mapper``     ``map_rows(df, fn, schema)``: ``fn`` takes one
+                          row's values and returns zero or more tuples
 identity mapper           ``mapper=None`` (runner.go:281-287 ``io.Copy``)
 ``Reducer(r, w)``         ``Step.reducer``: per-key fn via ``applyInPandas``,
                           or a builtin (``SUM``) compiled to a native
@@ -48,7 +50,7 @@ per-key across executors.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -71,6 +73,7 @@ _COMBINE_BUFFER_ROWS = 1_000_000
 
 MapperFn = Callable[[pd.DataFrame], pd.DataFrame]
 ReducerFn = Callable[[Any, pd.DataFrame], pd.DataFrame]
+RowFn = Callable[..., Iterable[tuple] | None]
 
 
 @dataclass
@@ -184,6 +187,34 @@ class Pipeline:
             out, path, compress=compress, num_files=num_files, sorted_output=sorted_output
         )
         return out
+
+
+def map_rows(df: DataFrame, fn: RowFn, schema: str) -> DataFrame:
+    """The reference's per-record ``Mapper(r, w)`` (map_reduce_step.go:7-25):
+    one input record in, zero or more records out.
+
+    ``fn`` is called once per row of ``df`` with that row's values in
+    ``df``'s column order, typed as iterating a pandas column yields them.
+    It returns an iterable of tuples in ``schema`` field order (a
+    generator, a list, or ``None`` for no rows). Each Arrow batch becomes
+    one positional pandas frame; a batch with no output rows ships
+    nothing. Row-local, so streaming frames work too."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [t for row in pdf.itertuples(index=False, name=None) for t in fn(*row) or ()]
+            if out:
+                # integer labels match the schema by position; object
+                # columns reach Arrow as the Python values fn returned (an
+                # int column holding None would otherwise pass through
+                # float64 and round above 2**53)
+                yield pd.DataFrame(
+                    {i: pd.Series(col, dtype=object) for i, col in enumerate(zip(*out))}
+                )
+
+    # the MapInPandas plan node and the UI then name the row function
+    run.__name__ = getattr(fn, "__name__", "map_rows")
+    return df.mapInPandas(run, schema=schema)
 
 
 def _run_step(df: DataFrame, s: Step, streaming: bool = False) -> DataFrame:

@@ -39,6 +39,54 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # exactly the priority rule the ledger prescribes: a query whose plan
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
+    # changed: the code that produces their rows moved — every per-row
+    # Python stage runs through pipeline.map_rows (one positional frame
+    # per Arrow batch, object columns) instead of its own mapInPandas
+    # loop. Their executed plans are unchanged (scripts/plan_snapshot.py
+    # at sf0.001). Every oracle-checked query that reaches one of the 33
+    # converted stages: WARC readers and synth walks, the _wet_walked
+    # front half, the multimodal extract_*/resize stages and the codec
+    # payload generators
+    "corpus_train_pipeline",
+    "corpus_wet_pipeline",
+    "multimodal_scene_cuts",
+    "multimodal_phash_dedup",
+    "multimodal_phash_near_pairs",
+    "multimodal_audio_fingerprint_dedup",
+    "multimodal_decode_headers",
+    "multimodal_hierarchical_dct_stats",
+    "multimodal_hierarchical_pixel_stats",
+    "multimodal_features",
+    "multimodal_resize",
+    "multimodal_audio_headers",
+    "multimodal_pixel_stats",
+    "multimodal_compressed_pixel_stats",
+    "multimodal_arith_pixel_stats",
+    "multimodal_avi_frames",
+    "multimodal_mp4_frames",
+    "multimodal_mp4_keyframes",
+    "multimodal_mp4_edit_timing",
+    "multimodal_mp4_fragments",
+    "multimodal_flac_metadata",
+    "multimodal_mp3_metadata",
+    "multimodal_progressive_pixel_stats",
+    "multimodal_audio_samples",
+    "multimodal_lossless_pixel_stats",
+    "multimodal_lossless_subsampled_stats",
+    "multimodal_hierarchical_prog_stats",
+    "multimodal_hierarchical_color_stats",
+    "multimodal_exif_stats",
+    "multimodal_exif_orient_stats",
+    "warc_parse_records",
+    "warc_http_headers",
+    "warc_revisit_resolve",
+    "warc_file_source",
+    "warc_cdx_index",
+    "warc_cdx_member_index",
+    "warc_cdx_cdxj",
+    "streaming_phash_admission",
+    "streaming_warc_file_source",
+    "streaming_warc_member_source",
     # changed: the n-gram pair stage (capped: one shingle exchange, the
     # grouped frame checkpointed; both sides of the sizes join read one
     # plan; containment's two directions one explode), the MinHash
@@ -55,7 +103,6 @@ _VERIFY_FIRST = [
     "dedup_ngram_containment",
     "dedup_minhash_md5",
     "dedup_paragraph_minhash_rollup",
-    "corpus_train_pipeline",
     "entity_resolution_pipeline",
     "dedup_best_quality_survivors",
     # changed: every round loop runs through cache.iterate (one lazy
@@ -97,7 +144,6 @@ _VERIFY_FIRST = [
     "sitemap_discovery",
     "sitemap_discovery_gz",
     "corpus_funnel_report",
-    "corpus_wet_pipeline",
     "html_extract_text",
     "html_block_stats",
     "html_content_gate",
@@ -124,10 +170,6 @@ _VERIFY_FIRST = [
     # are covered by pytest rows/recall checks and the registry sweep,
     # and the oracled semdedup consumers above carry the hash gate
     # for the shared device)
-    "multimodal_scene_cuts",
-    "multimodal_phash_dedup",
-    "multimodal_phash_near_pairs",
-    "multimodal_audio_fingerprint_dedup",
     # r15: atomic near-dup store publish
     "streaming_near_dup_probe",
 ]
@@ -144,10 +186,7 @@ _BACKFILL = [
     "mix_weights_temperature",
     "mr_combiner",
     "multimodal_caption_alignment",
-    "multimodal_decode_headers",
     "multimodal_frame_sample",
-    "multimodal_hierarchical_dct_stats",
-    "multimodal_hierarchical_pixel_stats",
     "q10_returned_items",
     "q13_customer_distribution",
     "q14_promo_effect",

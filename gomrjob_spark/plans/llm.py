@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from gomrjob_spark.catalog import load_table
 from gomrjob_spark.functions import local_df
 from gomrjob_spark.operators import dedup, multimodal, similarity, text
+from gomrjob_spark.pipeline import map_rows
 from gomrjob_spark.plans.registry import query
 
 _SQL_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -1330,7 +1331,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload plumbing end-to-end: attach payload + metadata
-    struct, then extract features via Arrow-batched mapInPandas (decode is
+    struct, then extract features through ``map_rows`` (decode is
     the documented stub — deterministic, so even the Python path is
     oracle-gated)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1755,39 +1756,29 @@ def multimodal_compressed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataF
     stats, including the position-weighted checksum, without
     understanding any container. A filter-inverse, palette,
     de-interlace, LZW, Huffman, or IDCT bug breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 6 + 2, d % 4 + 2
-                if d % 3 == 0:
-                    px = bytes((d * 7 + i * 13) % 256 for i in range(w * h * 3))
-                    payloads.append(multimodal.encode_png(px, w, h, color_type=2))
-                elif d % 3 == 1:
-                    idx = bytes((d * 7 + j * 13) % 8 for j in range(w * h))
-                    pal = bytes(5 * j + c for j in range(8) for c in range(3))
-                    payloads.append(multimodal.encode_gif(idx, w, h, pal))
-                else:
-                    wb, hb = d % 4 + 1, d % 3 + 1
-                    wpx, hpx = 8 * wb, 8 * hb
-                    px = bytes(
-                        (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
-                        for y in range(hpx)
-                        for x in range(wpx)
-                    )
-                    payloads.append(
-                        multimodal.encode_jpeg_baseline(px, wpx, hpx, channels=1)
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 6 + 2, d % 4 + 2
+        if d % 3 == 0:
+            px = bytes((d * 7 + i * 13) % 256 for i in range(w * h * 3))
+            yield d, multimodal.encode_png(px, w, h, color_type=2)
+        elif d % 3 == 1:
+            idx = bytes((d * 7 + j * 13) % 8 for j in range(w * h))
+            pal = bytes(5 * j + c for j in range(8) for c in range(3))
+            yield d, multimodal.encode_gif(idx, w, h, pal)
+        else:
+            wb, hb = d % 4 + 1, d % 3 + 1
+            wpx, hpx = 8 * wb, 8 * hb
+            px = bytes(
+                (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
+                for y in range(hpx)
+                for x in range(wpx)
+            )
+            yield d, multimodal.encode_jpeg_baseline(px, wpx, hpx, channels=1)
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -1832,39 +1823,27 @@ def multimodal_arith_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doc_id, so the DuckDB oracle recomputes all four stats including
     the position-weighted checksum; a Qe-table, conditioning, carry,
     stuffing, restart, or scan-script bug breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                wb, hb = d % 4 + 1, d % 3 + 1
-                wpx, hpx = 8 * wb, 8 * hb
-                px = bytes(
-                    (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
-                    for y in range(hpx)
-                    for x in range(wpx)
-                )
-                if d % 2 == 0:
-                    payloads.append(
-                        multimodal.encode_jpeg_arithmetic(
-                            px, wpx, hpx, channels=1, restart_interval=d % 3
-                        )
-                    )
-                else:
-                    payloads.append(
-                        multimodal.encode_jpeg_arith_progressive(
-                            px, wpx, hpx, channels=1, restart_interval=d % 3
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        wb, hb = d % 4 + 1, d % 3 + 1
+        wpx, hpx = 8 * wb, 8 * hb
+        px = bytes(
+            (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
+            for y in range(hpx)
+            for x in range(wpx)
+        )
+        if d % 2 == 0:
+            yield d, multimodal.encode_jpeg_arithmetic(
+                px, wpx, hpx, channels=1, restart_interval=d % 3
+            )
+        else:
+            yield d, multimodal.encode_jpeg_arith_progressive(
+                px, wpx, hpx, channels=1, restart_interval=d % 3
+            )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -2075,58 +2054,42 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     fake '00db' chunk header — a reader that scans for frame magics
     instead of walking sizes (or forgets RIFF's odd-size pad byte)
     phantom-counts frames and cannot hash-match; the skipped-chunk
-    count is part of the gated output. Scan-local Arrow-batched
-    encode+walk; zero shuffles before the oracle-determinism orderBy.
+    count is part of the gated output. Scan-local encode+walk through
+    ``map_rows``; zero shuffles before the oracle-determinism orderBy.
     Malformation classes raise precisely — tests/test_riff.py."""
     import hashlib  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.riff import encode_avi, parse_avi
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        cols = (
-            "doc_id", "frame_idx", "n_frames_hdr", "width", "height",
-            "n_aux_chunks", "frame_len", "frame_hexmd5",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 8 + 12
-                frames, cuts = [], 0
-                for f in range(n):
-                    if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                        cuts += 1
-                    g = (d * 3 + cuts) % 53
-                    frames.append(bytes(
-                        (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                        for y in range(8) for x in range(8)
-                    ))
-                parsed = parse_avi(encode_avi(frames, 8, 8, decoy_every=5))
-                for j, frame in enumerate(parsed["frames"]):
-                    rows["doc_id"].append(d)
-                    rows["frame_idx"].append(j)
-                    rows["n_frames_hdr"].append(parsed["n_frames_header"])
-                    rows["width"].append(parsed["width"])
-                    rows["height"].append(parsed["height"])
-                    rows["n_aux_chunks"].append(parsed["n_aux_chunks"])
-                    rows["frame_len"].append(len(frame))
-                    rows["frame_hexmd5"].append(
-                        hashlib.md5(frame.hex().encode("ascii")).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
+    def walk(doc_id):
+        d = int(doc_id)
+        n = d % 8 + 12
+        frames, cuts = [], 0
+        for f in range(n):
+            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
+                cuts += 1
+            g = (d * 3 + cuts) % 53
+            frames.append(bytes(
+                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
+                for y in range(8) for x in range(8)
+            ))
+        parsed = parse_avi(encode_avi(frames, 8, 8, decoy_every=5))
+        for j, frame in enumerate(parsed["frames"]):
+            yield (
+                d, j, parsed["n_frames_header"], parsed["width"],
+                parsed["height"], parsed["n_aux_chunks"], len(frame),
+                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+            )
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, frame_idx int, n_frames_hdr int, width int, "
-            "height int, n_aux_chunks int, frame_len bigint, "
-            "frame_hexmd5 string"
-        ),
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, frame_idx int, n_frames_hdr int, width int, "
+        "height int, n_aux_chunks int, frame_len bigint, "
+        "frame_hexmd5 string",
     )
     return out.orderBy("doc_id", "frame_idx")
 
@@ -2181,62 +2144,43 @@ def multimodal_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     every offset), the stsc chunk count (n_frames % 3 != 0 docs take
     the two-run stsc path), mvhd timescale/duration, the stsd/tkhd
     dimensions (cross-checked 16.16 vs u16 in the parser), and each
-    frame's content md5. Scan-local Arrow-batched encode+walk; zero
-    shuffles before the oracle-determinism orderBy. Malformation
+    frame's content md5. Scan-local encode+walk through ``map_rows``;
+    zero shuffles before the oracle-determinism orderBy. Malformation
     classes raise precisely — tests/test_mp4.py."""
     import hashlib  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4 import encode_mp4, parse_mp4
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        cols = (
-            "doc_id", "frame_idx", "n_samples", "width", "height",
-            "timescale", "duration", "n_chunks", "sample_off",
-            "frame_len", "frame_hexmd5",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 8 + 12
-                frames, cuts = [], 0
-                for f in range(n):
-                    if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                        cuts += 1
-                    g = (d * 3 + cuts) % 53
-                    frames.append(bytes(
-                        (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                        for y in range(8) for x in range(8)
-                    ))
-                parsed = parse_mp4(encode_mp4(frames, 8, 8))
-                for j, frame in enumerate(parsed["samples"]):
-                    rows["doc_id"].append(d)
-                    rows["frame_idx"].append(j)
-                    rows["n_samples"].append(parsed["n_samples"])
-                    rows["width"].append(parsed["width"])
-                    rows["height"].append(parsed["height"])
-                    rows["timescale"].append(parsed["timescale"])
-                    rows["duration"].append(parsed["duration"])
-                    rows["n_chunks"].append(parsed["n_chunks"])
-                    rows["sample_off"].append(parsed["sample_offsets"][j])
-                    rows["frame_len"].append(len(frame))
-                    rows["frame_hexmd5"].append(
-                        hashlib.md5(frame.hex().encode("ascii")).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
+    def walk(doc_id):
+        d = int(doc_id)
+        n = d % 8 + 12
+        frames, cuts = [], 0
+        for f in range(n):
+            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
+                cuts += 1
+            g = (d * 3 + cuts) % 53
+            frames.append(bytes(
+                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
+                for y in range(8) for x in range(8)
+            ))
+        parsed = parse_mp4(encode_mp4(frames, 8, 8))
+        for j, frame in enumerate(parsed["samples"]):
+            yield (
+                d, j, parsed["n_samples"], parsed["width"], parsed["height"],
+                parsed["timescale"], parsed["duration"], parsed["n_chunks"],
+                parsed["sample_offsets"][j], len(frame),
+                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+            )
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, frame_idx int, n_samples int, width int, "
-            "height int, timescale int, duration bigint, n_chunks int, "
-            "sample_off bigint, frame_len bigint, frame_hexmd5 string"
-        ),
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, frame_idx int, n_samples int, width int, "
+        "height int, timescale int, duration bigint, n_chunks int, "
+        "sample_off bigint, frame_len bigint, frame_hexmd5 string",
     )
     return out.orderBy("doc_id", "frame_idx")
 
@@ -2291,64 +2235,50 @@ def multimodal_mp4_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     drives the selection; the oracle recomputes the sync set, each
     keyframe's absolute offset, and its content md5 from the formulas.
 
-    Plan: scan-local Arrow-batched encode+walk like the other codec
+    Plan: scan-local encode+walk through ``map_rows`` like the other codec
     families — and only ~n/4 of the samples ship out of the decode
     stage, which is the operator's whole point at scale."""
     import hashlib  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4 import encode_mp4, parse_mp4
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        cols = (
-            "doc_id", "sample_idx", "n_samples", "n_sync",
-            "sample_off", "frame_hexmd5",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 8 + 12
-                frames, cuts = [], 0
-                for f in range(n):
-                    if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                        cuts += 1
-                    g = (d * 3 + cuts) % 53
-                    frames.append(bytes(
-                        (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                        for y in range(8) for x in range(8)
-                    ))
-                marked = [
-                    j + 1
-                    for j in range(n)
-                    if j == 0 or (d * 3 + j * 5) % 4 == 0
-                ]
-                parsed = parse_mp4(encode_mp4(frames, 8, 8, marked))
-                # the PARSED table drives selection — the gate proves
-                # the stss walk, not the writer's list
-                for s in parsed["sync_samples"]:
-                    j = s - 1
-                    frame = parsed["samples"][j]
-                    rows["doc_id"].append(d)
-                    rows["sample_idx"].append(j)
-                    rows["n_samples"].append(parsed["n_samples"])
-                    rows["n_sync"].append(len(parsed["sync_samples"]))
-                    rows["sample_off"].append(parsed["sample_offsets"][j])
-                    rows["frame_hexmd5"].append(
-                        hashlib.md5(frame.hex().encode("ascii")).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
+    def walk(doc_id):
+        d = int(doc_id)
+        n = d % 8 + 12
+        frames, cuts = [], 0
+        for f in range(n):
+            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
+                cuts += 1
+            g = (d * 3 + cuts) % 53
+            frames.append(bytes(
+                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
+                for y in range(8) for x in range(8)
+            ))
+        marked = [
+            j + 1
+            for j in range(n)
+            if j == 0 or (d * 3 + j * 5) % 4 == 0
+        ]
+        parsed = parse_mp4(encode_mp4(frames, 8, 8, marked))
+        # the PARSED table drives selection — the gate proves
+        # the stss walk, not the writer's list
+        for s in parsed["sync_samples"]:
+            j = s - 1
+            frame = parsed["samples"][j]
+            yield (
+                d, j, parsed["n_samples"], len(parsed["sync_samples"]),
+                parsed["sample_offsets"][j],
+                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+            )
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, sample_idx int, n_samples int, n_sync int, "
-            "sample_off bigint, frame_hexmd5 string"
-        ),
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, sample_idx int, n_samples int, n_sync int, "
+        "sample_off bigint, frame_hexmd5 string",
     )
     return out.orderBy("doc_id", "sample_idx")
 
@@ -2388,51 +2318,36 @@ def multimodal_mp4_edit_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-rolled samples as presented=false with a NULL presentation
     time. A reader that ignores elst reports presentation_time ==
     media_time and presents everything — wrong on 4/5 of the corpus,
-    so it cannot hash-match. Scan-local Arrow-batched encode+walk
+    so it cannot hash-match. Scan-local encode+walk through ``map_rows``
     like the rest of the codec family."""
-    import pandas as pd  # noqa: PLC0415
-
     from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4 import encode_mp4, parse_mp4
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        cols = (
-            "doc_id", "sample_idx", "media_time", "presented",
-            "presentation_time", "n_presented",
+    def walk(doc_id):
+        d = int(doc_id)
+        n = d % 8 + 12
+        frames = [bytes([j % 256]) * 16 for j in range(n)]
+        mt_in = (d % 5) * 512
+        parsed = parse_mp4(
+            encode_mp4(frames, 8, 8, None, mt_in if mt_in else None)
         )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 8 + 12
-                frames = [bytes([j % 256]) * 16 for j in range(n)]
-                mt_in = (d % 5) * 512
-                parsed = parse_mp4(
-                    encode_mp4(frames, 8, 8, None, mt_in if mt_in else None)
-                )
-                # the PARSED edit drives the mapping (absent box = 0)
-                mt = parsed["edit"][1] if parsed["edit"] else 0
-                n_pres = parsed["n_samples"] - mt // 512
-                for j in range(parsed["n_samples"]):
-                    media = j * 512
-                    rows["doc_id"].append(d)
-                    rows["sample_idx"].append(j)
-                    rows["media_time"].append(media)
-                    rows["presented"].append(media >= mt)
-                    rows["presentation_time"].append(
-                        media - mt if media >= mt else None
-                    )
-                    rows["n_presented"].append(n_pres)
-            yield pd.DataFrame(rows)
+        # the PARSED edit drives the mapping (absent box = 0)
+        mt = parsed["edit"][1] if parsed["edit"] else 0
+        n_pres = parsed["n_samples"] - mt // 512
+        for j in range(parsed["n_samples"]):
+            media = j * 512
+            yield (
+                d, j, media, media >= mt,
+                media - mt if media >= mt else None, n_pres,
+            )
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, sample_idx int, media_time bigint, "
-            "presented boolean, presentation_time bigint, n_presented int"
-        ),
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, sample_idx int, media_time bigint, "
+        "presented boolean, presentation_time bigint, n_presented int",
     )
     return out.orderBy("doc_id", "sample_idx")
 
@@ -2490,11 +2405,9 @@ def multimodal_mp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     and contiguity readers fail), and every sample offset as a closed
     formula. mfhd sequence ordering, the short tail fragment
     (n % 4 != 0 docs), and per-frame content md5 all gated. Scan-local
-    Arrow-batched encode+walk; zero shuffles before the
+    encode+walk through ``map_rows``; zero shuffles before the
     oracle-determinism orderBy. Raise matrix: tests/test_mp4frag.py."""
     import hashlib  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4frag import (
@@ -2504,52 +2417,33 @@ def multimodal_mp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        cols = (
-            "doc_id", "frame_idx", "frag_seq", "n_fragments", "n_samples",
-            "width", "height", "timescale", "sample_off", "frame_len",
-            "frame_hexmd5",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 8 + 12
-                frames, cuts = [], 0
-                for f in range(n):
-                    if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                        cuts += 1
-                    g = (d * 3 + cuts) % 53
-                    frames.append(bytes(
-                        (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                        for y in range(8) for x in range(8)
-                    ))
-                parsed = parse_mp4_fragmented(
-                    encode_mp4_fragmented(frames, 8, 8)
-                )
-                for j, frame in enumerate(parsed["samples"]):
-                    rows["doc_id"].append(d)
-                    rows["frame_idx"].append(j)
-                    rows["frag_seq"].append(parsed["fragment_seqs"][j])
-                    rows["n_fragments"].append(parsed["n_fragments"])
-                    rows["n_samples"].append(parsed["n_samples"])
-                    rows["width"].append(parsed["width"])
-                    rows["height"].append(parsed["height"])
-                    rows["timescale"].append(parsed["timescale"])
-                    rows["sample_off"].append(parsed["sample_offsets"][j])
-                    rows["frame_len"].append(len(frame))
-                    rows["frame_hexmd5"].append(
-                        hashlib.md5(frame.hex().encode("ascii")).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
+    def walk(doc_id):
+        d = int(doc_id)
+        n = d % 8 + 12
+        frames, cuts = [], 0
+        for f in range(n):
+            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
+                cuts += 1
+            g = (d * 3 + cuts) % 53
+            frames.append(bytes(
+                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
+                for y in range(8) for x in range(8)
+            ))
+        parsed = parse_mp4_fragmented(encode_mp4_fragmented(frames, 8, 8))
+        for j, frame in enumerate(parsed["samples"]):
+            yield (
+                d, j, parsed["fragment_seqs"][j], parsed["n_fragments"],
+                parsed["n_samples"], parsed["width"], parsed["height"],
+                parsed["timescale"], parsed["sample_offsets"][j], len(frame),
+                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+            )
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, frame_idx int, frag_seq int, n_fragments int, "
-            "n_samples int, width int, height int, timescale int, "
-            "sample_off bigint, frame_len bigint, frame_hexmd5 string"
-        ),
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, frame_idx int, frag_seq int, n_fragments int, "
+        "n_samples int, width int, height int, timescale int, "
+        "sample_off bigint, frame_len bigint, frame_hexmd5 string",
     )
     return out.orderBy("doc_id", "frame_idx")
 
@@ -2591,11 +2485,9 @@ def multimodal_flac_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     contains a decoy ``fLaC`` magic — a magic-scanner phantom-restarts
     and cannot match; every document carries a PADDING block so
     unknown-type skipping is gated, and the last-metadata-block FLAG
-    (not a count) terminates the walk. Scan-local Arrow-batched;
+    (not a count) terminates the walk. Scan-local, through ``map_rows``;
     malformation classes raise precisely — tests/test_audiometa.py."""
     import hashlib  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     from gomrjob_spark.operators.audiometa import (
         APPLICATION,
@@ -2609,41 +2501,33 @@ def multimodal_flac_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     rates = (8000, 16000, 22050, 44100, 48000)
 
-    def run(batches):
-        cols = (
-            "doc_id", "sample_rate", "channels", "bits_per_sample",
-            "total_samples", "duration_ms", "md5_hex", "n_meta_blocks",
-            "audio_bytes",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                si = encode_streaminfo(
-                    sample_rate=rates[d % 5],
-                    channels=1 + d % 2,
-                    bits_per_sample=24 if d % 3 == 0 else 16,
-                    total_samples=1000 + (d * 37) % 90000,
-                    md5_digest=hashlib.md5(f"audio{d}".encode()).digest(),
-                )
-                extra = [(PADDING, b"\x00" * (1 + d % 7))]
-                if d % 4 == 0:
-                    # decoy: the magic INSIDE an application block body
-                    extra.append((APPLICATION, b"gmrj" + b"fLaC\x00\x22"))
-                blob = encode_flac_header(si, extra, b"\xfa" * (d % 9))
-                meta = parse_flac_header(blob)
-                rows["doc_id"].append(d)
-                for k in cols[1:]:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
+    cols = (
+        "sample_rate", "channels", "bits_per_sample", "total_samples",
+        "duration_ms", "md5_hex", "n_meta_blocks", "audio_bytes",
+    )
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, sample_rate int, channels int, "
-            "bits_per_sample int, total_samples bigint, duration_ms bigint, "
-            "md5_hex string, n_meta_blocks int, audio_bytes bigint"
-        ),
+    def walk(doc_id):
+        d = int(doc_id)
+        si = encode_streaminfo(
+            sample_rate=rates[d % 5],
+            channels=1 + d % 2,
+            bits_per_sample=24 if d % 3 == 0 else 16,
+            total_samples=1000 + (d * 37) % 90000,
+            md5_digest=hashlib.md5(f"audio{d}".encode()).digest(),
+        )
+        extra = [(PADDING, b"\x00" * (1 + d % 7))]
+        if d % 4 == 0:
+            # decoy: the magic INSIDE an application block body
+            extra.append((APPLICATION, b"gmrj" + b"fLaC\x00\x22"))
+        meta = parse_flac_header(encode_flac_header(si, extra, b"\xfa" * (d % 9)))
+        yield (d, *(meta[k] for k in cols))
+
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, sample_rate int, channels int, "
+        "bits_per_sample int, total_samples bigint, duration_ms bigint, "
+        "md5_hex string, n_meta_blocks int, audio_bytes bigint",
     )
     return out.orderBy("doc_id")
 
@@ -2687,44 +2571,33 @@ def multimodal_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames; frame payloads are ALL sync-looking 0xFF bytes, so jumping
     by declared length is the only walk that matches the oracle's
     formula-recomputed frame count, average bitrate, exact duration
-    (1000 * frames * 1152 DIV rate) and byte accounting. Scan-local
-    Arrow-batched; raise matrix in tests/test_audiometa.py."""
-    import pandas as pd  # noqa: PLC0415
-
+    (1000 * frames * 1152 DIV rate) and byte accounting. Scan-local,
+    through ``map_rows``; raise matrix in tests/test_audiometa.py."""
     from gomrjob_spark.operators.audiometa import encode_mp3, parse_mp3_header
     from gomrjob_spark.operators.text import spread
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     cols = (
-        "doc_id", "n_frames", "sample_rate", "bitrate_kbps_avg",
-        "duration_ms", "id3_bytes", "stream_bytes",
+        "n_frames", "sample_rate", "bitrate_kbps_avg", "duration_ms",
+        "id3_bytes", "stream_bytes",
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                frames = [
-                    (1 + (d + i) % 14, d % 3, (d + i) % 2)
-                    for i in range(5 + d % 7)
-                ]
-                id3 = (
-                    b"\xff\xfb" + b"x" * (5 + d % 5) if d % 3 == 0 else None
-                )
-                meta = parse_mp3_header(encode_mp3(frames, id3_body=id3))
-                rows["doc_id"].append(d)
-                for k in cols[1:]:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
+    def walk(doc_id):
+        d = int(doc_id)
+        frames = [
+            (1 + (d + i) % 14, d % 3, (d + i) % 2)
+            for i in range(5 + d % 7)
+        ]
+        id3 = b"\xff\xfb" + b"x" * (5 + d % 5) if d % 3 == 0 else None
+        meta = parse_mp3_header(encode_mp3(frames, id3_body=id3))
+        yield (d, *(meta[k] for k in cols))
 
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_frames int, sample_rate int, "
-            "bitrate_kbps_avg int, duration_ms bigint, id3_bytes bigint, "
-            "stream_bytes bigint"
-        ),
+    out = map_rows(
+        spread(docs),
+        walk,
+        "doc_id bigint, n_frames int, sample_rate int, "
+        "bitrate_kbps_avg int, duration_ms bigint, id3_bytes bigint, "
+        "stream_bytes bigint",
     )
     return out.orderBy("doc_id")
 
@@ -2865,60 +2738,44 @@ def multimodal_progressive_pixel_stats(spark: SparkSession, sf_dir: str) -> Data
     arithmetic in doc_id, so the DuckDB oracle recomputes all four
     stats without understanding any container: a scan-script,
     correction-bit, bit-unpack, or de-interlace bug breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 6 + 2, d % 4 + 2
-                if d % 4 == 0:
-                    wb, hb = d % 4 + 1, d % 3 + 1
-                    wpx, hpx = 8 * wb, 8 * hb
-                    px = bytes(
-                        (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
-                        for y in range(hpx)
-                        for x in range(wpx)
-                    )
-                    payloads.append(
-                        multimodal.encode_jpeg_progressive(
-                            px, wpx, hpx, channels=1,
-                            restart_interval=2 if d % 2 else 0,
-                            dc_al=d % 2 + 1, ac_al=(d // 2) % 2 + 1,
-                        )
-                    )
-                elif d % 4 == 1:
-                    px16 = b"".join(
-                        (((d * 7 + i * 13) % 256) * 257).to_bytes(2, "big")
-                        for i in range(w * h * 3)
-                    )
-                    payloads.append(
-                        multimodal.encode_png(px16, w, h, color_type=2, bit_depth=16)
-                    )
-                elif d % 4 == 2:
-                    px = bytes((d * 11 + i * 5) % 256 for i in range(w * h * 3))
-                    payloads.append(
-                        multimodal.encode_png(px, w, h, color_type=2, interlace=1)
-                    )
-                else:
-                    idx = bytes((d * 3 + j) % 16 for j in range(w * h))
-                    plte = bytes(
-                        (p * 17 + c * 7) % 256 for p in range(16) for c in range(3)
-                    )
-                    payloads.append(
-                        multimodal.encode_png(
-                            idx, w, h, color_type=3, bit_depth=4, plte=plte,
-                            interlace=1,
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 6 + 2, d % 4 + 2
+        if d % 4 == 0:
+            wb, hb = d % 4 + 1, d % 3 + 1
+            wpx, hpx = 8 * wb, 8 * hb
+            px = bytes(
+                (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
+                for y in range(hpx)
+                for x in range(wpx)
+            )
+            yield d, multimodal.encode_jpeg_progressive(
+                px, wpx, hpx, channels=1,
+                restart_interval=2 if d % 2 else 0,
+                dc_al=d % 2 + 1, ac_al=(d // 2) % 2 + 1,
+            )
+        elif d % 4 == 1:
+            px16 = b"".join(
+                (((d * 7 + i * 13) % 256) * 257).to_bytes(2, "big")
+                for i in range(w * h * 3)
+            )
+            yield d, multimodal.encode_png(px16, w, h, color_type=2, bit_depth=16)
+        elif d % 4 == 2:
+            px = bytes((d * 11 + i * 5) % 256 for i in range(w * h * 3))
+            yield d, multimodal.encode_png(px, w, h, color_type=2, interlace=1)
+        else:
+            idx = bytes((d * 3 + j) % 16 for j in range(w * h))
+            plte = bytes(
+                (p * 17 + c * 7) % 256 for p in range(16) for c in range(3)
+            )
+            yield d, multimodal.encode_png(
+                idx, w, h, color_type=3, bit_depth=4, plte=plte,
+                interlace=1,
+            )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -6495,30 +6352,20 @@ def multimodal_lossless_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFra
     the position-weighted checksum directly from the formula. A
     predictor, context-classification, ladder-selection, carry,
     stuffing, or restart bug breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 6 + 2, d % 4 + 2
-                px = bytes((d * 7 + i * 13) % 256 for i in range(w * h))
-                payloads.append(
-                    multimodal.encode_jpeg_lossless(
-                        px, w, h, channels=1,
-                        predictor=d % 7 + 1,
-                        restart_interval=d % 3,
-                        arith=d % 2 == 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 6 + 2, d % 4 + 2
+        px = bytes((d * 7 + i * 13) % 256 for i in range(w * h))
+        yield d, multimodal.encode_jpeg_lossless(
+            px, w, h, channels=1,
+            predictor=d % 7 + 1,
+            restart_interval=d % 3,
+            arith=d % 2 == 0,
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -6571,41 +6418,31 @@ def multimodal_lossless_subsampled_stats(spark: SparkSession, sf_dir: str) -> Da
     epoch, padding-crop, or replication bug breaks the hash;
     arbitrary-chroma plane-exactness is pinned in
     tests/test_jpeg_lossless.py."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 6 + 5, d % 5 + 5
-                hs = 1 if d % 3 == 1 else 2
-                vs = 1 if d % 3 == 2 else 2
-                px = bytearray()
-                for y in range(h):
-                    for x in range(w):
-                        cy, cx = y - y % vs, x - x % hs
-                        px += bytes([
-                            (d * 7 + (y * w + x) * 13 + 5) % 256,
-                            (d * 11 + cy * 31 + cx * 17 + 29 + 3) % 256,
-                            (d * 11 + cy * 31 + cx * 17 + 58 + 3) % 256,
-                        ])
-                payloads.append(
-                    multimodal.encode_jpeg_lossless(
-                        bytes(px), w, h, channels=3,
-                        predictor=d % 7 + 1,
-                        restart_interval=d % 3,
-                        arith=d % 2 == 0,
-                        subsampling=(hs, vs),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 6 + 5, d % 5 + 5
+        hs = 1 if d % 3 == 1 else 2
+        vs = 1 if d % 3 == 2 else 2
+        px = bytearray()
+        for y in range(h):
+            for x in range(w):
+                cy, cx = y - y % vs, x - x % hs
+                px += bytes([
+                    (d * 7 + (y * w + x) * 13 + 5) % 256,
+                    (d * 11 + cy * 31 + cx * 17 + 29 + 3) % 256,
+                    (d * 11 + cy * 31 + cx * 17 + 58 + 3) % 256,
+                ])
+        yield d, multimodal.encode_jpeg_lossless(
+            bytes(px), w, h, channels=3,
+            predictor=d % 7 + 1,
+            restart_interval=d % 3,
+            arith=d % 2 == 0,
+            subsampling=(hs, vs),
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -6648,30 +6485,20 @@ def multimodal_hierarchical_pixel_stats(spark: SparkSession, sf_dir: str) -> Dat
     position-weighted checksum directly from the formula — an
     expansion-filter, frame-sequencing, fold, or EXP-cropping bug
     breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 7 + 2, d % 5 + 2
-                px = bytes((d * 11 + i * 17) % 256 for i in range(w * h))
-                payloads.append(
-                    multimodal.encode_jpeg_hierarchical(
-                        px, w, h, channels=1,
-                        levels=d % 2 + 1,
-                        restart_interval=d % 3,
-                        arith=d % 2 == 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 7 + 2, d % 5 + 2
+        px = bytes((d * 11 + i * 17) % 256 for i in range(w * h))
+        yield d, multimodal.encode_jpeg_hierarchical(
+            px, w, h, channels=1,
+            levels=d % 2 + 1,
+            restart_interval=d % 3,
+            arith=d % 2 == 0,
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -6717,31 +6544,21 @@ def multimodal_hierarchical_dct_stats(spark: SparkSession, sf_dir: str) -> DataF
     bug perturbs pixels and breaks the hash. Arbitrary-pixel behavior
     (nonzero ACs, +-1 closed-loop bound, hand-built differential
     frames) is pinned in tests/test_jpeg_hierarchical.py."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 9 + 4, d % 6 + 4
-                px = bytes([(d * 29 + 60) % 256] * (w * h))
-                payloads.append(
-                    multimodal.encode_jpeg_hierarchical(
-                        px, w, h, channels=1,
-                        levels=d % 2 + 1,
-                        restart_interval=d % 3,
-                        arith=d % 2 == 0,
-                        mode="dct",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 9 + 4, d % 6 + 4
+        px = bytes([(d * 29 + 60) % 256] * (w * h))
+        yield d, multimodal.encode_jpeg_hierarchical(
+            px, w, h, channels=1,
+            levels=d % 2 + 1,
+            restart_interval=d % 3,
+            arith=d % 2 == 0,
+            mode="dct",
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -6785,31 +6602,21 @@ def multimodal_hierarchical_prog_stats(spark: SparkSession, sf_dir: str) -> Data
     behavior (nonzero ACs, the prog==sequential byte-equality, a
     hand-built SOF6 differential stream) is pinned in
     tests/test_jpeg_hierarchical.py."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 8 + 4, d % 7 + 4
-                px = bytes([(d * 41 + 23) % 256] * (w * h))
-                payloads.append(
-                    multimodal.encode_jpeg_hierarchical(
-                        px, w, h, channels=1,
-                        levels=d % 2 + 1,
-                        restart_interval=d % 3,
-                        arith=d % 2 == 0,
-                        mode="progressive",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 8 + 4, d % 7 + 4
+        px = bytes([(d * 41 + 23) % 256] * (w * h))
+        yield d, multimodal.encode_jpeg_hierarchical(
+            px, w, h, channels=1,
+            levels=d % 2 + 1,
+            restart_interval=d % 3,
+            arith=d % 2 == 0,
+            mode="progressive",
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -6860,32 +6667,22 @@ def multimodal_hierarchical_color_stats(spark: SparkSession, sf_dir: str) -> Dat
     even where px_sum survives). Arbitrary-pixel color behavior and
     the prog==sequential byte-equality are pinned in
     tests/test_jpeg_hierarchical.py."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 7 + 4, d % 5 + 4
-                r, g, b = (d * 17 + 30) % 256, (d * 23 + 70) % 256, (d * 31 + 110) % 256
-                px = bytes([r, g, b] * (w * h))
-                payloads.append(
-                    multimodal.encode_jpeg_hierarchical(
-                        px, w, h, channels=3,
-                        levels=d % 2 + 1,
-                        restart_interval=d % 3,
-                        arith=d % 2 == 0,
-                        mode="dct" if d % 4 < 2 else "progressive",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = d % 7 + 4, d % 5 + 4
+        r, g, b = (d * 17 + 30) % 256, (d * 23 + 70) % 256, (d * 31 + 110) % 256
+        px = bytes([r, g, b] * (w * h))
+        yield d, multimodal.encode_jpeg_hierarchical(
+            px, w, h, channels=3,
+            levels=d % 2 + 1,
+            restart_interval=d % 3,
+            arith=d % 2 == 0,
+            mode="dct" if d % 4 < 2 else "progressive",
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return _sorted_stats(multimodal.extract_pixel_stats(payloads))
 
 
@@ -7866,35 +7663,25 @@ def multimodal_exif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, or sub-IFD bug breaks the hash. Malformed-IFD classes
     (bad BOM, bad magic, truncated IFD, OOB value offset, big-endian
     segment length confusion) raise precisely — tests/test_exif.py.
-    Decode is scan-local Arrow-batched mapInPandas; zero shuffles
+    Decode is scan-local through ``map_rows``; zero shuffles
     before the oracle-determinism orderBy."""
-    import pandas as pd  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     base = multimodal.encode_jpeg_baseline(bytes([128] * 64), 8, 8, channels=1)
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    multimodal.insert_exif_app1(
-                        base,
-                        byte_order="MM" if d % 2 == 0 else "II",
-                        width=100 + d % 50,
-                        height=80 + d % 40,
-                        orientation=1 + d % 8,
-                        xres=(72 + d % 10, 1 + d % 3),
-                        model=(f"c{d % 5}" if d % 4 == 0 else f"cam{d % 5}"),
-                        iso=100 * (1 + d % 4),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        yield d, multimodal.insert_exif_app1(
+            base,
+            byte_order="MM" if d % 2 == 0 else "II",
+            width=100 + d % 50,
+            height=80 + d % 40,
+            orientation=1 + d % 8,
+            xres=(72 + d % 10, 1 + d % 3),
+            model=(f"c{d % 5}" if d % 4 == 0 else f"cam{d % 5}"),
+            iso=100 * (1 + d % 4),
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return multimodal.extract_exif_stats(payloads).orderBy("doc_id")
 
 
@@ -8083,35 +7870,25 @@ def multimodal_exif_orient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples pin the exact transform — the oracle recomputes every
     output pixel through the inverse index mapping, so a transposed
     axis, wrong rotation direction, or missed dimension swap in ANY of
-    the 8 cases breaks the hash. Scan-local Arrow-batched decode."""
-    import pandas as pd  # noqa: PLC0415
-
+    the 8 cases breaks the hash. Scan-local decode through ``map_rows``."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 2 + d % 5, 2 + d % 4
-                px = bytes((d * 7 + i * 13) % 256 for i in range(w * h))
-                jp = multimodal.encode_jpeg_lossless(
-                    px, w, h, channels=1, predictor=d % 7 + 1
-                )
-                payloads.append(
-                    multimodal.insert_exif_app1(
-                        jp,
-                        byte_order="II" if d % 2 else "MM",
-                        width=w,
-                        height=h,
-                        orientation=1 + d % 8,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        d = int(doc_id)
+        w, h = 2 + d % 5, 2 + d % 4
+        px = bytes((d * 7 + i * 13) % 256 for i in range(w * h))
+        jp = multimodal.encode_jpeg_lossless(
+            px, w, h, channels=1, predictor=d % 7 + 1
+        )
+        yield d, multimodal.insert_exif_app1(
+            jp,
+            byte_order="II" if d % 2 else "MM",
+            width=w,
+            height=h,
+            orientation=1 + d % 8,
+        )
 
-    payloads = text.spread(docs).mapInPandas(
-        synth, schema="doc_id bigint, payload binary"
-    )
+    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
     return multimodal.extract_oriented_pixel_stats(payloads).orderBy("doc_id")
 
 

@@ -548,8 +548,8 @@ def streaming_upsert_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_phash_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live IMAGE-dedup admission: arriving documents render, REALLY
-    decode, and perceptually hash (multimodal.extract_dhash — an
-    Arrow-batched Python stage inside the streaming topology), then
+    decode, and perceptually hash (multimodal.extract_dhash — a
+    ``map_rows`` Python stage inside the streaming topology), then
     probe the static corpus's hash set via a broadcast stream-static
     left join. The multimodal twin of streaming_near_dup_probe: the
     stream stays stateless (hashing is row-local; the store is an

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from gomrjob_spark.catalog import load_table
 from gomrjob_spark.operators import urls
+from gomrjob_spark.pipeline import map_rows
 from gomrjob_spark.plans.html import _html_gate_oracle
 from gomrjob_spark.plans.registry import query
 
@@ -341,58 +342,42 @@ def warc_parse_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     the formulas). Malformation classes (bad magic, unterminated
     headers, missing/invalid Content-Length, truncated payload,
     missing terminator) raise precisely — tests/test_warc.py.
-    Scan-local Arrow-batched synth+parse; zero shuffles before the
+    Scan-local synth+parse through ``map_rows``; zero shuffles before the
     oracle-determinism orderBy."""
-    import pandas as pd  # noqa: PLC0415
+    import hashlib  # noqa: PLC0415
 
+    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.warc import encode_warc, parse_warc
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "rec_idx", "target_uri", "warc_date",
-                "content_length", "payload_md5",
-            )}
-            import hashlib
+    def records(doc_id):
+        d = int(doc_id)
+        recs = []
+        for j in range(1 + d % 3):
+            payload = (
+                f"doc {d} rec {j} " + "x" * (10 + (d + j) % 7)
+                + ("\r\n\r\nWARC/1.0\r\n" if d % 5 == 0 and j == 0
+                   else "")
+            ).encode("ascii")
+            recs.append(
+                {
+                    "uri": f"https://w{d}.example.com/p{j}",
+                    "date": f"2026-01-{1 + d % 28:02d}T00:00:00Z",
+                    "payload": payload,
+                }
+            )
+        for j, rec in enumerate(parse_warc(encode_warc(recs))):
+            yield (
+                d, j, rec["uri"], rec["date"], rec["content_length"],
+                hashlib.md5(rec["payload"]).hexdigest(),
+            )
 
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                recs = []
-                for j in range(1 + d % 3):
-                    payload = (
-                        f"doc {d} rec {j} " + "x" * (10 + (d + j) % 7)
-                        + ("\r\n\r\nWARC/1.0\r\n" if d % 5 == 0 and j == 0
-                           else "")
-                    ).encode("ascii")
-                    recs.append(
-                        {
-                            "uri": f"https://w{d}.example.com/p{j}",
-                            "date": f"2026-01-{1 + d % 28:02d}T00:00:00Z",
-                            "payload": payload,
-                        }
-                    )
-                stream = encode_warc(recs)
-                for j, rec in enumerate(parse_warc(stream)):
-                    rows["doc_id"].append(d)
-                    rows["rec_idx"].append(j)
-                    rows["target_uri"].append(rec["uri"])
-                    rows["warc_date"].append(rec["date"])
-                    rows["content_length"].append(rec["content_length"])
-                    rows["payload_md5"].append(
-                        hashlib.md5(rec["payload"]).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
-
-    from gomrjob_spark.operators.text import spread
-
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, rec_idx int, target_uri string, "
-            "warc_date string, content_length bigint, payload_md5 string"
-        ),
+    out = map_rows(
+        spread(docs),
+        records,
+        "doc_id bigint, rec_idx int, target_uri string, "
+        "warc_date string, content_length bigint, payload_md5 string",
     )
     return out.orderBy("doc_id", "rec_idx")
 
@@ -439,12 +424,11 @@ def warc_http_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     also cross-checks Content-Length against the actual body size
     (truncation detection). The oracle recomputes status, media type,
     charset parameter, header count, and body length+md5 from the
-    formulas alone. Scan-local Arrow-batched synth+parse; zero
+    formulas alone. Scan-local synth+parse through ``map_rows``; zero
     shuffles before the oracle-determinism orderBy."""
     import hashlib  # noqa: PLC0415
 
-    import pandas as pd  # noqa: PLC0415
-
+    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.warc import (
         encode_http_response,
         encode_warc,
@@ -454,65 +438,50 @@ def warc_http_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "status_code", "reason", "mime_type", "charset",
-                "n_headers", "body_len", "body_md5",
-            )}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                body = (
-                    f"doc {d} body " + "y" * (d % 11)
-                    + ("\r\nContent-Type: fake/decoy\r\n" if d % 4 == 0
-                       else "")
-                ).encode("ascii")
-                status, reason = (404, "Not Found") if d % 10 == 0 else (200, "OK")
-                ctype = {
-                    0: "text/html; charset=utf-8",
-                    1: "text/plain",
-                    2: "text/html; charset=iso-8859-1",
-                }[d % 3]
-                payload = encode_http_response(
-                    status, reason,
-                    [("Content-Type", ctype), ("X-Doc", str(d))], body,
-                )
-                stream = encode_warc([{
-                    "uri": f"https://w{d}.example.com/",
-                    "date": f"2026-01-{1 + d % 28:02d}T00:00:00Z",
-                    "payload": payload,
-                    "type": "response",
-                }])
-                (rec,) = parse_warc(stream)
-                resp = parse_http_response(rec["payload"])
-                raw_ct = resp["headers"]["content-type"]
-                mime = raw_ct.split(";", 1)[0].strip()
-                charset = None
-                for part in raw_ct.split(";")[1:]:
-                    k, _, v = part.strip().partition("=")
-                    if k.lower() == "charset":
-                        charset = v
-                rows["doc_id"].append(d)
-                rows["status_code"].append(resp["status_code"])
-                rows["reason"].append(resp["reason"])
-                rows["mime_type"].append(mime)
-                rows["charset"].append(charset)
-                rows["n_headers"].append(len(resp["headers"]))
-                rows["body_len"].append(len(resp["body"]))
-                rows["body_md5"].append(
-                    hashlib.md5(resp["body"]).hexdigest()
-                )
-            yield pd.DataFrame(rows)
+    def headers(doc_id):
+        d = int(doc_id)
+        body = (
+            f"doc {d} body " + "y" * (d % 11)
+            + ("\r\nContent-Type: fake/decoy\r\n" if d % 4 == 0
+               else "")
+        ).encode("ascii")
+        status, reason = (404, "Not Found") if d % 10 == 0 else (200, "OK")
+        ctype = {
+            0: "text/html; charset=utf-8",
+            1: "text/plain",
+            2: "text/html; charset=iso-8859-1",
+        }[d % 3]
+        payload = encode_http_response(
+            status, reason,
+            [("Content-Type", ctype), ("X-Doc", str(d))], body,
+        )
+        stream = encode_warc([{
+            "uri": f"https://w{d}.example.com/",
+            "date": f"2026-01-{1 + d % 28:02d}T00:00:00Z",
+            "payload": payload,
+            "type": "response",
+        }])
+        (rec,) = parse_warc(stream)
+        resp = parse_http_response(rec["payload"])
+        raw_ct = resp["headers"]["content-type"]
+        mime = raw_ct.split(";", 1)[0].strip()
+        charset = None
+        for part in raw_ct.split(";")[1:]:
+            k, _, v = part.strip().partition("=")
+            if k.lower() == "charset":
+                charset = v
+        yield (
+            d, resp["status_code"], resp["reason"], mime, charset,
+            len(resp["headers"]), len(resp["body"]),
+            hashlib.md5(resp["body"]).hexdigest(),
+        )
 
-    from gomrjob_spark.operators.text import spread
-
-    out = spread(docs).mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, status_code int, reason string, "
-            "mime_type string, charset string, n_headers bigint, "
-            "body_len bigint, body_md5 string"
-        ),
+    out = map_rows(
+        spread(docs),
+        headers,
+        "doc_id bigint, status_code int, reason string, "
+        "mime_type string, charset string, n_headers bigint, "
+        "body_len bigint, body_md5 string",
     )
     return out.orderBy("doc_id")
 
@@ -1535,11 +1504,9 @@ def _wet_walked(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_train_pipeline: each document synthesizes a WARC 'response'
     record whose HTTP payload body is its HTML page (the html-family
     formula via the COLUMN program), the record walks length-delimited
-    and the HTTP response parses strictly — Arrow-batched, scan-local.
-    Returns (doc_id, status_code, mime_type, html) for ALL documents;
-    callers apply the HTTP-layer gate."""
-    import pandas as pd  # noqa: PLC0415
-
+    and the HTTP response parses strictly — through ``map_rows``,
+    scan-local. Returns (doc_id, status_code, mime_type, html) for ALL
+    documents; callers apply the HTTP-layer gate."""
     from gomrjob_spark.operators.html import synth_html
     from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.warc import (
@@ -1557,36 +1524,32 @@ def _wet_walked(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_html("doc_id", "text", "lang").alias("page"),
     )
 
-    def wrap_walk(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "status_code": [], "mime_type": [],
-                    "html": []}
-            for doc_id, page in zip(pdf["doc_id"], pdf["page"]):
-                d = int(doc_id)
-                status, reason = (404, "Not Found") if d % 10 == 0 else (200, "OK")
-                ctype = "text/plain" if d % 3 == 1 else "text/html; charset=utf-8"
-                stream = encode_warc([{
-                    "uri": f"https://w{d}.example.com/",
-                    "date": f"2026-01-{1 + d % 28:02d}T00:00:00Z",
-                    "payload": encode_http_response(
-                        status, reason, [("Content-Type", ctype)],
-                        page.encode("utf-8"),
-                    ),
-                    "type": "response",
-                }])
-                (rec,) = parse_warc(stream)
-                resp = parse_http_response(rec["payload"])
-                rows["doc_id"].append(d)
-                rows["status_code"].append(resp["status_code"])
-                rows["mime_type"].append(
-                    resp["headers"]["content-type"].split(";", 1)[0].strip()
-                )
-                rows["html"].append(resp["body"].decode("utf-8"))
-            yield pd.DataFrame(rows)
+    def wrap_walk(doc_id, page):
+        d = int(doc_id)
+        status, reason = (404, "Not Found") if d % 10 == 0 else (200, "OK")
+        ctype = "text/plain" if d % 3 == 1 else "text/html; charset=utf-8"
+        stream = encode_warc([{
+            "uri": f"https://w{d}.example.com/",
+            "date": f"2026-01-{1 + d % 28:02d}T00:00:00Z",
+            "payload": encode_http_response(
+                status, reason, [("Content-Type", ctype)],
+                page.encode("utf-8"),
+            ),
+            "type": "response",
+        }])
+        (rec,) = parse_warc(stream)
+        resp = parse_http_response(rec["payload"])
+        yield (
+            d,
+            resp["status_code"],
+            resp["headers"]["content-type"].split(";", 1)[0].strip(),
+            resp["body"].decode("utf-8"),
+        )
 
-    return spread(paged).mapInPandas(
+    return map_rows(
+        spread(paged),
         wrap_walk,
-        schema="doc_id bigint, status_code int, mime_type string, html string",
+        "doc_id bigint, status_code int, mime_type string, html string",
     )
 
 
@@ -1603,8 +1566,8 @@ def corpus_wet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
        formula, built by the COLUMN program so the wrap layers cannot
        drift from the gated synthesis);
     2. the WARC walk is length-delimited (sources.warc.parse_warc) and
-       the HTTP parse strict (parse_http_response) — Arrow-batched,
-       scan-local;
+       the HTTP parse strict (parse_http_response) — through
+       ``map_rows``, scan-local;
     3. non-200 responses (doc_id%10==0 -> 404) and non-HTML media
        types (doc_id%3==1 -> text/plain) drop at the HTTP layer —
        the real pipeline's cheap first filter;

@@ -211,7 +211,7 @@ def parse_http_response(payload: bytes) -> dict:
 # exactly right here because gzip members are not splittable — the file
 # is the natural parallel unit, and a 1000-executor cluster gets its
 # parallelism from the file COUNT (64k+ segments), not from splitting.
-# The record walk then runs Arrow-batched and scan-local (zero
+# The record walk then runs through ``pipeline.map_rows``, scan-local (zero
 # shuffles); ``binaryFile`` pushes the ``pathGlobFilter`` down to file
 # listing, so non-WARC files in the bucket are never even opened.
 # (binaryFile caps single files at spark.sql.sources.binaryFile.
@@ -246,20 +246,15 @@ def warc_records_from_binary_files(files_df, with_ids: bool = False):
     and streaming readers — stream==batch is the same code). Transparent
     member decompression for ``*.gz`` paths (gzip is applied to the
     WHOLE file, so it must happen before the length-delimited walk);
-    ``rec_idx`` is the record's position in its file. Arrow-batched
-    ``mapInPandas``, scan-local: the only columns shipped to Python are
+    ``rec_idx`` is the record's position in its file. Runs through
+    ``map_rows``, scan-local: the only columns shipped to Python are
     path + content, and nothing shuffles. ``with_ids=True`` adds the
     record-identity headers (record_id, refers_to, profile) the
     revisit-resolution join needs."""
     import gzip  # noqa: PLC0415
 
-    import pandas as pd  # noqa: PLC0415
+    from gomrjob_spark.pipeline import map_rows  # noqa: PLC0415
 
-    base_cols = (
-        "file_name", "rec_idx", "warc_type", "target_uri",
-        "warc_date", "content_length", "payload",
-        "offset", "record_bytes",
-    )
     id_cols = (
         ("record_id", "refers_to", "refers_to_uri", "refers_to_date",
          "profile")
@@ -267,30 +262,22 @@ def warc_records_from_binary_files(files_df, with_ids: bool = False):
         else ()
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in base_cols + id_cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = str(path).rsplit("/", 1)[-1]
-                data = bytes(content)
-                if name.endswith(".gz"):
-                    data = gzip.decompress(data)
-                for j, rec in enumerate(parse_warc(data)):
-                    rows["file_name"].append(name)
-                    rows["rec_idx"].append(j)
-                    rows["warc_type"].append(rec["type"])
-                    rows["target_uri"].append(rec["uri"])
-                    rows["warc_date"].append(rec["date"])
-                    rows["content_length"].append(rec["content_length"])
-                    rows["payload"].append(rec["payload"])
-                    rows["offset"].append(rec["offset"])
-                    rows["record_bytes"].append(rec["record_bytes"])
-                    for k in id_cols:
-                        rows[k].append(rec[k])
-            yield pd.DataFrame(rows)
+    def records(path, content):
+        name = str(path).rsplit("/", 1)[-1]
+        data = bytes(content)
+        if name.endswith(".gz"):
+            data = gzip.decompress(data)
+        for j, rec in enumerate(parse_warc(data)):
+            yield (
+                name, j, rec["type"], rec["uri"], rec["date"],
+                rec["content_length"], rec["payload"], rec["offset"],
+                rec["record_bytes"], *(rec[k] for k in id_cols),
+            )
 
-    return files_df.select("path", "content").mapInPandas(
-        run, schema=WARC_RECORDS_IDS_SCHEMA if with_ids else WARC_RECORDS_SCHEMA
+    return map_rows(
+        files_df.select("path", "content"),
+        records,
+        WARC_RECORDS_IDS_SCHEMA if with_ids else WARC_RECORDS_SCHEMA,
     )
 
 
@@ -360,52 +347,33 @@ def warc_member_records_from_binary_files(files_df):
     parsed WARC record inside it. Enforces the Common Crawl contract —
     exactly ONE record per member (a multi-record member would make the
     compressed offset useless for single-record access) — raising
-    ValueError otherwise. Arrow-batched, scan-local."""
-    import pandas as pd  # noqa: PLC0415
+    ValueError otherwise. Runs through ``map_rows``, scan-local."""
+    from gomrjob_spark.pipeline import map_rows  # noqa: PLC0415
 
-    def run(batches):
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "file_name", "rec_idx", "warc_type", "target_uri",
-                    "warc_date", "content_length", "payload",
-                    "cmp_offset", "cmp_bytes", "record_bytes",
+    def members(path, content):
+        name = str(path).rsplit("/", 1)[-1]
+        for j, (off, csize, raw) in enumerate(split_gzip_members(bytes(content))):
+            recs = parse_warc(raw)
+            if len(recs) != 1:
+                raise ValueError(
+                    f"gzip member {j} of {name} holds {len(recs)} "
+                    "records; the member-per-record layout requires "
+                    "exactly 1"
                 )
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = str(path).rsplit("/", 1)[-1]
-                for j, (off, csize, raw) in enumerate(
-                    split_gzip_members(bytes(content))
-                ):
-                    recs = parse_warc(raw)
-                    if len(recs) != 1:
-                        raise ValueError(
-                            f"gzip member {j} of {name} holds {len(recs)} "
-                            "records; the member-per-record layout requires "
-                            "exactly 1"
-                        )
-                    rec = recs[0]
-                    rows["file_name"].append(name)
-                    rows["rec_idx"].append(j)
-                    rows["warc_type"].append(rec["type"])
-                    rows["target_uri"].append(rec["uri"])
-                    rows["warc_date"].append(rec["date"])
-                    rows["content_length"].append(rec["content_length"])
-                    rows["payload"].append(rec["payload"])
-                    rows["cmp_offset"].append(off)
-                    rows["cmp_bytes"].append(csize)
-                    rows["record_bytes"].append(rec["record_bytes"])
-            yield pd.DataFrame(rows)
+            rec = recs[0]
+            yield (
+                name, j, rec["type"], rec["uri"], rec["date"],
+                rec["content_length"], rec["payload"], off, csize,
+                rec["record_bytes"],
+            )
 
-    return files_df.select("path", "content").mapInPandas(
-        run,
-        schema=(
-            "file_name string, rec_idx int, warc_type string, "
-            "target_uri string, warc_date string, content_length bigint, "
-            "payload binary, cmp_offset bigint, cmp_bytes bigint, "
-            "record_bytes bigint"
-        ),
+    return map_rows(
+        files_df.select("path", "content"),
+        members,
+        "file_name string, rec_idx int, warc_type string, "
+        "target_uri string, warc_date string, content_length bigint, "
+        "payload binary, cmp_offset bigint, cmp_bytes bigint, "
+        "record_bytes bigint",
     )
 
 

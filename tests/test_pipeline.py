@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from gomrjob_spark.counters import Counters
-from gomrjob_spark.pipeline import COUNT, SUM, Pipeline, Step
+from gomrjob_spark.pipeline import COUNT, SUM, Pipeline, Step, map_rows
 from gomrjob_spark.plans.mr import field_count_mapper
 from gomrjob_spark.testing import assert_golden, lines_df, run_steps
 
@@ -294,6 +294,64 @@ def test_combiner_ignored_for_builtin_reducer(spark):
         .collect()
     )
     assert [(r.key, r.value) for r in got] == [("a", 3)]
+
+
+MAP_ROWS_IN = [(i, f"s{i}", bytes([i, 255 - i])) for i in range(12)]
+MAP_ROWS_SCHEMA = "i bigint, j int, s string, n int, b binary"
+
+
+def _fan_out_fns():
+    """Row i yields i % 3 tuples (none for i % 3 == 0); ``s`` and ``n``
+    are None on alternate tuples, ``b`` passes through. Built inside a
+    function so the workers receive them by value."""
+
+    def fan_out(i, s, b):
+        for j in range(i % 3):
+            yield i, j, None if j else s, None if (i + j) % 2 else i * j, b
+
+    def fan_out_list(i, s, b):
+        return list(fan_out(i, s, b)) or None
+
+    return {"generator": fan_out, "list": fan_out_list}
+
+
+@pytest.mark.parametrize("shape", ["generator", "list"])
+def test_map_rows_matches_plain_python(spark, shape):
+    """``map_rows`` returns exactly the tuples ``fn`` yields row by row —
+    several per row, none for some rows, None in int and string columns,
+    binary values unchanged — whether ``fn`` is a generator or returns a
+    list or None."""
+    fns = _fan_out_fns()
+    df = spark.createDataFrame(MAP_ROWS_IN, "i bigint, s string, b binary").repartition(3)
+    got = [tuple(r) for r in map_rows(df, fns[shape], MAP_ROWS_SCHEMA).collect()]
+    want = [t for row in MAP_ROWS_IN for t in fns["generator"](*row)]
+    assert sorted(got, key=lambda t: t[:2]) == sorted(want, key=lambda t: t[:2])
+    assert any(t[2] is None for t in got) and any(t[3] is None for t in got)
+
+
+def test_map_rows_empty_batches(spark):
+    """Batches that produce no rows, and an input filtered to nothing,
+    both give an empty result with the declared schema."""
+    fan_out = _fan_out_fns()["generator"]
+    df = spark.createDataFrame(MAP_ROWS_IN, "i bigint, s string, b binary").repartition(3)
+    no_output = map_rows(df.filter("i % 3 = 0"), fan_out, MAP_ROWS_SCHEMA)
+    no_input = map_rows(df.filter("i < 0"), fan_out, MAP_ROWS_SCHEMA)
+    assert no_output.collect() == [] and no_input.collect() == []
+    assert no_output.schema == no_input.schema
+    assert [f.name for f in no_output.schema] == ["i", "j", "s", "n", "b"]
+
+
+def test_map_rows_keeps_bigints_next_to_none(spark):
+    """A bigint column that also holds None keeps every bit (a float64
+    detour would round 2**60 + 1), and an all-None batch is null in
+    every column type."""
+    df = spark.createDataFrame([(1,), (2,)], "i bigint").repartition(1)
+
+    def fn(i):
+        return [(i, 2**60 + 1 if i == 1 else None, None, None)]
+
+    got = map_rows(df, fn, "i bigint, big bigint, s string, b binary").orderBy("i").collect()
+    assert [tuple(r) for r in got] == [(1, 2**60 + 1, None, None), (2, None, None, None)]
 
 
 def test_cpu_report_nonzero_after_run(spark):

@@ -149,6 +149,28 @@ def test_backfill_names_all_exist_and_disjoint():
     assert not overlap, f"names in both window lists: {sorted(overlap)}"
 
 
+def test_row_stages_go_through_map_rows():
+    """Per-row Python stages use ``pipeline.map_rows``: ``mapInPandas`` is
+    called only by the batch stages that need a whole Arrow batch — the
+    Step mapper and combiner (``pipeline.py``), the numpy keyer
+    (``operators/dedup.py``) and the two batch stages of
+    ``operators/text.py``."""
+    import pathlib
+
+    import gomrjob_spark
+
+    root = pathlib.Path(gomrjob_spark.__file__).parent
+    allowed = {"pipeline.py", "operators/dedup.py", "operators/text.py"}
+    offenders = sorted(
+        f"{path.relative_to(root).as_posix()}:{n}"
+        for path in root.rglob("*.py")
+        if path.relative_to(root).as_posix() not in allowed
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".mapInPandas(" in line
+    )
+    assert not offenders, f"hand-rolled row loops, use pipeline.map_rows: {offenders}"
+
+
 def test_registry_tiering():
     """Window discipline: first-50 all oracle-eligible; rows-only last."""
     names = list(plans.QUERIES)
