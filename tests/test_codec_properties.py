@@ -6,6 +6,7 @@ not just the fixture shapes. Pure Python, no Spark session."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -277,3 +278,93 @@ def test_jpeg_truncated_mid_entropy_raises_valueerror():
     assert payload.endswith(b"\xff\xd9")
     with pytest.raises(ValueError):
         decode_image(payload[:-8])
+
+
+# ------------------------------------------------------- encoder byte pins
+# sha256 of every JPEG writer's output on fixed inputs: a refactor of the
+# codec must reproduce these streams byte for byte (oracle-gated queries
+# hash pixels decoded from exactly these bytes). Rows: (case, writer,
+# (width, height, channels, pixel seed), keyword arguments, sha256).
+
+_JPEG_PINS = [
+    ("baseline-gray", "encode_jpeg_baseline", (13, 11, 1, 1),
+     dict(),
+     "3f4545f3b4ee213e817083d357f1483e6bb079c7a2dc87984a60560ee2d71c7b"),
+    ("baseline-rgb420-ri", "encode_jpeg_baseline", (19, 13, 3, 2),
+     dict(channels=3, quant=3, restart_interval=2, subsampling=(2, 2)),
+     "3b7d04ceddd77fad62260e7be283eea6600a9598e6937f0cf6afc90ad56da807"),
+    ("progressive-rgb", "encode_jpeg_progressive", (19, 13, 3, 3),
+     dict(channels=3),
+     "1d9ef047f65597780da49b9f686e95503665c3f8ccf511edfedaa7fa238a4cb9"),
+    ("progressive-gray-deep", "encode_jpeg_progressive", (16, 16, 1, 4),
+     dict(quant=2, restart_interval=3, dc_al=2, ac_al=2, bands=((1, 2), (3, 63))),
+     "7f944db1646e7a09efe122f7fa9af5dbcd65d8e79c74639e06481ea998418e87"),
+    ("progressive-rgb420-ri", "encode_jpeg_progressive", (17, 9, 3, 5),
+     dict(channels=3, restart_interval=1, subsampling=(2, 2)),
+     "0bca5568c2836735e88022b8e4e747bcb7c3704458597a36945781f64838ac49"),
+    ("arithmetic-gray", "encode_jpeg_arithmetic", (13, 11, 1, 6),
+     dict(),
+     "f08da2df4ef310c4ff46b5dda3c7aa298585fea43fce553c9742f23485c4b8a4"),
+    ("arithmetic-rgb420-ri", "encode_jpeg_arithmetic", (19, 13, 3, 7),
+     dict(channels=3, quant=2, restart_interval=2, subsampling=(2, 2)),
+     "4ab3de64b4a61a4632fb4e6fca0c041016eb21afea222e218926b342fe0e54c6"),
+    ("arith-progressive-rgb", "encode_jpeg_arith_progressive", (19, 13, 3, 8),
+     dict(channels=3),
+     "e5e8d5d385d2743ee370e97ce1c7d041d3a521ef84c30e342e1572b1bf19edf0"),
+    ("arith-progressive-gray-deep", "encode_jpeg_arith_progressive", (16, 16, 1, 9),
+     dict(quant=2, restart_interval=3, dc_al=2, ac_al=2, bands=((1, 2), (3, 63))),
+     "878ba1374579437533a40f4428505a844e69be3148a7d3468fd3aebd620b6bff"),
+    ("lossless-huff-gray", "encode_jpeg_lossless", (11, 7, 1, 10),
+     dict(predictor=1, arith=False),
+     "8ea19588759b8fbc6e507f7662d3f4fdf6d290897e79544ed0f6d99805c051ae"),
+    ("lossless-huff-rgb-planar", "encode_jpeg_lossless", (9, 6, 3, 11),
+     dict(channels=3, predictor=5, point_transform=1, restart_interval=4, arith=False,
+          interleave=False),
+     "c5488034f71c4693817ba81fc8c4402b85847e2bf9f1b28510488d66596f45fd"),
+    ("lossless-arith-rgb", "encode_jpeg_lossless", (9, 7, 3, 12),
+     dict(channels=3),
+     "26baa210056337fae0c61707785557e251263408c6017368f6821e8daf4e1fe3"),
+    ("lossless-arith-gray-ri", "encode_jpeg_lossless", (12, 5, 1, 13),
+     dict(predictor=7, restart_interval=5),
+     "3d5a62bd30e8933eb2a3ceebd2a97a9f2bbe1f7efd6218eca7712667c70ecd8d"),
+    ("lossless-subsampled-arith", "encode_jpeg_lossless", (10, 8, 3, 14),
+     dict(channels=3, subsampling=(2, 2)),
+     "5b31c978b45ce37fb18d53cf2969b8752841fbf3826aa8bca489a351cd3e7c3b"),
+    ("lossless-subsampled-huff-ri", "encode_jpeg_lossless", (9, 6, 3, 15),
+     dict(channels=3, arith=False, restart_interval=3, subsampling=(2, 1)),
+     "2c69c10641770888d7dd4d5a2d31b9256a8892c75eef532cf4ab6e253c926f31"),
+    ("hier-lossless-arith", "encode_jpeg_hierarchical", (12, 10, 1, 16),
+     dict(levels=2),
+     "ae375b36b2b336211ba7aa2df511babd9dddbf965fc521c8a32a3497900345ca"),
+    ("hier-lossless-huff-rgb-ri", "encode_jpeg_hierarchical", (9, 7, 3, 17),
+     dict(channels=3, levels=1, arith=False, restart_interval=3),
+     "aab072ca373d7af82cecd1c565569f90d939bc0eec3ac4cee39cc73b1c1a647b"),
+    ("hier-dct-arith", "encode_jpeg_hierarchical", (20, 18, 1, 18),
+     dict(levels=2, mode="dct"),
+     "983232a04bbc4d2040c60d17807edfc73da77e9dc6fd0ab87efbc7c9afa0a5af"),
+    ("hier-dct-huff-rgb-ri", "encode_jpeg_hierarchical", (19, 17, 3, 19),
+     dict(channels=3, arith=False, restart_interval=2, mode="dct", quant=2),
+     "ee1194eed5b5a54e08b47a6e6b263d8a87bb31dcb3fdd66beead1c8ccfbfa2c4"),
+    ("hier-progressive-huff", "encode_jpeg_hierarchical", (20, 18, 1, 20),
+     dict(levels=2, arith=False, mode="progressive"),
+     "f3faf36a57ea2b7df5f37ecfd7065f7a7f5960fa4a8d25d2eae5597032e46a21"),
+    ("hier-progressive-arith-rgb-ri", "encode_jpeg_hierarchical", (19, 17, 3, 21),
+     dict(channels=3, restart_interval=1, mode="progressive", quant=3),
+     "fef54e01c5e35e524fec3b53689726e89c62c903f7bcd88a378524b3be8d0a29"),
+]
+
+
+@pytest.mark.parametrize(
+    "writer,geometry,kwargs,digest",
+    [row[1:] for row in _JPEG_PINS],
+    ids=[row[0] for row in _JPEG_PINS],
+)
+def test_jpeg_writer_bytes_pinned(writer, geometry, kwargs, digest):
+    import hashlib
+
+    from gomrjob_spark.operators import multimodal
+
+    w, h, ch, seed = geometry
+    px = np.random.RandomState(seed).randint(0, 256, size=w * h * ch, dtype=np.uint8)
+    out = getattr(multimodal, writer)(px.tobytes(), w, h, **kwargs)
+    assert hashlib.sha256(out).hexdigest() == digest
