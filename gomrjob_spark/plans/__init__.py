@@ -39,6 +39,25 @@ from gomrjob_spark.plans import (  # noqa: F401,E402
 # exactly the priority rule the ledger prescribes: a query whose plan
 # changed must never skip a driver round.
 _VERIFY_FIRST = [
+    # changed: the code that produces their rows moved — the JPEG codec
+    # runs one marker walk, one DCT scan walker, one dequantize + IDCT
+    # and shared scan writers. Every oracle-checked query that
+    # synthesizes and decodes JPEG, then every query that reaches
+    # decode_image_header (extract_features / resize_images)
+    "multimodal_compressed_pixel_stats",
+    "multimodal_arith_pixel_stats",
+    "multimodal_progressive_pixel_stats",
+    "multimodal_lossless_pixel_stats",
+    "multimodal_lossless_subsampled_stats",
+    "multimodal_hierarchical_pixel_stats",
+    "multimodal_hierarchical_dct_stats",
+    "multimodal_hierarchical_prog_stats",
+    "multimodal_hierarchical_color_stats",
+    "multimodal_exif_stats",
+    "multimodal_exif_orient_stats",
+    "multimodal_decode_headers",
+    "multimodal_features",
+    "multimodal_resize",
     # changed: the code that produces their rows moved — every per-row
     # Python stage runs through pipeline.map_rows (one positional frame
     # per Arrow batch, object columns) instead of its own mapInPandas
@@ -53,15 +72,8 @@ _VERIFY_FIRST = [
     "multimodal_phash_dedup",
     "multimodal_phash_near_pairs",
     "multimodal_audio_fingerprint_dedup",
-    "multimodal_decode_headers",
-    "multimodal_hierarchical_dct_stats",
-    "multimodal_hierarchical_pixel_stats",
-    "multimodal_features",
-    "multimodal_resize",
     "multimodal_audio_headers",
     "multimodal_pixel_stats",
-    "multimodal_compressed_pixel_stats",
-    "multimodal_arith_pixel_stats",
     "multimodal_avi_frames",
     "multimodal_mp4_frames",
     "multimodal_mp4_keyframes",
@@ -69,14 +81,7 @@ _VERIFY_FIRST = [
     "multimodal_mp4_fragments",
     "multimodal_flac_metadata",
     "multimodal_mp3_metadata",
-    "multimodal_progressive_pixel_stats",
     "multimodal_audio_samples",
-    "multimodal_lossless_pixel_stats",
-    "multimodal_lossless_subsampled_stats",
-    "multimodal_hierarchical_prog_stats",
-    "multimodal_hierarchical_color_stats",
-    "multimodal_exif_stats",
-    "multimodal_exif_orient_stats",
     "warc_parse_records",
     "warc_http_headers",
     "warc_revisit_resolve",

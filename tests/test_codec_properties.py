@@ -368,3 +368,87 @@ def test_jpeg_writer_bytes_pinned(writer, geometry, kwargs, digest):
     px = np.random.RandomState(seed).randint(0, 256, size=w * h * ch, dtype=np.uint8)
     out = getattr(multimodal, writer)(px.tobytes(), w, h, **kwargs)
     assert hashlib.sha256(out).hexdigest() == digest
+
+
+@pytest.mark.parametrize(
+    "writer,geometry,kwargs",
+    [row[1:4] for row in _JPEG_PINS],
+    ids=[row[0] for row in _JPEG_PINS],
+)
+def test_jpeg_truncation_sweep_fails_clean(writer, geometry, kwargs):
+    """Every writer's stream cut at seeded points either decodes or
+    raises the module's ValueError/EOFError contract — never a raw
+    IndexError or KeyError. (An arithmetic body cut short decodes to
+    completion by spec: the QM coder 1-feeds past the data end.)"""
+    from gomrjob_spark.operators import multimodal
+
+    w, h, ch, seed = geometry
+    px = np.random.RandomState(seed).randint(0, 256, size=w * h * ch, dtype=np.uint8)
+    enc = getattr(multimodal, writer)(px.tobytes(), w, h, **kwargs)
+    cuts = np.random.RandomState(seed).randint(2, len(enc), size=30)
+    for cut in sorted(set(cuts.tolist())):
+        try:
+            decode_image(enc[:cut])
+        except (ValueError, EOFError):
+            pass
+
+
+@pytest.mark.parametrize(
+    "writer,kwargs,markers",
+    [
+        ("encode_jpeg_baseline", dict(channels=3), (b"\xff\xc0", b"\xff\xda")),
+        ("encode_jpeg_arithmetic", dict(channels=3), (b"\xff\xc9", b"\xff\xda")),
+        ("encode_jpeg_progressive", dict(channels=1), (b"\xff\xc2", b"\xff\xd9")),
+        (
+            "encode_jpeg_hierarchical",
+            dict(channels=1, mode="dct", arith=False),
+            (b"\xff\xde", b"\xff\xc0", b"\xff\xdf"),
+        ),
+        ("encode_jpeg_hierarchical", dict(channels=3), (b"\xff\xde", b"\xff\xcf")),
+    ],
+)
+def test_jpeg_fill_bytes_before_markers_decode_the_same(writer, kwargs, markers):
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes. The
+    stream with fill bytes inserted before frame, scan, EXP and EOI
+    markers decodes to the same pixels and header as the plain one."""
+    from gomrjob_spark.operators import multimodal
+
+    w = h = 16
+    ch = kwargs["channels"]
+    px = np.random.RandomState(3).randint(0, 256, size=w * h * ch, dtype=np.uint8)
+    enc = getattr(multimodal, writer)(px.tobytes(), w, h, **kwargs)
+    padded = enc
+    for m in markers:
+        i = padded.index(m)
+        padded = padded[:i] + b"\xff\xff" + padded[i:]
+    assert padded != enc
+    assert decode_image(padded) == decode_image(enc)
+    assert multimodal.decode_image_header(padded) == multimodal.decode_image_header(enc)
+
+
+@pytest.mark.parametrize("arith", [False, True])
+@pytest.mark.parametrize("sub,restart", [((1, 1), 0), ((2, 2), 0), ((2, 2), 2)])
+def test_jpeg_non_interleaved_sequential_scans_decode(arith, sub, restart):
+    """T.81 A.2.2: a sequential frame may code each component in its own
+    scan, walking that component's own block grid. One scan per
+    component, written by the same scan writer, decodes to the pixels
+    of the interleaved stream."""
+    from gomrjob_spark.operators import multimodal as M
+
+    w, h = 19, 13
+    px = np.random.RandomState(5).randint(0, 256, size=w * h * 3, dtype=np.uint8).tobytes()
+    sof = 0xC9 if arith else 0xC0
+    frame, blocks = M._jpeg_prepare(px, w, h, 3, 2, sub)
+    dqt, coding = M._dct_tables(2, arith, M._jpeg_tids(3, arith), M._HUFF_SEQ)
+    script = [([ci], (0, 63, 0, 0)) for ci in range(3)]
+    planar = (
+        b"\xff\xd8" + dqt + M._sof(sof, frame) + coding + M._dri(restart)
+        + M._jpeg_dct_scans(sof, frame, blocks, script, restart, M._HUFF_SEQ)
+        + b"\xff\xd9"
+    )
+    writer = M.encode_jpeg_arithmetic if arith else M.encode_jpeg_baseline
+    interleaved = writer(
+        px, w, h, channels=3, quant=2, restart_interval=restart, subsampling=sub
+    )
+    assert planar.count(b"\xff\xda") == 3
+    assert decode_image(planar) == decode_image(interleaved)

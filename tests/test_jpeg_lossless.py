@@ -194,11 +194,11 @@ def test_truncated_subsampled_interleaved_fails_clean():
         px, 12, 10, channels=3, arith=False, subsampling=(2, 2)
     )
     for frac in (3, 2):
-        with pytest.raises((ValueError, EOFError, IndexError)):
+        with pytest.raises((ValueError, EOFError)):
             M.decode_image(enc[: len(enc) // frac])
     # header-level truncation fails clean for the arithmetic variant too
     enc_a = M.encode_jpeg_lossless(
         px, 12, 10, channels=3, arith=True, subsampling=(2, 2)
     )
-    with pytest.raises((ValueError, EOFError, IndexError)):
+    with pytest.raises((ValueError, EOFError)):
         M.decode_image(enc_a[:20])
