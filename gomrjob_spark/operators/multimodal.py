@@ -658,6 +658,17 @@ def _jpeg_extend(v: int, size: int) -> int:
     return v if size == 0 or v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
+def _huff_read_diff(reader: _BitReader, table: _HuffTable) -> int:
+    """One Huffman-coded difference (DC, T.81 F.2.2.1; lossless, H.1.2.1):
+    category, then EXTEND bits; category 16 is exactly 32768, no bits."""
+    size = reader.decode_symbol(table)
+    if size == 16:
+        return 32768
+    if size > 16:
+        raise ValueError("invalid JPEG difference category")
+    return _jpeg_extend(reader.read_bits(size), size)
+
+
 #: every SOFn: C4/C8/CC are DHT/JPG/DAC. Bit 2 marks a differential
 #: (hierarchical) frame, the low two bits the process (0/1 sequential,
 #: 2 progressive, 3 lossless), 0xC8 and up arithmetic coding.
@@ -687,7 +698,7 @@ def _jpeg_segment(payload: bytes, i: int) -> tuple[int, bytes, int]:
     return marker, payload[i + 4 : end], end
 
 
-def _jpeg_sof(seg: bytes, marker: int) -> dict:
+def _jpeg_parse_sof(seg: bytes, marker: int) -> dict:
     """Frame header (SOFn or DHP body): geometry, components, and the
     coding process the marker names."""
     if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
@@ -769,7 +780,7 @@ def _decode_jpeg(payload: bytes) -> dict:
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(seg[0:2], "big")
         elif marker == 0xDE:  # DHP: hierarchical mode (Annex J)
-            hier = _jpeg_sof(seg, marker)
+            hier = _jpeg_parse_sof(seg, marker)
         elif marker == 0xDF:  # EXP: expands the NEXT frame's reference
             if not seg:
                 raise ValueError("truncated JPEG EXP segment")
@@ -792,7 +803,7 @@ def _decode_jpeg(payload: bytes) -> dict:
                     raise ValueError("JPEG with a second frame outside hierarchical mode")
                 ref = _jpeg_hier_fold(frame, qt, ref, pending_exp)
                 pending_exp = (0, 0)
-            frame = _jpeg_sof(seg, marker)
+            frame = _jpeg_parse_sof(seg, marker)
             if not frame["comps"] or not all(
                 1 <= c["h"] <= 4 and 1 <= c["v"] <= 4 for c in frame["comps"]
             ):
@@ -802,7 +813,7 @@ def _decode_jpeg(payload: bytes) -> dict:
         elif marker == 0xDA:  # SOS: entropy data follows
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            i = _jpeg_sos(
+            i = _jpeg_decode_scan(
                 payload, i, seg, frame, hier is not None, qt, huff, dc_cond,
                 ac_cond, restart_interval,
             )
@@ -818,7 +829,7 @@ def _decode_jpeg(payload: bytes) -> dict:
     return _jpeg_assemble(frame, planes)
 
 
-def _jpeg_sos(
+def _jpeg_decode_scan(
     payload, start, seg, frame, hierarchical, qt, huff, dc_cond, ac_cond,
     restart_interval,
 ) -> int:
@@ -889,6 +900,10 @@ def _jpeg_assemble(frame, planes) -> dict:
     import numpy as np
 
     w, h, comps = frame["w"], frame["h"], frame["comps"]
+    if len(comps) not in (1, 3):
+        raise NotImplementedError(
+            f"JPEG DCT frame with {len(comps)} components (grayscale or YCbCr only)"
+        )
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     full = []
@@ -911,30 +926,48 @@ def _jpeg_assemble(frame, planes) -> dict:
             "pixels": out.tobytes()}
 
 
-def _comp_block_grid(frame, c) -> tuple[int, int]:
-    """Non-interleaved block grid of one component: ceil(ceil(w*h_i/
-    hmax)/8) x ceil(ceil(h*v_i/vmax)/8) (T.81 A.1.1 sampling)."""
-    hmax = max(x["h"] for x in frame["comps"])
-    vmax = max(x["v"] for x in frame["comps"])
-    cw = -(-frame["w"] * c["h"] // hmax)
-    ch = -(-frame["h"] * c["v"] // vmax)
-    return -(-cw // 8), -(-ch // 8)
+def _jpeg_scan_grid(frame, members, unit: int):
+    """``(mcux, mcuy, factors)`` of a scan over frame components
+    ``members`` with data units of unit x unit samples (8 for DCT, 1
+    for lossless), T.81 A.2: an interleaved scan walks ceil(w / (unit *
+    hmax)) x ceil(h / (unit * vmax)) MCUs of h_i x v_i units per
+    component (planes padded to the MCU grid); a single-component scan
+    walks that component's own ceil(ceil(w * h_i / hmax) / unit) x
+    ceil(ceil(h * v_i / vmax) / unit) grid, one unit per MCU."""
+    comps = frame["comps"]
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    if len(members) == 1:
+        c = comps[members[0]]
+        cw = -(-frame["w"] * c["h"] // hmax)
+        ch = -(-frame["h"] * c["v"] // vmax)
+        return -(-cw // unit), -(-ch // unit), [(1, 1)]
+    factors = [(comps[ci]["h"], comps[ci]["v"]) for ci in members]
+    return -(-frame["w"] // (unit * hmax)), -(-frame["h"] // (unit * vmax)), factors
+
+
+def _jpeg_scan_units(mcux: int, mcuy: int, factors):
+    """Restart units (MCUs) of a scan as lists of (scan component, unit
+    row, unit column) in T.81 order."""
+    per_mcu = [
+        (k, v_i, h_i, v, h)
+        for k, (h_i, v_i) in enumerate(factors)
+        for v in range(v_i)
+        for h in range(h_i)
+    ]
+    for my in range(mcuy):
+        for mx in range(mcux):
+            yield [(k, my * v_i + v, mx * h_i + h) for k, v_i, h_i, v, h in per_mcu]
 
 
 def _jpeg_alloc_coeff(frame) -> list:
     """Per-component coefficient accumulators, sized to the interleaved
-    MCU grid (a superset of the non-interleaved grid): (bh, bw, 64)
+    MCU grid (a superset of each single-component grid): (bh, bw, 64)
     int64 in natural (row-major block) order."""
     import numpy as np
 
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcux = -(-frame["w"] // (8 * hmax))
-    mcuy = -(-frame["h"] // (8 * vmax))
-    return [
-        np.zeros((mcuy * c["v"], mcux * c["h"], 64), dtype=np.int64)
-        for c in frame["comps"]
-    ]
+    mcux, mcuy, factors = _jpeg_scan_grid(frame, range(len(frame["comps"])), 8)
+    return [np.zeros((mcuy * v_i, mcux * h_i, 64), dtype=np.int64) for h_i, v_i in factors]
 
 
 def _jpeg_idct(coeff, q, shift: float):
@@ -992,32 +1025,6 @@ def _jpeg_dezigzag(blocks):
 # exactly like the spec's sample arithmetic.
 
 
-def _dct_scan_units(frame, members):
-    """Restart units of one DCT scan as lists of (component index, block
-    row, block column)."""
-    comps = frame["comps"]
-    if len(members) == 1:
-        ci = members[0]
-        nbw, nbh = _comp_block_grid(frame, comps[ci])
-        for by in range(nbh):
-            for bx in range(nbw):
-                yield [(ci, by, bx)]
-        return
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-frame["w"] // (8 * hmax))
-    mcuy = -(-frame["h"] // (8 * vmax))
-    per_mcu = [
-        (ci, comps[ci]["v"], comps[ci]["h"], by, bx)
-        for ci in members
-        for by in range(comps[ci]["v"])
-        for bx in range(comps[ci]["h"])
-    ]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            yield [(ci, my * v + by, mx * h + bx) for ci, v, h, by, bx in per_mcu]
-
-
 def _jpeg_walk_scan(coder, frame, members, band, blocks, restart_interval) -> None:
     """Run one DCT scan's blocks through ``coder`` — a decoder filling
     natural-order coefficient rows or a writer reading zigzag rows of
@@ -1032,11 +1039,13 @@ def _jpeg_walk_scan(coder, frame, members, band, blocks, restart_interval) -> No
     if se:
         ops.append(coder.ac_refine if ah else coder.ac_first)
     rst = 0
-    for unit, blks in enumerate(_dct_scan_units(frame, members)):
+    units = _jpeg_scan_units(*_jpeg_scan_grid(frame, members, 8))
+    for unit, blks in enumerate(units):
         if restart_interval and unit and unit % restart_interval == 0:
             coder.restart(rst)
             rst = (rst + 1) % 8
-        for ci, by, bx in blks:
+        for k, by, bx in blks:
+            ci = members[k]
             row = blocks[ci][by, bx]
             for op in ops:
                 op(ci, row)
@@ -1086,11 +1095,7 @@ class _HuffScanDecoder(_ScanCoder):
         return self.reader.next_marker()
 
     def dc_first(self, ci: int, blk) -> None:
-        reader = self.reader
-        size = reader.decode_symbol(self.dc_t[ci])
-        if size > 16:
-            raise ValueError("invalid JPEG DC magnitude category")
-        self.pred[ci] += _jpeg_extend(reader.read_bits(size), size)
+        self.pred[ci] += _huff_read_diff(self.reader, self.dc_t[ci])
         blk[0] = self.pred[ci] << self.al
 
     def dc_refine(self, ci: int, blk) -> None:
@@ -1178,6 +1183,17 @@ def _canonical_codes(bits: list[int], syms: bytes) -> dict[int, tuple[int, int]]
             k += 1
         code <<= 1
     return out
+
+
+def _huff_put_diff(put, codes, diff: int) -> None:
+    """Encoder mirror of :func:`_huff_read_diff`: category code, then
+    the EXTEND bits (a lossless difference of -32768 is category 16,
+    read back as 32768 modulo 2^16, with no bits)."""
+    size = abs(diff).bit_length()
+    length, code = codes[size]
+    put(code, length)
+    if 0 < size < 16:
+        put(diff if diff >= 0 else diff + (1 << size) - 1, size)
 
 
 class _BitWriter:
@@ -1269,13 +1285,8 @@ class _HuffScanWriter(_ScanCoder):
 
     def dc_first(self, ci: int, zz) -> None:
         v = int(zz[0]) >> self.al
-        diff = v - self.pred[ci]
+        _huff_put_diff(self.wtr.put, self.dc_enc, v - self.pred[ci])
         self.pred[ci] = v
-        size = abs(diff).bit_length()
-        length, code = self.dc_enc[size]
-        self.wtr.put(code, length)
-        if size:
-            self.wtr.put(diff if diff >= 0 else diff + (1 << size) - 1, size)
 
     def dc_refine(self, ci: int, zz) -> None:
         self.wtr.put((int(zz[0]) >> self.al) & 1, 1)
@@ -1623,56 +1634,48 @@ def _fresh_arith_stats(dc_tables, ac_tables) -> tuple[dict, dict]:
     return dc, ac
 
 
-def _arith_decode_dc(dec, dstats, ctx, pred, ci, cond) -> None:
-    """One DC difference (T.81 F.2.4.1 decode flow): zero/sign/Sz>0
-    decisions in the conditioning class's 4-bin group, magnitude
-    category up the shared X1.. ladder, mantissa from the matching M
-    bin, then reclassify the conditioning context from the category."""
-    low, up = cond
-    st = ctx[ci]
-    if dec.decode(dstats[st]) == 0:
-        ctx[ci] = 0
-        return
-    sign = dec.decode(dstats[st + 1])
-    m = dec.decode(dstats[st + 2 + sign])
-    xb = 20
+def _qm_decode_diff(dec, bins, base: int, ladder: int) -> tuple[int, int, int]:
+    """One signed difference off the QM decoder — the tree the DC model
+    (T.81 F.2.4.1) and the lossless model (H.1.2.2) share: zero decision
+    at ``bins[base]``, sign at base+1, Sz>0 at base+2+sign, magnitude
+    category up the X1.. ladder that starts at ``ladder``, mantissa from
+    the matching M bin (ladder position + 14). Returns ``(diff, m,
+    sign)``; ``m`` (the category's top bit) and the sign feed
+    :func:`_qm_class`."""
+    if dec.decode(bins[base]) == 0:
+        return 0, 0, 0
+    sign = dec.decode(bins[base + 1])
+    m = dec.decode(bins[base + 2 + sign])
+    xb = ladder
     if m:
-        while dec.decode(dstats[xb]):
+        while dec.decode(bins[xb]):
             m <<= 1
             xb += 1
             if m == 0x8000:
-                raise ValueError("JPEG arithmetic DC magnitude overflow")
-    if m < (1 << low):
-        ctx[ci] = 0
-    elif m > (1 << up):
-        ctx[ci] = 12 + 4 * sign
-    else:
-        ctx[ci] = 4 + 4 * sign
+                raise ValueError("JPEG arithmetic magnitude overflow")
     v = m
     if m:
-        mbin = dstats[xb + 14]
+        mbin = bins[xb + 14]
         mm = m >> 1
         while mm:
             if dec.decode(mbin):
                 v |= mm
             mm >>= 1
     v += 1
-    pred[ci] += -v if sign else v
+    return (-v if sign else v), m, sign
 
 
-def _arith_encode_dc(enc, dstats, ctx, ci, diff, cond) -> None:
-    low, up = cond
-    st = ctx[ci]
+def _qm_encode_diff(enc, bins, base: int, ladder: int, diff: int) -> tuple[int, int]:
+    """Encoder mirror of :func:`_qm_decode_diff`; returns ``(m, sign)``."""
     if diff == 0:
-        enc.encode(dstats[st], 0)
-        ctx[ci] = 0
-        return
-    enc.encode(dstats[st], 1)
+        enc.encode(bins[base], 0)
+        return 0, 0
+    enc.encode(bins[base], 1)
     sign = 1 if diff < 0 else 0
-    enc.encode(dstats[st + 1], sign)
+    enc.encode(bins[base + 1], sign)
     sz = (diff if diff > 0 else -diff) - 1
-    spb = dstats[st + 2 + sign]
-    xb = 20
+    spb = bins[base + 2 + sign]
+    xb = ladder
     m = 0
     if sz == 0:
         enc.encode(spb, 0)
@@ -1681,22 +1684,30 @@ def _arith_encode_dc(enc, dstats, ctx, ci, diff, cond) -> None:
         m = 1
         msb = 1 << (sz.bit_length() - 1)
         while m < msb:
-            enc.encode(dstats[xb], 1)
+            enc.encode(bins[xb], 1)
             m <<= 1
             xb += 1
-        enc.encode(dstats[xb], 0)
-    if m < (1 << low):
-        ctx[ci] = 0
-    elif m > (1 << up):
-        ctx[ci] = 12 + 4 * sign
-    else:
-        ctx[ci] = 4 + 4 * sign
+        enc.encode(bins[xb], 0)
     if m:
-        mbin = dstats[xb + 14]
+        mbin = bins[xb + 14]
         mm = m >> 1
         while mm:
             enc.encode(mbin, 1 if sz & mm else 0)
             mm >>= 1
+    return m, sign
+
+
+def _qm_class(diff: int, m: int, sign: int, cond) -> int:
+    """5-way (zero / +-small / +-large) class of a coded difference from
+    its category top bit ``m`` and the DAC (L, U) bounds: 0, 1 + sign
+    or 3 + sign. Four times it is the DC model's conditioning context
+    (F.1.4.4.1.2); the lossless model classifies Da and Db with it."""
+    low, up = cond
+    if diff == 0 or m < (1 << low):
+        return 0
+    if m > (1 << up):
+        return 3 + sign
+    return 1 + sign
 
 
 def _arith_sync_restart(payload: bytes, bits: _ArithBits, n: int) -> int:
@@ -1884,9 +1895,9 @@ class _ArithScanDecoder(_ScanCoder):
         return _arith_next_marker(self.payload, self.bits)
 
     def dc_first(self, ci: int, blk) -> None:
-        _arith_decode_dc(
-            self.dec, self.dc_stats[self.td[ci]], self.ctx, self.pred, ci, self.cond[ci]
-        )
+        diff, m, sign = _qm_decode_diff(self.dec, self.dc_stats[self.td[ci]], self.ctx[ci], 20)
+        self.ctx[ci] = 4 * _qm_class(diff, m, sign, self.cond[ci])
+        self.pred[ci] += diff
         blk[0] = self.pred[ci] << self.al
 
     def dc_refine(self, ci: int, blk) -> None:
@@ -1935,9 +1946,9 @@ class _ArithScanWriter(_ScanCoder):
 
     def dc_first(self, ci: int, zz) -> None:
         v = int(zz[0]) >> self.al
-        _arith_encode_dc(
-            self.enc, self.dc_stats[self.tids[ci]], self.ctx, ci, v - self.pred[ci], (0, 1)
-        )
+        diff = v - self.pred[ci]
+        m, sign = _qm_encode_diff(self.enc, self.dc_stats[self.tids[ci]], self.ctx[ci], 20, diff)
+        self.ctx[ci] = 4 * _qm_class(diff, m, sign, (0, 1))
         self.pred[ci] = v
 
     def dc_refine(self, ci: int, zz) -> None:
@@ -2263,14 +2274,14 @@ def encode_jpeg_arith_progressive(
 # DC-style decision tree conditioned on the classified differences at
 # the LEFT and ABOVE positions (5x5 = 25 contexts, two magnitude
 # ladders selected by the above-neighbor's class — T.81 H.1.2.2's
-# statistical model, reusing Annex F's zero/sign/magnitude/mantissa
-# tree shape verbatim). Boundary rules (H.1.1): the first sample codes
-# against 2^(P - Pt - 1); the rest of the first line predicts from Ra,
-# a line start predicts from Rb. After a restart marker the coder,
-# statistics, and context classes reset and the next sample of each
-# component codes against the default prediction (the spec's
-# start-of-scan state); later samples resume positional rules over the
-# already-reconstructed neighborhood. Encoder twins share the exact
+# statistical model over the DC model's zero/sign/magnitude/mantissa
+# tree, _qm_decode_diff / _qm_encode_diff). Boundary rules (H.1.1):
+# the first sample codes against 2^(P - Pt - 1); the rest of the first
+# line predicts from Ra, a line start predicts from Rb. After a restart
+# marker the coder, statistics, and context classes reset and the next
+# sample of each component codes against the default prediction (the
+# spec's start-of-scan state); later samples resume positional rules
+# over the already-reconstructed neighborhood. Encoder twins share the exact
 # state machine, so decode(encode(px)) == px is structural — and the
 # whole path is LOSSLESS, so the pixel-stats oracle needs no
 # block-constant fixture trick: arbitrary per-pixel formulas survive.
@@ -2301,19 +2312,6 @@ def _ll_predict_sel(psel: int, ra: int, rb: int, rc: int) -> int:
     if psel == 7:
         return (ra + rb) >> 1
     raise ValueError(f"lossless predictor selector {psel} not in 1..7")
-
-
-def _ll_class(diff_is_zero: bool, m: int, sign: int, cond) -> int:
-    """5-way (zero / ±small / ±large) classification of a coded
-    difference from its decoded MSB magnitude ``m`` — the identical
-    rule the sequential-DC model applies to its conditioning context
-    (same (L, U) DAC bounds), reused here to classify Da and Db."""
-    low, up = cond
-    if diff_is_zero or m < (1 << low):
-        return 0
-    if m > (1 << up):
-        return 3 + sign
-    return 1 + sign
 
 
 class _LLGridState:
@@ -2384,86 +2382,6 @@ class _LLGridState:
         self.fresh = True
 
 
-def _ll_decode_diff(dec, st, ci25: int, big_db: bool):
-    """One lossless difference off the QM decoder: zero/sign/Sz>0 in
-    the (Da, Db) context's 4-bin group, magnitude up the Db-selected
-    ladder, mantissa from the matching M bin. Returns (diff, is_zero,
-    m, sign) — the last three feed _ll_class."""
-    base = 4 * ci25
-    if dec.decode(st[base]) == 0:
-        return 0, True, 0, 0
-    sign = dec.decode(st[base + 1])
-    m = dec.decode(st[base + 2 + sign])
-    xb = _LL_LADDER2 if big_db else _LL_LADDER1
-    if m:
-        while dec.decode(st[xb]):
-            m <<= 1
-            xb += 1
-            if m == 0x8000:
-                raise ValueError("JPEG lossless magnitude overflow")
-    v = m
-    if m:
-        mbin = st[xb + 14]
-        mm = m >> 1
-        while mm:
-            if dec.decode(mbin):
-                v |= mm
-            mm >>= 1
-    v += 1
-    return (-v if sign else v), False, m, sign
-
-
-def _ll_encode_diff(enc, st, ci25: int, big_db: bool, diff: int):
-    base = 4 * ci25
-    if diff == 0:
-        enc.encode(st[base], 0)
-        return True, 0, 0
-    enc.encode(st[base], 1)
-    sign = 1 if diff < 0 else 0
-    enc.encode(st[base + 1], sign)
-    sz = (diff if diff > 0 else -diff) - 1
-    spb = st[base + 2 + sign]
-    xb = _LL_LADDER2 if big_db else _LL_LADDER1
-    m = 0
-    if sz == 0:
-        enc.encode(spb, 0)
-    else:
-        enc.encode(spb, 1)
-        m = 1
-        msb = 1 << (sz.bit_length() - 1)
-        while m < msb:
-            enc.encode(st[xb], 1)
-            m <<= 1
-            xb += 1
-        enc.encode(st[xb], 0)
-    if m:
-        mbin = st[xb + 14]
-        mm = m >> 1
-        while mm:
-            enc.encode(mbin, 1 if sz & mm else 0)
-            mm >>= 1
-    return False, m, sign
-
-
-def _ll_mcu_geometry(frame, members):
-    """(mcux, mcuy, factors) of a lossless scan, the data unit being one
-    sample: a SUBSAMPLED interleaved scan (T.81 H.2) carries h_i x v_i
-    samples per component per MCU over ceil(w / hmax) x ceil(h / vmax)
-    MCUs (planes padded to the MCU grid; the assembler's crop drops the
-    padding); any other scan is the 1x1 grid over its components'
-    (shared) plane size."""
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if len(members) > 1 and (hmax != 1 or vmax != 1):
-        factors = [(comps[ci]["h"], comps[ci]["v"]) for ci in members]
-        return -(-frame["w"] // hmax), -(-frame["h"] // vmax), factors
-    c = comps[members[0]]
-    mcux = -(-frame["w"] * c["h"] // hmax)
-    mcuy = -(-frame["h"] * c["v"] // vmax)
-    return mcux, mcuy, [(1, 1)] * len(members)
-
-
 def _jpeg_lossless_scan(
     payload, start, frame, members, scan, dc_cond, huff, restart_interval, psel,
 ) -> int:
@@ -2479,7 +2397,7 @@ def _jpeg_lossless_scan(
 
     comps = frame["comps"]
     default = 1 << (frame["prec"] - frame["pt"] - 1)
-    mcux, mcuy, factors = _ll_mcu_geometry(frame, members)
+    mcux, mcuy, factors = _jpeg_scan_grid(frame, members, 1)
     tids = [scan[comps[ci]["id"]][0] for ci in members]
     conds = [dc_cond.get(t, (0, 1)) for t in tids]
     arith = frame["arith"]
@@ -2504,39 +2422,26 @@ def _jpeg_lossless_scan(
 
     def next_diff(k: int, ci25: int, big: bool):
         if arith:
-            diff, dz, m, sign = _ll_decode_diff(dec, stats[tids[k]], ci25, big)
-            return diff, _ll_class(dz, m, sign, conds[k])
-        ssss = reader.decode_symbol(tables[k])
-        if ssss == 16:  # spec special case: no extra bits
-            return 32768, 0
-        return _jpeg_extend(reader.read_bits(ssss), ssss), 0
+            ladder = _LL_LADDER2 if big else _LL_LADDER1
+            diff, m, sign = _qm_decode_diff(dec, stats[tids[k]], 4 * ci25, ladder)
+            return diff, _qm_class(diff, m, sign, conds[k])
+        return _huff_read_diff(reader, tables[k]), 0
 
     states = [
         _LLGridState(mcux * h_i, mcuy * v_i, default, frame["differential"])
         for h_i, v_i in factors
     ]
-    units = [
-        (k, h_i, v_i, v, hh)
-        for k, (h_i, v_i) in enumerate(factors)
-        for v in range(v_i)
-        for hh in range(h_i)
-    ]
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                sync_restart()
-                for s in states:
-                    s.reset_restart()
-            for k, h_i, v_i, v, hh in units:
-                s = states[k]
-                r = my * v_i + v
-                c = mx * h_i + hh
-                ci25, big = s.context(r, c) if arith else (0, False)
-                diff, cls = next_diff(k, ci25, big)
-                sample = (s.predict(r, c, psel) + diff) & 0xFFFF
-                s.push(r, c, sample, cls)
-            mcu += 1
+    for mcu, samples in enumerate(_jpeg_scan_units(mcux, mcuy, factors)):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            sync_restart()
+            for s in states:
+                s.reset_restart()
+        for k, r, c in samples:
+            s = states[k]
+            ci25, big = s.context(r, c) if arith else (0, False)
+            diff, cls = next_diff(k, ci25, big)
+            sample = (s.predict(r, c, psel) + diff) & 0xFFFF
+            s.push(r, c, sample, cls)
     for k, ci in enumerate(members):
         frame["planes"][ci] = np.array(states[k].grid, dtype=np.int64)
     return _arith_next_marker(payload, bits) if arith else reader.next_marker()
@@ -2596,25 +2501,23 @@ def _ll_tables(arith: bool) -> bytes:
 
 
 def _ll_encode_scan_mcu(
+    frame,
+    members,
     plane_rows,
-    factors,
-    mcux: int,
-    mcuy: int,
     predictor: int,
     restart_interval: int,
     arith: bool,
     default: int,
     differential: bool = False,
 ) -> bytes:
-    """Entropy bytes of ONE lossless scan — the encoder mirror of
-    :func:`_jpeg_lossless_scan`'s MCU walk: each MCU carries h_i x v_i
-    samples per component in order (a 1x1 grid is the plain row-major
-    walk), and prediction/context address the component plane
-    absolutely through the SAME _LLGridState the decoder runs, so the
-    walks cannot diverge. ``plane_rows[k]`` is the scan's k-th
-    component plane at its OWN (padded) resolution.
-    ``differential=True`` codes mod-2^16 difference planes with zero
-    prediction (Annex J SOF7/SOF15)."""
+    """Entropy bytes of ONE lossless scan over frame components
+    ``members`` — the encoder mirror of :func:`_jpeg_lossless_scan`'s
+    MCU walk: the same scan grid and unit order, and prediction/context
+    through the SAME _LLGridState the decoder runs, so the walks cannot
+    diverge. ``plane_rows[k]`` is the k-th member's plane at its OWN
+    (MCU-padded) resolution. ``differential=True`` codes mod-2^16
+    difference planes with zero prediction (Annex J SOF7/SOF15)."""
+    mcux, mcuy, factors = _jpeg_scan_grid(frame, members, 1)
     hcodes = _canonical_codes(_LL_HUFF_BITS, _LL_HUFF_SYMS)
     states = [
         _LLGridState(mcux * h_i, mcuy * v_i, default, differential)
@@ -2627,50 +2530,34 @@ def _ll_encode_scan_mcu(
     else:
         writer = _BitWriter()
     rst = 0
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                if arith:
-                    entropy += _pack_arith_bits(enc.flush())
-                    enc = _QMEncoder()
-                    stats = _ll_fresh_stats({0})
-                else:
-                    writer.pad()
-                    entropy += writer.buf
-                    writer = _BitWriter()
-                entropy += bytes((0xFF, 0xD0 + rst))
-                rst = (rst + 1) % 8
-                for s in states:
-                    s.reset_restart()
-            for k, (h_i, v_i) in enumerate(factors):
-                s = states[k]
-                for v in range(v_i):
-                    for hh in range(h_i):
-                        r = my * v_i + v
-                        c = mx * h_i + hh
-                        sample = plane_rows[k][r][c]
-                        dm = (sample - s.predict(r, c, predictor)) & 0xFFFF
-                        diff = dm - 0x10000 if dm >= 0x8000 else dm
-                        if arith:
-                            ci25, big = s.context(r, c)
-                            dz, m, sign = _ll_encode_diff(
-                                enc, stats[0], ci25, big, diff
-                            )
-                            cls = _ll_class(dz, m, sign, (0, 1))
-                        else:
-                            if diff == 32768:
-                                ssss = 16
-                            else:
-                                ssss = abs(diff).bit_length()
-                            length, code = hcodes[ssss]
-                            writer.put(code, length)
-                            if 0 < ssss < 16:
-                                v_ = diff if diff >= 0 else diff + (1 << ssss) - 1
-                                writer.put(v_ & ((1 << ssss) - 1), ssss)
-                            cls = 0
-                        s.push(r, c, sample, cls)
-            mcu += 1
+    for mcu, samples in enumerate(_jpeg_scan_units(mcux, mcuy, factors)):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            if arith:
+                entropy += _pack_arith_bits(enc.flush())
+                enc = _QMEncoder()
+                stats = _ll_fresh_stats({0})
+            else:
+                writer.pad()
+                entropy += writer.buf
+                writer = _BitWriter()
+            entropy += bytes((0xFF, 0xD0 + rst))
+            rst = (rst + 1) % 8
+            for s in states:
+                s.reset_restart()
+        for k, r, c in samples:
+            s = states[k]
+            sample = plane_rows[k][r][c]
+            dm = (sample - s.predict(r, c, predictor)) & 0xFFFF
+            diff = dm - 0x10000 if dm >= 0x8000 else dm
+            if arith:
+                ci25, big = s.context(r, c)
+                ladder = _LL_LADDER2 if big else _LL_LADDER1
+                m, sign = _qm_encode_diff(enc, stats[0], 4 * ci25, ladder, diff)
+                cls = _qm_class(diff, m, sign, (0, 1))
+            else:
+                _huff_put_diff(writer.put, hcodes, diff)
+                cls = 0
+            s.push(r, c, sample, cls)
     if arith:
         entropy += _pack_arith_bits(enc.flush())
     else:
@@ -2751,21 +2638,19 @@ def encode_jpeg_lossless(
             [row[::hs] for row in plane_rows[c][::vs]]
             for c in range(1, channels)
         ]
-        scans = [(every, sub_rows, factors, mcux, mcuy)]
+        scans = [(every, sub_rows)]
     else:
         groups = [every] if interleave else [[c] for c in every]
-        scans = [
-            (ids, [plane_rows[c] for c in ids], [(1, 1)] * len(ids), width, height)
-            for ids in groups
-        ]
+        scans = [(ids, [plane_rows[c] for c in ids]) for ids in groups]
+    frame = _jpeg_frame(width, height, factors)
     out = bytearray(b"\xff\xd8")
-    out += _sof(0xCB if arith else 0xC3, _jpeg_frame(width, height, factors))
+    out += _sof(0xCB if arith else 0xC3, frame)
     out += _ll_tables(arith) + _dri(restart_interval)
-    for ids, rows, facs, mcux, mcuy in scans:
+    for ids, rows in scans:
         # Ss = predictor, Se = 0, Al = point transform; table 0
         out += _sos(ids, [0] * channels, predictor, 0, 0, point_transform)
         out += _ll_encode_scan_mcu(
-            rows, facs, mcux, mcuy, predictor, restart_interval, arith, default
+            frame, ids, rows, predictor, restart_interval, arith, default
         )
     out += b"\xff\xd9"
     return bytes(out)
@@ -2962,19 +2847,19 @@ def encode_jpeg_hierarchical(
         # (the hierarchical assembler stacks them without any color
         # transform — the lossless-pyramid contract), each quantized,
         # coded, and reconstructed independently on the shared grid
-        ups = [np.zeros_like(p) for p in pyr[0]]
         for k, level in enumerate(pyr):
             hk, wk = level[0].shape
-            shift = 0.0 if k else 128.0
-            if k:
+            if k:  # differential: residual against the expanded reference
+                sof, shift = sof_diff, 0.0
                 ups = [_jpeg_hier_upsample(r, 1, 1)[:hk, :wk] for r in ref]
                 out += exp
+            else:  # base frame: level-shifted samples
+                sof, shift, ups = sof_base, 128.0, [0] * channels
             blocks = [
                 _jpeg_fdct((level[c] - ups[c]).astype(np.float64), quant, shift)
                 for c in every
             ]
             frame = _jpeg_frame(wk, hk, ones)
-            sof = sof_diff if k else sof_base
             out += _sof(sof, frame)
             out += _jpeg_dct_scans(sof, frame, blocks, script, restart_interval, _HUFF_SEQ)
             ref = [
@@ -3003,17 +2888,16 @@ def encode_jpeg_hierarchical(
             out += exp
         else:
             rows = [p.tolist() for p in level]
-        out += _sof((0xCF if arith else 0xC7) if k else (0xCB if arith else 0xC3),
-                    _jpeg_frame(wk, hk, ones))
+        frame = _jpeg_frame(wk, hk, ones)
+        out += _sof((0xCF if arith else 0xC7) if k else (0xCB if arith else 0xC3), frame)
         out += _sos(every, [0] * channels, 0 if k else predictor, 0, 0, 0)
         out += _ll_encode_scan_mcu(
-            rows, ones, wk, hk, 1 if k else predictor, restart_interval, arith,
+            frame, every, rows, 1 if k else predictor, restart_interval, arith,
             1 << 7, differential=bool(k),
         )
         cur = level
     out += b"\xff\xd9"
     return bytes(out)
-
 
 
 def _gif_lzw_decode(min_code_size: int, data: bytes, max_pixels: int) -> bytearray:
@@ -3247,7 +3131,7 @@ def decode_image_header(payload: bytes) -> dict | None:
             while True:
                 marker, seg, i = _jpeg_segment(payload, i)
                 if marker in _JPEG_SOF:
-                    frame = _jpeg_sof(seg, marker)
+                    frame = _jpeg_parse_sof(seg, marker)
                     return {
                         "format": "jpeg",
                         "height": frame["h"],

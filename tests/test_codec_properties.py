@@ -452,3 +452,23 @@ def test_jpeg_non_interleaved_sequential_scans_decode(arith, sub, restart):
     )
     assert planar.count(b"\xff\xda") == 3
     assert decode_image(planar) == decode_image(interleaved)
+
+
+@pytest.mark.parametrize("ncomp", [2, 4])
+def test_jpeg_dct_frame_component_count_is_a_named_error(ncomp):
+    """A non-hierarchical DCT frame converts 1 (grayscale) or 3 (YCbCr)
+    components; 2 used to raise a raw IndexError and 4 silently dropped
+    the fourth component."""
+    from gomrjob_spark.operators import multimodal as M
+
+    frame = M._jpeg_frame(8, 8, [(1, 1)] * ncomp)
+    blocks = [np.zeros((1, 1, 64), dtype=np.int64) for _ in range(ncomp)]
+    dqt, coding = M._dct_tables(1, False, M._jpeg_tids(ncomp, False), M._HUFF_SEQ)
+    script = [(list(range(ncomp)), (0, 63, 0, 0))]
+    payload = (
+        b"\xff\xd8" + dqt + M._sof(0xC0, frame) + coding
+        + M._jpeg_dct_scans(0xC0, frame, blocks, script, 0, M._HUFF_SEQ)
+        + b"\xff\xd9"
+    )
+    with pytest.raises(NotImplementedError, match=f"{ncomp} components"):
+        decode_image(payload)
