@@ -22,8 +22,9 @@ every JPEG process of ITU T.81, and 16-bit PCM for WAV.
 
 JPEG has one decoder layout (the JPEG section comment has the detail):
 one marker walk reads every stream, hierarchical (Annex J DHP/EXP)
-pyramids included, and ``decode_image_header`` reads the first frame
-header through the same walk; one DCT scan walker decodes Huffman and
+pyramids included, and ``decode_image_header`` reads the image geometry
+(a hierarchical stream's DHP, else the first frame header) through the
+same walk; one DCT scan walker decodes Huffman and
 arithmetic (QM coder), sequential and progressive scans into
 coefficient accumulators; one dequantize + IDCT finishes every DCT
 frame; lossless frames (Annex H) run one sample walk. The writers
@@ -573,6 +574,7 @@ class _BitReader:
         self.bits = 0
 
     def _fill(self) -> None:
+        """Load the next data byte; runs only once every bit is read."""
         d = self.data
         try:
             b = d[self.pos]
@@ -597,8 +599,8 @@ class _BitReader:
                 raise EOFError("marker inside entropy data")
         else:
             self.pos += 1
-        self.acc = (self.acc << 8) | b
-        self.bits += 8
+        self.acc = b
+        self.bits = 8
 
     def read_bit(self) -> int:
         if self.bits == 0:
@@ -2177,12 +2179,15 @@ def encode_jpeg_baseline(
 ) -> bytes:
     """Minimal baseline JPEG writer: grayscale or YCbCr at 4:4:4
     (``subsampling=(1,1)``) or 4:2:0 (``(2,2)``, chroma mean-pooled),
-    flat ``quant`` quantization (1 = near-lossless: the only loss is the
-    float DCT round-trip, within +/-1 per sample; flat 8x8 blocks are
-    bit-exact), single-length canonical Huffman tables emitted via DHT
-    (the decoder must run the real canonical construction — nothing is
-    implicit). The synthesis side of the oracle-gated JPEG decode query
-    and a usable thumbnail sink."""
+    flat ``quant`` quantization (1 = near-lossless: the only loss is
+    rounding the float DCT coefficients and the decoded samples — not
+    within +/-1, since all 64 coefficients of a block are rounded: a
+    grayscale sample can move by 2, a colour one by 3 after the YCbCr
+    round trip; flat 8x8 blocks are bit-exact), single-length
+    canonical Huffman tables emitted via DHT (the decoder must run the
+    real canonical construction — nothing is implicit). The synthesis
+    side of the oracle-gated JPEG decode query and a usable thumbnail
+    sink."""
     return _encode_jpeg_dct(
         0xC0, pixels, width, height, channels, quant, restart_interval, subsampling
     )
@@ -3102,7 +3107,9 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 def decode_image_header(payload: bytes) -> dict | None:
     """Real container-header decode, pure Python (no codec libraries):
     width/height/channels from the PNG IHDR chunk, the GIF logical
-    screen descriptor, or the first JPEG SOF segment. Returns None for
+    screen descriptor, or the first JPEG frame header — the DHP segment
+    of a hierarchical stream (its full-size geometry; the SOF frames
+    after it code the smaller pyramid levels too). Returns None for
     unrecognized payloads (caller falls back or filters).
 
     This is the production fast path for 100 TB metadata extraction —
@@ -3130,7 +3137,7 @@ def decode_image_header(payload: bytes) -> dict | None:
         try:
             while True:
                 marker, seg, i = _jpeg_segment(payload, i)
-                if marker in _JPEG_SOF:
+                if marker in _JPEG_SOF or marker == 0xDE:  # SOFn, DHP
                     frame = _jpeg_parse_sof(seg, marker)
                     return {
                         "format": "jpeg",

@@ -82,12 +82,7 @@ def knn_bruteforce(
             cosine(F.col("_qv"), F.col("_cv")).alias("score"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def hard_negatives(
@@ -535,12 +530,62 @@ def knn_ivf(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cosine(F.col("_qv"), F.col("_cv")).alias("score"))
     )
+    return _top_k(scored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best (query_id, neighbor_id, score) rows,
+    ranked by score descending, neighbor_id breaking ties."""
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
+
+
+def _bucket_top_k(
+    qb: DataFrame,
+    cb: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact-cosine top-k over the pairs sharing a (table_id, bucket)
+    between query buckets ``qb`` (query_id, ...) and corpus buckets
+    ``cb`` (neighbor_id, ...). Candidate pairs dedup as bare ids BEFORE
+    the vectors are fetched; norms come once per vector, so the
+    per-pair score dot/(nq*nc) is cosine()'s arithmetic at a third of
+    the per-pair flops. The query side is the small one (top-k
+    retrieval): broadcast it."""
+    cand = (
+        qb.join(cb, ["table_id", "bucket"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+    qv = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_qv"),
+        l2_norm(F.col(vec_col)).alias("_nq"),
+    )
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("_cv"),
+        l2_norm(F.col(vec_col)).alias("_nc"),
+    )
+    scored = (
+        cand.join(F.broadcast(qv), "query_id")
+        .join(cv, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            (dot(F.col("_qv"), F.col("_cv")) / (F.col("_nq") * F.col("_nc"))).alias("score"),
+        )
+    )
+    return _top_k(scored, k)
 
 
 def knn_lsh(
@@ -577,42 +622,7 @@ def knn_lsh(
     cb = lsh_bucket(corpus, dim, n_planes, n_tables, id_col, vec_col, seed).select(
         F.col("vec_id").alias("neighbor_id"), "table_id", "bucket"
     )
-    cand = (
-        qb.join(cb, ["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # norms once per vector; per-pair score is dot/(nq*nc) — identical
-    # arithmetic to cosine() at a third of the per-pair flops. The
-    # query side is the small one (top-k retrieval): broadcast it.
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_nq"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        l2_norm(F.col(vec_col)).alias("_nc"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("_qv"), F.col("_cv")) / (F.col("_nq") * F.col("_nc"))).alias(
-                "score"
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _bucket_top_k(qb, cb, queries, corpus, k, id_col, vec_col)
 
 
 def knn_axis_lsh(
@@ -657,39 +667,7 @@ def knn_axis_lsh(
     cb = axis_sign_buckets(corpus, n_planes, n_tables, id_col, vec_col, dim).select(
         F.col(id_col).alias("neighbor_id"), "table_id", "bucket"
     )
-    cand = (
-        qb.join(cb, ["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # norms once per vector; per-pair score is dot/(nq*nc) — identical
-    # arithmetic to cosine() at a third of the per-pair flops
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_nq"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        l2_norm(F.col(vec_col)).alias("_nc"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("_qv"), F.col("_cv")) / (F.col("_nq") * F.col("_nc"))).alias("score"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _bucket_top_k(qb, cb, queries, corpus, k, id_col, vec_col)
 
 
 #: fixed-point scale for deterministic distributed centroid accumulation
@@ -1030,12 +1008,7 @@ def knn_pq(
         )
         .select("query_id", "neighbor_id", cosine(F.col("_qv"), F.col("_cv")).alias("score"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(rer, k)
 
 
 def sq8_stats(corpus: DataFrame, vec_col: str = "embedding") -> DataFrame:

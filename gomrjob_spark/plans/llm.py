@@ -15,6 +15,9 @@ Oracle notes:
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,14 +28,17 @@ from gomrjob_spark.pipeline import map_rows
 from gomrjob_spark.plans.registry import query
 
 _SQL_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_SQL_SHINGLES = f"""
-    norm AS (
+#: sh(doc_id, shingle): each document's distinct word 3-gram shingles
+_SQL_SH = f"""norm AS (
       SELECT doc_id, string_split({_SQL_NORM}, ' ') AS w FROM documents
     ),
     sh AS (
       SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
       FROM norm, unnest(generate_series(1, len(w) - 2)) AS t(i)
-    ),
+    )"""
+#: ... plus sizes(doc_id, n_sh)
+_SQL_SHINGLES = f"""
+    {_SQL_SH},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)
 """
 
@@ -57,6 +63,36 @@ _SQL_SHINGLES_CAPPED = (
     sizes_c AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id)
 """
 )
+#: ... plus the shared-shingle intersection counts of every capped pair
+_SQL_CAPPED_INTER = f"""{_SQL_SHINGLES_CAPPED},
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+      FROM shc a JOIN shc b USING (shingle)
+      WHERE a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+#: ... plus the jaccard >= 0.6 edges' transitive closure: reach(node,
+#: label) holds every doc id that reaches node (a RECURSIVE CTE)
+_SQL_CAPPED_REACH = f"""{_SQL_CAPPED_INTER},
+    edges AS (
+      SELECT id_a, id_b
+      FROM inter
+      JOIN sizes_c sa ON sa.doc_id = id_a
+      JOIN sizes_c sb ON sb.doc_id = id_b
+      WHERE CAST(n_common AS DOUBLE)
+            / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.6
+    ),
+    sym AS (
+      SELECT id_a AS src, id_b AS dst FROM edges
+      UNION ALL
+      SELECT id_b AS src, id_a AS dst FROM edges
+    ),
+    reach AS (
+      SELECT doc_id AS node, doc_id AS label FROM documents
+      UNION
+      SELECT s.dst AS node, r.label AS label
+      FROM reach r JOIN sym s ON s.src = r.node
+    )"""
 
 
 def _sql_stop_hits(words: tuple[str, ...]) -> str:
@@ -74,6 +110,27 @@ def _le_bytes(c, nbytes: int):
     hx = F.lpad(F.hex(c), nbytes * 2, "0")
     pairs = [F.substring(hx, i * 2 + 1, 2) for i in range(nbytes)]
     return F.unhex(F.concat(*reversed(pairs)))
+
+
+def _wav_bytes(data_size, sample_rate, channels, *data):
+    """A 16-bit PCM RIFF/WAVE header for a ``data_size``-byte data chunk,
+    followed by the ``data`` byte columns (JVM-side, like _le_bytes)."""
+    bits = F.lit(16)
+    return F.concat(
+        F.encode(F.lit("RIFF"), "UTF-8"),
+        _le_bytes(data_size + 36, 4),
+        F.encode(F.lit("WAVEfmt "), "UTF-8"),
+        _le_bytes(F.lit(16), 4),  # fmt chunk size
+        _le_bytes(F.lit(1), 2),  # PCM
+        _le_bytes(channels, 2),
+        _le_bytes(sample_rate, 4),
+        _le_bytes((sample_rate * channels * bits / 8).cast("int"), 4),
+        _le_bytes((channels * bits / 8).cast("int"), 2),
+        _le_bytes(bits, 2),
+        F.encode(F.lit("data"), "UTF-8"),
+        _le_bytes(data_size, 4),
+        *data,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -99,13 +156,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH {_SQL_SHINGLES_CAPPED},
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM shc a JOIN shc b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_SQL_CAPPED_INTER}
     SELECT id_a, id_b,
            CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
     FROM inter
@@ -136,13 +187,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_containment",
     oracle=f"""
-    WITH {_SQL_SHINGLES_CAPPED},
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM shc a JOIN shc b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    WITH {_SQL_CAPPED_INTER},
     joined AS (
       SELECT id_a, id_b, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b
       FROM inter
@@ -192,27 +237,38 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_dedup_pairs(docs, threshold=0.6).orderBy("id_a", "id_b")
 
 
+def _minhash_bands_sql(
+    num_hashes: int, bands: int, seed: int, key: str, indent: int
+) -> tuple[str, str, str]:
+    """The MinHash-LSH pieces of the md5 mirrors: the signature's min
+    list over (``key``, shingle) rows (one per line, ``indent`` deep),
+    the band selects over sig(``key``, h0, ...) as (``key``, band, v0,
+    ...), and the x/y band-value join condition."""
+    from gomrjob_spark.operators.dedup import _MERSENNE, minhash_coeffs
+
+    rows = num_hashes // bands
+    base = f"(('0x' || substr(md5(shingle),1,15))::BIGINT % {_MERSENNE})"
+    mins = (",\n" + " " * indent).join(
+        f"min(({base} * {a} + {b}) % {_MERSENNE}) AS h{i}"
+        for i, (a, b) in enumerate(minhash_coeffs(num_hashes, seed))
+    )
+    band_selects = "\n      UNION ALL ".join(
+        f"SELECT {key}, {b} AS band, "
+        + ", ".join(f"h{b * rows + r} AS v{r}" for r in range(rows))
+        + " FROM sig"
+        for b in range(bands)
+    )
+    vkeys = " AND ".join(f"x.v{r} = y.v{r}" for r in range(rows))
+    return mins, band_selects, vkeys
+
+
 def _minhash_md5_sql(num_hashes: int, bands: int, seed: int, threshold: float) -> str:
     """DuckDB mirror of dedup.minhash_md5_dedup_pairs: same md5-prefix
     base hash, same affine coefficients (shared generator), same
     band-on-raw-values candidate join, same exact-Jaccard verify."""
-    from gomrjob_spark.operators.dedup import _MERSENNE, minhash_coeffs
-
-    rows = num_hashes // bands
-    coeffs = minhash_coeffs(num_hashes, seed)
-    base = f"(('0x' || substr(md5(shingle),1,15))::BIGINT % {_MERSENNE})"
-    mins = ",\n        ".join(
-        f"min(({base} * {a} + {b}) % {_MERSENNE}) AS h{i}"
-        for i, (a, b) in enumerate(coeffs)
+    mins, band_selects, vkeys = _minhash_bands_sql(
+        num_hashes, bands, seed, "doc_id", 8
     )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {vals} FROM sig".format(
-            b=b,
-            vals=", ".join(f"h{b * rows + r} AS v{r}" for r in range(rows)),
-        )
-        for b in range(bands)
-    )
-    vkeys = " AND ".join(f"x.v{r} = y.v{r}" for r in range(rows))
     return f"""
     WITH {_SQL_SHINGLES},
     sig AS (
@@ -301,6 +357,46 @@ def _axis_bucket_sql(n_planes: int, n_tables: int, src: str = "e") -> str:
 # reproducible in any engine (sign flips are IEEE-exact).
 _TWIN_FLIP_COORD = 7  # 1-based
 _TWIN_ID_OFFSET = 1_000_000  # far above any (scaled-)fixture vec_id
+#: e(vec_id, v) rows: the embeddings plus their sign-flip twins
+_TWIN_E_SQL = f"""SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+      UNION ALL
+      SELECT vec_id + {_TWIN_ID_OFFSET},
+             list_transform(embedding::DOUBLE[],
+               (x, i) -> CASE WHEN i = {_TWIN_FLIP_COORD} THEN -x ELSE x END)
+      FROM embeddings"""
+
+
+def _twins(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding) of the sign-flip twins of ``emb``'s vectors."""
+    flipped = F.transform(
+        F.col("embedding"),
+        lambda x, i: F.when(i == F.lit(_TWIN_FLIP_COORD - 1), -x).otherwise(x),
+    )
+    return emb.select(
+        (F.col("vec_id") + F.lit(_TWIN_ID_OFFSET)).alias("vec_id"),
+        flipped.alias("embedding"),
+    )
+
+
+def _with_twins(emb: DataFrame) -> DataFrame:
+    """The (vec_id, embedding) corpus augmented with its twins."""
+    return emb.select("vec_id", "embedding").unionByName(_twins(emb))
+
+
+def _bucket_dedup_sql(threshold: float) -> str:
+    """Candidate pairs sharing a b(vec_id, table_id, bucket) bucket, then
+    the exact-cosine verify of each against e(vec_id, v)."""
+    return f"""cand AS (
+      SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
+      FROM b a JOIN b c ON a.table_id = c.table_id AND a.bucket = c.bucket
+      WHERE a.vec_id < c.vec_id
+    )
+    SELECT id_a, id_b, list_cosine_similarity(ea.v, eb.v) AS cos
+    FROM cand
+    JOIN e ea ON ea.vec_id = cand.id_a
+    JOIN e eb ON eb.vec_id = cand.id_b
+    WHERE list_cosine_similarity(ea.v, eb.v) >= {threshold}
+    ORDER BY id_a, id_b"""
 
 
 def _lsh_params_sql(threshold: float, occupancy: int = 64) -> str:
@@ -324,11 +420,6 @@ def _lsh_params_sql(threshold: float, occupancy: int = 64) -> str:
              list_sum(list_transform(generate_series(0, pt.k - 1),
                j -> CASE WHEN e.v[pt.table_id * pt.k + j + 1] >= 0 THEN (1::BIGINT << j) ELSE 0::BIGINT END)) AS bucket
       FROM e CROSS JOIN pt
-    ),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-      FROM b a JOIN b c ON a.table_id = c.table_id AND a.bucket = c.bucket
-      WHERE a.vec_id < c.vec_id
     )"""
 
 
@@ -344,17 +435,7 @@ def _embedding_dedup_auto(
     corpus = emb.select("vec_id", "embedding")
     n = emb.count()
     if with_twins:
-        flipped = F.transform(
-            F.col("embedding"),
-            lambda x, i: F.when(i == F.lit(_TWIN_FLIP_COORD - 1), -x).otherwise(x),
-        )
-        corpus = corpus.unionByName(
-            emb.select(
-                (F.col("vec_id") + F.lit(_TWIN_ID_OFFSET)).alias("vec_id"),
-                flipped.alias("embedding"),
-            )
-        )
-        n *= 2
+        corpus, n = _with_twins(emb), 2 * n
     k, tables = dedup.auto_lsh_params(n, threshold=threshold)
     return dedup.embedding_dup_pairs_bucketed(
         corpus, threshold=threshold, n_planes=k, n_tables=tables
@@ -365,20 +446,10 @@ def _embedding_dedup_auto(
     "dedup_embedding_cosine",
     oracle=f"""
     WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      UNION ALL
-      SELECT vec_id + {_TWIN_ID_OFFSET},
-             list_transform(embedding::DOUBLE[],
-               (x, i) -> CASE WHEN i = {_TWIN_FLIP_COORD} THEN -x ELSE x END)
-      FROM embeddings
+      {_TWIN_E_SQL}
     ),
-    {_lsh_params_sql(0.95)}
-    SELECT id_a, id_b, list_cosine_similarity(ea.v, eb.v) AS cos
-    FROM cand
-    JOIN e ea ON ea.vec_id = cand.id_a
-    JOIN e eb ON eb.vec_id = cand.id_b
-    WHERE list_cosine_similarity(ea.v, eb.v) >= 0.95
-    ORDER BY id_a, id_b
+    {_lsh_params_sql(0.95)},
+    {_bucket_dedup_sql(0.95)}
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,12 +502,7 @@ def _rp_oracle_sql(threshold: float, seed: int = 7, dim: int = 64) -> str:
             mask_rows.append(f"({t},{j},{m})")
     return f"""
     WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      UNION ALL
-      SELECT vec_id + {_TWIN_ID_OFFSET},
-             list_transform(embedding::DOUBLE[],
-               (x, i) -> CASE WHEN i = {_TWIN_FLIP_COORD} THEN -x ELSE x END)
-      FROM embeddings
+      {_TWIN_E_SQL}
     ),
     nn AS (SELECT count(*) AS n FROM e),
     lut(k0, k, l) AS (VALUES {vals}),
@@ -458,17 +524,7 @@ def _rp_oracle_sql(threshold: float, seed: int = 7, dim: int = 64) -> str:
       WHERE m.t < prm.l AND m.j < prm.k
     ),
     b AS (SELECT vec_id, table_id, CAST(SUM(bit) AS BIGINT) AS bucket FROM bits GROUP BY 1, 2),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-      FROM b a JOIN b c ON a.table_id = c.table_id AND a.bucket = c.bucket
-      WHERE a.vec_id < c.vec_id
-    )
-    SELECT id_a, id_b, list_cosine_similarity(ea.v, eb.v) AS cos
-    FROM cand
-    JOIN e ea ON ea.vec_id = cand.id_a
-    JOIN e eb ON eb.vec_id = cand.id_b
-    WHERE list_cosine_similarity(ea.v, eb.v) >= {threshold}
-    ORDER BY id_a, id_b
+    {_bucket_dedup_sql(threshold)}
     """
 
 
@@ -484,16 +540,7 @@ def dedup_embedding_cosine_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is a compute budget (k*L dot products per vector), not a
     recall or dimensionality cliff."""
     emb = load_table(spark, sf_dir, "embeddings")
-    flipped = F.transform(
-        F.col("embedding"),
-        lambda x, i: F.when(i == F.lit(_TWIN_FLIP_COORD - 1), -x).otherwise(x),
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(
-        emb.select(
-            (F.col("vec_id") + F.lit(_TWIN_ID_OFFSET)).alias("vec_id"),
-            flipped.alias("embedding"),
-        )
-    )
+    corpus = _with_twins(emb)
     # target_occupancy=8 (r13): the wave-2 64x probe apportioned ~2/3
     # of this query's wall to the n*occ*L/2 candidate/verify term —
     # occupancy 8 buys ~6x fewer candidates for 1.7x more sign bits
@@ -514,17 +561,7 @@ def dedup_embedding_cosine_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     b AS (
       {_axis_bucket_sql(3, 16)}
     ),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-      FROM b a JOIN b c ON a.table_id = c.table_id AND a.bucket = c.bucket
-      WHERE a.vec_id < c.vec_id
-    )
-    SELECT id_a, id_b, list_cosine_similarity(ea.v, eb.v) AS cos
-    FROM cand
-    JOIN e ea ON ea.vec_id = cand.id_a
-    JOIN e eb ON eb.vec_id = cand.id_b
-    WHERE list_cosine_similarity(ea.v, eb.v) >= 0.4
-    ORDER BY id_a, id_b
+    {_bucket_dedup_sql(0.4)}
     """,
 )
 def dedup_embedding_cosine_lowsim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -559,32 +596,7 @@ def dedup_embedding_cosine_lowsim(spark: SparkSession, sf_dir: str) -> DataFrame
 @query(
     "dedup_cluster_survivors",
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM shc a JOIN shc b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    edges AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes_c sa ON sa.doc_id = id_a
-      JOIN sizes_c sb ON sb.doc_id = id_b
-      WHERE CAST(n_common AS DOUBLE)
-            / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.6
-    ),
-    sym AS (
-      SELECT id_a AS src, id_b AS dst FROM edges
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst FROM edges
-    ),
-    reach AS (
-      SELECT doc_id AS node, doc_id AS label FROM documents
-      UNION
-      SELECT s.dst AS node, r.label AS label
-      FROM reach r JOIN sym s ON s.src = r.node
-    )
+    WITH RECURSIVE {_SQL_CAPPED_REACH}
     SELECT node AS doc_id, min(label) AS component
     FROM reach
     GROUP BY node
@@ -622,32 +634,7 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "split_cluster_aware",
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM shc a JOIN shc b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    edges AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes_c sa ON sa.doc_id = id_a
-      JOIN sizes_c sb ON sb.doc_id = id_b
-      WHERE CAST(n_common AS DOUBLE)
-            / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.6
-    ),
-    sym AS (
-      SELECT id_a AS src, id_b AS dst FROM edges
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst FROM edges
-    ),
-    reach AS (
-      SELECT doc_id AS node, doc_id AS label FROM documents
-      UNION
-      SELECT s.dst AS node, r.label AS label
-      FROM reach r JOIN sym s ON s.src = r.node
-    ),
+    WITH RECURSIVE {_SQL_CAPPED_REACH},
     comp AS (
       SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
     )
@@ -758,9 +745,18 @@ def corpus_clean_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+#: each query's top-5 neighbors of scored(query_id, neighbor_id, score)
+_KNN_TOP5_SQL = """SELECT query_id, neighbor_id, score, rank FROM (
+      SELECT *, CAST(row_number() OVER (
+        PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
+      FROM scored
+    ) WHERE rank <= 5
+    ORDER BY query_id, rank"""
+
+
 @query(
     "knn_bruteforce",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -768,12 +764,7 @@ def corpus_clean_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM e q JOIN e c ON c.vec_id != q.vec_id
       WHERE q.vec_id < 10
     )
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    ORDER BY query_id, rank
+    {_KNN_TOP5_SQL}
     """,
 )
 def knn_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,12 +845,7 @@ def knn_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN e eq ON eq.vec_id = cand.query_id
       JOIN e ec ON ec.vec_id = cand.neighbor_id
     )
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    ORDER BY query_id, rank
+    {_KNN_TOP5_SQL}
     """,
 )
 def knn_axis_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1597,28 +1583,10 @@ def multimodal_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     channels = (1 + F.col("doc_id") % 2).cast("int")
     sample_rate = (8000 + (F.col("doc_id") % 8) * 4000).cast("int")
     data_size = ((F.col("doc_id") % 1000 + 1) * 256).cast("bigint")
-    bits = F.lit(16)
-    byte_rate = (sample_rate * channels * bits / 8).cast("int")
-    block_align = (channels * bits / 8).cast("int")
-    le = _le_bytes
-    wav_header = F.concat(
-        F.encode(F.lit("RIFF"), "UTF-8"),
-        le(data_size + 36, 4),
-        F.encode(F.lit("WAVEfmt "), "UTF-8"),
-        le(F.lit(16), 4),  # fmt chunk size
-        le(F.lit(1), 2),  # PCM
-        le(channels, 2),
-        le(sample_rate, 4),
-        le(byte_rate, 4),
-        le(block_align, 2),
-        le(bits, 2),
-        F.encode(F.lit("data"), "UTF-8"),
-        le(data_size, 4),
+    payloads = docs.select(
+        "doc_id", _wav_bytes(data_size, sample_rate, channels).alias("payload")
     )
-    payloads = docs.select("doc_id", wav_header.alias("payload"))
     return multimodal.extract_audio_features(payloads).orderBy("doc_id")
-
-
 
 
 def _sorted_stats(stats: DataFrame) -> DataFrame:
@@ -1635,6 +1603,117 @@ def _sorted_stats(stats: DataFrame) -> DataFrame:
     from gomrjob_spark.cache import scoped_persist
 
     return scoped_persist(stats).orderBy("doc_id")
+
+
+def _per_doc(spark: SparkSession, sf_dir: str, fn, schema: str) -> DataFrame:
+    """The rows ``fn(d)`` returns for every document id ``d`` (a Python
+    int), built scan-local through ``map_rows``. text.spread first: the
+    small-SF documents table is ONE parquet split, which would run the
+    whole Python stage in one task (a no-op on a real cluster)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+
+    @functools.wraps(fn)
+    def rows(doc_id):
+        return fn(int(doc_id))
+
+    return map_rows(text.spread(docs), rows, schema)
+
+
+def _payloads(spark: SparkSession, sf_dir: str, encode) -> DataFrame:
+    """(doc_id, payload): ``encode(d)`` synthesizes each document's bytes."""
+
+    @functools.wraps(encode)
+    def payload(d):
+        return [(d, encode(d))]
+
+    return _per_doc(spark, sf_dir, payload, "doc_id bigint, payload binary")
+
+
+def _pixel_stats(spark: SparkSession, sf_dir: str, encode) -> DataFrame:
+    """Decoded pixel stats of the image ``encode(d)`` writes per document."""
+    return _sorted_stats(
+        multimodal.extract_pixel_stats(_payloads(spark, sf_dir, encode))
+    )
+
+
+def _block_gray(d: int) -> tuple[bytes, int, int]:
+    """(pixels, width, height) of doc ``d``'s per-8x8-block-constant
+    grayscale image: DC-only blocks, which every DCT coding decodes
+    BIT-EXACT at quant=1 (the _BLOCK_GRAY_SQL rows)."""
+    wb, hb = d % 4 + 1, d % 3 + 1
+    wpx, hpx = 8 * wb, 8 * hb
+    px = bytes(
+        (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
+        for y in range(hpx)
+        for x in range(wpx)
+    )
+    return px, wpx, hpx
+
+
+def _scene_cut_frames(d: int) -> list[bytes]:
+    """Doc ``d``'s short video as 8x8 grayscale frames: a scene cut at
+    every frame f >= 1 with (d*7 + f*13) % 5 == 0, frames within a scene
+    identical (the _scene_frames_sql rows)."""
+    frames, cuts = [], 0
+    for f in range(d % 8 + 12):
+        if f >= 1 and (d * 7 + f * 13) % 5 == 0:
+            cuts += 1
+        g = (d * 3 + cuts) % 53
+        frames.append(bytes(
+            (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
+            for y in range(8) for x in range(8)
+        ))
+    return frames
+
+
+def _hexmd5(b: bytes) -> str:
+    """md5 of the hex encoding (DuckDB's md5 takes VARCHAR only)."""
+    return hashlib.md5(b.hex().encode("ascii")).hexdigest()
+
+
+def _pyramid(d: int, px: bytes, w: int, h: int, channels: int = 1, **kw) -> bytes:
+    """Doc ``d``'s hierarchical JPEG of ``px``: 1 or 2 decimation levels
+    and the entropy coder by parity (arithmetic on even docs), a d % 3
+    restart cadence; ``kw`` picks the frame mode."""
+    return multimodal.encode_jpeg_hierarchical(
+        px, w, h, channels=channels,
+        levels=d % 2 + 1, restart_interval=d % 3, arith=d % 2 == 0, **kw,
+    )
+
+
+#: the four pixel stats over v(doc_id, format, w, h, channels, i, val),
+#: after each pixel-stats oracle's (doc_id, format, width, height,
+#: channels) select list
+_PX_STATS_AGG = """CAST(sum(val) AS BIGINT)     AS px_sum,
+           CAST(min(val) AS INT)        AS px_min,
+           CAST(max(val) AS INT)        AS px_max,
+           CAST(sum(i * val) AS BIGINT) AS px_possum
+    FROM v
+    GROUP BY doc_id, format, w, h, channels
+    ORDER BY doc_id"""
+_PX_STATS_SQL = f"""SELECT doc_id, format, w AS width, h AS height,
+           CAST(channels AS INT) AS channels,
+           {_PX_STATS_AGG}"""
+
+#: per-8x8-block-constant grayscale pixels (the _block_gray image) of a
+#: d(doc_id, wb, hb) row, as v rows
+_BLOCK_GRAY_SQL = """SELECT doc_id, 'jpeg' AS format, 8 * wb AS w, 8 * hb AS h,
+             1 AS channels, i,
+             (doc_id * 7
+              + (((i // (8 * wb)) // 8) * wb + ((i % (8 * wb)) // 8)) * 13
+             ) % 256 AS val
+      FROM d, unnest(generate_series(0, 64 * wb * hb - 1)) AS t(i)"""
+
+#: d rows of the mixed-codec pixel-stats queries: PNG/GIF size (w, h)
+#: and the _block_gray block grid (wb, hb)
+_MIXED_D_SQL = """d AS (
+      SELECT doc_id,
+             CAST(doc_id % 6 + 2 AS INT) AS w,
+             CAST(doc_id % 4 + 2 AS INT) AS h,
+             CAST(doc_id % 4 + 1 AS INT) AS wb,
+             CAST(doc_id % 3 + 1 AS INT) AS hb
+      FROM documents
+    )"""
 
 
 @query(
@@ -1696,15 +1775,8 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_compressed_pixel_stats",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id,
-             CAST(doc_id % 6 + 2 AS INT) AS w,
-             CAST(doc_id % 4 + 2 AS INT) AS h,
-             CAST(doc_id % 4 + 1 AS INT) AS wb,
-             CAST(doc_id % 3 + 1 AS INT) AS hb
-      FROM documents
-    ),
+    oracle=f"""
+    WITH {_MIXED_D_SQL},
     png AS (
       SELECT doc_id, 'png' AS format, w, h, 3 AS channels, i,
              (doc_id * 7 + i * 13) % 256 AS val
@@ -1720,25 +1792,14 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE doc_id % 3 = 1
     ),
     jpeg AS (
-      SELECT doc_id, 'jpeg' AS format, 8 * wb AS w, 8 * hb AS h,
-             1 AS channels, i,
-             (doc_id * 7
-              + (((i // (8 * wb)) // 8) * wb + ((i % (8 * wb)) // 8)) * 13
-             ) % 256 AS val
-      FROM d, unnest(generate_series(0, 64 * wb * hb - 1)) AS t(i)
+      {_BLOCK_GRAY_SQL}
       WHERE doc_id % 3 = 2
     ),
     v AS (
       SELECT * FROM png UNION ALL SELECT * FROM gif UNION ALL SELECT * FROM jpeg
     )
     SELECT doc_id, format, w AS width, h AS height, CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
+           {_PX_STATS_AGG}
     """,
 )
 def multimodal_compressed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1756,35 +1817,24 @@ def multimodal_compressed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataF
     stats, including the position-weighted checksum, without
     understanding any container. A filter-inverse, palette,
     de-interlace, LZW, Huffman, or IDCT bug breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 6 + 2, d % 4 + 2
         if d % 3 == 0:
             px = bytes((d * 7 + i * 13) % 256 for i in range(w * h * 3))
-            yield d, multimodal.encode_png(px, w, h, color_type=2)
-        elif d % 3 == 1:
+            return multimodal.encode_png(px, w, h, color_type=2)
+        if d % 3 == 1:
             idx = bytes((d * 7 + j * 13) % 8 for j in range(w * h))
             pal = bytes(5 * j + c for j in range(8) for c in range(3))
-            yield d, multimodal.encode_gif(idx, w, h, pal)
-        else:
-            wb, hb = d % 4 + 1, d % 3 + 1
-            wpx, hpx = 8 * wb, 8 * hb
-            px = bytes(
-                (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
-                for y in range(hpx)
-                for x in range(wpx)
-            )
-            yield d, multimodal.encode_jpeg_baseline(px, wpx, hpx, channels=1)
+            return multimodal.encode_gif(idx, w, h, pal)
+        return multimodal.encode_jpeg_baseline(*_block_gray(d), channels=1)
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
     "multimodal_arith_pixel_stats",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
              CAST(doc_id % 4 + 1 AS INT) AS wb,
@@ -1792,21 +1842,10 @@ def multimodal_compressed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataF
       FROM documents
     ),
     v AS (
-      SELECT doc_id, 'jpeg' AS format, 8 * wb AS w, 8 * hb AS h,
-             1 AS channels, i,
-             (doc_id * 7
-              + (((i // (8 * wb)) // 8) * wb + ((i % (8 * wb)) // 8)) * 13
-             ) % 256 AS val
-      FROM d, unnest(generate_series(0, 64 * wb * hb - 1)) AS t(i)
+      {_BLOCK_GRAY_SQL}
     )
     SELECT doc_id, format, w AS width, h AS height, CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
+           {_PX_STATS_AGG}
     """,
 )
 def multimodal_arith_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1823,28 +1862,46 @@ def multimodal_arith_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doc_id, so the DuckDB oracle recomputes all four stats including
     the position-weighted checksum; a Qe-table, conditioning, carry,
     stuffing, restart, or scan-script bug breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
-        wb, hb = d % 4 + 1, d % 3 + 1
-        wpx, hpx = 8 * wb, 8 * hb
-        px = bytes(
-            (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
-            for y in range(hpx)
-            for x in range(wpx)
+    def synth(d):
+        encode = (
+            multimodal.encode_jpeg_arithmetic
+            if d % 2 == 0
+            else multimodal.encode_jpeg_arith_progressive
         )
-        if d % 2 == 0:
-            yield d, multimodal.encode_jpeg_arithmetic(
-                px, wpx, hpx, channels=1, restart_interval=d % 3
-            )
-        else:
-            yield d, multimodal.encode_jpeg_arith_progressive(
-                px, wpx, hpx, channels=1, restart_interval=d % 3
-            )
+        return encode(*_block_gray(d), channels=1, restart_interval=d % 3)
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
+
+
+def _hash_groups(d: DataFrame, key: str) -> DataFrame:
+    """Hash-group survivorship over ``d`` (doc_id, ``key``): each doc's
+    group size, and whether it is its group's minimum id."""
+    grp = d.groupBy(key).agg(
+        F.count("*").cast("long").alias("group_size"),
+        F.min("doc_id").alias("_canon"),
+    )
+    return (
+        d.join(F.broadcast(grp), key)
+        .select(
+            "doc_id",
+            key,
+            "group_size",
+            (F.col("doc_id") == F.col("_canon")).alias("is_canonical"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _hash_groups_sql(src: str, a: str, key: str) -> str:
+    """The _hash_groups rows of ``src`` (doc_id, ``key``), aliased ``a``."""
+    return f"""grp AS (
+      SELECT {key}, CAST(count(*) AS BIGINT) AS group_size, min(doc_id) AS canonical
+      FROM {src} GROUP BY {key}
+    )
+    SELECT {a}.doc_id, {a}.{key}, g.group_size, {a}.doc_id = g.canonical AS is_canonical
+    FROM {src} {a} JOIN grp g USING ({key})
+    ORDER BY {a}.doc_id"""
 
 
 def _phash_payload_sql(sa: int, sb: int) -> str:
@@ -1879,30 +1936,64 @@ def _phash_synth(docs: DataFrame, mod: int, sa: int = 11, sb: int = 5) -> DataFr
     ).selectExpr("doc_id", _phash_payload_sql(sa, sb))
 
 
-@query(
-    "multimodal_phash_dedup",
-    oracle="""
-    WITH d AS (SELECT doc_id, doc_id % 37 AS g FROM documents),
-    bits AS (
-      SELECT doc_id,
-        CAST(sum(CASE WHEN (g*31 + (x+1)*(7 + g % 11) + y*(13 + g % 5)) % 256 > (g*31 + x*(7 + g % 11) + y*(13 + g % 5)) % 256
+def _dhash_sql(src: str, keys: str, sa: int, sb: int) -> str:
+    """bits/hashes CTEs: the signed 64-bit dHash of each ``src`` row's
+    visual group g, computed from the _phash_payload_sql pixel formula
+    (slope moduli ``sa``/``sb``) without any codec; ``keys`` name a row."""
+
+    def px(x: str) -> str:
+        return f"(g*31 + {x}*(7 + g % {sa}) + y*(13 + g % {sb})) % 256"
+
+    return f"""bits AS (
+      SELECT {keys},
+        CAST(sum(CASE WHEN {px("(x+1)")} > {px("x")}
              THEN (1::HUGEINT << (y*8 + x)) ELSE 0::HUGEINT END) AS HUGEINT) AS raw
-      FROM d, unnest(generate_series(0, 7)) AS tx(x), unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id
+      FROM {src}, unnest(generate_series(0, 7)) AS tx(x), unnest(generate_series(0, 7)) AS ty(y)
+      GROUP BY {keys}
     ),
     hashes AS (
-      SELECT doc_id,
+      SELECT {keys},
         CAST(raw - CASE WHEN raw >= 9223372036854775808::HUGEINT
              THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END AS BIGINT) AS dhash
       FROM bits
+    )"""
+
+
+def _scene_frames_sql(cols: str = "doc_id, n_frames") -> str:
+    """v/fr CTEs: the scene-cut family's frames (the _scene_cut_frames
+    sequence) with their visual group g, as (``cols``, frame_idx, g)."""
+    return f"""v AS (
+      SELECT doc_id, CAST(doc_id % 8 + 12 AS INT) AS n_frames FROM documents
     ),
-    grp AS (
-      SELECT dhash, CAST(count(*) AS BIGINT) AS group_size, min(doc_id) AS canonical
-      FROM hashes GROUP BY dhash
-    )
-    SELECT h.doc_id, h.dhash, g.group_size, h.doc_id = g.canonical AS is_canonical
-    FROM hashes h JOIN grp g USING (dhash)
-    ORDER BY h.doc_id
+    fr AS (
+      SELECT {cols}, CAST(f AS INT) AS frame_idx,
+             CAST((doc_id * 3 + len(list_filter(generate_series(1, f),
+                    x -> (doc_id * 7 + x * 13) % 5 = 0))) % 53 AS BIGINT) AS g
+      FROM v, unnest(generate_series(0, n_frames - 1)) AS t(f)
+    )"""
+
+
+def _frame_hexmd5_sql(src: str = "fr") -> str:
+    """hx CTE: md5 of each ``src`` frame's 8x8 raster as hex text (the
+    _hexmd5 of the Spark side)."""
+    pad = " " * len(f"      FROM {src}, ")
+    return f"""hx AS (
+      SELECT doc_id, n_frames, frame_idx,
+        md5(lower(string_agg(
+          lpad(hex((g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256), 2, '0'),
+          '' ORDER BY y, x))) AS frame_hexmd5
+      FROM {src}, unnest(generate_series(0, 7)) AS tx(x),
+{pad}unnest(generate_series(0, 7)) AS ty(y)
+      GROUP BY doc_id, n_frames, frame_idx, g
+    )"""
+
+
+@query(
+    "multimodal_phash_dedup",
+    oracle=f"""
+    WITH d AS (SELECT doc_id, doc_id % 37 AS g FROM documents),
+    {_dhash_sql("d", "doc_id", 11, 5)},
+    {_hash_groups_sql("hashes", "h", "dhash")}
     """,
 )
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1919,48 +2010,14 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning task; everything downstream groups on an 8-byte key
     (operators.multimodal.perceptual_dhash / extract_dhash)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = multimodal.extract_dhash(_phash_synth(docs, 37))
-    grp = d.groupBy("dhash").agg(
-        F.count("*").cast("long").alias("group_size"),
-        F.min("doc_id").alias("_canon"),
-    )
-    return (
-        d.join(F.broadcast(grp), "dhash")
-        .select(
-            "doc_id",
-            "dhash",
-            "group_size",
-            (F.col("doc_id") == F.col("_canon")).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
+    return _hash_groups(multimodal.extract_dhash(_phash_synth(docs, 37)), "dhash")
 
 
 @query(
     "multimodal_scene_cuts",
-    oracle="""
-    WITH v AS (
-      SELECT doc_id, CAST(doc_id % 8 + 12 AS INT) AS n_frames FROM documents
-    ),
-    fr AS (
-      SELECT doc_id, CAST(f AS INT) AS frame_idx,
-             CAST((doc_id * 3 + len(list_filter(generate_series(1, f),
-                    x -> (doc_id * 7 + x * 13) % 5 = 0))) % 53 AS BIGINT) AS g
-      FROM v, unnest(generate_series(0, n_frames - 1)) AS t(f)
-    ),
-    bits AS (
-      SELECT doc_id, frame_idx,
-        CAST(sum(CASE WHEN (g*31 + (x+1)*(7 + g % 101) + y*(13 + g % 83)) % 256 > (g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256
-             THEN (1::HUGEINT << (y*8 + x)) ELSE 0::HUGEINT END) AS HUGEINT) AS raw
-      FROM fr, unnest(generate_series(0, 7)) AS tx(x), unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id, frame_idx
-    ),
-    hashes AS (
-      SELECT doc_id, frame_idx,
-        CAST(raw - CASE WHEN raw >= 9223372036854775808::HUGEINT
-             THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END AS BIGINT) AS dhash
-      FROM bits
-    ),
+    oracle=f"""
+    WITH {_scene_frames_sql("doc_id")},
+    {_dhash_sql("fr", "doc_id, frame_idx", 101, 83)},
     diffs AS (
       SELECT doc_id, frame_idx,
              CAST(bit_count(xor(dhash,
@@ -2011,25 +2068,9 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_avi_frames",
-    oracle="""
-    WITH v AS (
-      SELECT doc_id, CAST(doc_id % 8 + 12 AS INT) AS n_frames FROM documents
-    ),
-    fr AS (
-      SELECT doc_id, n_frames, CAST(f AS INT) AS frame_idx,
-             CAST((doc_id * 3 + len(list_filter(generate_series(1, f),
-                    x -> (doc_id * 7 + x * 13) % 5 = 0))) % 53 AS BIGINT) AS g
-      FROM v, unnest(generate_series(0, n_frames - 1)) AS t(f)
-    ),
-    hx AS (
-      SELECT doc_id, n_frames, frame_idx,
-        md5(lower(string_agg(
-          lpad(hex((g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256), 2, '0'),
-          '' ORDER BY y, x))) AS frame_hexmd5
-      FROM fr, unnest(generate_series(0, 7)) AS tx(x),
-               unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id, n_frames, frame_idx, g
-    )
+    oracle=f"""
+    WITH {_scene_frames_sql()},
+    {_frame_hexmd5_sql()}
     SELECT doc_id, frame_idx,
       CAST(n_frames AS INT) AS n_frames_hdr,
       CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
@@ -2057,64 +2098,30 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is part of the gated output. Scan-local encode+walk through
     ``map_rows``; zero shuffles before the oracle-determinism orderBy.
     Malformation classes raise precisely — tests/test_riff.py."""
-    import hashlib  # noqa: PLC0415
-
-    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.riff import encode_avi, parse_avi
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def walk(doc_id):
-        d = int(doc_id)
-        n = d % 8 + 12
-        frames, cuts = [], 0
-        for f in range(n):
-            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                cuts += 1
-            g = (d * 3 + cuts) % 53
-            frames.append(bytes(
-                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                for y in range(8) for x in range(8)
-            ))
-        parsed = parse_avi(encode_avi(frames, 8, 8, decoy_every=5))
+    def walk(d):
+        parsed = parse_avi(encode_avi(_scene_cut_frames(d), 8, 8, decoy_every=5))
         for j, frame in enumerate(parsed["frames"]):
             yield (
                 d, j, parsed["n_frames_header"], parsed["width"],
                 parsed["height"], parsed["n_aux_chunks"], len(frame),
-                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+                _hexmd5(frame),
             )
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, frame_idx int, n_frames_hdr int, width int, "
         "height int, n_aux_chunks int, frame_len bigint, "
         "frame_hexmd5 string",
-    )
-    return out.orderBy("doc_id", "frame_idx")
+    ).orderBy("doc_id", "frame_idx")
 
 
 @query(
     "multimodal_mp4_frames",
-    oracle="""
-    WITH v AS (
-      SELECT doc_id, CAST(doc_id % 8 + 12 AS INT) AS n_frames FROM documents
-    ),
-    fr AS (
-      SELECT doc_id, n_frames, CAST(f AS INT) AS frame_idx,
-             CAST((doc_id * 3 + len(list_filter(generate_series(1, f),
-                    x -> (doc_id * 7 + x * 13) % 5 = 0))) % 53 AS BIGINT) AS g
-      FROM v, unnest(generate_series(0, n_frames - 1)) AS t(f)
-    ),
-    hx AS (
-      SELECT doc_id, n_frames, frame_idx,
-        md5(lower(string_agg(
-          lpad(hex((g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256), 2, '0'),
-          '' ORDER BY y, x))) AS frame_hexmd5
-      FROM fr, unnest(generate_series(0, 7)) AS tx(x),
-               unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id, n_frames, frame_idx, g
-    )
+    oracle=f"""
+    WITH {_scene_frames_sql()},
+    {_frame_hexmd5_sql()}
     SELECT doc_id, frame_idx,
       CAST(n_frames AS INT) AS n_samples,
       CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
@@ -2147,69 +2154,34 @@ def multimodal_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame's content md5. Scan-local encode+walk through ``map_rows``;
     zero shuffles before the oracle-determinism orderBy. Malformation
     classes raise precisely — tests/test_mp4.py."""
-    import hashlib  # noqa: PLC0415
-
-    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4 import encode_mp4, parse_mp4
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def walk(doc_id):
-        d = int(doc_id)
-        n = d % 8 + 12
-        frames, cuts = [], 0
-        for f in range(n):
-            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                cuts += 1
-            g = (d * 3 + cuts) % 53
-            frames.append(bytes(
-                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                for y in range(8) for x in range(8)
-            ))
-        parsed = parse_mp4(encode_mp4(frames, 8, 8))
+    def walk(d):
+        parsed = parse_mp4(encode_mp4(_scene_cut_frames(d), 8, 8))
         for j, frame in enumerate(parsed["samples"]):
             yield (
                 d, j, parsed["n_samples"], parsed["width"], parsed["height"],
                 parsed["timescale"], parsed["duration"], parsed["n_chunks"],
-                parsed["sample_offsets"][j], len(frame),
-                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+                parsed["sample_offsets"][j], len(frame), _hexmd5(frame),
             )
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, frame_idx int, n_samples int, width int, "
         "height int, timescale int, duration bigint, n_chunks int, "
         "sample_off bigint, frame_len bigint, frame_hexmd5 string",
-    )
-    return out.orderBy("doc_id", "frame_idx")
+    ).orderBy("doc_id", "frame_idx")
 
 
 @query(
     "multimodal_mp4_keyframes",
-    oracle="""
-    WITH v AS (
-      SELECT doc_id, CAST(doc_id % 8 + 12 AS INT) AS n_frames FROM documents
-    ),
-    fr AS (
-      SELECT doc_id, n_frames, CAST(f AS INT) AS frame_idx,
-             CAST((doc_id * 3 + len(list_filter(generate_series(1, f),
-                    x -> (doc_id * 7 + x * 13) % 5 = 0))) % 53 AS BIGINT) AS g
-      FROM v, unnest(generate_series(0, n_frames - 1)) AS t(f)
-    ),
+    oracle=f"""
+    WITH {_scene_frames_sql()},
     sync AS (
       SELECT * FROM fr
       WHERE frame_idx = 0 OR (doc_id * 3 + frame_idx * 5) % 4 = 0
     ),
-    hx AS (
-      SELECT doc_id, n_frames, frame_idx,
-        md5(lower(string_agg(
-          lpad(hex((g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256), 2, '0'),
-          '' ORDER BY y, x))) AS frame_hexmd5
-      FROM sync, unnest(generate_series(0, 7)) AS tx(x),
-                 unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id, n_frames, frame_idx, g
-    )
+    {_frame_hexmd5_sql("sync")}
     SELECT doc_id, frame_idx AS sample_idx,
       CAST(n_frames AS INT) AS n_samples,
       CAST(count(*) OVER (PARTITION BY doc_id) AS INT) AS n_sync,
@@ -2238,28 +2210,13 @@ def multimodal_mp4_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: scan-local encode+walk through ``map_rows`` like the other codec
     families — and only ~n/4 of the samples ship out of the decode
     stage, which is the operator's whole point at scale."""
-    import hashlib  # noqa: PLC0415
-
-    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4 import encode_mp4, parse_mp4
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def walk(doc_id):
-        d = int(doc_id)
-        n = d % 8 + 12
-        frames, cuts = [], 0
-        for f in range(n):
-            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                cuts += 1
-            g = (d * 3 + cuts) % 53
-            frames.append(bytes(
-                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                for y in range(8) for x in range(8)
-            ))
+    def walk(d):
+        frames = _scene_cut_frames(d)
         marked = [
             j + 1
-            for j in range(n)
+            for j in range(len(frames))
             if j == 0 or (d * 3 + j * 5) % 4 == 0
         ]
         parsed = parse_mp4(encode_mp4(frames, 8, 8, marked))
@@ -2267,20 +2224,16 @@ def multimodal_mp4_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the stss walk, not the writer's list
         for s in parsed["sync_samples"]:
             j = s - 1
-            frame = parsed["samples"][j]
             yield (
                 d, j, parsed["n_samples"], len(parsed["sync_samples"]),
-                parsed["sample_offsets"][j],
-                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+                parsed["sample_offsets"][j], _hexmd5(parsed["samples"][j]),
             )
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, sample_idx int, n_samples int, n_sync int, "
         "sample_off bigint, frame_hexmd5 string",
-    )
-    return out.orderBy("doc_id", "sample_idx")
+    ).orderBy("doc_id", "sample_idx")
 
 
 @query(
@@ -2320,15 +2273,10 @@ def multimodal_mp4_edit_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_time and presents everything — wrong on 4/5 of the corpus,
     so it cannot hash-match. Scan-local encode+walk through ``map_rows``
     like the rest of the codec family."""
-    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4 import encode_mp4, parse_mp4
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def walk(doc_id):
-        d = int(doc_id)
-        n = d % 8 + 12
-        frames = [bytes([j % 256]) * 16 for j in range(n)]
+    def walk(d):
+        frames = [bytes([j % 256]) * 16 for j in range(d % 8 + 12)]
         mt_in = (d % 5) * 512
         parsed = parse_mp4(
             encode_mp4(frames, 8, 8, None, mt_in if mt_in else None)
@@ -2343,13 +2291,11 @@ def multimodal_mp4_edit_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 media - mt if media >= mt else None, n_pres,
             )
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, sample_idx int, media_time bigint, "
         "presented boolean, presentation_time bigint, n_presented int",
-    )
-    return out.orderBy("doc_id", "sample_idx")
+    ).orderBy("doc_id", "sample_idx")
 
 
 from gomrjob_spark.sources.mp4frag import INIT_SEGMENT_BYTES as _FMP4_INIT_BYTES  # noqa: E402
@@ -2358,24 +2304,8 @@ from gomrjob_spark.sources.mp4frag import INIT_SEGMENT_BYTES as _FMP4_INIT_BYTES
 @query(
     "multimodal_mp4_fragments",
     oracle=f"""
-    WITH v AS (
-      SELECT doc_id, CAST(doc_id % 8 + 12 AS INT) AS n_frames FROM documents
-    ),
-    fr AS (
-      SELECT doc_id, n_frames, CAST(f AS INT) AS frame_idx,
-             CAST((doc_id * 3 + len(list_filter(generate_series(1, f),
-                    x -> (doc_id * 7 + x * 13) % 5 = 0))) % 53 AS BIGINT) AS g
-      FROM v, unnest(generate_series(0, n_frames - 1)) AS t(f)
-    ),
-    hx AS (
-      SELECT doc_id, n_frames, frame_idx,
-        md5(lower(string_agg(
-          lpad(hex((g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256), 2, '0'),
-          '' ORDER BY y, x))) AS frame_hexmd5
-      FROM fr, unnest(generate_series(0, 7)) AS tx(x),
-               unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id, n_frames, frame_idx, g
-    )
+    WITH {_scene_frames_sql()},
+    {_frame_hexmd5_sql()}
     SELECT doc_id, frame_idx,
       CAST(frame_idx // 4 + 1 AS INT) AS frag_seq,
       CAST((n_frames + 3) // 4 AS INT) AS n_fragments,
@@ -2407,45 +2337,29 @@ def multimodal_mp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n % 4 != 0 docs), and per-frame content md5 all gated. Scan-local
     encode+walk through ``map_rows``; zero shuffles before the
     oracle-determinism orderBy. Raise matrix: tests/test_mp4frag.py."""
-    import hashlib  # noqa: PLC0415
-
-    from gomrjob_spark.operators.text import spread
     from gomrjob_spark.sources.mp4frag import (
         encode_mp4_fragmented,
         parse_mp4_fragmented,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def walk(doc_id):
-        d = int(doc_id)
-        n = d % 8 + 12
-        frames, cuts = [], 0
-        for f in range(n):
-            if f >= 1 and (d * 7 + f * 13) % 5 == 0:
-                cuts += 1
-            g = (d * 3 + cuts) % 53
-            frames.append(bytes(
-                (g * 31 + x * (7 + g % 101) + y * (13 + g % 83)) % 256
-                for y in range(8) for x in range(8)
-            ))
-        parsed = parse_mp4_fragmented(encode_mp4_fragmented(frames, 8, 8))
+    def walk(d):
+        parsed = parse_mp4_fragmented(
+            encode_mp4_fragmented(_scene_cut_frames(d), 8, 8)
+        )
         for j, frame in enumerate(parsed["samples"]):
             yield (
                 d, j, parsed["fragment_seqs"][j], parsed["n_fragments"],
                 parsed["n_samples"], parsed["width"], parsed["height"],
                 parsed["timescale"], parsed["sample_offsets"][j], len(frame),
-                hashlib.md5(frame.hex().encode("ascii")).hexdigest(),
+                _hexmd5(frame),
             )
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, frame_idx int, frag_seq int, n_fragments int, "
         "n_samples int, width int, height int, timescale int, "
         "sample_off bigint, frame_len bigint, frame_hexmd5 string",
-    )
-    return out.orderBy("doc_id", "frame_idx")
+    ).orderBy("doc_id", "frame_idx")
 
 
 @query(
@@ -2487,8 +2401,6 @@ def multimodal_flac_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     unknown-type skipping is gated, and the last-metadata-block FLAG
     (not a count) terminates the walk. Scan-local, through ``map_rows``;
     malformation classes raise precisely — tests/test_audiometa.py."""
-    import hashlib  # noqa: PLC0415
-
     from gomrjob_spark.operators.audiometa import (
         APPLICATION,
         PADDING,
@@ -2496,9 +2408,7 @@ def multimodal_flac_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_streaminfo,
         parse_flac_header,
     )
-    from gomrjob_spark.operators.text import spread
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     rates = (8000, 16000, 22050, 44100, 48000)
 
     cols = (
@@ -2506,8 +2416,7 @@ def multimodal_flac_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "duration_ms", "md5_hex", "n_meta_blocks", "audio_bytes",
     )
 
-    def walk(doc_id):
-        d = int(doc_id)
+    def walk(d):
         si = encode_streaminfo(
             sample_rate=rates[d % 5],
             channels=1 + d % 2,
@@ -2522,14 +2431,12 @@ def multimodal_flac_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta = parse_flac_header(encode_flac_header(si, extra, b"\xfa" * (d % 9)))
         yield (d, *(meta[k] for k in cols))
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, sample_rate int, channels int, "
         "bits_per_sample int, total_samples bigint, duration_ms bigint, "
         "md5_hex string, n_meta_blocks int, audio_bytes bigint",
-    )
-    return out.orderBy("doc_id")
+    ).orderBy("doc_id")
 
 
 @query(
@@ -2574,16 +2481,13 @@ def multimodal_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1000 * frames * 1152 DIV rate) and byte accounting. Scan-local,
     through ``map_rows``; raise matrix in tests/test_audiometa.py."""
     from gomrjob_spark.operators.audiometa import encode_mp3, parse_mp3_header
-    from gomrjob_spark.operators.text import spread
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     cols = (
         "n_frames", "sample_rate", "bitrate_kbps_avg", "duration_ms",
         "id3_bytes", "stream_bytes",
     )
 
-    def walk(doc_id):
-        d = int(doc_id)
+    def walk(d):
         frames = [
             (1 + (d + i) % 14, d % 3, (d + i) % 2)
             for i in range(5 + d % 7)
@@ -2592,37 +2496,23 @@ def multimodal_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta = parse_mp3_header(encode_mp3(frames, id3_body=id3))
         yield (d, *(meta[k] for k in cols))
 
-    out = map_rows(
-        spread(docs),
-        walk,
+    return _per_doc(
+        spark, sf_dir, walk,
         "doc_id bigint, n_frames int, sample_rate int, "
         "bitrate_kbps_avg int, duration_ms bigint, id3_bytes bigint, "
         "stream_bytes bigint",
-    )
-    return out.orderBy("doc_id")
+    ).orderBy("doc_id")
 
 
 @query(
     "multimodal_phash_near_pairs",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
              doc_id % greatest(37, (SELECT count(*) FROM documents) // 14) AS g
       FROM documents
     ),
-    bits AS (
-      SELECT doc_id,
-        CAST(sum(CASE WHEN (g*31 + (x+1)*(7 + g % 101) + y*(13 + g % 83)) % 256 > (g*31 + x*(7 + g % 101) + y*(13 + g % 83)) % 256
-             THEN (1::HUGEINT << (y*8 + x)) ELSE 0::HUGEINT END) AS HUGEINT) AS raw
-      FROM d, unnest(generate_series(0, 7)) AS tx(x), unnest(generate_series(0, 7)) AS ty(y)
-      GROUP BY doc_id
-    ),
-    hashes AS (
-      SELECT doc_id,
-        CAST(raw - CASE WHEN raw >= 9223372036854775808::HUGEINT
-             THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END AS BIGINT) AS dhash
-      FROM bits
-    ),
+    {_dhash_sql("d", "doc_id", 101, 83)},
     banded AS (
       SELECT doc_id, dhash, bd, (dhash >> (16 * bd)) & 65535 AS bv
       FROM hashes, unnest(generate_series(0, 3)) AS t(bd)
@@ -2672,22 +2562,10 @@ def multimodal_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_progressive_pixel_stats",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id,
-             CAST(doc_id % 6 + 2 AS INT) AS w,
-             CAST(doc_id % 4 + 2 AS INT) AS h,
-             CAST(doc_id % 4 + 1 AS INT) AS wb,
-             CAST(doc_id % 3 + 1 AS INT) AS hb
-      FROM documents
-    ),
+    oracle=f"""
+    WITH {_MIXED_D_SQL},
     prog AS (
-      SELECT doc_id, 'jpeg' AS format, 8 * wb AS w, 8 * hb AS h,
-             1 AS channels, i,
-             (doc_id * 7
-              + (((i // (8 * wb)) // 8) * wb + ((i % (8 * wb)) // 8)) * 13
-             ) % 256 AS val
-      FROM d, unnest(generate_series(0, 64 * wb * hb - 1)) AS t(i)
+      {_BLOCK_GRAY_SQL}
       WHERE doc_id % 4 = 0
     ),
     deep AS (
@@ -2715,13 +2593,7 @@ def multimodal_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL SELECT * FROM adam UNION ALL SELECT * FROM pal
     )
     SELECT doc_id, format, w AS width, h AS height, CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
+           {_PX_STATS_AGG}
     """,
 )
 def multimodal_progressive_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2738,45 +2610,31 @@ def multimodal_progressive_pixel_stats(spark: SparkSession, sf_dir: str) -> Data
     arithmetic in doc_id, so the DuckDB oracle recomputes all four
     stats without understanding any container: a scan-script,
     correction-bit, bit-unpack, or de-interlace bug breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 6 + 2, d % 4 + 2
         if d % 4 == 0:
-            wb, hb = d % 4 + 1, d % 3 + 1
-            wpx, hpx = 8 * wb, 8 * hb
-            px = bytes(
-                (d * 7 + ((y // 8) * wb + x // 8) * 13) % 256
-                for y in range(hpx)
-                for x in range(wpx)
-            )
-            yield d, multimodal.encode_jpeg_progressive(
-                px, wpx, hpx, channels=1,
+            return multimodal.encode_jpeg_progressive(
+                *_block_gray(d), channels=1,
                 restart_interval=2 if d % 2 else 0,
                 dc_al=d % 2 + 1, ac_al=(d // 2) % 2 + 1,
             )
-        elif d % 4 == 1:
+        if d % 4 == 1:
             px16 = b"".join(
                 (((d * 7 + i * 13) % 256) * 257).to_bytes(2, "big")
                 for i in range(w * h * 3)
             )
-            yield d, multimodal.encode_png(px16, w, h, color_type=2, bit_depth=16)
-        elif d % 4 == 2:
+            return multimodal.encode_png(px16, w, h, color_type=2, bit_depth=16)
+        if d % 4 == 2:
             px = bytes((d * 11 + i * 5) % 256 for i in range(w * h * 3))
-            yield d, multimodal.encode_png(px, w, h, color_type=2, interlace=1)
-        else:
-            idx = bytes((d * 3 + j) % 16 for j in range(w * h))
-            plte = bytes(
-                (p * 17 + c * 7) % 256 for p in range(16) for c in range(3)
-            )
-            yield d, multimodal.encode_png(
-                idx, w, h, color_type=3, bit_depth=4, plte=plte,
-                interlace=1,
-            )
+            return multimodal.encode_png(px, w, h, color_type=2, interlace=1)
+        idx = bytes((d * 3 + j) % 16 for j in range(w * h))
+        plte = bytes((p * 17 + c * 7) % 256 for p in range(16) for c in range(3))
+        return multimodal.encode_png(
+            idx, w, h, color_type=3, bit_depth=4, plte=plte, interlace=1
+        )
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
@@ -2825,29 +2683,14 @@ def multimodal_audio_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "",
     )
-    sr, ch, bits = F.lit(16000), F.lit(1), F.lit(16)
-    payload = F.concat(
-        F.encode(F.lit("RIFF"), "UTF-8"),
-        _le_bytes(data_size + 36, 4),
-        F.encode(F.lit("WAVEfmt "), "UTF-8"),
-        _le_bytes(F.lit(16), 4),
-        _le_bytes(F.lit(1), 2),  # PCM
-        _le_bytes(ch, 2),
-        _le_bytes(sr, 4),
-        _le_bytes((sr * ch * bits / 8).cast("int"), 4),
-        _le_bytes((ch * bits / 8).cast("int"), 2),
-        _le_bytes(bits, 2),
-        F.encode(F.lit("data"), "UTF-8"),
-        _le_bytes(data_size, 4),
-        F.unhex(sample_hex),
-    )
+    payload = _wav_bytes(data_size, F.lit(16000), F.lit(1), F.unhex(sample_hex))
     payloads = docs.select("doc_id", payload.alias("payload"))
     return multimodal.extract_audio_sample_stats(payloads).orderBy("doc_id")
 
 
 @query(
     "multimodal_audio_fingerprint_dedup",
-    oracle="""
+    oracle=f"""
     WITH d AS (SELECT doc_id, doc_id % 29 AS g FROM documents),
     bits AS (
       SELECT doc_id,
@@ -2856,13 +2699,7 @@ def multimodal_audio_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM d, unnest(generate_series(0, 31)) AS t(w)
       GROUP BY doc_id
     ),
-    grp AS (
-      SELECT afp, CAST(count(*) AS BIGINT) AS group_size, min(doc_id) AS canonical
-      FROM bits GROUP BY afp
-    )
-    SELECT b.doc_id, b.afp, g.group_size, b.doc_id = g.canonical AS is_canonical
-    FROM bits b JOIN grp g USING (afp)
-    ORDER BY b.doc_id
+    {_hash_groups_sql("bits", "b", "afp")}
     """,
 )
 def multimodal_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2897,22 +2734,7 @@ def multimodal_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> Data
         ),
         "",
     )
-    sr, ch, bits = F.lit(16000), F.lit(1), F.lit(16)
-    payload = F.concat(
-        F.encode(F.lit("RIFF"), "UTF-8"),
-        _le_bytes(data_size + 36, 4),
-        F.encode(F.lit("WAVEfmt "), "UTF-8"),
-        _le_bytes(F.lit(16), 4),
-        _le_bytes(F.lit(1), 2),
-        _le_bytes(ch, 2),
-        _le_bytes(sr, 4),
-        _le_bytes((sr * ch * bits / 8).cast("int"), 4),
-        _le_bytes((ch * bits / 8).cast("int"), 2),
-        _le_bytes(bits, 2),
-        F.encode(F.lit("data"), "UTF-8"),
-        _le_bytes(data_size, 4),
-        F.unhex(sample_hex),
-    )
+    payload = _wav_bytes(data_size, F.lit(16000), F.lit(1), F.unhex(sample_hex))
     # spread BEFORE the per-sample render + Python PCM decode (the
     # _phash_synth rationale: single-split small-SF scan serializes the
     # CPU-heavy synth+decode into one task; no-op on a real cluster)
@@ -2922,20 +2744,7 @@ def multimodal_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> Data
     d = multimodal.extract_audio_fingerprint(
         staged.select("doc_id", payload.alias("payload"))
     )
-    grp = d.groupBy("afp").agg(
-        F.count("*").cast("long").alias("group_size"),
-        F.min("doc_id").alias("_canon"),
-    )
-    return (
-        d.join(F.broadcast(grp), "afp")
-        .select(
-            "doc_id",
-            "afp",
-            "group_size",
-            (F.col("doc_id") == F.col("_canon")).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
+    return _hash_groups(d, "afp")
 
 
 def _afp_val(g, k, n):
@@ -3118,30 +2927,34 @@ def select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_chars", "n_tokens", "cum_tokens").orderBy("doc_id")
 
 
-@query(
-    "pack_token_batches",
-    oracle="""
-    WITH t AS (
+#: t(doc_id, lang, n_tokens, bucket): whitespace-token counts and the
+#: packing hash bucket
+_PACK_BUCKET_SQL = """CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+                  % 64 AS INT) AS bucket"""
+_PACK_TOKENS_SQL = f"""t AS (
       SELECT doc_id, lang,
              CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
                AS n_tokens,
-             CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                  % 64 AS INT) AS bucket
+             {_PACK_BUCKET_SQL}
       FROM documents
-    ),
-    c AS (
-      -- CAST: DuckDB widens the window sum to HUGEINT, which fetches as
-      -- float64 and breaks the dtype-sensitive hash vs Spark's BIGINT
-      SELECT doc_id, lang, bucket, n_tokens,
+    )"""
+
+
+def _pack_offsets_sql(src: str) -> str:
+    """Body of the per-(lang, bucket) exclusive cumsum CTE over ``src``
+    (doc_id, lang, bucket, n_tokens), then the b/o CTEs: bucket totals
+    and their exclusive per-lang prefix — text.pack_token_batches'
+    hierarchical prefix sum."""
+    return f"""SELECT doc_id, lang, bucket, n_tokens,
              CAST(sum(n_tokens) OVER (PARTITION BY lang, bucket ORDER BY doc_id
                                       ROWS BETWEEN UNBOUNDED PRECEDING
                                       AND CURRENT ROW) - n_tokens AS BIGINT)
                AS local_off
-      FROM t
+      FROM {src}
     ),
     b AS (
       SELECT lang, bucket, CAST(sum(n_tokens) AS BIGINT) AS btotal
-      FROM t GROUP BY lang, bucket
+      FROM {src} GROUP BY lang, bucket
     ),
     o AS (
       SELECT lang, bucket,
@@ -3150,12 +2963,45 @@ def select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
                                              AND 1 PRECEDING), 0) AS BIGINT)
                AS bucket_off
       FROM b
-    )
-    SELECT c.doc_id, c.lang, c.n_tokens,
-           CAST(o.bucket_off + c.local_off AS BIGINT) AS start_offset,
-           CAST((o.bucket_off + c.local_off) // 2048 AS BIGINT) AS batch_id
-    FROM c JOIN o ON c.lang = o.lang AND c.bucket = o.bucket
-    ORDER BY c.lang, c.doc_id
+    )"""
+
+
+def _pack_rows_sql(c: str) -> str:
+    """Each doc's start offset and 2048-token batch from the cumsum CTE
+    ``c`` and the bucket offsets o."""
+    return f"""SELECT {c}.doc_id, {c}.lang, {c}.n_tokens,
+           CAST(o.bucket_off + {c}.local_off AS BIGINT) AS start_offset,
+           CAST((o.bucket_off + {c}.local_off) // 2048 AS BIGINT) AS batch_id
+    FROM {c} JOIN o ON {c}.lang = o.lang AND {c}.bucket = o.bucket
+    ORDER BY {c}.lang, {c}.doc_id"""
+
+
+def _pack_batches_sql(n_tokens: str, src: str) -> str:
+    """The packing layout over per-doc counts ``n_tokens`` of ``src``
+    (doc_id, ...), joined to each document's lang."""
+    return f"""t AS (
+      SELECT doc_id, {n_tokens},
+             {_PACK_BUCKET_SQL}
+      FROM {src}
+    ),
+    td AS (
+      SELECT t.doc_id, d.lang, t.n_tokens, t.bucket
+      FROM t JOIN documents d ON d.doc_id = t.doc_id
+    ),
+    cum AS (
+      {_pack_offsets_sql("td")}
+    {_pack_rows_sql("cum")}"""
+
+
+@query(
+    "pack_token_batches",
+    oracle=f"""
+    WITH {_PACK_TOKENS_SQL},
+    c AS (
+      -- CAST: DuckDB widens the window sum to HUGEINT, which fetches as
+      -- float64 and breaks the dtype-sensitive hash vs Spark's BIGINT
+      {_pack_offsets_sql("t")}
+    {_pack_rows_sql("c")}
     """,
 )
 def pack_token_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3173,35 +3019,10 @@ def pack_token_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pack_efficiency_report",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, lang,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-               AS n_tokens,
-             CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                  % 64 AS INT) AS bucket
-      FROM documents
-    ),
+    oracle=f"""
+    WITH {_PACK_TOKENS_SQL},
     c AS (
-      SELECT doc_id, lang, bucket, n_tokens,
-             CAST(sum(n_tokens) OVER (PARTITION BY lang, bucket ORDER BY doc_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) - n_tokens AS BIGINT)
-               AS local_off
-      FROM t
-    ),
-    b AS (
-      SELECT lang, bucket, CAST(sum(n_tokens) AS BIGINT) AS btotal
-      FROM t GROUP BY lang, bucket
-    ),
-    o AS (
-      SELECT lang, bucket,
-             CAST(COALESCE(sum(btotal) OVER (PARTITION BY lang ORDER BY bucket
-                                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND 1 PRECEDING), 0) AS BIGINT)
-               AS bucket_off
-      FROM b
-    ),
+      {_pack_offsets_sql("t")},
     packed AS (
       SELECT c.doc_id, c.lang, c.n_tokens,
              CAST((o.bucket_off + c.local_off) // 2048 AS BIGINT) AS batch_id
@@ -3279,13 +3100,7 @@ def cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "decontaminate_ngrams",
     oracle=f"""
-    WITH norm AS (
-      SELECT doc_id, string_split({_SQL_NORM}, ' ') AS w FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-      FROM norm, unnest(generate_series(1, len(w) - 2)) AS t(i)
-    ),
+    WITH {_SQL_SH},
     bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 25 = 0),
     hits AS (
       SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hit
@@ -3357,14 +3172,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled — plan-pinned; the oracle mirrors buckets, twins, and
     cosine literally."""
     emb = load_table(spark, sf_dir, "embeddings")
-    flipped = F.transform(
-        F.col("embedding"),
-        lambda x, i: F.when(i == F.lit(_TWIN_FLIP_COORD - 1), -x).otherwise(x),
-    )
-    bench = emb.filter(F.col("vec_id") % 25 == 0).select(
-        (F.col("vec_id") + F.lit(_TWIN_ID_OFFSET)).alias("vec_id"),
-        flipped.alias("embedding"),
-    )
+    bench = _twins(emb.filter(F.col("vec_id") % 25 == 0))
     flagged = dedup.semantic_contaminated_ids(
         emb.select("vec_id", "label", "embedding"),
         bench,
@@ -3612,20 +3420,26 @@ def corpus_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mix_weights_equal_tokens",
-    oracle="""
-    WITH t AS (
+#: t(lang, n_docs, n_tokens): whitespace-token totals per language
+_LANG_TOKENS_SQL = """t AS (
       SELECT lang,
              CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT))
                   AS BIGINT) AS n_tokens
       FROM documents GROUP BY lang
-    )
-    SELECT lang, n_docs, n_tokens,
+    )"""
+#: the per-language weight equalizing t's languages at 50k tokens
+_EQUAL_TOKEN_WEIGHTS_SQL = """SELECT lang, n_docs, n_tokens,
            CASE WHEN n_tokens IS NULL OR n_tokens <= 0 THEN 0.0
                 ELSE least(1.0, 50000.0 / CAST(n_tokens AS DOUBLE)) END AS weight
-    FROM t ORDER BY lang
+    FROM t ORDER BY lang"""
+
+
+@query(
+    "mix_weights_equal_tokens",
+    oracle=f"""
+    WITH {_LANG_TOKENS_SQL}
+    {_EQUAL_TOKEN_WEIGHTS_SQL}
     """,
 )
 def mix_weights_equal_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3646,14 +3460,8 @@ def mix_weights_equal_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mix_weights_temperature",
-    oracle="""
-    WITH t AS (
-      SELECT lang,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT))
-                  AS BIGINT) AS n_tokens
-      FROM documents GROUP BY lang
-    ),
+    oracle=f"""
+    WITH {_LANG_TOKENS_SQL},
     s AS (
       SELECT lang, n_docs, n_tokens,
              n_tokens * 1000000 AS x,
@@ -3714,6 +3522,16 @@ _SEARCH_Q_SQL = "q(query_id, term) AS (VALUES " + ", ".join(
 ) + ")"
 
 
+#: each query's top-10 documents of s(query_id, doc_id, score)
+_SEARCH_TOP10_SQL = """r AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY score DESC, doc_id
+      ) AS rnk FROM s
+    )
+    SELECT query_id, doc_id, score, CAST(rnk AS INT) AS rank
+    FROM r WHERE rnk <= 10 ORDER BY query_id, rank"""
+
+
 def _search_queries_df(spark: SparkSession) -> DataFrame:
     return local_df(spark, _SEARCH_QUERIES, "query_id int, term string")
 
@@ -3732,13 +3550,7 @@ def _search_queries_df(spark: SparkSession) -> DataFrame:
       SELECT q.query_id, tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS score
       FROM q JOIN tf USING (term) GROUP BY 1, 2
     ),
-    r AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, doc_id
-      ) AS rnk FROM s
-    )
-    SELECT query_id, doc_id, score, CAST(rnk AS INT) AS rank
-    FROM r WHERE rnk <= 10 ORDER BY query_id, rank
+    {_SEARCH_TOP10_SQL}
     """,
 )
 def search_tf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3849,13 +3661,7 @@ def search_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM q JOIN tf USING (term) JOIN dfreq USING (term), stats
       GROUP BY 1, 2
     ),
-    r AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, doc_id
-      ) AS rnk FROM s
-    )
-    SELECT query_id, doc_id, score, CAST(rnk AS INT) AS rank
-    FROM r WHERE rnk <= 10 ORDER BY query_id, rank
+    {_SEARCH_TOP10_SQL}
     """,
 )
 def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4030,17 +3836,29 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-@query(
-    "graph_triangles",
-    oracle="""
-    WITH big AS (
+#: pairs(a, b): parts some order ships >= 40 units of both, a < b
+_CO_ORDER_PAIRS_SQL = """big AS (
       SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 40
     ),
     pairs AS (
       SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
       FROM big l1 JOIN big l2 ON l1.l_orderkey = l2.l_orderkey
       WHERE l1.l_partkey < l2.l_partkey
-    ),
+    )"""
+
+
+def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a, b) edges of the high-quantity co-order part graph, a < b."""
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
+    l1 = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("a"))
+    l2 = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("b"))
+    return l1.join(l2, "ok").filter(F.col("a") < F.col("b")).select("a", "b").distinct()
+
+
+@query(
+    "graph_triangles",
+    oracle=f"""
+    WITH {_CO_ORDER_PAIRS_SQL},
     tri AS (
       SELECT e1.a AS x, e1.b AS y, e2.b AS z
       FROM pairs e1
@@ -4070,12 +3888,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     every step is a keyed equi-join."""
     from gomrjob_spark.operators.graph import triangle_counts
 
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
-    l1 = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("a"))
-    l2 = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("b"))
-    edges = (
-        l1.join(l2, "ok").filter(F.col("a") < F.col("b")).select("a", "b").distinct()
-    )
+    edges = _co_order_edges(spark, sf_dir)
     return triangle_counts(edges).orderBy("node")
 
 
@@ -4320,47 +4133,23 @@ def text_byte_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _bpe_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, n_bpe): each document's symbol count under the
+    BPE merges trained on the corpus."""
+    merges = text.bpe_train_merges(docs, n_merges=_BPE_ROUNDS)
+    counted = text.bpe_apply(docs, merges).select(
+        "doc_id", F.size("toks").cast("bigint").alias("n_bpe")
+    )
+    return docs.select("doc_id", "lang").join(counted, "doc_id")
+
+
 @query(
     "pack_bpe_batches",
     oracle=_BPE_CHAIN
     + ","
     + _BPE_FINAL_TOKS
-    + """,
-    t AS (
-      SELECT doc_id, n_bpe_tokens AS n_tokens,
-             CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                  % 64 AS INT) AS bucket
-      FROM final_toks
-    ),
-    td AS (
-      SELECT t.doc_id, d.lang, t.n_tokens, t.bucket
-      FROM t JOIN documents d ON d.doc_id = t.doc_id
-    ),
-    cum AS (
-      SELECT doc_id, lang, bucket, n_tokens,
-             CAST(sum(n_tokens) OVER (PARTITION BY lang, bucket ORDER BY doc_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) - n_tokens AS BIGINT)
-               AS local_off
-      FROM td
-    ),
-    b AS (
-      SELECT lang, bucket, CAST(sum(n_tokens) AS BIGINT) AS btotal
-      FROM td GROUP BY lang, bucket
-    ),
-    o AS (
-      SELECT lang, bucket,
-             CAST(COALESCE(sum(btotal) OVER (PARTITION BY lang ORDER BY bucket
-                                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND 1 PRECEDING), 0) AS BIGINT)
-               AS bucket_off
-      FROM b
-    )
-    SELECT cum.doc_id, cum.lang, cum.n_tokens,
-           CAST(o.bucket_off + cum.local_off AS BIGINT) AS start_offset,
-           CAST((o.bucket_off + cum.local_off) // 2048 AS BIGINT) AS batch_id
-    FROM cum JOIN o ON cum.lang = o.lang AND cum.bucket = o.bucket
-    ORDER BY cum.lang, cum.doc_id
+    + f""",
+    {_pack_batches_sql("n_bpe_tokens AS n_tokens", "final_toks")}
     """,
 )
 def pack_bpe_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4376,11 +4165,7 @@ def pack_bpe_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays training AND encoding through the materialized chain, then
     recomputes the identical layout."""
     docs = load_table(spark, sf_dir, "documents")
-    merges = text.bpe_train_merges(docs, n_merges=_BPE_ROUNDS)
-    counted = text.bpe_apply(docs, merges).select(
-        "doc_id", F.size("toks").cast("bigint").alias("n_bpe")
-    )
-    base = docs.select("doc_id", "lang").join(counted, "doc_id")
+    base = _bpe_counts(docs)
     return text.pack_token_batches(
         base, budget=2048, n_tokens_col="n_bpe"
     ).orderBy("lang", "doc_id")
@@ -4391,7 +4176,7 @@ def pack_bpe_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_BPE_CHAIN
     + ","
     + _BPE_FINAL_TOKS
-    + """,
+    + f""",
     t AS (
       SELECT d.lang,
              CAST(count(*) AS BIGINT) AS n_docs,
@@ -4399,10 +4184,7 @@ def pack_bpe_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM final_toks f JOIN documents d ON d.doc_id = f.doc_id
       GROUP BY d.lang
     )
-    SELECT lang, n_docs, n_tokens,
-           CASE WHEN n_tokens IS NULL OR n_tokens <= 0 THEN 0.0
-                ELSE least(1.0, 50000.0 / CAST(n_tokens AS DOUBLE)) END AS weight
-    FROM t ORDER BY lang
+    {_EQUAL_TOKEN_WEIGHTS_SQL}
     """,
 )
 def mixture_bpe_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4417,20 +4199,15 @@ def mixture_bpe_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gomrjob_spark.operators.sampling import mixture_weights
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = text.bpe_train_merges(docs, n_merges=_BPE_ROUNDS)
-    counted = text.bpe_apply(docs, merges).select(
-        "doc_id", F.size("toks").cast("bigint").alias("n_bpe")
-    )
-    t = docs.select("doc_id", "lang").join(counted, "doc_id")
+    t = _bpe_counts(docs)
     return mixture_weights(
         t, token_col="n_bpe", group_col="lang", target_per_group=50_000
     ).orderBy("lang")
 
 
-@query(
-    "text_ngram_perplexity",
-    oracle=f"""
-    WITH norm AS (
+#: the perplexity gates' training: normalized token lists, the doc_id % 5
+#: reference slice, its unigram counts and their total
+_LM_TRAIN_SQL = f"""norm AS (
       SELECT doc_id, list_filter(string_split({_SQL_NORM}, ' '), x -> x <> '') AS w
       FROM documents
     ),
@@ -4440,7 +4217,9 @@ def mixture_bpe_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tr t, unnest(generate_series(1, len(t.w))) s(i)
       GROUP BY 1
     ),
-    tot AS (SELECT CAST(sum(c1) AS BIGINT) AS t FROM uni),
+    tot AS (SELECT CAST(sum(c1) AS BIGINT) AS t FROM uni)"""
+#: ... plus each bigram's fixed-point surprisal sc(doc_id, bits)
+_BIGRAM_BITS_SQL = f"""{_LM_TRAIN_SQL},
     bi AS (
       SELECT t.w[i] AS w1, t.w[i+1] AS w2, count(*) AS c2
       FROM tr t, unnest(generate_series(1, len(t.w) - 1)) s(i)
@@ -4459,7 +4238,13 @@ def mixture_bpe_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
       LEFT JOIN bi b ON b.w1 = p.w1 AND b.w2 = p.w2
       LEFT JOIN uni u1 ON u1.tok = p.w1
       LEFT JOIN uni u2 ON u2.tok = p.w2, tot t
-    )
+    )"""
+
+
+@query(
+    "text_ngram_perplexity",
+    oracle=f"""
+    WITH {_BIGRAM_BITS_SQL}
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
            CAST(sum(bits) AS BIGINT) AS total_bits,
            CAST((1000 * sum(bits)) // count(*) AS BIGINT) AS mbits_per_bigram
@@ -4489,17 +4274,7 @@ def text_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_trigram_perplexity",
     oracle=f"""
-    WITH norm AS (
-      SELECT doc_id, list_filter(string_split({_SQL_NORM}, ' '), x -> x <> '') AS w
-      FROM documents
-    ),
-    tr AS (SELECT doc_id, w FROM norm WHERE doc_id % 5 = 0),
-    uni AS (
-      SELECT t.w[i] AS tok, count(*) AS c1
-      FROM tr t, unnest(generate_series(1, len(t.w))) s(i)
-      GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(c1) AS BIGINT) AS t FROM uni),
+    WITH {_LM_TRAIN_SQL},
     bi AS (
       SELECT t.w[i] AS wa, t.w[i+1] AS wb, count(*) AS c2
       FROM tr t, unnest(generate_series(1, len(t.w) - 1)) s(i)
@@ -4755,6 +4530,25 @@ def text_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.kn_perplexity(docs, train).orderBy("doc_id")
 
 
+def _edit1_pairs_sql(indent: int = 4) -> str:
+    """FROM/WHERE keeping the token-edit-distance <= 1 pairs of tt(id,
+    toks, m) by direct comparison — the all-pairs form the deletion-
+    neighborhood join avoids — for a select ``indent`` spaces deep."""
+    return """FROM tt a JOIN tt b ON a.id < b.id AND abs(a.m - b.m) <= 1
+    WHERE CASE
+      WHEN a.m = b.m THEN
+        list_sum(list_transform(range(1, a.m + 1),
+          i -> CASE WHEN a.toks[i] <> b.toks[i] THEN 1 ELSE 0 END)) <= 1
+      ELSE (
+        coalesce(list_position(list_transform(range(1, least(a.m, b.m) + 1),
+            i -> a.toks[i] = b.toks[i]), false) - 1, least(a.m, b.m))
+        + coalesce(list_position(list_transform(range(1, least(a.m, b.m) + 1),
+            i -> a.toks[a.m + 1 - i] = b.toks[b.m + 1 - i]), false) - 1,
+            least(a.m, b.m))
+      ) >= least(a.m, b.m)
+    END""".replace("\n    ", "\n" + " " * indent)
+
+
 @query(
     "dedup_title_edit1",
     oracle=f"""
@@ -4768,19 +4562,7 @@ def text_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN list_sum(list_transform(range(1, a.m + 1),
                        i -> CASE WHEN a.toks[i] <> b.toks[i] THEN 1 ELSE 0 END))
                 ELSE 1 END AS INT) AS dist
-    FROM tt a JOIN tt b ON a.id < b.id AND abs(a.m - b.m) <= 1
-    WHERE CASE
-      WHEN a.m = b.m THEN
-        list_sum(list_transform(range(1, a.m + 1),
-          i -> CASE WHEN a.toks[i] <> b.toks[i] THEN 1 ELSE 0 END)) <= 1
-      ELSE (
-        coalesce(list_position(list_transform(range(1, least(a.m, b.m) + 1),
-            i -> a.toks[i] = b.toks[i]), false) - 1, least(a.m, b.m))
-        + coalesce(list_position(list_transform(range(1, least(a.m, b.m) + 1),
-            i -> a.toks[a.m + 1 - i] = b.toks[b.m + 1 - i]), false) - 1,
-            least(a.m, b.m))
-      ) >= least(a.m, b.m)
-    END
+    {_edit1_pairs_sql()}
     ORDER BY id_a, id_b
     """,
 )
@@ -4928,44 +4710,32 @@ def knn_sq8_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-@query(
-    "entity_resolution_pipeline",
-    oracle=f"""
-    WITH RECURSIVE norm AS (
-      SELECT doc_id, string_split({_SQL_NORM}, ' ') AS w FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-      FROM norm, unnest(generate_series(1, len(w) - 2)) AS t(i)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
+def _prefix_jaccard_sql(name: str) -> str:
+    """``name``(id_a, id_b): the shingle-sharing pairs of sh/sizes at
+    Jaccard >= 4/5, as the exact integer test 9*i >= 4*(na+nb)."""
+    return f"""inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
       FROM sh a JOIN sh b USING (shingle)
       WHERE a.doc_id < b.doc_id GROUP BY 1, 2
     ),
-    jp AS (
+    {name} AS (
       SELECT id_a, id_b FROM inter
       JOIN sizes sa ON sa.doc_id = id_a
       JOIN sizes sb ON sb.doc_id = id_b
       WHERE 9 * n_common >= 4 * (sa.n_sh + sb.n_sh)
-    ),
+    )"""
+
+
+@query(
+    "entity_resolution_pipeline",
+    oracle=f"""
+    WITH RECURSIVE {_SQL_SH},
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+    {_prefix_jaccard_sql("jp")},
     tt AS (SELECT doc_id AS id, w[1:6] AS toks, len(w[1:6]) AS m FROM norm),
     te AS (
       SELECT a.id AS id_a, b.id AS id_b
-      FROM tt a JOIN tt b ON a.id < b.id AND abs(a.m - b.m) <= 1
-      WHERE CASE
-        WHEN a.m = b.m THEN
-          list_sum(list_transform(range(1, a.m + 1),
-            i -> CASE WHEN a.toks[i] <> b.toks[i] THEN 1 ELSE 0 END)) <= 1
-        ELSE (
-          coalesce(list_position(list_transform(range(1, least(a.m, b.m) + 1),
-              i -> a.toks[i] = b.toks[i]), false) - 1, least(a.m, b.m))
-          + coalesce(list_position(list_transform(range(1, least(a.m, b.m) + 1),
-              i -> a.toks[a.m + 1 - i] = b.toks[b.m + 1 - i]), false) - 1,
-              least(a.m, b.m))
-        ) >= least(a.m, b.m)
-      END
+      {_edit1_pairs_sql(6)}
     ),
     edges AS (SELECT * FROM jp UNION SELECT * FROM te),
     sym AS (
@@ -5212,15 +4982,8 @@ def search_proximity_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_link_prediction",
-    oracle="""
-    WITH big AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 40
-    ),
-    pairs AS (
-      SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-      FROM big l1 JOIN big l2 ON l1.l_orderkey = l2.l_orderkey
-      WHERE l1.l_partkey < l2.l_partkey
-    ),
+    oracle=f"""
+    WITH {_CO_ORDER_PAIRS_SQL},
     sym AS (
       SELECT a AS apex, b AS n FROM pairs
       UNION ALL SELECT b, a FROM pairs
@@ -5250,12 +5013,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     control for Σ deg^2 wedge enumeration at scale."""
     from gomrjob_spark.operators.graph import common_neighbors_topk
 
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
-    l1 = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("a"))
-    l2 = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("b"))
-    edges = (
-        l1.join(l2, "ok").filter(F.col("a") < F.col("b")).select("a", "b").distinct()
-    )
+    edges = _co_order_edges(spark, sf_dir)
     return common_neighbors_topk(edges, k=20).orderBy(
         F.desc("n_common"), "x", "y"
     )
@@ -5471,17 +5229,7 @@ def sample_weighted_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_best_quality_survivors",
     oracle=f"""
     WITH RECURSIVE {_SQL_SHINGLES},
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b USING (shingle)
-      WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-    ),
-    edges AS (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-      WHERE 9 * n_common >= 4 * (sa.n_sh + sb.n_sh)
-    ),
+    {_prefix_jaccard_sql("edges")},
     sym AS (
       SELECT id_a AS src, id_b AS dst FROM edges
       UNION ALL SELECT id_b, id_a FROM edges
@@ -5692,6 +5440,25 @@ def _fine_round_sql(prev: str, assign: str, nxt: str) -> str:
     )"""
 
 
+def _fine_assign_sql(coarse: str, out: str) -> str:
+    """``out``(vec_id, v, cell): the fine argmax vs f2 within each
+    ``coarse``(vec_id, v, ccell) row's coarse cell, as the flat
+    composite cell (ccell - 1) * kf + fcell (fcell 1 where the coarse
+    cell has no fine centroids)."""
+    return f"""{out} AS MATERIALIZED (
+      SELECT vec_id, v,
+             CAST((ccell - 1) * (SELECT kf FROM par)
+                  + COALESCE(fcell, 1) AS INT) AS cell
+      FROM (
+        SELECT a.vec_id, a.v, a.ccell, c.fcell,
+               row_number() OVER (PARTITION BY a.vec_id
+                 ORDER BY list_cosine_similarity(a.v, c.centroid) DESC, c.fcell)
+                 AS rn
+        FROM {coarse} a LEFT JOIN f2 c ON c.ccell = a.ccell) s
+      WHERE rn = 1
+    )"""
+
+
 def _semdedup_train_sql() -> str:
     """The full two-level SemDeDup training chain (assumes a CTE
     ``e(vec_id, v)``): par (k = GREATEST(8, n//128) factored as
@@ -5734,18 +5501,7 @@ def _semdedup_train_sql() -> str:
     ),
     {_fine_round_sql("f0", "fa1", "f1")},
     {_fine_round_sql("f1", "fa2", "f2")},
-    af AS MATERIALIZED (
-      SELECT vec_id, v,
-             CAST((ccell - 1) * (SELECT kf FROM par)
-                  + COALESCE(fcell, 1) AS INT) AS cell
-      FROM (
-        SELECT a.vec_id, a.v, a.ccell, c.fcell,
-               row_number() OVER (PARTITION BY a.vec_id
-                 ORDER BY list_cosine_similarity(a.v, c.centroid) DESC, c.fcell)
-                 AS rn
-        FROM ac a LEFT JOIN f2 c ON c.ccell = a.ccell) s
-      WHERE rn = 1
-    )"""
+    {_fine_assign_sql("ac", "af")}"""
 
 
 def _hier_assign_sql(src: str, out: str) -> str:
@@ -5768,30 +5524,14 @@ def _hier_assign_sql(src: str, out: str) -> str:
         FROM {src} e CROSS JOIN c2 c) s
       WHERE rn = 1
     ),
-    {out} AS MATERIALIZED (
-      SELECT vec_id, v,
-             CAST((ccell - 1) * (SELECT kf FROM par)
-                  + COALESCE(fcell, 1) AS INT) AS cell
-      FROM (
-        SELECT a.vec_id, a.v, a.ccell, c.fcell,
-               row_number() OVER (PARTITION BY a.vec_id
-                 ORDER BY list_cosine_similarity(a.v, c.centroid) DESC, c.fcell)
-                 AS rn
-        FROM {out}_c a LEFT JOIN f2 c ON c.ccell = a.ccell) s
-      WHERE rn = 1
-    )"""
+    {_fine_assign_sql(out + "_c", out)}"""
 
 
 @query(
     "dedup_semantic_diversity",
     oracle=f"""
     WITH e AS MATERIALIZED (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      UNION ALL
-      SELECT vec_id + {_TWIN_ID_OFFSET},
-             list_transform(embedding::DOUBLE[],
-               (x, i) -> CASE WHEN i = {_TWIN_FLIP_COORD} THEN -x ELSE x END)
-      FROM embeddings
+      {_TWIN_E_SQL}
     ),
     {_semdedup_train_sql()},
     drp AS MATERIALIZED (
@@ -5837,16 +5577,7 @@ def dedup_semantic_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join keeps survivors. Returns (vec_id, cell) so the hash gate
     also pins the CLUSTERING, not just the drop set."""
     emb = load_table(spark, sf_dir, "embeddings")
-    flipped = F.transform(
-        F.col("embedding"),
-        lambda x, i: F.when(i == F.lit(_TWIN_FLIP_COORD - 1), -x).otherwise(x),
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(
-        emb.select(
-            (F.col("vec_id") + F.lit(_TWIN_ID_OFFSET)).alias("vec_id"),
-            flipped.alias("embedding"),
-        )
-    )
+    corpus = _with_twins(emb)
     surv = similarity.semantic_diversity_survivors(
         corpus, threshold=0.95, target_cell=128, min_cells=8, n_iters=2
     )
@@ -5979,21 +5710,13 @@ def text_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors the fold literally. Trains on the doc_id%5 reference slice
     (the perplexity-gate convention)."""
     docs = load_table(spark, sf_dir, "documents")
-    train = docs.filter(F.col("doc_id") % 5 == 0)
-    return text.unigram_lm_train(
-        train,
-        n_rounds=2,
-        max_piece_len=_UNI_L,
-        seed_min=_UNI_SEED_MIN,
-        prune_min=_UNI_PRUNE_MIN,
-        oov_bits=_UNI_OOV,
-    ).orderBy("piece")
+    return _unigram_vocab(docs).orderBy("piece")
 
 
-@query(
-    "text_unigram_encode",
-    oracle=_UNI_TRAIN_SQL + f""",
-    {_uni_vm_sql("voc2", "vmf")},
+#: ctoks(doc_id, i, tok): every corpus token in order, and the Viterbi
+#: segmentation vitf(w, seg, bits) of each distinct one under the
+#: trained vocabulary (after _UNI_TRAIN_SQL)
+_UNI_CORPUS_SQL = f"""{_uni_vm_sql("voc2", "vmf")},
     ctoks AS MATERIALIZED (
       SELECT doc_id, i, w[i] AS tok FROM (
         SELECT doc_id,
@@ -6002,7 +5725,26 @@ def text_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         unnest(generate_series(1, len(w))) s(i)
     ),
     cw AS MATERIALIZED (SELECT DISTINCT tok AS w FROM ctoks),
-    {_uni_viterbi_sql("cw", "vmf", "vitf")}
+    {_uni_viterbi_sql("cw", "vmf", "vitf")}"""
+
+
+def _unigram_vocab(docs: DataFrame) -> DataFrame:
+    """The unigram-LM vocabulary trained on the doc_id % 5 slice."""
+    train = docs.filter(F.col("doc_id") % 5 == 0)
+    return text.unigram_lm_train(
+        train,
+        n_rounds=2,
+        max_piece_len=_UNI_L,
+        seed_min=_UNI_SEED_MIN,
+        prune_min=_UNI_PRUNE_MIN,
+        oov_bits=_UNI_OOV,
+    )
+
+
+@query(
+    "text_unigram_encode",
+    oracle=_UNI_TRAIN_SQL + f""",
+    {_UNI_CORPUS_SQL}
     SELECT t.doc_id,
            CAST(sum(len(v.seg)) AS BIGINT) AS n_pieces,
            CAST(sum(v.bits) AS BIGINT) AS total_bits,
@@ -6029,15 +5771,7 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle segments each DISTINCT corpus token once via the recursive
     CTE and reassembles per doc in token order."""
     docs = load_table(spark, sf_dir, "documents")
-    train = docs.filter(F.col("doc_id") % 5 == 0)
-    vocab = text.unigram_lm_train(
-        train,
-        n_rounds=2,
-        max_piece_len=_UNI_L,
-        seed_min=_UNI_SEED_MIN,
-        prune_min=_UNI_PRUNE_MIN,
-        oov_bits=_UNI_OOV,
-    )
+    vocab = _unigram_vocab(docs)
     return text.unigram_encode(
         docs, vocab, max_piece_len=_UNI_L, oov_bits=_UNI_OOV
     ).select(
@@ -6312,30 +6046,29 @@ def dedup_paragraph_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@query(
-    "multimodal_lossless_pixel_stats",
-    oracle="""
+def _gray_ramp_sql(w_mod: int, h_mod: int, a: int, b: int) -> str:
+    """Pixel-stats oracle of per-pixel formula grayscale images (the
+    lossless codings' fixture): size (doc_id % w_mod + 2) x (doc_id %
+    h_mod + 2), sample i = (doc_id * a + i * b) % 256."""
+    return f"""
     WITH d AS (
       SELECT doc_id,
-             CAST(doc_id % 6 + 2 AS INT) AS w,
-             CAST(doc_id % 4 + 2 AS INT) AS h
+             CAST(doc_id % {w_mod} + 2 AS INT) AS w,
+             CAST(doc_id % {h_mod} + 2 AS INT) AS h
       FROM documents
     ),
     v AS (
       SELECT doc_id, 'jpeg' AS format, w, h, 1 AS channels, i,
-             (doc_id * 7 + i * 13) % 256 AS val
+             (doc_id * {a} + i * {b}) % 256 AS val
       FROM d, unnest(generate_series(0, w * h - 1)) AS t(i)
     )
-    SELECT doc_id, format, w AS width, h AS height,
-           CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
-    """,
+    {_PX_STATS_SQL}
+    """
+
+
+@query(
+    "multimodal_lossless_pixel_stats",
+    oracle=_gray_ramp_sql(6, 4, 7, 13),
 )
 def multimodal_lossless_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-JPEG decode under the oracle gate (the r7 verdict's
@@ -6352,26 +6085,23 @@ def multimodal_lossless_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFra
     the position-weighted checksum directly from the formula. A
     predictor, context-classification, ladder-selection, carry,
     stuffing, or restart bug breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 6 + 2, d % 4 + 2
         px = bytes((d * 7 + i * 13) % 256 for i in range(w * h))
-        yield d, multimodal.encode_jpeg_lossless(
+        return multimodal.encode_jpeg_lossless(
             px, w, h, channels=1,
             predictor=d % 7 + 1,
             restart_interval=d % 3,
             arith=d % 2 == 0,
         )
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
     "multimodal_lossless_subsampled_stats",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
              CAST(doc_id % 6 + 5 AS INT) AS w,
@@ -6391,15 +6121,7 @@ def multimodal_lossless_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFra
              END AS val
       FROM d, unnest(generate_series(0, w * h * 3 - 1)) AS t(i)
     )
-    SELECT doc_id, format, w AS width, h AS height,
-           CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
+    {_PX_STATS_SQL}
     """,
 )
 def multimodal_lossless_subsampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6418,10 +6140,8 @@ def multimodal_lossless_subsampled_stats(spark: SparkSession, sf_dir: str) -> Da
     epoch, padding-crop, or replication bug breaks the hash;
     arbitrary-chroma plane-exactness is pinned in
     tests/test_jpeg_lossless.py."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 6 + 5, d % 5 + 5
         hs = 1 if d % 3 == 1 else 2
         vs = 1 if d % 3 == 2 else 2
@@ -6434,7 +6154,7 @@ def multimodal_lossless_subsampled_stats(spark: SparkSession, sf_dir: str) -> Da
                     (d * 11 + cy * 31 + cx * 17 + 29 + 3) % 256,
                     (d * 11 + cy * 31 + cx * 17 + 58 + 3) % 256,
                 ])
-        yield d, multimodal.encode_jpeg_lossless(
+        return multimodal.encode_jpeg_lossless(
             bytes(px), w, h, channels=3,
             predictor=d % 7 + 1,
             restart_interval=d % 3,
@@ -6442,34 +6162,12 @@ def multimodal_lossless_subsampled_stats(spark: SparkSession, sf_dir: str) -> Da
             subsampling=(hs, vs),
         )
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
     "multimodal_hierarchical_pixel_stats",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id,
-             CAST(doc_id % 7 + 2 AS INT) AS w,
-             CAST(doc_id % 5 + 2 AS INT) AS h
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id, 'jpeg' AS format, w, h, 1 AS channels, i,
-             (doc_id * 11 + i * 17) % 256 AS val
-      FROM d, unnest(generate_series(0, w * h - 1)) AS t(i)
-    )
-    SELECT doc_id, format, w AS width, h AS height,
-           CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
-    """,
+    oracle=_gray_ramp_sql(7, 5, 11, 17),
 )
 def multimodal_hierarchical_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL hierarchical-JPEG decode under the oracle gate (the r8
@@ -6485,47 +6183,36 @@ def multimodal_hierarchical_pixel_stats(spark: SparkSession, sf_dir: str) -> Dat
     position-weighted checksum directly from the formula — an
     expansion-filter, frame-sequencing, fold, or EXP-cropping bug
     breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 7 + 2, d % 5 + 2
-        px = bytes((d * 11 + i * 17) % 256 for i in range(w * h))
-        yield d, multimodal.encode_jpeg_hierarchical(
-            px, w, h, channels=1,
-            levels=d % 2 + 1,
-            restart_interval=d % 3,
-            arith=d % 2 == 0,
-        )
+        return _pyramid(d, bytes((d * 11 + i * 17) % 256 for i in range(w * h)), w, h)
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
-@query(
-    "multimodal_hierarchical_dct_stats",
-    oracle="""
+def _const_gray_sql(w_mod: int, h_mod: int, val: str) -> str:
+    """Pixel-stats oracle of per-doc CONSTANT grayscale images: size
+    (doc_id % w_mod + 4) x (doc_id % h_mod + 4), every sample ``val``."""
+    return f"""
     WITH d AS (
       SELECT doc_id,
-             CAST(doc_id % 9 + 4 AS INT) AS w,
-             CAST(doc_id % 6 + 4 AS INT) AS h,
-             (doc_id * 29 + 60) % 256 AS val
+             CAST(doc_id % {w_mod} + 4 AS INT) AS w,
+             CAST(doc_id % {h_mod} + 4 AS INT) AS h,
+             {val} AS val
       FROM documents
     ),
     v AS (
       SELECT doc_id, 'jpeg' AS format, w, h, 1 AS channels, i, val
       FROM d, unnest(generate_series(0, w * h - 1)) AS t(i)
     )
-    SELECT doc_id, format, w AS width, h AS height,
-           CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
-    """,
+    {_PX_STATS_SQL}
+    """
+
+
+@query(
+    "multimodal_hierarchical_dct_stats",
+    oracle=_const_gray_sql(9, 6, "(doc_id * 29 + 60) % 256"),
 )
 def multimodal_hierarchical_dct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL hierarchical DCT-pyramid decode under the oracle gate —
@@ -6544,48 +6231,17 @@ def multimodal_hierarchical_dct_stats(spark: SparkSession, sf_dir: str) -> DataF
     bug perturbs pixels and breaks the hash. Arbitrary-pixel behavior
     (nonzero ACs, +-1 closed-loop bound, hand-built differential
     frames) is pinned in tests/test_jpeg_hierarchical.py."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 9 + 4, d % 6 + 4
-        px = bytes([(d * 29 + 60) % 256] * (w * h))
-        yield d, multimodal.encode_jpeg_hierarchical(
-            px, w, h, channels=1,
-            levels=d % 2 + 1,
-            restart_interval=d % 3,
-            arith=d % 2 == 0,
-            mode="dct",
-        )
+        return _pyramid(d, bytes([(d * 29 + 60) % 256] * (w * h)), w, h, mode="dct")
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
     "multimodal_hierarchical_prog_stats",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id,
-             CAST(doc_id % 8 + 4 AS INT) AS w,
-             CAST(doc_id % 7 + 4 AS INT) AS h,
-             (doc_id * 41 + 23) % 256 AS val
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id, 'jpeg' AS format, w, h, 1 AS channels, i, val
-      FROM d, unnest(generate_series(0, w * h - 1)) AS t(i)
-    )
-    SELECT doc_id, format, w AS width, h AS height,
-           CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
-    """,
+    oracle=_const_gray_sql(8, 7, "(doc_id * 41 + 23) % 256"),
 )
 def multimodal_hierarchical_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL hierarchical PROGRESSIVE-DCT pyramid decode under the
@@ -6602,27 +6258,18 @@ def multimodal_hierarchical_prog_stats(spark: SparkSession, sf_dir: str) -> Data
     behavior (nonzero ACs, the prog==sequential byte-equality, a
     hand-built SOF6 differential stream) is pinned in
     tests/test_jpeg_hierarchical.py."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 8 + 4, d % 7 + 4
         px = bytes([(d * 41 + 23) % 256] * (w * h))
-        yield d, multimodal.encode_jpeg_hierarchical(
-            px, w, h, channels=1,
-            levels=d % 2 + 1,
-            restart_interval=d % 3,
-            arith=d % 2 == 0,
-            mode="progressive",
-        )
+        return _pyramid(d, px, w, h, mode="progressive")
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
     "multimodal_hierarchical_color_stats",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
              CAST(doc_id % 7 + 4 AS INT) AS w,
@@ -6637,15 +6284,7 @@ def multimodal_hierarchical_prog_stats(spark: SparkSession, sf_dir: str) -> Data
              CASE i % 3 WHEN 0 THEN r WHEN 1 THEN g ELSE b END AS val
       FROM d, unnest(generate_series(0, w * h * 3 - 1)) AS t(i)
     )
-    SELECT doc_id, format, w AS width, h AS height,
-           CAST(channels AS INT) AS channels,
-           CAST(sum(val) AS BIGINT)     AS px_sum,
-           CAST(min(val) AS INT)        AS px_min,
-           CAST(max(val) AS INT)        AS px_max,
-           CAST(sum(i * val) AS BIGINT) AS px_possum
-    FROM v
-    GROUP BY doc_id, format, w, h, channels
-    ORDER BY doc_id
+    {_PX_STATS_SQL}
     """,
 )
 def multimodal_hierarchical_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6667,23 +6306,16 @@ def multimodal_hierarchical_color_stats(spark: SparkSession, sf_dir: str) -> Dat
     even where px_sum survives). Arbitrary-pixel color behavior and
     the prog==sequential byte-equality are pinned in
     tests/test_jpeg_hierarchical.py."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = d % 7 + 4, d % 5 + 4
         r, g, b = (d * 17 + 30) % 256, (d * 23 + 70) % 256, (d * 31 + 110) % 256
-        px = bytes([r, g, b] * (w * h))
-        yield d, multimodal.encode_jpeg_hierarchical(
-            px, w, h, channels=3,
-            levels=d % 2 + 1,
-            restart_interval=d % 3,
-            arith=d % 2 == 0,
+        return _pyramid(
+            d, bytes([r, g, b] * (w * h)), w, h, channels=3,
             mode="dct" if d % 4 < 2 else "progressive",
         )
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
-    return _sorted_stats(multimodal.extract_pixel_stats(payloads))
+    return _pixel_stats(spark, sf_dir, synth)
 
 
 @query(
@@ -6739,14 +6371,18 @@ def multimodal_caption_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("pair_id")
 
 
-@query(
-    "sample_dsir_importance",
-    oracle=f"""
-    WITH norm AS (
+#: norm(doc_id, w): each document's nonempty normalized tokens
+_NORM_WORDS_SQL = f"""norm AS (
       SELECT doc_id, list_filter(string_split({_SQL_NORM}, ' '),
                                  x -> x <> '') AS w
       FROM documents
-    ),
+    )"""
+
+
+@query(
+    "sample_dsir_importance",
+    oracle=f"""
+    WITH {_NORM_WORDS_SQL},
     fe AS MATERIALIZED (
       SELECT doc_id,
              (('0x' || substr(md5('dsir' || f), 1, 15))::BIGINT % 4096) AS b
@@ -6818,11 +6454,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_repeated_ngram_spans",
     oracle=f"""
-    WITH norm AS (
-      SELECT doc_id, list_filter(string_split({_SQL_NORM}, ' '),
-                                 x -> x <> '') AS w
-      FROM documents
-    ),
+    WITH {_NORM_WORDS_SQL},
     wins AS MATERIALIZED (
       SELECT doc_id,
              md5(array_to_string(w[i:i+12], ' ')) AS fp
@@ -6855,10 +6487,9 @@ def dedup_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.repeated_ngram_spans(docs, n=13).orderBy("doc_id")
 
 
-@query(
-    "dedup_span_removal",
-    oracle=f"""
-    WITH nrm AS (
+#: the 13-token span windows win(doc_id, i, fp) over each nonempty
+#: document's normalized tokens elg(doc_id, w)
+_SPAN_WINDOWS_SQL = f"""nrm AS (
       SELECT doc_id, {_SQL_NORM} AS t FROM documents
     ),
     el AS MATERIALIZED (
@@ -6870,7 +6501,25 @@ def dedup_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, CAST(i AS BIGINT) AS i,
              md5(array_to_string(w[i:i+12], ' ')) AS fp
       FROM elg, unnest(generate_series(1, len(w) - 12)) u(i)
-    ),
+    )"""
+#: each document's tokens tok(doc_id, j, wd) rejoined without the
+#: removed(doc_id, p) positions
+_SPAN_REWRITE_SQL = """SELECT t.doc_id,
+           CAST(count(*) AS BIGINT) AS n_tokens,
+           CAST(count(*) FILTER (WHERE r.p IS NOT NULL) AS BIGINT)
+             AS n_removed,
+           COALESCE(string_agg(t.wd, ' ' ORDER BY t.j)
+                    FILTER (WHERE r.p IS NULL), '') AS text_rewritten
+    FROM tok t
+    LEFT JOIN removed r ON r.doc_id = t.doc_id AND r.p = t.j
+    GROUP BY t.doc_id
+    ORDER BY t.doc_id"""
+
+
+@query(
+    "dedup_span_removal",
+    oracle=f"""
+    WITH {_SPAN_WINDOWS_SQL},
     ranked AS (
       SELECT doc_id, i,
              row_number() OVER (PARTITION BY fp ORDER BY doc_id, i) AS rn
@@ -6885,16 +6534,7 @@ def dedup_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, CAST(j AS BIGINT) AS j, w[j] AS wd
       FROM elg, unnest(generate_series(1, len(w))) u(j)
     )
-    SELECT t.doc_id,
-           CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(count(*) FILTER (WHERE r.p IS NOT NULL) AS BIGINT)
-             AS n_removed,
-           COALESCE(string_agg(t.wd, ' ' ORDER BY t.j)
-                    FILTER (WHERE r.p IS NULL), '') AS text_rewritten
-    FROM tok t
-    LEFT JOIN removed r ON r.doc_id = t.doc_id AND r.p = t.j
-    GROUP BY t.doc_id
-    ORDER BY t.doc_id
+    {_SPAN_REWRITE_SQL}
     """,
 )
 def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6917,19 +6557,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "decontaminate_span_scrub",
     oracle=f"""
-    WITH nrm AS (
-      SELECT doc_id, {_SQL_NORM} AS t FROM documents
-    ),
-    el AS MATERIALIZED (
-      SELECT doc_id, list_filter(string_split(t, ' '), x -> x <> '') AS w
-      FROM nrm
-    ),
-    elg AS MATERIALIZED (SELECT doc_id, w FROM el WHERE len(w) >= 1),
-    win AS MATERIALIZED (
-      SELECT doc_id, CAST(i AS BIGINT) AS i,
-             md5(array_to_string(w[i:i+12], ' ')) AS fp
-      FROM elg, unnest(generate_series(1, len(w) - 12)) u(i)
-    ),
+    WITH {_SPAN_WINDOWS_SQL},
     bench AS MATERIALIZED (
       SELECT DISTINCT fp FROM win WHERE doc_id % 25 = 0
     ),
@@ -6944,16 +6572,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM elg, unnest(generate_series(1, len(w))) u(j)
       WHERE doc_id % 25 <> 0
     )
-    SELECT t.doc_id,
-           CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(count(*) FILTER (WHERE r.p IS NOT NULL) AS BIGINT)
-             AS n_removed,
-           COALESCE(string_agg(t.wd, ' ' ORDER BY t.j)
-                    FILTER (WHERE r.p IS NULL), '') AS text_rewritten
-    FROM tok t
-    LEFT JOIN removed r ON r.doc_id = t.doc_id AND r.p = t.j
-    GROUP BY t.doc_id
-    ORDER BY t.doc_id
+    {_SPAN_REWRITE_SQL}
     """,
 )
 def decontaminate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7036,23 +6655,11 @@ def _par_minhash_rollup_sql(
     verified SET as the Spark side's first-shared-band dedup, the
     streaming_near_dup_probe precedent), exact-Jaccard verify over
     DISTINCT paragraph shingles, lower-doc coverage, per-doc rollup."""
-    from gomrjob_spark.operators.dedup import _MERSENNE, _PAR_STRIDE, minhash_coeffs
+    from gomrjob_spark.operators.dedup import _PAR_STRIDE
 
-    rows = num_hashes // bands
-    coeffs = minhash_coeffs(num_hashes, seed)
-    base = f"(('0x' || substr(md5(shingle),1,15))::BIGINT % {_MERSENNE})"
-    mins = ",\n             ".join(
-        f"min(({base} * {a} + {b}) % {_MERSENNE}) AS h{i}"
-        for i, (a, b) in enumerate(coeffs)
+    mins, band_selects, vkeys = _minhash_bands_sql(
+        num_hashes, bands, seed, "par_id", 13
     )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT par_id, {b} AS band, {vals} FROM sig".format(
-            b=b,
-            vals=", ".join(f"h{b * rows + r} AS v{r}" for r in range(rows)),
-        )
-        for b in range(bands)
-    )
-    vkeys = " AND ".join(f"x.v{r} = y.v{r}" for r in range(rows))
     return f"""
     WITH par AS MATERIALIZED (
       SELECT doc_id * {_PAR_STRIDE} + (i // 256) AS par_id,
@@ -7265,55 +6872,12 @@ def corpus_triage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pack_unigram_batches",
     oracle=_UNI_TRAIN_SQL + f""",
-    {_uni_vm_sql("voc2", "vmf")},
-    ctoks AS MATERIALIZED (
-      SELECT doc_id, i, w[i] AS tok FROM (
-        SELECT doc_id,
-               list_filter(string_split({_SQL_NORM}, ' '), x -> x <> '') AS w
-        FROM documents) d,
-        unnest(generate_series(1, len(w))) s(i)
-    ),
-    cw AS MATERIALIZED (SELECT DISTINCT tok AS w FROM ctoks),
-    {_uni_viterbi_sql("cw", "vmf", "vitf")},
+    {_UNI_CORPUS_SQL},
     uc AS MATERIALIZED (
       SELECT t.doc_id, CAST(sum(len(v.seg)) AS BIGINT) AS n_tokens
       FROM ctoks t JOIN vitf v ON v.w = t.tok GROUP BY t.doc_id
     ),
-    t AS (
-      SELECT doc_id, n_tokens,
-             CAST(('0x' || substr(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                  % 64 AS INT) AS bucket
-      FROM uc
-    ),
-    td AS (
-      SELECT t.doc_id, d.lang, t.n_tokens, t.bucket
-      FROM t JOIN documents d ON d.doc_id = t.doc_id
-    ),
-    cum AS (
-      SELECT doc_id, lang, bucket, n_tokens,
-             CAST(sum(n_tokens) OVER (PARTITION BY lang, bucket ORDER BY doc_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) - n_tokens AS BIGINT)
-               AS local_off
-      FROM td
-    ),
-    b AS (
-      SELECT lang, bucket, CAST(sum(n_tokens) AS BIGINT) AS btotal
-      FROM td GROUP BY lang, bucket
-    ),
-    o AS (
-      SELECT lang, bucket,
-             CAST(COALESCE(sum(btotal) OVER (PARTITION BY lang ORDER BY bucket
-                                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND 1 PRECEDING), 0) AS BIGINT)
-               AS bucket_off
-      FROM b
-    )
-    SELECT cum.doc_id, cum.lang, cum.n_tokens,
-           CAST(o.bucket_off + cum.local_off AS BIGINT) AS start_offset,
-           CAST((o.bucket_off + cum.local_off) // 2048 AS BIGINT) AS batch_id
-    FROM cum JOIN o ON cum.lang = o.lang AND cum.bucket = o.bucket
-    ORDER BY cum.lang, cum.doc_id
+    {_pack_batches_sql("n_tokens", "uc")}
     """,
 )
 def pack_unigram_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7328,11 +6892,7 @@ def pack_unigram_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     words into chars. The oracle replays training, the recursive-CTE
     Viterbi, and the packing arithmetic in one materialized chain."""
     docs = load_table(spark, sf_dir, "documents")
-    train = docs.filter(F.col("doc_id") % 5 == 0)
-    vocab = text.unigram_lm_train(
-        train, n_rounds=2, max_piece_len=_UNI_L,
-        seed_min=_UNI_SEED_MIN, prune_min=_UNI_PRUNE_MIN, oov_bits=_UNI_OOV,
-    )
+    vocab = _unigram_vocab(docs)
     counted = text.unigram_encode(
         docs, vocab, max_piece_len=_UNI_L, oov_bits=_UNI_OOV
     ).select("doc_id", F.col("n_pieces").alias("n_uni"))
@@ -7345,36 +6905,7 @@ def pack_unigram_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "curriculum_difficulty_buckets",
     oracle=f"""
-    WITH norm AS (
-      SELECT doc_id, list_filter(string_split({_SQL_NORM}, ' '), x -> x <> '') AS w
-      FROM documents
-    ),
-    tr AS (SELECT doc_id, w FROM norm WHERE doc_id % 5 = 0),
-    uni AS (
-      SELECT t.w[i] AS tok, count(*) AS c1
-      FROM tr t, unnest(generate_series(1, len(t.w))) s(i)
-      GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(c1) AS BIGINT) AS t FROM uni),
-    bi AS (
-      SELECT t.w[i] AS w1, t.w[i+1] AS w2, count(*) AS c2
-      FROM tr t, unnest(generate_series(1, len(t.w) - 1)) s(i)
-      GROUP BY 1, 2
-    ),
-    prs AS (
-      SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-      FROM norm, unnest(generate_series(1, len(w) - 1)) s(i)
-    ),
-    sc AS (
-      SELECT p.doc_id,
-             CASE WHEN b.c2 IS NOT NULL THEN length(bin(u1.c1 // b.c2))
-                  WHEN u2.c1 IS NOT NULL THEN length(bin(t.t // u2.c1)) + 4
-                  ELSE length(bin(t.t)) + 8 END AS bits
-      FROM prs p
-      LEFT JOIN bi b ON b.w1 = p.w1 AND b.w2 = p.w2
-      LEFT JOIN uni u1 ON u1.tok = p.w1
-      LEFT JOIN uni u2 ON u2.tok = p.w2, tot t
-    ),
+    WITH {_BIGRAM_BITS_SQL},
     doc AS (
       SELECT doc_id,
              CAST((1000 * sum(bits)) // count(*) AS BIGINT) AS mbits_per_bigram
@@ -7424,17 +6955,21 @@ def curriculum_difficulty_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
-    "text_gopher_ngram_fractions",
-    oracle=f"""
-    WITH nrm AS (
+#: el(doc_id, w, nchars): normalized tokens and normalized length
+_EL_NCHARS_SQL = f"""nrm AS (
       SELECT doc_id, {_SQL_NORM} AS t FROM documents
     ),
     el AS MATERIALIZED (
       SELECT doc_id, list_filter(string_split(t, ' '), x -> x <> '') AS w,
              CAST(length(t) AS BIGINT) AS nchars
       FROM nrm
-    ),
+    )"""
+
+
+@query(
+    "text_gopher_ngram_fractions",
+    oracle=f"""
+    WITH {_EL_NCHARS_SQL},
     elg AS (SELECT * FROM el WHERE len(w) >= 20),
     t2 AS (
       SELECT doc_id, c, CAST(length(g) AS BIGINT) AS l FROM (
@@ -7497,14 +7032,7 @@ def text_gopher_ngram_fractions(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: interval-union computation): text_dup_ngram_coverage reports it,
 #: sample_softdedup_weights turns it into a sampling weight.
 _DUPCOV_CTES = f"""
-    nrm AS (
-      SELECT doc_id, {_SQL_NORM} AS t FROM documents
-    ),
-    el AS MATERIALIZED (
-      SELECT doc_id, list_filter(string_split(t, ' '), x -> x <> '') AS w,
-             CAST(length(t) AS BIGINT) AS nchars
-      FROM nrm
-    ),
+    {_EL_NCHARS_SQL},
     elg AS MATERIALIZED (SELECT * FROM el WHERE len(w) >= 20),
     occ AS MATERIALIZED (
       SELECT doc_id,
@@ -7665,12 +7193,10 @@ def multimodal_exif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment length confusion) raise precisely — tests/test_exif.py.
     Decode is scan-local through ``map_rows``; zero shuffles
     before the oracle-determinism orderBy."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     base = multimodal.encode_jpeg_baseline(bytes([128] * 64), 8, 8, channels=1)
 
-    def synth(doc_id):
-        d = int(doc_id)
-        yield d, multimodal.insert_exif_app1(
+    def synth(d):
+        return multimodal.insert_exif_app1(
             base,
             byte_order="MM" if d % 2 == 0 else "II",
             width=100 + d % 50,
@@ -7681,7 +7207,7 @@ def multimodal_exif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             iso=100 * (1 + d % 4),
         )
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
+    payloads = _payloads(spark, sf_dir, synth)
     return multimodal.extract_exif_stats(payloads).orderBy("doc_id")
 
 
@@ -7871,16 +7397,14 @@ def multimodal_exif_orient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     output pixel through the inverse index mapping, so a transposed
     axis, wrong rotation direction, or missed dimension swap in ANY of
     the 8 cases breaks the hash. Scan-local decode through ``map_rows``."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(doc_id):
-        d = int(doc_id)
+    def synth(d):
         w, h = 2 + d % 5, 2 + d % 4
         px = bytes((d * 7 + i * 13) % 256 for i in range(w * h))
         jp = multimodal.encode_jpeg_lossless(
             px, w, h, channels=1, predictor=d % 7 + 1
         )
-        yield d, multimodal.insert_exif_app1(
+        return multimodal.insert_exif_app1(
             jp,
             byte_order="II" if d % 2 else "MM",
             width=w,
@@ -7888,7 +7412,7 @@ def multimodal_exif_orient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             orientation=1 + d % 8,
         )
 
-    payloads = map_rows(text.spread(docs), synth, "doc_id bigint, payload binary")
+    payloads = _payloads(spark, sf_dir, synth)
     return multimodal.extract_oriented_pixel_stats(payloads).orderBy("doc_id")
 
 
@@ -7907,13 +7431,21 @@ def _mime_oracle(pred: str = "TRUE", gate: bool = False) -> str:
     gif4 = "GIF8".encode("ascii").hex().upper()
     bm36 = "BM".encode("ascii").hex().upper() + "3600"  # BM + le32(54)[:2]
     riff = "RIFF".encode("ascii").hex().upper()
-    full = f"""
-    SELECT doc_id,
-      CASE doc_id % 6
+    mime = """CASE doc_id % 6
         WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png'
         WHEN 2 THEN 'image/gif'  WHEN 3 THEN 'image/bmp'
         WHEN 4 THEN 'audio/wav'  ELSE 'application/octet-stream'
-      END AS mime,
+      END AS mime,"""
+    if gate:
+        return f"""
+    SELECT doc_id,
+      {mime}
+      doc_id % 6 <> 5 AS admitted
+    FROM documents WHERE {pred} ORDER BY doc_id
+    """
+    return f"""
+    SELECT doc_id,
+      {mime}
       CASE
         WHEN doc_id % 6 = 0 THEN
           CASE WHEN doc_id % 2 = 0 THEN 'jfif' ELSE 'exif' END
@@ -7944,18 +7476,6 @@ def _mime_oracle(pred: str = "TRUE", gate: bool = False) -> str:
       END AS magic4
     FROM documents WHERE {pred} ORDER BY doc_id
     """
-    if gate:
-        return """
-    SELECT doc_id,
-      CASE doc_id % 6
-        WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png'
-        WHEN 2 THEN 'image/gif'  WHEN 3 THEN 'image/bmp'
-        WHEN 4 THEN 'audio/wav'  ELSE 'application/octet-stream'
-      END AS mime,
-      doc_id % 6 <> 5 AS admitted
-    FROM documents WHERE {pred} ORDER BY doc_id
-    """.format(pred=pred)
-    return full
 
 
 @query("multimodal_mime_sniff", oracle=_mime_oracle())

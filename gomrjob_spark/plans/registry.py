@@ -18,6 +18,14 @@ Conventions that make Spark/DuckDB results hash-identical:
   returns int32.
 - Deterministic ordering for limit/top-k: always add a unique tiebreaker
   key to the ORDER BY on both sides.
+
+Oracle text may be composed from module-level SQL fragments (strings
+and helpers returning SQL, e.g. ``plans.llm._PX_STATS_SQL``) so that a
+CTE several oracles share is written once. Fragments are shared among
+oracle strings only, never with engine code: no Spark-side plan reads
+oracle text, so each oracle stays an independent reference for the
+query it checks. ``scripts/plan_snapshot.py oracles`` dumps every
+oracle and its sha256, to show a refactor left the text unchanged.
 """
 
 from __future__ import annotations

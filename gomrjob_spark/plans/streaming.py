@@ -708,9 +708,12 @@ def streaming_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(spark, flagged, "append").orderBy("event_id")
 
 
-@query(
-    "streaming_paragraph_quarantine",
-    oracle="""
+def _paragraph_probe_sql(n_col: str, ppm_col: str, verdict: str) -> str:
+    """Per-doc rollup of docs 250+'s 256-char paragraph fingerprints
+    found in the store of docs 0-249: paragraph count, ``n_col`` hits,
+    their ``ppm_col`` share, and the ``verdict`` test on that share."""
+    hits = "sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END)"
+    return f"""
     WITH store AS (
       SELECT DISTINCT md5(substr(text, CAST(i AS INT) + 1, 256)) AS fp
       FROM documents,
@@ -725,16 +728,23 @@ def streaming_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c.doc_id,
            CAST(count(*) AS BIGINT) AS n_par,
-           CAST(sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_contained,
-           CAST((1000000 * sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END))
-                // count(*) AS BIGINT) AS contained_ppm,
-           (1000000 * sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END))
-                // count(*) >= 300000 AS quarantined
+           CAST({hits} AS BIGINT)
+             AS {n_col},
+           CAST((1000000 * {hits})
+                // count(*) AS BIGINT) AS {ppm_col},
+           (1000000 * {hits})
+                // count(*) {verdict}
     FROM ch c LEFT JOIN store s USING (fp)
     GROUP BY c.doc_id
     ORDER BY c.doc_id
-    """,
+    """
+
+
+@query(
+    "streaming_paragraph_quarantine",
+    oracle=_paragraph_probe_sql(
+        "n_contained", "contained_ppm", ">= 300000 AS quarantined"
+    ),
 )
 def streaming_paragraph_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-containment ADMISSION as a live topology
@@ -800,31 +810,7 @@ def streaming_langid_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_bloom_dedup_gate",
-    oracle="""
-    WITH store AS (
-      SELECT DISTINCT md5(substr(text, CAST(i AS INT) + 1, 256)) AS fp
-      FROM documents,
-           unnest(generate_series(0, CAST(len(text) AS BIGINT) - 1, 256)) t(i)
-      WHERE len(text) > 0 AND doc_id < 250
-    ),
-    ch AS (
-      SELECT doc_id, md5(substr(text, CAST(i AS INT) + 1, 256)) AS fp
-      FROM documents,
-           unnest(generate_series(0, CAST(len(text) AS BIGINT) - 1, 256)) t(i)
-      WHERE len(text) > 0 AND doc_id >= 250
-    )
-    SELECT c.doc_id,
-           CAST(count(*) AS BIGINT) AS n_par,
-           CAST(sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dup,
-           CAST((1000000 * sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END))
-                // count(*) AS BIGINT) AS dup_ppm,
-           (1000000 * sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END))
-                // count(*) < 300000 AS admitted
-    FROM ch c LEFT JOIN store s USING (fp)
-    GROUP BY c.doc_id
-    ORDER BY c.doc_id
-    """,
+    oracle=_paragraph_probe_sql("n_dup", "dup_ppm", "< 300000 AS admitted"),
 )
 def streaming_bloom_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter dedup admission as a live topology
@@ -988,7 +974,7 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     every quarantine verdict."""
     from gomrjob_spark.catalog import load_table
     from gomrjob_spark.operators.similarity import semantic_diversity_model
-    from gomrjob_spark.plans.llm import _TWIN_FLIP_COORD, _TWIN_ID_OFFSET
+    from gomrjob_spark.plans.llm import _twins
     from gomrjob_spark.streaming import read_embeddings_stream, semdedup_gate_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -996,14 +982,7 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, threshold=0.95, target_cell=128, min_cells=8, n_iters=2
     )
     store = surv.join(emb, "vec_id").select("cell", "embedding")
-    flipped = F.transform(
-        F.col("embedding"),
-        lambda x, i: F.when(i == F.lit(_TWIN_FLIP_COORD - 1), -x).otherwise(x),
-    )
-    arrivals = read_embeddings_stream(spark, sf_dir).select(
-        (F.col("vec_id") + F.lit(_TWIN_ID_OFFSET)).alias("vec_id"),
-        flipped.alias("embedding"),
-    )
+    arrivals = _twins(read_embeddings_stream(spark, sf_dir))
     gated = semdedup_gate_stream(arrivals, cents, store, threshold=0.95)
     return _drain(spark, gated, "append").orderBy("vec_id")
 

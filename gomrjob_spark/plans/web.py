@@ -1131,17 +1131,40 @@ def url_registered_domain_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@query(
-    "sitemap_frontier",
-    oracle="WITH "
-    + _URL_CTES
-    + """,
-    doms AS (
+#: doms(registered_domain, k): each crawled domain and its site number
+_SITEMAP_DOMS_SQL = """doms AS (
       SELECT DISTINCT registered_domain,
         CAST(regexp_extract(registered_domain, 'site([0-9]+)', 1)
              AS BIGINT) AS k
       FROM normed
+    )"""
+#: ... plus ent: every (child sitemap, entry) of each domain's index
+_SITEMAP_ENTRIES_SQL = f"""{_SITEMAP_DOMS_SQL},
+    kids AS (
+      SELECT registered_domain, k, CAST(j AS INT) AS child_idx
+      FROM doms, unnest(generate_series(0, k % 3)) t(j)
     ),
+    ent AS (
+      SELECT registered_domain, k, child_idx, CAST(i AS INT) AS url_idx
+      FROM kids, unnest(generate_series(0, 1 + (k + child_idx) % 3)) t(i)
+    )"""
+
+
+def _site_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(registered_domain, k): each crawled domain and its site number."""
+    staged = urls.with_url_columns(_docs_with_urls(spark, sf_dir))
+    return staged.select("registered_domain").distinct().withColumn(
+        "k",
+        F.regexp_extract(F.col("registered_domain"), "site([0-9]+)", 1).cast("bigint"),
+    )
+
+
+@query(
+    "sitemap_frontier",
+    oracle="WITH "
+    + _URL_CTES
+    + f""",
+    {_SITEMAP_DOMS_SQL},
     ent AS (
       SELECT registered_domain, k, CAST(i AS INT) AS url_idx
       FROM doms, unnest(generate_series(0, 2 + k % 4)) t(i)
@@ -1171,17 +1194,7 @@ def sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     program over ~|domains| rows."""
     from gomrjob_spark.operators.sitemap import parse_entries, synth_sitemap
 
-    staged = urls.with_url_columns(_docs_with_urls(spark, sf_dir))
-    doms = (
-        staged.select("registered_domain")
-        .distinct()
-        .withColumn(
-            "k",
-            F.regexp_extract(
-                F.col("registered_domain"), "site([0-9]+)", 1
-            ).cast("bigint"),
-        )
-    )
+    doms = _site_domains(spark, sf_dir)
     parsed = doms.withColumn("xml", synth_sitemap("k")).select(
         "registered_domain",
         F.posexplode(parse_entries("xml")).alias("url_idx", "e"),
@@ -1218,20 +1231,7 @@ _ROBOTS_ALLOWED_CASE = """CASE
     "sitemap_discovery",
     oracle=f"""
     WITH {_URL_CTES},
-    doms AS (
-      SELECT DISTINCT registered_domain,
-        CAST(regexp_extract(registered_domain, 'site([0-9]+)', 1)
-             AS BIGINT) AS k
-      FROM normed
-    ),
-    kids AS (
-      SELECT registered_domain, k, CAST(j AS INT) AS child_idx
-      FROM doms, unnest(generate_series(0, k % 3)) t(j)
-    ),
-    ent AS (
-      SELECT registered_domain, k, child_idx, CAST(i AS INT) AS url_idx
-      FROM kids, unnest(generate_series(0, 1 + (k + child_idx) % 3)) t(i)
-    ),
+    {_SITEMAP_ENTRIES_SQL},
     res AS (
       SELECT registered_domain, k, child_idx, url_idx,
         'https://' || registered_domain || '/sitemap-index.xml'
@@ -1377,20 +1377,7 @@ def sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sitemap_discovery_gz",
     oracle=f"""
     WITH {_URL_CTES},
-    doms AS (
-      SELECT DISTINCT registered_domain,
-        CAST(regexp_extract(registered_domain, 'site([0-9]+)', 1)
-             AS BIGINT) AS k
-      FROM normed
-    ),
-    kids AS (
-      SELECT registered_domain, k, CAST(j AS INT) AS child_idx
-      FROM doms, unnest(generate_series(0, k % 3)) t(j)
-    ),
-    ent AS (
-      SELECT registered_domain, k, child_idx, CAST(i AS INT) AS url_idx
-      FROM kids, unnest(generate_series(0, 1 + (k + child_idx) % 3)) t(i)
-    )
+    {_SITEMAP_ENTRIES_SQL}
     SELECT registered_domain, child_idx,
       'https://' || registered_domain || '/sitemap-c'
         || CAST(child_idx AS VARCHAR)
@@ -1445,17 +1432,7 @@ def sitemap_discovery_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_sitemap_index,
     )
 
-    staged = urls.with_url_columns(_docs_with_urls(spark, sf_dir))
-    doms = (
-        staged.select("registered_domain")
-        .distinct()
-        .withColumn(
-            "k",
-            F.regexp_extract(
-                F.col("registered_domain"), "site([0-9]+)", 1
-            ).cast("bigint"),
-        )
-    )
+    doms = _site_domains(spark, sf_dir)
     kids = doms.withColumn(
         "index_xml", synth_sitemap_index("k", gz_children=True)
     ).select(

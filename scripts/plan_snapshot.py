@@ -1,17 +1,23 @@
 #!/usr/bin/env python
-"""Executed-plan snapshots of registered queries, for checking that a
-refactor leaves plans unchanged.
+"""Executed-plan and oracle snapshots of registered queries, for
+checking that a refactor leaves plans and oracle SQL unchanged.
 
 ``capture`` runs each named query once (collect) in one local session
 and stores its row count, final adaptive plan, operator list and
-Exchange count. ``diff`` compares two snapshots and exits nonzero when
-any row count or plan differs once the numbering that changes from run
-to run is stripped: expression ids, plan ids, query-stage and codegen
-stage numbers (adaptive execution numbers stages in the order they
-finish), and the Python function names of MapInPandas nodes.
+Exchange count. ``oracles`` writes every registered DuckDB oracle as
+sorted JSON (``json.dumps(registry.ORACLES, sort_keys=True)``, no
+Spark session) and prints that text's sha256. ``diff`` compares two
+snapshots of either kind and exits nonzero when they differ: for
+oracle dumps it names every oracle whose text differs or that only one
+side has; for plan snapshots, every row count or plan that differs
+once the numbering that changes from run to run is stripped:
+expression ids, plan ids, query-stage and codegen stage numbers
+(adaptive execution numbers stages in the order they finish), and the
+Python function names of MapInPandas nodes.
 
 Usage:
   python scripts/plan_snapshot.py capture OUT.json QUERY[,QUERY...] SF_DIR [--repo DIR]
+  python scripts/plan_snapshot.py oracles OUT.json [--repo DIR]
   python scripts/plan_snapshot.py diff A.json B.json
 
 ``--repo DIR`` imports the engine from another checkout (e.g. the
@@ -21,6 +27,7 @@ parent commit) so both sides are captured by the same script.
 from __future__ import annotations
 
 import difflib
+import hashlib
 import json
 import os
 import re
@@ -72,11 +79,41 @@ def capture(out_path: str, names: list[str], sf_dir: str) -> None:
     print(f"captured {len(snap)} plans -> {out_path}")
 
 
+def oracles(out_path: str) -> None:
+    from gomrjob_spark.plans import ORACLES
+
+    text = json.dumps(ORACLES, sort_keys=True)
+    with open(out_path, "w") as f:
+        f.write(text)
+    digest = hashlib.sha256(text.encode()).hexdigest()
+    print(f"{len(ORACLES)} oracles -> {out_path} sha256 {digest}")
+
+
+def _diff_oracles(a: dict, b: dict, a_path: str, b_path: str) -> int:
+    changed = 0
+    for name in sorted(set(a) | set(b)):
+        if a.get(name) == b.get(name):
+            continue
+        changed += 1
+        if name not in a or name not in b:
+            print(f"{name}: only in {a_path if name in a else b_path}")
+            continue
+        print(f"{name}: oracle text differs")
+        for line in difflib.unified_diff(
+            a[name].splitlines(), b[name].splitlines(), lineterm="", n=0
+        ):
+            print("  " + line)
+    print(f"{len(set(a) | set(b)) - changed} of {len(set(a) | set(b))} oracles identical")
+    return 1 if changed else 0
+
+
 def diff(a_path: str, b_path: str) -> int:
     with open(a_path) as f:
         a = json.load(f)
     with open(b_path) as f:
         b = json.load(f)
+    if all(isinstance(v, str) for v in (*a.values(), *b.values())):
+        return _diff_oracles(a, b, a_path, b_path)
     changed = 0
     for name in sorted(set(a) | set(b)):
         if name not in a or name not in b:
@@ -106,9 +143,12 @@ def main(argv: list[str]) -> int:
         argv = argv[:i] + argv[i + 2:]
     if len(argv) == 3 and argv[0] == "diff":
         return diff(argv[1], argv[2])
+    sys.path.insert(0, os.path.abspath(repo))
     if len(argv) == 4 and argv[0] == "capture":
-        sys.path.insert(0, os.path.abspath(repo))
         capture(argv[1], argv[2].split(","), argv[3])
+        return 0
+    if len(argv) == 2 and argv[0] == "oracles":
+        oracles(argv[1])
         return 0
     print(__doc__, file=sys.stderr)
     return 2

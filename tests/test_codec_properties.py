@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from gomrjob_spark.operators.multimodal import (
@@ -130,9 +130,59 @@ def test_gif_roundtrips_any_palette_image(wh, n_colors, seed):
     assert got["pixels"] == want
 
 
+def _dct_plane(plane: np.ndarray) -> np.ndarray:
+    """One component's quant=1 round trip computed from T.81 alone:
+    edge-pad to the 8x8 grid, level shift, orthonormal FDCT, coefficients
+    rounded half-to-even (the encoder's rule), float IDCT, crop. The FDCT
+    uses the encoder's contraction order: DC and the (0,4)/(4,0)/(4,4)
+    coefficients are exact multiples of 1/8, so they can tie at .5 and
+    only the same float evaluation rounds them alike."""
+    h, w = plane.shape
+    bh, bw = -(-h // 8), -(-w // 8)
+    full = np.pad(plane, ((0, 8 * bh - h), (0, 8 * bw - w)), mode="edge")
+    u = np.arange(8).reshape(-1, 1)
+    c = np.cos((2 * np.arange(8) + 1) * u * np.pi / 16) / 2
+    c[0] /= np.sqrt(2)
+    blocks = (full - 128.0).reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
+    coef = np.rint(np.einsum("ab,ijbc,cd->ijad", c, blocks, c.T))
+    spatial = (c.T @ coef @ c + 128.0).transpose(0, 2, 1, 3)
+    return spatial.reshape(8 * bh, 8 * bw)[:h, :w]
+
+
+def _baseline_roundtrip(arr: np.ndarray) -> np.ndarray:
+    """The decoded pixels of a quant=1, 4:4:4 baseline JPEG of ``arr``
+    (h, w, 1 or 3): each component's DCT round trip, through the JFIF
+    YCbCr transform and back for colour, then rounded and clipped."""
+    a = arr.astype(np.float64)
+    if a.shape[2] == 1:
+        out = _dct_plane(a[..., 0])[..., None]
+    else:
+        r, g, b = a[..., 0], a[..., 1], a[..., 2]
+        y, cb, cr = (
+            _dct_plane(p)
+            for p in (
+                0.299 * r + 0.587 * g + 0.114 * b,
+                128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
+                128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
+            )
+        )
+        cb, cr = cb - 128.0, cr - 128.0
+        out = np.stack(
+            [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb],
+            axis=-1,
+        )
+    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+
+
 @settings(max_examples=25, deadline=None)
 @given(dims, st.sampled_from([1, 3]), st.integers(0, 2**31 - 1), st.sampled_from([0, 3]))
+@example(wh=(10, 10), channels=1, seed=135, restart=0)
+@example(wh=(14, 9), channels=3, seed=301, restart=0)
 def test_jpeg_decodes_within_rounding_any_image(wh, channels, seed, restart):
+    """A quant=1 baseline JPEG decodes to exactly the rounded float DCT
+    round trip of the image. That is not within +/-1 of the input: each
+    of a block's 64 coefficients is rounded, which moved a sample by 2
+    in grayscale and by 3 in colour (the two pinned examples)."""
     w, h = wh
     rng = np.random.RandomState(seed % 2**31)
     arr = rng.randint(0, 256, size=(h, w, channels), dtype=np.uint8)
@@ -142,10 +192,7 @@ def test_jpeg_decodes_within_rounding_any_image(wh, channels, seed, restart):
     got = decode_image(payload)
     assert (got["width"], got["height"], got["channels"]) == (w, h, channels)
     dec = np.frombuffer(got["pixels"], dtype=np.uint8).reshape(h, w, channels)
-    # gray: DCT float round-trip only (+/-1); color adds the YCbCr
-    # forward/inverse rounding (+/-2)
-    tol = 1 if channels == 1 else 2
-    assert int(np.abs(dec.astype(int) - arr.astype(int)).max()) <= tol
+    np.testing.assert_array_equal(dec, _baseline_roundtrip(arr))
 
 
 @settings(max_examples=30, deadline=None)
@@ -472,3 +519,25 @@ def test_jpeg_dct_frame_component_count_is_a_named_error(ncomp):
     )
     with pytest.raises(NotImplementedError, match=f"{ncomp} components"):
         decode_image(payload)
+
+
+def test_huffman_reader_holds_one_byte(monkeypatch):
+    """The Huffman bit reader keeps only the current byte: after a 64x64
+    colour baseline decode its accumulator is at most 8 bits wide. An
+    accumulator that kept every byte shifted in grew to the whole entropy
+    segment and made each bit read cost O(segment)."""
+    from gomrjob_spark.operators import multimodal
+
+    readers = []
+    init = multimodal._BitReader.__init__
+
+    def record(self, *args):
+        init(self, *args)
+        readers.append(self)
+
+    monkeypatch.setattr(multimodal._BitReader, "__init__", record)
+    rng = np.random.RandomState(7)
+    px = rng.randint(0, 256, size=64 * 64 * 3, dtype=np.uint8).tobytes()
+    got = decode_image(encode_jpeg_baseline(px, 64, 64, channels=3))
+    assert (got["width"], got["height"]) == (64, 64)
+    assert readers and all(r.acc.bit_length() <= 8 for r in readers)

@@ -47,6 +47,21 @@ def test_roundtrip_restart_cadences(arith, ri):
     assert M.decode_image(enc)["pixels"] == px
 
 
+@pytest.mark.parametrize("mode", ["lossless", "dct", "progressive"])
+@pytest.mark.parametrize("channels", [1, 3])
+def test_header_reports_dhp_geometry(mode, channels):
+    # the header walk reports the DHP's full-size image, not the
+    # decimated base frame the first SOF describes (4x4 for 16x16 at
+    # two levels) — the same geometry decode_image returns
+    px = _px(16, 16, channels, 3)
+    enc = M.encode_jpeg_hierarchical(px, 16, 16, channels=channels, levels=2, mode=mode)
+    d = M.decode_image(enc)
+    assert M.decode_image_header(enc) == {
+        "format": "jpeg", "width": 16, "height": 16, "channels": channels,
+    }
+    assert (d["width"], d["height"], d["channels"]) == (16, 16, channels)
+
+
 def test_upsample_filter_pinned_by_hand():
     # J.1.1.2: even samples copy, odd interpolate (a+b+1)>>1, edges
     # replicate — checked against a hand computation both directions

@@ -171,6 +171,18 @@ def test_row_stages_go_through_map_rows():
     assert not offenders, f"hand-rolled row loops, use pipeline.map_rows: {offenders}"
 
 
+def test_oracles_have_no_unexpanded_placeholders():
+    """Oracles are composed from shared SQL fragments in f-strings; a
+    missing ``f`` prefix leaves the placeholder text itself in the SQL
+    — ``{name}``, ``{name(...)}`` or ``{name[...]}`` — which no valid
+    oracle contains."""
+    import re
+
+    placeholder = re.compile(r"\{[A-Za-z_]\w*[}(\[]")
+    offenders = sorted(n for n, sql in plans.ORACLES.items() if placeholder.search(sql))
+    assert not offenders, f"unexpanded f-string placeholders in oracles: {offenders}"
+
+
 def test_registry_tiering():
     """Window discipline: first-50 all oracle-eligible; rows-only last."""
     names = list(plans.QUERIES)
