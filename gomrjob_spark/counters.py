@@ -12,6 +12,7 @@ on the DataFrame path use ``DataFrame.observe`` instead (SURVEY.md §7
 from __future__ import annotations
 
 import logging
+import os
 import threading
 
 from pyspark.accumulators import AccumulatorParam
@@ -30,6 +31,9 @@ class Counters:
     def __init__(self, spark: SparkSession):
         self._sc = spark.sparkContext
         self._accs: dict[str, object] = {}
+        # (tid, start time) -> (key, CPU ticks at its last reading) of
+        # every compiler thread a compile_report() saw, exited ones too
+        self._compiler_ticks: dict[tuple[int, int], tuple[str, int]] = {}
 
     def counter(self, group: str, name: str):
         key = f"{group}.{name}"
@@ -73,20 +77,31 @@ class Counters:
             after = c.compile_report()
             spent = {k: after[k] - before[k] for k in after}
 
-        Returns ``{janino_compiles, janino_compile_ms, jit_compile_ms}``.
-        In local mode the executors share the driver's JVM, so these
-        cover task-side compiles too; on a cluster they cover the
-        driver only."""
+        Returns ``{janino_compiles, janino_compile_ms, jit_compile_ms,
+        c1_cpu_s, c2_cpu_s}``. The last two are the CPU seconds (user
+        plus system) of HotSpot's C1 and C2 compiler threads, read from
+        ``/proc/<jvm pid>/task/*/stat`` by thread name. HotSpot starts
+        and stops extra compiler threads as its queue grows and drains,
+        so a thread's last reading by this ``Counters`` stays in the sum
+        after the thread exits; its CPU after that reading, and all of
+        a thread that lived between two readings, is missed. Both keys
+        are absent where ``/proc`` cannot be read. In local mode the
+        executors share the driver's JVM, so these cover task-side
+        compiles too; on a cluster they cover the driver only."""
         jvm = self._sc._jvm
         codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
         jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-        return {
+        report = {
             "janino_compiles": int(
                 jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
             ),
             "janino_compile_ms": codegen.compileTime() / 1e6,
             "jit_compile_ms": int(jit.getTotalCompilationTime()),
         }
+        cpu = _compiler_cpu_s(int(jvm.java.lang.ProcessHandle.current().pid()), self._compiler_ticks)
+        if cpu is not None:
+            report.update(cpu)
+        return report
 
     def _stage_list(self):
         store = self._sc._jsc.sc().statusStore()
@@ -225,6 +240,38 @@ class Counters:
                 )
         lines.sort()
         return [line for _, line in lines[-n:]]
+
+
+_COMPILER_KINDS = {"C1 CompilerThre": "c1_cpu_s", "C2 CompilerThre": "c2_cpu_s"}
+
+
+def _compiler_cpu_s(pid: int, seen: dict) -> dict[str, float] | None:
+    """CPU seconds of process ``pid``'s C1 and C2 compiler threads (the
+    kernel truncates thread names to 15 bytes), including the threads in
+    ``seen`` that have exited; records the threads read now in ``seen``.
+    None where ``/proc/<pid>/task`` cannot be read."""
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return None
+    for tid in tids:
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as fh:
+                stat = fh.read()
+        except OSError:  # exited meanwhile
+            continue
+        name = stat[stat.index("(") + 1 : stat.rindex(")")]
+        kind = _COMPILER_KINDS.get(name)
+        if kind is None:
+            continue
+        fields = stat[stat.rindex(")") + 2 :].split()
+        # utime and stime are fields 14 and 15 of stat(5), starttime 22
+        seen[(int(tid), int(fields[19]))] = (kind, int(fields[11]) + int(fields[12]))
+    out = dict.fromkeys(_COMPILER_KINDS.values(), 0)
+    for kind, ticks in seen.values():
+        out[kind] += ticks
+    tck = os.sysconf("SC_CLK_TCK")
+    return {k: v / tck for k, v in out.items()}
 
 
 class _LinesAccumulatorParam(AccumulatorParam):

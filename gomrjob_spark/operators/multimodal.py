@@ -93,7 +93,9 @@ def decode_image(payload: bytes) -> dict:
       SOF3/11 (Annex H predictors); HIERARCHICAL pyramids (Annex J
       DHP/EXP: differential lossless SOF7/15, sequential DCT SOF5/13
       and progressive SOF6/14, any channel count). Restart markers and
-      fill bytes before markers are honoured.
+      fill bytes before markers are honoured. A frame or DHP declaring
+      more than ``_JPEG_MAX_SAMPLES`` samples (width x height x
+      components) is a ValueError, raised before any allocation.
 
     Returns ``{format, width, height, channels, pixels: bytes}`` with
     ``pixels`` top-down row-major, channel-interleaved."""
@@ -675,6 +677,13 @@ def _huff_read_diff(reader: _BitReader, table: _HuffTable) -> int:
 #: (hierarchical) frame, the low two bits the process (0/1 sequential,
 #: 2 progressive, 3 lossless), 0xC8 and up arithmetic coding.
 _JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+#: the most samples (width x height x components) one frame or DHP may
+#: declare to the decoder: Pillow's ``MAX_IMAGE_PIXELS`` figure, counted
+#: per component because each component gets its own int64 coefficient
+#: or sample plane. The planes are allocated from the header alone, so
+#: without a bound an 8x8 stream of about 100 bytes patched to declare
+#: 65535x65535 asks for 32 GiB.
+_JPEG_MAX_SAMPLES = 89_478_485
 
 
 def _jpeg_segment(payload: bytes, i: int) -> tuple[int, bytes, int]:
@@ -723,6 +732,18 @@ def _jpeg_parse_sof(seg: bytes, marker: int) -> dict:
         "planes": {},  # lossless: per-component sample planes
         "pt": 0,  # lossless point transform
     }
+
+
+def _jpeg_bounded(frame: dict) -> dict:
+    """``frame``; a ValueError when it declares more than
+    ``_JPEG_MAX_SAMPLES`` samples."""
+    n = frame["w"] * frame["h"] * len(frame["comps"])
+    if n > _JPEG_MAX_SAMPLES:
+        raise ValueError(
+            f"JPEG frame declares {frame['w']}x{frame['h']}x{len(frame['comps'])} "
+            f"samples, over the decode budget of {_JPEG_MAX_SAMPLES}"
+        )
+    return frame
 
 
 def _decode_jpeg(payload: bytes) -> dict:
@@ -782,7 +803,7 @@ def _decode_jpeg(payload: bytes) -> dict:
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(seg[0:2], "big")
         elif marker == 0xDE:  # DHP: hierarchical mode (Annex J)
-            hier = _jpeg_parse_sof(seg, marker)
+            hier = _jpeg_bounded(_jpeg_parse_sof(seg, marker))
         elif marker == 0xDF:  # EXP: expands the NEXT frame's reference
             if not seg:
                 raise ValueError("truncated JPEG EXP segment")
@@ -805,7 +826,7 @@ def _decode_jpeg(payload: bytes) -> dict:
                     raise ValueError("JPEG with a second frame outside hierarchical mode")
                 ref = _jpeg_hier_fold(frame, qt, ref, pending_exp)
                 pending_exp = (0, 0)
-            frame = _jpeg_parse_sof(seg, marker)
+            frame = _jpeg_bounded(_jpeg_parse_sof(seg, marker))
             if not frame["comps"] or not all(
                 1 <= c["h"] <= 4 and 1 <= c["v"] <= 4 for c in frame["comps"]
             ):

@@ -40,6 +40,23 @@ Defaults are tuned for the local[32] test harness but chosen to be the
   runs) and 214 or 252 MB at the default bound, which compiled 6312
   classes in the pass and frees a dropped class only when a GC unloads
   it.
+- The driver JVM starts with HotSpot's C2 (tier-4) thresholds at 4x
+  their defaults (``_DRIVER_JIT_OPTIONS``, under
+  ``spark.driver.defaultJavaOptions``, which a caller's
+  ``spark.driver.extraJavaOptions`` adds to instead of replacing). The
+  engine plans and runs many short queries in one JVM, and much of a
+  short query's CPU is HotSpot compiling Spark's own code with C2:
+  Catalyst rules and tree walks are called a few thousand times per
+  query, enough to reach the default thresholds round after round. They
+  now stay on C1 code; generated code, whose loops and per-row calls
+  pass the thresholds at once, still reaches C2. Over rounds 3-6 of
+  the benchmark's three crawl queries in one session, C2 thread CPU
+  fell from 10.7 s to 5.5-6.1 s while executor-task CPU stayed level,
+  and ``crawl_dedup`` job CPU fell from 2.47 to 1.99 s (medians of 10
+  alternating pairs, 4-core VM; the change lower in all 10). C1 alone
+  (``-XX:TieredStopAtLevel=1``) also cut job CPU, but tripled the
+  connected-components query's executor CPU. SCALING.md, "JIT policy
+  for a planning-bound driver", has the measurements.
 """
 
 from __future__ import annotations
@@ -52,6 +69,11 @@ DEFAULT_APP_NAME = "gomrjob_spark"
 
 _ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# HotSpot's C2 (tier-4) thresholds, 4x the defaults of 5000, 600 and
+# 15000; the back-edge (OSR) and tier-3 thresholds keep their defaults.
+_DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 -XX:Tier4CompileThreshold=30000"
+)
 
 
 def _env_cpus() -> int:
@@ -109,6 +131,9 @@ def get_session(
         .config("spark.gomrjob.spread.partitions", str(cpus))
         .config("spark.python.daemon.module", "gomrjob_spark.worker_daemon")
         .config(_WORKER_PYTHONPATH, os.pathsep.join(worker_path))
+        # Spark puts a caller's spark.driver.extraJavaOptions after this
+        # key instead of replacing it
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JIT_OPTIONS)
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

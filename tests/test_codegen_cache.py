@@ -26,7 +26,7 @@ def _compiles(spark, fn) -> int:
 
 def test_compile_report_keys_and_warm_rerun(spark):
     report = Counters(spark).compile_report()
-    assert set(report) == {"janino_compiles", "janino_compile_ms", "jit_compile_ms"}
+    assert set(report) == {"janino_compiles", "janino_compile_ms", "jit_compile_ms", "c1_cpu_s", "c2_cpu_s"}
     assert all(v >= 0 for v in report.values())
 
     def run():

@@ -6,16 +6,20 @@ Plus QM-coder round-trip properties and byte-layer edge cases."""
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gomrjob_spark.operators.multimodal import (
+    _JPEG_MAX_SAMPLES,
     _ArithBits,
     _pack_arith_bits,
     _QMDecoder,
     _QMEncoder,
+    _jpeg_bounded,
     decode_image,
     encode_jpeg_arithmetic,
     encode_jpeg_baseline,
@@ -110,6 +114,28 @@ def test_hierarchical_still_raises_precisely():
     payload[i + 1] = 0xCD  # SOF13: differential sequential, arithmetic
     with pytest.raises(NotImplementedError, match="hierarchical"):
         decode_image(bytes(payload))
+
+
+def test_oversized_frame_is_refused_before_allocation():
+    # an 8x8 stream whose SOF9 declares 65535x65535: without the sample
+    # budget the decoder allocates 32 GiB of coefficients up front
+    payload = bytearray(encode_jpeg_arithmetic(bytes(64), 8, 8, channels=1))
+    i = payload.index(b"\xff\xc9")
+    payload[i + 5 : i + 9] = b"\xff\xff\xff\xff"  # height, width
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="decode budget"):
+        decode_image(bytes(payload))
+    assert time.perf_counter() - t0 < 1.0
+
+
+def test_sample_budget_counts_components():
+    comps = [{}] * 3
+    side = 5461  # 5461 * 5461 * 3 is just under the budget
+    assert 3 * side * side <= _JPEG_MAX_SAMPLES < 3 * side * (side + 1)
+    frame = {"w": side, "h": side, "comps": comps}
+    assert _jpeg_bounded(frame) is frame
+    with pytest.raises(ValueError, match="decode budget"):
+        _jpeg_bounded({"w": side + 1, "h": side, "comps": comps})
 
 
 @settings(max_examples=20, deadline=None)

@@ -401,3 +401,11 @@ def test_truncated_color_pyramid_fails_clean(mode):
     for frac in (3, 2):
         with pytest.raises((ValueError, EOFError)):
             M.decode_image(enc[: len(enc) // frac])
+
+
+def test_oversized_dhp_is_refused():
+    enc = bytearray(M.encode_jpeg_hierarchical(_px(8, 8, 1, 3), 8, 8, channels=1))
+    i = enc.index(b"\xff\xde")
+    enc[i + 5 : i + 9] = b"\xff\xff\xff\xff"  # the pyramid's height, width
+    with pytest.raises(ValueError, match="decode budget"):
+        M.decode_image(bytes(enc))
